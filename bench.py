@@ -47,33 +47,11 @@ SF_DIR = os.environ.get("SPARK_GRAFT_SF_DIR", "/root/testdata/sf0.1")
 # GLOBALLY. At REPS=3 this host's bimodal per-entry noise (untouched
 # ~1-4s entries swinging 1.4-2.4x run-to-run, e.g. sketch_count_min
 # 0.401x in PERF_r20 with zero code change) swamped cross-round
-# attribution; the r20 HIGH_VARIANCE set covered only ten entries. The
-# reported statistic is UNCHANGED (per-query median over all reps,
-# warm = reps 2..N) so medians stay comparable round-over-round — the
-# extra reps only tighten them. Cost: ~+2 min bench wall.
+# attribution. The reported statistic is UNCHANGED (per-query median
+# over all reps, warm = reps 2..N) so medians stay comparable
+# round-over-round — the extra reps only tighten them. Cost: ~+2 min
+# bench wall.
 REPS = max(1, int(os.environ.get("SPARK_GRAFT_BENCH_REPS", "5")))
-
-# Variance-weighted reps (r20, VERDICT r19 what's-wrong #1 / next #3):
-# the ~1-4 s entries below showed the widest same-code warm spreads
-# across this round's four quiet-host runs (1.8-2.1x max/min on
-# UNTOUCHED code — receipts in artifacts/bench_sf01_r20_*.json), so a
-# sub-1.3x code mover on them hides inside per-run noise at REPS=3.
-# They get max(REPS, 5) repetitions; the reported statistic is
-# unchanged (median over all reps, warm = reps 2..N), so medians stay
-# comparable round-over-round — the extra reps only tighten them.
-HIGH_VARIANCE_REPS = max(REPS, 5)
-HIGH_VARIANCE = {
-    "dedup_prefix_jaccard",
-    "dedup_duplicate_spans",
-    "dedup_semdedup",
-    "dedup_semdedup_kmeans",
-    "exports_report_events",
-    "rank_pivot_merge_back",
-    "text_unigram_logprob",
-    "olap_product_profit",
-    "olap_nation_pair_volume",
-    "olap_market_share",
-}
 
 HEADLINE = [
     "exports_report_events",
@@ -180,7 +158,7 @@ def _run(df) -> None:
     df.write.mode("overwrite").format("noop").save()
 
 
-def _timed(fn, reps: int = None) -> dict:
+def _timed(fn) -> dict:
     """Run ``fn`` REPS times; return {median, min, max} wall seconds over
     ALL reps (unchanged semantics — the headline medians stay comparable
     round-over-round), plus a cold/warm split (VERDICT r12 #7): ``cold``
@@ -190,7 +168,7 @@ def _timed(fn, reps: int = None) -> dict:
     ``warm`` summarizes reps 2..N — so first-rep warmup noise can't
     masquerade as a regression when comparing idle-host checks."""
     samples = []
-    for _ in range(reps if reps is not None else REPS):
+    for _ in range(REPS):
         t0 = time.perf_counter()
         fn()
         samples.append(time.perf_counter() - t0)
@@ -443,10 +421,7 @@ def main() -> None:
     extras = _extra_headline()
     for name in HEADLINE:
         fn = extras.get(name) or QUERIES[name]
-        t = _timed(
-            lambda: _run(fn(spark, SF_DIR)),
-            reps=HIGH_VARIANCE_REPS if name in HIGH_VARIANCE else None,
-        )
+        t = _timed(lambda: _run(fn(spark, SF_DIR)))
         timings[name] = t["median"]
         spread[name] = t
 

@@ -1392,134 +1392,3 @@ def numeric_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 _register_extension_catalogs()
 
-
-# ---------------------------------------------------------------------------
-# Driver-window ordering
-# ---------------------------------------------------------------------------
-#
-# The driver's CORRECTNESS gate checks the FIRST 50 entries of ``queries()``
-# in registration order. Registration order is ours to choose. After r5
-# every one of the entries has at least one green (rows+schema+hash)
-# driver row, so the window policy is FRESHNESS (VERDICT r5 #6): flagship
-# first (``entry()`` references it by name), then entries that are NEW or
-# whose implementation/oracle CHANGED this round (a green row from an
-# earlier round proves nothing about edited code), then the entries whose
-# last green row is OLDEST, until the window holds exactly 50. Recompute
-# each round from CORRECTNESS_r*.json (green rows only —
-# tests/test_plans.py pins both coverage and the 50-slot fill).
-#
-# r19 recomputation (latest GREEN round per entry across r1-r18,
-# tools/rotation_report.py on the committed history): r18-latest: 50
-# (the executed r18 rotation, 50/50 green), r17-latest: 50,
-# r16-latest: 48, nothing older, nothing never-green — max staleness
-# entering this round is 3 (the r16 cohort), the pre-stated mortgage.
-# Window THIS round (r20) = the plan pre-stated verbatim at r19
-# (COVERAGE.md window note): the full 48-entry r17-latest cohort —
-# every name matches the due list 1:1, including the flagship
-# exports_report_events — plus two slack slots:
-#   * slack #1 (pre-assigned at r19): dedup_canonical_selection — the
-#     one late-r19 code-changed entry NOT in the r19 window (it rides
-#     the ngram posting-list path the jaccard join pins touched via
-#     dedup_connected_components), so its post-pin hard signal lands
-#     here.
-#   * slack #2 (policy: stalest r18-latest entry; all 50 tie at
-#     prior-green r15, so the pre-stated lexicographic tiebreak
-#     applies): approx_aggregates.
-# 48 + 2 = 50 exactly. r20 is an OPTIMIZATION round: the driver may
-# re-check EVERY declared entry rather than only the front-50 window;
-# the rotation guard accepts a superset key set for that reason.
-#
-# ANTI-RECURRENCE GUARD: tests/test_plans.py::
-# test_driver_window_rotated_from_last_round pins this list (and
-# _DRIVER_WINDOW_ROUND below) against the committed CORRECTNESS
-# history — a forgotten rotation fails pytest; the guard is
-# state-aware (round-closed state warns instead of fails), and since
-# r18 tools/rotation_report.py prints a ROTATE-DUE line in that state
-# so the obligation is visible to the receipt workflow (ADVICE r17).
-
-# The round this window was declared FOR. Bump in the same commit that
-# rotates _DRIVER_WINDOW_PRIORITY — the rotation guard derives its
-# expectations from this constant.
-_DRIVER_WINDOW_ROUND = 21
-
-# Superset allowance is scoped to optimization rounds (ADVICE r20 #1):
-# the optimization-phase driver re-checks EVERY declared entry, so its
-# CORRECTNESS key set legitimately covers more than the 50-entry window.
-# When the phase ends, flip this back to False so the rotation guard
-# returns to exact key-set equality.
-_DRIVER_WINDOW_SUPERSET_OK = True  # r20/r21 are optimization rounds
-
-_DRIVER_WINDOW_PRIORITY = [
-    # -- r18-latest cohort: all 48, the due cohort per
-    # tools/rotation_report.py --next-round 21 (mechanical freshness
-    # rule: oldest latest-green round first) --
-    "array_functions",
-    "asof_join",
-    "calendar_spine_monthly",
-    "case_classifier",
-    "collect_types_sorted",
-    "corpus_bigram_top",
-    "corpus_bpe_train_merges",
-    "corpus_decontaminate",
-    "corpus_incremental_ingest",
-    "corpus_incremental_ingest_neardup_bucketed",
-    "corpus_length_trim",
-    "corpus_mix_weights",
-    "corpus_ngram_novelty",
-    "corpus_pack_sequences",
-    "corpus_pack_sequences_ranged",
-    "date_funcs_extended",
-    "dedup_duplicate_spans",
-    "dedup_semdedup",
-    "dedup_semdedup_exact",
-    "dedup_semdedup_kmeans",
-    "distinct_event_types",
-    "embeddings_pca",
-    "embeddings_pq",
-    "events_last_touch_attribution",
-    "exact_distinct_bounds",
-    "exists_over_array",
-    "filter_project_window",
-    "filtered_agg_orders",
-    "grouping_sets_orders",
-    "jsonl_roundtrip_docs",
-    "lookup_enrich_broadcast",
-    "map_functions",
-    "month_membership_filter",
-    "null_profile_orders",
-    "olap_last_shipper",
-    "olap_market_share",
-    "olap_nation_pair_volume",
-    "olap_product_profit",
-    "order_nulls_handling",
-    "percentiles_exact",
-    "range_join_bucketized",
-    "recursive_order_chains",
-    "salted_join",
-    "semi_anti_join",
-    "sketch_partial_merge",
-    "streaming_interval_join_batch",
-    "window_family",
-    "window_range_frame",
-    # -- slack slots: pulled-forward r19-latest entries whose code the
-    # r21 optimization round changes (the trainer-latency work, VERDICT
-    # r20 next #1) — similarity_ivf_topk covers the IVF Lloyd trainer
-    # (shared by similarity_pca_ivf via _ivf_search and by
-    # dedup_semdedup_kmeans, which sits in the due cohort above), and
-    # similarity_pq_adc covers the separate PQ Lloyd trainer; together
-    # the two slots put a fresh driver row on BOTH changed kernels. --
-    "similarity_ivf_topk",
-    "similarity_pq_adc",
-]
-
-
-def _apply_driver_window_order() -> None:
-    """Reorder QUERIES in place (it is imported by reference) so the
-    priority names occupy the front of the driver's 50-entry window."""
-    tail = {n: QUERIES.pop(n) for n in list(QUERIES) if n not in _DRIVER_WINDOW_PRIORITY}
-    ordered = {n: QUERIES.pop(n) for n in _DRIVER_WINDOW_PRIORITY if n in QUERIES}
-    QUERIES.update(ordered)
-    QUERIES.update(tail)
-
-
-_apply_driver_window_order()

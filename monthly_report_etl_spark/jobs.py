@@ -35,12 +35,11 @@ def run_export_job(
     output_dir: str,
     config: PipelineConfig | None = None,
     parquet_dir: str | None = None,
-    parquet_target_file_mb: float = 128,
 ) -> DataFrame:
     """Full monthly report → per-lender TSV directory (S5 contract).
 
     With ``parquet_dir``, additionally writes the report as parquet
-    through the compacting sized-writer shape: the analytics copy
+    through ``write_parquet_sized`` over a staged copy: the analytics copy
     downstream Spark/DuckDB consumers scan, with file count derived from
     the staged output's ACTUAL bytes so a wide-parallelism run can't
     spray thousands of KB-sized files (the small-files guard a 100 TB
@@ -50,7 +49,7 @@ def run_export_job(
     Dual-sink economy (r7): the report plan is computed ONCE. When both
     sinks are requested, the result is staged as parquet first and BOTH
     the TSV write and the sized parquet write read the staged scan —
-    the naive ``write_tsv(report); write_parquet_compacted(report)``
+    the naive ``write_tsv(report); write_parquet_sized(report)``
     sequence executed the full join/agg plan twice, which at 100 TB
     doubles the dominant cost for a report-sized output.
 
@@ -91,9 +90,7 @@ def run_export_job(
             validate_tsv_output(spark, output_dir)
 
         def _parquet_chain() -> None:
-            write_parquet_sized(
-                staged, parquet_dir, target_file_mb=parquet_target_file_mb
-            )
+            write_parquet_sized(staged, parquet_dir)
 
         from concurrent.futures import ThreadPoolExecutor
 

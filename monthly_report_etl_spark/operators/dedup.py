@@ -15,10 +15,10 @@ Scale design (100 TB):
 * SimHash gives hamming-distance near-dup with 8x8-bit chunk banding
   (pigeonhole: hamming <= 7 → at least one equal chunk).
 
-Engine-native hashes (xxhash64) are used inside MinHash/SimHash sketches —
-deterministic per engine but not portable to DuckDB, so those two are
-rows-only for the driver gate and differentially tested in pytest against
-the exact-Jaccard operator (tests/test_dedup.py).
+Every hash inside the MinHash/SimHash sketches is plain int64 arithmetic
+that DuckDB recomputes, so both are checked against their oracles end to
+end, and against the exact-Jaccard operator in
+tests/test_dedup_similarity.py.
 """
 
 from __future__ import annotations
@@ -274,84 +274,12 @@ def ngram_jaccard_pairs(
 
 
 # ---------------------------------------------------------------------------
-# MinHash + LSH (the 100 TB near-dup path; rows-only for the driver gate)
+# MinHash + LSH parameters and exact-Jaccard verification
 # ---------------------------------------------------------------------------
 
 NUM_PERM = 32
 NUM_BANDS = 8  # 8 bands x 4 rows: P(candidate | j=0.9) ≈ 1 - (1-0.9^4)^8 ≈ 0.998
 _ROWS_PER_BAND = NUM_PERM // NUM_BANDS
-_MERSENNE = (1 << 61) - 1
-_rng = random.Random(42)
-PERMUTATIONS = [(_rng.randrange(1, _MERSENNE), _rng.randrange(0, _MERSENNE)) for _ in range(NUM_PERM)]
-
-
-def minhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-document MinHash signature (NUM_PERM permutations over shingle
-    xxhash64s).
-
-    Formulated as explode → per-permutation MIN hash-aggregation, NOT as
-    nested higher-order transforms: Catalyst's CollapseProject re-inlines
-    projection chains into HOF lambdas (no subexpression elimination
-    inside lambdas), which made the expression-only version recompute the
-    shingle-string construction 32x per element — measured minutes instead
-    of seconds at 5000 docs. The Generate (explode) is a hard optimizer
-    barrier, each shingle string is built exactly once, and the 32 MINs
-    get map-side partial aggregation (the shuffle carries one 32-long row
-    per doc per partition — the 100 TB-safe shape).
-    """
-    # MIN is duplicate-insensitive, so the shingle-dedup EXCHANGE is pure
-    # cost here — the non-distinct rows arrive already partitioned by
-    # doc_id from the shingle window, and the groupBy reuses that
-    # partitioning with no further shuffle
-    ex = _shingle_rows(spark, sf_dir, distinct=False)
-    h = F.xxhash64("s")
-    mins = ex.groupBy("doc_id").agg(
-        *[
-            F.min(F.pmod(h * F.lit(a) + F.lit(b), F.lit(_MERSENNE))).alias(f"_m{j}")
-            for j, (a, b) in enumerate(PERMUTATIONS)
-        ]
-    )
-    sig = F.array(*[F.col(f"_m{j}") for j in range(NUM_PERM)])
-    return mins.select("doc_id", sig.alias("signature"))
-
-
-def minhash_lsh_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs via MinHash banding, verified with exact Jaccard.
-
-    Candidate generation shuffles only (doc_id, band, 8-byte band key) —
-    independent of document size; the exact-Jaccard verification then runs
-    only on candidates (array_intersect on the two shingle sets), so the
-    quadratic step touches near-dups only.
-    """
-    sigs = minhash_signatures(spark, sf_dir)
-    bands = sigs.select(
-        "doc_id",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(i).alias("band"),
-                        F.xxhash64(
-                            F.slice("signature", i * _ROWS_PER_BAND + 1, _ROWS_PER_BAND)
-                        ).alias("key"),
-                    )
-                    for i in range(NUM_BANDS)
-                ]
-            )
-        ).alias("bk"),
-    ).select("doc_id", "bk.band", "bk.key")
-    a, b = bands.alias("a"), bands.alias("b")
-    candidates = (
-        a.join(
-            b,
-            (F.col("a.band") == F.col("b.band"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-    return _verify_jaccard(spark, sf_dir, candidates)
 
 
 def _verify_jaccard(spark: SparkSession, sf_dir: str, candidates: DataFrame) -> DataFrame:
@@ -385,8 +313,7 @@ def _verify_jaccard(spark: SparkSession, sf_dir: str, candidates: DataFrame) -> 
 # portable-hash MinHash + LSH (oracle-checkable end to end)
 # ---------------------------------------------------------------------------
 #
-# Same banding architecture as minhash_lsh_pairs, but every hash is plain
-# int64 arithmetic both engines compute identically (VERDICT r3 item #3):
+# Every hash is plain int64 arithmetic both engines compute identically:
 #
 #   token fingerprint  tf = polynomial(chars) % M            (M ~ 2^40)
 #   shingle hash       h  = ((tf0*R + tf1) % M * R + tf2) % M
@@ -492,8 +419,8 @@ def minhash_lsh_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Near-dup pairs via portable-hash MinHash banding + exact-Jaccard
     verification — hash-checkable against MINHASH_LSH_ORACLE, which
     recomputes the identical signature → band → candidate → verify chain
-    in DuckDB. Same shuffle shape as minhash_lsh_pairs: candidate
-    generation moves (doc_id, band, key) triples only."""
+    in DuckDB. Candidate generation moves (doc_id, band, key) triples
+    only."""
     sigs = minhash_signature_columns(spark, sf_dir)
     bands = portable_band_rows(sigs)
     a, b = bands.alias("a"), bands.alias("b")
@@ -599,7 +526,7 @@ MINHASH_LSH_ORACLE = _minhash_oracle()
 
 
 # ---------------------------------------------------------------------------
-# SimHash (hamming-distance near-dup; rows-only for the driver gate)
+# SimHash parameters
 # ---------------------------------------------------------------------------
 
 SIMHASH_BITS = 64
@@ -612,104 +539,12 @@ _CHUNKS = HAMMING_THRESHOLD + 1
 _CHUNK_BITS = SIMHASH_BITS // _CHUNKS
 
 
-def _simhash_udf():
-    """Arrow-vectorized SimHash packing: per doc, the 64 per-bit +/-1 vote
-    sums over the token xxhash64s as one numpy broadcast, sign bits packed
-    into a two's-complement int64.
-
-    Replaces a nested higher-order ``aggregate`` expression (interpreted:
-    generator/HOF trees never compile — SCALE.md §2) that measured 11.5s
-    at sf0.1; bit-identical output (arithmetic-shift bit extraction ==
-    uint64 bit extraction for bits 0..63)."""
-    import numpy as np
-
-    bits = np.arange(64, dtype=np.uint64)
-
-    @F.pandas_udf("long")
-    def simhash(hs: pd.Series) -> pd.Series:
-        out = []
-        for arr in hs:
-            h = np.asarray(arr, dtype=np.int64).view(np.uint64)
-            votes = (((h[:, None] >> bits) & np.uint64(1)).astype(np.int64) * 2 - 1).sum(
-                axis=0
-            )
-            sig = int(((votes > 0).astype(np.uint64) << bits).sum(dtype=np.uint64))
-            out.append(sig - (1 << 64) if sig >= (1 << 63) else sig)
-        return pd.Series(out, dtype="int64")
-
-    return simhash
-
-
-def simhash_signatures(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """64-bit SimHash per document from token xxhash64s.
-
-    One hash aggregation collects the token hashes per doc (JVM-side,
-    map-side partials); the 64-bit vote/pack step is a vectorized Arrow
-    batch (see _simhash_udf). Work per doc is O(64 x tokens) in one numpy
-    broadcast, embarrassingly parallel.
-    """
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    hs = (
-        d.select("doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("token"))
-        .withColumn("th", F.xxhash64("token"))
-        .groupBy("doc_id")
-        .agg(F.collect_list("th").alias("hs"))
-    )
-    return hs.select("doc_id", _simhash_udf()(F.col("hs")).alias("simhash"))
-
-
-def simhash_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Near-dup pairs with hamming(simhash) <= HAMMING_THRESHOLD, found by
-    8-bit chunk banding (pigeonhole-complete: <= 7 flips leave at least
-    one of the 8 chunks untouched)."""
-    sigs = simhash_signatures(spark, sf_dir)
-    chunks = sigs.select(
-        "doc_id",
-        "simhash",
-        F.explode(
-            F.array(
-                *[
-                    F.struct(
-                        F.lit(c).alias("chunk"),
-                        F.shiftright(F.col("simhash"), c * _CHUNK_BITS)
-                        .bitwiseAND(F.lit((1 << _CHUNK_BITS) - 1))
-                        .alias("key"),
-                    )
-                    for c in range(_CHUNKS)
-                ]
-            )
-        ).alias("ck"),
-    ).select("doc_id", "simhash", "ck.chunk", "ck.key")
-    a, b = chunks.alias("a"), chunks.alias("b")
-    cand = (
-        a.join(
-            b,
-            (F.col("a.chunk") == F.col("b.chunk"))
-            & (F.col("a.key") == F.col("b.key"))
-            & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-            F.col("a.simhash").alias("sh_a"),
-            F.col("b.simhash").alias("sh_b"),
-        )
-        .distinct()
-    )
-    hamming = F.bit_count(F.col("sh_a").bitwiseXOR(F.col("sh_b")))
-    return (
-        cand.withColumn("hamming", hamming.cast("int"))
-        .filter(F.col("hamming") <= HAMMING_THRESHOLD)
-        .select("doc_a", "doc_b", "hamming")
-    )
-
-
 # ---------------------------------------------------------------------------
 # portable-hash SimHash (oracle-checkable end to end)
 # ---------------------------------------------------------------------------
 #
-# Same 8x8-bit chunk-banding architecture as simhash_pairs, with every
-# hash replaced by int64 arithmetic both engines compute identically
+# 8x8-bit chunk banding (pigeonhole-complete), with every hash
+# int64 arithmetic both engines compute identically
 # (VERDICT r3 item #4): bit k's vote for a token with fingerprint tf is
 # the parity of the DOUBLE affine map ((tf*Ck + Dk) % M * C2k + D2k) % M.
 # One affine stage is measurably degenerate here: frequent tokens are
@@ -815,8 +650,7 @@ def _portable_chunks_udf():
 def simhash_chunk_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     """(doc_id, c0..c7): token fingerprints collected per doc (one hash
     aggregation keyed by doc_id; per-doc state is bounded by document
-    length, the same doc-bounded contract as the engine twin
-    ``simhash_signatures``), then one Arrow batch computes all 64
+    length), then one Arrow batch computes all 64
     double-affine parities and packs the 8 chunk values — see
     _portable_chunks_udf for why this is not an expression-tree
     aggregate."""
@@ -1614,10 +1448,8 @@ CATALOG: dict[str, tuple] = {
     "dedup_duplicate_spans": (duplicate_spans, DUPLICATE_SPANS_ORACLE),
     "dedup_ngram_jaccard": (ngram_jaccard_pairs, NGRAM_JACCARD_ORACLE),
     "dedup_prefix_jaccard": (prefix_jaccard_pairs, NGRAM_JACCARD_ORACLE),
-    # portable-hash variants: the full signature → band → candidate →
-    # verify chain is recomputed by the DuckDB oracle (hash-checkable);
-    # the xxhash64 twins (minhash_lsh_pairs / simhash_pairs) stay as the
-    # raw-throughput path, differentially tested in pytest
+    # portable-hash sketches: the full signature → band → candidate →
+    # verify chain is recomputed by the DuckDB oracle (hash-checkable)
     "dedup_minhash_lsh": (minhash_lsh_pairs_portable, MINHASH_LSH_ORACLE),
     "dedup_simhash": (simhash_pairs_portable, SIMHASH_ORACLE),
     "dedup_embedding_cosine": (embedding_cosine_pairs, EMBEDDING_COSINE_ORACLE),

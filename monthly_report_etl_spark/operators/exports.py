@@ -354,16 +354,13 @@ def final_select(df: DataFrame, sort: str = "within_partitions") -> DataFrame:
     executes the whole upstream plan twice: once to sample bounds, once to
     sort — measured ~2x wall time at bench scale).
 
-    ``sort='global'`` gives the strict total order (range-partitioned
-    distributed sort); ``sort='none'`` skips ordering (for callers that
-    enrich further and order at the end). The COALESCE on exportedLender
-    is a no-op after step 2 but kept for fidelity with sql:184.
+    ``sort='none'`` skips ordering (for callers that enrich further and
+    order at the end). The COALESCE on exportedLender is a no-op after
+    step 2 but kept for fidelity with sql:184.
     """
     out = df.withColumn(
         "exportedLender", F.coalesce(F.col("exportedLender"), F.lit(""))
     ).select(*FINAL_COLUMNS)
-    if sort == "global":
-        return out.orderBy("associated_lender", "scenarioId")
     if sort == "within_partitions":
         return out.repartition("associated_lender").sortWithinPartitions(
             "associated_lender", "scenarioId"
@@ -375,30 +372,16 @@ def exports_pipeline(
     raw_df: DataFrame,
     start_date: str,
     end_date: str,
-    lenders: DataFrame | None = None,
     sort: str = "within_partitions",
-    cache_dedup: bool = False,
 ) -> DataFrame:
     """Steps 1-7 composed — semantically the union of the reference's
     per-lender runs over every distinct lender, as ONE Catalyst plan.
-
-    ``cache_dedup=True`` persists the deduped/filtered intermediate
-    (MEMORY_AND_DISK): ``global_stats`` necessarily references it twice
-    (main path + denominator aggregate) and Spark re-executes unshared
-    diamond branches. The deduped set is the smallest point of the
-    pipeline (one row per scenario), so this is the natural persist
-    boundary for repeated consumption.
     """
-    if lenders is None:
-        lenders = get_lenders(raw_df)
+    lenders = get_lenders(raw_df)
     df = base(raw_df, start_date, end_date)
     df = dedup_latest(df)
     df = flag_failing(df)
     df = filter_passing(df)
-    if cache_dedup:
-        from pyspark import StorageLevel
-
-        df = df.persist(StorageLevel.MEMORY_AND_DISK)
     df = global_stats(df)
     df = explode_lender_results(df, lenders)
     df = extract_performance(df)

@@ -112,7 +112,7 @@ def knn_brute_force(
 
 
 # ---------------------------------------------------------------------------
-# LSH-bucketed ANN (rows-only for the driver gate; recall-tested in pytest)
+# LSH-bucketed ANN
 # ---------------------------------------------------------------------------
 
 # 4 bits x 8 OR'd tables: for the top-5 neighbors of iid random 64-d
@@ -124,13 +124,6 @@ LSH_TABLES = 8
 _DIM = 64
 
 
-def _hyperplane(table: int, bit: int) -> list[float]:
-    """Deterministic pseudo-random hyperplane — no RNG state, reproducible
-    across sessions: component d = sin(1e4*table + 100*bit + d) (iid-ish
-    in [-1, 1], fixed at plan-build time)."""
-    return [math.sin(10_000.0 * table + 100.0 * bit + d) for d in range(_DIM)]
-
-
 def _lit_dot(e_col: F.Column, weights: list[float]) -> F.Column:
     """dot(e, literal weight vector) as plain indexed arithmetic:
     ``e[0]*w0 + e[1]*w1 + ...`` summed in a balanced tree.
@@ -139,7 +132,7 @@ def _lit_dot(e_col: F.Column, weights: list[float]) -> F.Column:
     codegen's huge-method limit and evaluates INTERPRETED — fine on tiny
     row counts (the 10-row query probes below), 6s/2000 rows as a wide
     projection. Every high-row-count dot product in this module goes
-    through the Arrow/numpy matmul UDFs instead (_bucket_array_udf,
+    through the Arrow/numpy matmul UDFs instead (_bucket_array_udf_int,
     _assign_centroid_udf).
     """
     terms = [e_col[d] * F.lit(w) for d, w in enumerate(weights)]
@@ -151,122 +144,11 @@ def _lit_dot(e_col: F.Column, weights: list[float]) -> F.Column:
     return terms[0]
 
 
-def _bucket_expr(e_col: F.Column, table: int) -> F.Column:
-    """LSH bucket id: sign bits of LSH_BITS full-dimension hyperplane dots
-    (expression-tree form — see _bucket_array_udf for why the hot path
-    uses the Arrow/numpy form instead)."""
-    bits = []
-    for bit in range(LSH_BITS):
-        dot = _lit_dot(e_col, _hyperplane(table, bit))
-        bits.append(F.when(dot > 0, F.lit(1 << bit)).otherwise(F.lit(0)))
-    out = bits[0]
-    for b in bits[1:]:
-        out = out + b
-    return out
-
-
-def _bucket_array_udf():
-    """All LSH_TABLES bucket ids per vector as ONE Arrow-vectorized numpy
-    matmul: (batch x dim) @ (dim x tables*bits) → sign bits → packed ints.
-
-    Why a pandas_udf and not expressions (both measured at sf0.1):
-    a 32x64-term expression tree — HOF fold or expanded indexed arithmetic
-    — exceeds codegen's huge-method limit and is evaluated INTERPRETED
-    (~6s for just 2000 rows as a projection; 12s inlined into a generator,
-    since CollapseProject pushes projections into generator expressions
-    and those are always interpreted). The Arrow batch + BLAS matmul form
-    runs the same arithmetic in milliseconds and scales per-partition.
-    """
-    import numpy as np
-
-    w = np.array(
-        [_hyperplane(t, b) for t in range(LSH_TABLES) for b in range(LSH_BITS)]
-    ).T  # dim x (tables*bits)
-    powers = 1 << np.arange(LSH_BITS)
-
-    @F.pandas_udf("array<int>")
-    def buckets(e: pd.Series) -> pd.Series:
-        if not len(e):  # zero-row Arrow batch: np.stack([]) would raise
-            return pd.Series([], dtype=object)
-        m = np.stack(e.to_numpy())  # batch x dim
-        bits = (m @ w > 0).astype(np.int64).reshape(len(e), LSH_TABLES, LSH_BITS)
-        vals = (bits * powers).sum(axis=2)  # batch x tables
-        return pd.Series([row.tolist() for row in vals])
-
-    return buckets
-
-
-def ann_lsh_topk(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Approximate top-k: random-hyperplane LSH over LSH_TABLES tables,
-    exact cosine re-rank inside the union of matching buckets.
-
-    Plan shape (each step measured at sf0.1 — see _bucket_array_udf for
-    why the projection is Arrow/numpy, not expression trees):
-
-    1. bucket projection: one vectorized matmul per Arrow batch emitting
-       the 8 bucket ids as a plain int array — milliseconds, vs seconds
-       for any interpreted expression-tree formulation.
-    2. fan out with posexplode over that plain array (the generator
-       expression is a bare column — nothing expensive for
-       CollapseProject to inline), equi-join on (table, bucket) against
-       the broadcast query buckets, and dedup candidates as INT PAIRS
-       ONLY — a distinct that shuffles 64-dim vectors was the other
-       measured scale bug.
-    3. re-attach vectors (corpus join + broadcast queries), exact cosine,
-       per-query top-k window.
-    """
-    v = read_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    bucket_udf = _bucket_array_udf()
-    proj = v.select("vec_id", bucket_udf(F.col("e")).alias("bs"))
-    # posexplode of a plain attribute array — the generator expression is
-    # just a column reference, nothing expensive to re-evaluate
-    buckets = proj.select("vec_id", F.posexplode("bs").alias("table", "bucket"))
-    qb = buckets.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"), "table", "bucket"
-    )
-    cand_ids = (
-        buckets.join(F.broadcast(qb), ["table", "bucket"])
-        .filter(F.col("vec_id") != F.col("query_id"))
-        .select("query_id", "vec_id")
-        .distinct()  # int pairs only — never the vectors
-    )
-    # norms hoisted out of the candidate re-rank (bit-exact: same fold
-    # per vector, same dot/(nq*nc) multiplication order as inline)
-    vn = v.withColumn("nc", l2_norm(F.col("e")))
-    qv = vn.filter(F.col("vec_id") < N_QUERIES).select(
-        F.col("vec_id").alias("query_id"),
-        F.col("e").alias("qe"),
-        F.col("nc").alias("nq"),
-    )
-    cand = cand_ids.join(vn, "vec_id").join(F.broadcast(qv), "query_id")
-    scored = cand.withColumn(
-        "cos",
-        F.when(
-            (F.col("nq") > 0) & (F.col("nc") > 0),
-            dot(F.col("qe"), F.col("e")) / (F.col("nq") * F.col("nc")),
-        ),
-    )
-    w = Window.partitionBy("query_id").orderBy(F.desc("cos"), F.col("vec_id"))
-    return (
-        scored.withColumn("rn", F.row_number().over(w).cast("long"))
-        .filter(F.col("rn") <= TOP_K)
-        .select(
-            "query_id",
-            F.col("vec_id").alias("neighbor_id"),
-            F.round("cos", 6).alias("cosine"),
-            "rn",
-        )
-    )
-
-
 # ---------------------------------------------------------------------------
 # portable-hash ANN-LSH (oracle-checkable end to end)
 # ---------------------------------------------------------------------------
 #
-# Same bucket architecture as ann_lsh_topk, with the two float hazards
-# removed (VERDICT r3 item #4):
+# Random-hyperplane buckets with the two float hazards removed:
 #
 # * hyperplanes are ±1 INTEGER vectors (sin()'s last ulp may differ
 #   across libm builds — ±1 literals are exact everywhere);
@@ -300,8 +182,18 @@ PM1_WEIGHTS = _pm1_weights()
 
 def _bucket_array_udf_int():
     """All LSH_TABLES bucket ids per vector as ONE Arrow-vectorized int64
-    matmul over the quantized vector (see module comment: integer dots
-    make the matmul bit-equal to the oracle's sequential fold)."""
+    matmul over the quantized vector: (batch x dim) @ (dim x tables*bits)
+    → sign bits → packed ints (see module comment: integer dots make the
+    matmul bit-equal to the oracle's sequential fold).
+
+    Why a pandas_udf and not expressions (both measured at sf0.1):
+    a 32x64-term expression tree — HOF fold or expanded indexed arithmetic
+    — exceeds codegen's huge-method limit and is evaluated INTERPRETED
+    (~6s for just 2000 rows as a projection; 12s inlined into a generator,
+    since CollapseProject pushes projections into generator expressions
+    and those are always interpreted). The Arrow batch + matmul form
+    runs the same arithmetic in milliseconds and scales per-partition.
+    """
     import numpy as np
 
     w = np.array(PM1_WEIGHTS, dtype=np.int64).T  # dim x (tables*bits)
@@ -324,7 +216,22 @@ def ann_lsh_topk_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Approximate top-k via ±1-integer-hyperplane LSH over quantized
     vectors, exact cosine re-rank — hash-checkable against
     ANN_LSH_ORACLE, which recomputes bucket ids, candidates and the
-    re-rank in DuckDB. Plan shape identical to ann_lsh_topk."""
+    re-rank in DuckDB.
+
+    Plan shape (each step measured at sf0.1):
+
+    1. bucket projection: one vectorized matmul per Arrow batch emitting
+       the 8 bucket ids as a plain int array — milliseconds, vs seconds
+       for any interpreted expression-tree formulation.
+    2. fan out with posexplode over that plain array (the generator
+       expression is a bare column — nothing expensive for
+       CollapseProject to inline), equi-join on (table, bucket) against
+       the broadcast query buckets, and dedup candidates as INT PAIRS
+       ONLY — a distinct that shuffles 64-dim vectors was the other
+       measured scale bug.
+    3. re-attach vectors (corpus join + broadcast queries), exact cosine,
+       per-query top-k window.
+    """
     v = read_vectors(spark, sf_dir).select(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
@@ -618,9 +525,6 @@ SEMDEDUP_ORACLE = _semdedup_oracle()
 
 CATALOG: dict[str, tuple] = {
     "similarity_knn_brute_force": (knn_brute_force, KNN_ORACLE),
-    # portable variant is the oracle-checked catalog entry; the sin()-
-    # hyperplane twin (ann_lsh_topk) stays as the float path, recall-
-    # tested in pytest
     "similarity_ann_lsh": (ann_lsh_topk_portable, ANN_LSH_ORACLE),
     "dedup_semdedup": (semdedup_keep, SEMDEDUP_ORACLE),
     "dedup_semdedup_exact": (semdedup_exact_global, SEMDEDUP_EXACT_ORACLE),

@@ -47,8 +47,6 @@ def write_parquet_sized(
     df: DataFrame,
     path: str,
     target_file_mb: float = 128,
-    partition_by: str | None = None,
-    mode: str = "overwrite",
 ) -> int:
     """Write parquet with files sized toward ``target_file_mb`` — the
     small-files guard every 100 TB pipeline needs (a 1000-executor job
@@ -61,54 +59,10 @@ def write_parquet_sized(
     estimate AQE coalescing uses, available without executing the query;
     for a plain scan it is exactly the source's on-disk footprint), then
     the write is repartitioned to that many output tasks. Returns the
-    file count used. With ``partition_by``, files are sized per written
-    task but routed into partition directories (repartition on the
-    partition column first keeps one writer per directory)."""
+    file count used."""
     est_bytes = int(df._jdf.queryExecution().optimizedPlan().stats().sizeInBytes())
     target = target_file_mb * 1024 * 1024
     n_files = max(1, int(-(-est_bytes // target)))
-    if partition_by is not None:
-        out = df.repartition(n_files, partition_by)
-        out.write.mode(mode).partitionBy(partition_by).parquet(path)
-    else:
-        out = df.repartition(n_files)
-        out.write.mode(mode).parquet(path)
+    df.repartition(n_files).write.mode("overwrite").parquet(path)
     return n_files
 
-
-def write_parquet_compacted(
-    df: DataFrame,
-    path: str,
-    target_file_mb: float = 128,
-    mode: str = "overwrite",
-) -> int:
-    """Sized parquet write for COMPUTED plans (joins/aggregations), whose
-    optimizer size estimates are join products and can be off by many
-    orders of magnitude (the monthly-report plan estimates ~6e17 bytes
-    for a ~1 MB result — deriving a file count from that is garbage-in).
-
-    Two phases, the compaction shape Delta OPTIMIZE / Iceberg
-    ``rewrite_data_files`` run as a maintenance pass, fused into the
-    sink: (1) stage the result with the plan's natural partitioning;
-    (2) derive the file count from the staged ACTUAL on-disk bytes and
-    rewrite through ``write_parquet_sized`` — a plain scan, where the
-    planned size IS the footprint. The extra write+scan touches the
-    OUTPUT only (for report-shaped results, orders of magnitude below
-    the input scan the plan already paid for). Local-filesystem staging
-    cleanup; on an object store the staging prefix would get a lifecycle
-    rule instead. Returns the file count used."""
-    import shutil
-
-    staging = path.rstrip("/") + "__staging"
-    df.write.mode("overwrite").parquet(staging)
-    try:
-        staged = df.sparkSession.read.parquet(staging)
-        n_files = write_parquet_sized(
-            staged, path, target_file_mb=target_file_mb, mode=mode
-        )
-    finally:
-        # always reclaim the staged copy — a failed sized write must not
-        # leak staged data next to the target (a later overwrite run
-        # would re-stage beside the leak)
-        shutil.rmtree(staging, ignore_errors=True)
-    return n_files

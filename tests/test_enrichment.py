@@ -82,7 +82,6 @@ def test_enrichment_matches_oracle(spark, fixture_dir):
     assert_frames_match(actual, expected)
 
 
-@pytest.mark.skipif(not os.path.exists(REFERENCE_SQL), reason="reference not available")
 def test_clean_for_export(spark, fixture_dir):
     deals_path = os.path.join(fixture_dir, "exports_deals.parquet")
     comp_path = os.path.join(fixture_dir, "competitor_list.csv")

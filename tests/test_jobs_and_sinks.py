@@ -35,15 +35,19 @@ def test_export_and_merge_jobs(spark, fixture_dir, tmp_path):
     assert len(files) == 1  # S6 single-file contract
 
 
-def test_export_job_sized_parquet_output(spark, fixture_dir, tmp_path):
+def test_export_job_sized_parquet_output(spark, fixture_dir, tmp_path, monkeypatch):
     """VERDICT r5 #7: the jobs path exercises the small-files guard — the
-    optional parquet output routes through write_parquet_compacted, and
-    at a deliberately tiny per-file target the part-file count tracks
-    actual-output-bytes / target (>1, so the sizing repartition actually
-    fired; ±1 tolerance because the final rewrite's compression groups
-    rows differently than the staging write the count was derived from),
-    with staging cleaned up and a complete read-back."""
+    optional parquet output routes through write_parquet_sized over the
+    staged copy, and at a deliberately tiny per-file target (patched in:
+    the job writes at the sized writer's default target) the part-file
+    count tracks actual-output-bytes / target (>1, so the sizing
+    repartition actually fired; ±1 tolerance because the final
+    rewrite's compression groups rows differently than the staging
+    write the count was derived from), with staging cleaned up and a
+    complete read-back."""
     import math
+
+    import monthly_report_etl_spark.sources.parquet as parquet_mod
 
     out_dir = str(tmp_path / "output")
     pq_dir = str(tmp_path / "report_parquet")
@@ -51,9 +55,14 @@ def test_export_job_sized_parquet_output(spark, fixture_dir, tmp_path):
     comp = os.path.join(fixture_dir, "competitor_list.csv")
 
     target_mb = 0.005
+    real_write_sized = parquet_mod.write_parquet_sized
+    monkeypatch.setattr(
+        parquet_mod,
+        "write_parquet_sized",
+        lambda df, path: real_write_sized(df, path, target_file_mb=target_mb),
+    )
     report = run_export_job(
-        spark, deals, comp, out_dir, PipelineConfig(),
-        parquet_dir=pq_dir, parquet_target_file_mb=target_mb,
+        spark, deals, comp, out_dir, PipelineConfig(), parquet_dir=pq_dir
     )
     files = glob.glob(os.path.join(pq_dir, "part-*.parquet"))
     # reproduce the derivation: stage the same result the same way and

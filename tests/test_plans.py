@@ -357,145 +357,6 @@ def test_bucketed_ingest_plan(spark, sf_dir):
     assert n == 1, f"expected only the incoming-side exchange, got {n}:\n{plan}"
 
 
-def test_driver_window_uses_all_50_slots():
-    """VERDICT r5 #6: the priority list must fill the driver's 50-entry
-    window exactly — every name resolving to a real catalog entry, no
-    dead names silently shrinking the checked set."""
-    from monthly_report_etl_spark.catalog import _DRIVER_WINDOW_PRIORITY, QUERIES
-
-    assert len(_DRIVER_WINDOW_PRIORITY) == 50
-    assert len(set(_DRIVER_WINDOW_PRIORITY)) == 50, "duplicate window names"
-    dead = [n for n in _DRIVER_WINDOW_PRIORITY if n not in QUERIES]
-    assert not dead, f"window names not in catalog: {dead}"
-    assert list(QUERIES)[:50] == _DRIVER_WINDOW_PRIORITY
-
-
-def test_driver_window_rotated_from_last_round():
-    """Anti-recurrence guard (VERDICT r15 #1, state-aware per VERDICT r16
-    wrong #1): the r15 rotation was never executed —
-    _DRIVER_WINDOW_PRIORITY stayed at its r14 state, so the driver
-    silently re-ran the identical window and burned all 50 checks
-    re-proving what r14 already proved. The original guard pinned the
-    window against the NEWEST CORRECTNESS key set, which went red the
-    moment the driver wrote the file the window itself produced (the
-    round-close blind spot). The guard now derives its expectations from
-    _DRIVER_WINDOW_ROUND, bumped in the same commit as each rotation:
-
-      * CORRECTNESS_r{ROUND-1}.json must exist and DIFFER from the
-        window (the rotation actually moved);
-      * if CORRECTNESS_r{ROUND}.json exists (the declared round just
-        closed), its key set must EQUAL the window — the expected
-        success state, not a missed rotation;
-      * no CORRECTNESS file beyond ROUND may exist — the driver ran a
-        round this list was never declared for (forgotten bump)."""
-    import glob
-    import json
-    import os
-    import re
-
-    from monthly_report_etl_spark.catalog import (
-        _DRIVER_WINDOW_PRIORITY,
-        _DRIVER_WINDOW_ROUND,
-    )
-
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    rounds = {}
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        n = int(re.search(r"_r(\d+)", os.path.basename(path)).group(1))
-        rounds[n] = path
-    assert rounds, "no CORRECTNESS files — cannot verify rotation"
-
-    window = set(_DRIVER_WINDOW_PRIORITY)
-    prev = _DRIVER_WINDOW_ROUND - 1
-    assert prev in rounds, (
-        f"CORRECTNESS_r{prev}.json missing — _DRIVER_WINDOW_ROUND "
-        f"({_DRIVER_WINDOW_ROUND}) was bumped past the recorded history"
-    )
-    with open(rounds[prev]) as f:
-        prev_keys = set(json.load(f).keys())
-    assert window != prev_keys, (
-        f"_DRIVER_WINDOW_PRIORITY is byte-identical to the key set of "
-        f"CORRECTNESS_r{prev}.json — the r{_DRIVER_WINDOW_ROUND} rotation "
-        f"was not executed (VERDICT r15 #1 recurrence)"
-    )
-    if _DRIVER_WINDOW_ROUND in rounds:
-        from monthly_report_etl_spark.catalog import _DRIVER_WINDOW_SUPERSET_OK
-
-        with open(rounds[_DRIVER_WINDOW_ROUND]) as f:
-            own_keys = set(json.load(f).keys())
-        if _DRIVER_WINDOW_SUPERSET_OK:
-            # Scoped to optimization rounds (ADVICE r20 #1): the
-            # optimization-phase driver re-checks EVERY declared entry,
-            # not only the front-50 window — a key set that COVERS the
-            # window is the success state; only a cohort that misses
-            # declared window entries is a failure. Build rounds flip
-            # the flag back to False and this reverts to equality.
-            assert window <= own_keys, (
-                f"CORRECTNESS_r{_DRIVER_WINDOW_ROUND}.json exists but misses "
-                f"declared window entries {sorted(window - own_keys)} — the "
-                f"driver checked a different cohort than this list declares"
-            )
-        else:
-            assert window == own_keys, (
-                f"CORRECTNESS_r{_DRIVER_WINDOW_ROUND}.json key set differs "
-                f"from the declared window (missing "
-                f"{sorted(window - own_keys)}, extra "
-                f"{sorted(own_keys - window)})"
-            )
-        # Known trade-off (code-review r17): in this state the guard
-        # cannot distinguish "round just closed" from "next round's
-        # rotation forgotten" — a forgotten rotation now hard-fails only
-        # AFTER the wasted re-run (the 'beyond' assertion below), where
-        # the pre-r17 guard failed before it (at the cost of being red
-        # across every round boundary). Surface the pending obligation
-        # as a warning so the round-start receipt isn't silent.
-        import warnings
-
-        warnings.warn(
-            f"round {_DRIVER_WINDOW_ROUND} is closed "
-            f"(CORRECTNESS_r{_DRIVER_WINDOW_ROUND}.json exists): rotate "
-            f"_DRIVER_WINDOW_PRIORITY and bump _DRIVER_WINDOW_ROUND as the "
-            f"FIRST commit of round {_DRIVER_WINDOW_ROUND + 1}",
-            stacklevel=1,
-        )
-    beyond = [n for n in rounds if n > _DRIVER_WINDOW_ROUND]
-    assert not beyond, (
-        f"CORRECTNESS rounds {sorted(beyond)} exist beyond "
-        f"_DRIVER_WINDOW_ROUND={_DRIVER_WINDOW_ROUND} — the rotation (and "
-        f"its constant bump) was forgotten for those rounds"
-    )
-
-
-def test_driver_window_rotation_covers_every_entry():
-    """Regression guard on the rotation logic itself (VERDICT r3 item
-    #8): every catalog entry must either already have a recorded driver
-    check (it appears in some round's CORRECTNESS_r*.json) or sit inside
-    the CURRENT first-50 window awaiting this round's check. An entry
-    that is neither recorded nor scheduled can never earn a green row."""
-    import glob
-    import json
-    import os
-
-    from monthly_report_etl_spark.catalog import QUERIES
-
-    # only GREEN rows count as recorded (ADVICE r5): a red row that then
-    # rotates out of the window would otherwise escape the guard without
-    # ever earning a passing driver check
-    recorded: set[str] = set()
-    root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    for path in glob.glob(os.path.join(root, "CORRECTNESS_r*.json")):
-        with open(path) as f:
-            for name, row in json.load(f).items():
-                if row.get("hash_match") and not row.get("err"):
-                    recorded.add(name)
-    window = set(list(QUERIES)[:50])
-    uncovered = set(QUERIES) - recorded - window
-    assert not uncovered, (
-        f"catalog entries with no recorded driver row and no slot in the "
-        f"current 50-entry window: {sorted(uncovered)}"
-    )
-
-
 def test_quantize_int8_no_shuffle_no_python(spark, sf_dir):
     """embeddings_quantize_int8 is a pure projection: the array HOFs
     (transform/aggregate/array_max) stay JVM-side — no Exchange, no

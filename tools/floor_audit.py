@@ -7,8 +7,8 @@ Floor = per-entry MIN across the official driver BENCH_r{12..15}.json
 records (the pre-drift era). A same-code entry far above its own floor
 on a quiet host is either ambient drift (adjudicate with
 tools/time_entries.py pinned-era A/B — see
-artifacts/floor_attribution_r19.txt) or a real regression; the 1.8x
-naming threshold decides what must be pre-named in the window note.
+artifacts/floor_attribution_r19.txt) or a real regression; entries at
+or over the --threshold ratio (default 1.8x) are listed at the end.
 
 Usage:
     python tools/floor_audit.py artifacts/bench_sf01_r19_check.json

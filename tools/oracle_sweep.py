@@ -3,11 +3,7 @@ catalog entries at an arbitrary scale directory (verify skill surface 4,
 promoted out of /tmp heredocs at r18 so the standing receipt doesn't
 depend on scratch files surviving between sessions).
 
-Two standing modes:
-
   python tools/oracle_sweep.py            # all 148 entries (full sweep)
-  python tools/oracle_sweep.py --window   # the declared driver window
-                                          # (first 50 = _DRIVER_WINDOW_PRIORITY)
 
 Optional: --sf-dir DIR (default /root/testdata/sf0.01), or explicit
 entry names as positional args. Exits nonzero on any mismatch. The
@@ -53,31 +49,18 @@ def main() -> int:
         # ADVICE r18: --sf-dir as the LAST argument used to raise an
         # unhandled IndexError — validate and print usage instead.
         if i + 1 >= len(args) or args[i + 1].startswith("--"):
-            print("usage: oracle_sweep.py [--window] [--sf-dir DIR] "
+            print("usage: oracle_sweep.py [--sf-dir DIR] "
                   "[entry ...]  (--sf-dir requires a directory value)",
                   file=sys.stderr)
             return 2
         sf = args[i + 1]
         del args[i:i + 2]
-    window_only = "--window" in args
-    if window_only:
-        args.remove("--window")
 
     import __spark_entry__ as entrymod
-    from monthly_report_etl_spark.catalog import _DRIVER_WINDOW_PRIORITY
     from monthly_report_etl_spark.session import get_spark
 
     queries, oracles = entrymod.queries(), entrymod.oracle_sql()
-    if args:
-        names = args
-    elif window_only:
-        names = list(_DRIVER_WINDOW_PRIORITY)
-        assert list(queries)[:50] == names, (
-            "queries() front-50 does not match _DRIVER_WINDOW_PRIORITY — "
-            "the driver would check a different cohort"
-        )
-    else:
-        names = list(oracles)
+    names = args or list(oracles)
 
     spark = get_spark(master="local[16]", shuffle_partitions=16)
     con = duckdb.connect()
