@@ -7,8 +7,9 @@ per-lender directory as one table, re-infer ``time``, single merged TSV).
 
 Differences by design (SURVEY §2.12): the export job is ONE partitioned
 write instead of ~48 sequential per-lender queries, and the merge job is a
-directory scan — Spark unions natively. Validation (S7) is a read-back
-assertion, not a data pass.
+directory scan — Spark unions natively. Validation (S7) is a data pass: it
+re-reads every byte the sink wrote, once, with both checks riding that
+scan.
 """
 
 from __future__ import annotations

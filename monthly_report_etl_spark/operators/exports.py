@@ -201,13 +201,17 @@ def global_stats(df: DataFrame) -> DataFrame:
     an empty-partition window funnels ALL data through one partition — a
     100 TB non-starter. Faithful rewrite: tiny aggregates broadcast back.
 
-    ONE aggregation pass serves all three denominators: the per-purpose
-    aggregate (keyed by loanPurpose, map-side partials) also yields the
-    global count/sum by re-aggregating its ≤#purposes rows — valid because
-    step 2 guarantees one row per scenarioId, so scenarios never span two
-    purposes and per-group distinct counts add up. (A second full-input
-    branch would re-execute the entire upstream dedup — Spark shares no
-    diamond subplans — measured at ~2x the whole pipeline's cost.)
+    One per-purpose aggregate (keyed by loanPurpose, map-side partials)
+    yields all three denominators: the global count/sum re-aggregate its
+    ≤#purposes rows — valid because step 2 guarantees one row per
+    scenarioId, so scenarios never span two purposes and per-group distinct
+    counts add up. The executed plan still runs the upstream scan →
+    ``from_json`` → dedup three times: once for the main branch, once under
+    the totals broadcast and once under the per-purpose broadcast. Spark
+    shares no diamond subplans, and the three branches prune different
+    columns (the per-purpose broadcast drops ``_sum_lp``), so none of their
+    dedup exchanges is reused. With ``get_lenders``' own scan, an export
+    reads the raw input four times.
 
     NULL loanPurpose groups together under PARTITION BY, so the join back
     is null-safe (``eqNullSafe``). Both joined sides are broadcast: no

@@ -32,6 +32,16 @@ def get_spark(
       non-ANSI ``cast`` nulls on failure instead of raising.
     * AQE on — runtime coalescing of the 32-way local shuffles and skew-join
       splitting at cluster scale.
+    * ``spark.sql.sources.parallelPartitionDiscovery.threshold=4096`` —
+      Spark lists a set of paths with a distributed job (0.3–0.6 s each,
+      for milliseconds of driver-side work on a local disk) once the set
+      holds more paths than this (default 32). Reading the per-lender report
+      lists its 48 lender directories, and CSV header inference lists its
+      part files one by one: lenders × write tasks, about 190 at 4 cores and
+      1,500 at 32. Above the default, each read of the report (the export's
+      read-back validation, the merge job's reads) started one such job per
+      listing. 4096 keeps these lists on the driver up to about 80 cores; a
+      larger tree still lists in parallel.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
@@ -52,6 +62,7 @@ def get_spark(
         .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "8g"))
         .config("spark.ui.enabled", "false")
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
+        .config("spark.sql.sources.parallelPartitionDiscovery.threshold", "4096")
     )
     if extra_conf:
         for k, v in extra_conf.items():

@@ -12,15 +12,21 @@ Three contracts (SURVEY.md §2.1):
 * S5/S6 — TSV sink: tab-delimited, QUOTE_ALL, ``''`` for NULL,
   ``%Y-%m-%d %H:%M:%S%z`` timestamps, ``\\n`` terminator, backslash escape,
   utf-8-sig BOM (run_exports_query.py:75-89, merge_all_lenders.py:63-77).
-  Spark cannot emit a BOM itself; ``write_tsv(..., bom=True)`` post-fixes
-  the part files (driver-side file rename, not a data pass).
+  Spark cannot emit a BOM itself, so ``write_tsv(..., bom=True)`` copies
+  every part file on the driver with the BOM in front: a sequential pass
+  over every byte written. For ``single_file=True`` that copy is the
+  concatenation of the parts, which writes the BOM once.
 """
 
 from __future__ import annotations
 
+import contextlib
 import glob
 import logging
 import os
+import re
+import shutil
+import tempfile
 
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
@@ -41,6 +47,10 @@ _SINK_OPTIONS = {
     "timestampFormat": REFERENCE_TIMESTAMP_FORMAT,
     "lineSep": "\n",
 }
+
+_BOM = b"\xef\xbb\xbf"
+# Spark's part-file name: part-<task partition>-<job uuid>-c<file in task>.csv
+_PART_NAME = re.compile(r"^part-(\d+)-.+-c(\d+)\.csv$")
 
 
 def read_lookup_csv(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
@@ -166,13 +176,17 @@ def write_tsv(
     ``partition_by`` reproduces one-file-per-lender (S5) as a partitioned
     directory — at scale the partitioned write replaces the reference's
     48 sequential per-lender jobs. ``single_file=True`` reproduces the
-    merged single-file contract (S6) via ``coalesce(1)`` — only sane for
-    final small outputs; the 100 TB path keeps the partitioned layout.
+    merged single-file contract (S6): every partition is written in
+    parallel, then the driver concatenates the parts into one file
+    (``_write_single_file``). ``path`` is a local filesystem path: the BOM
+    and the concatenation are driver-side file copies.
     """
-    writer = df.coalesce(1).write if single_file else df.write
-    writer = writer.mode("overwrite")
-    for k, v in _SINK_OPTIONS.items():
-        writer = writer.option(k, v)
+    if single_file:
+        if partition_by:
+            raise ValueError("single_file=True writes one file; it takes no partition_by")
+        _write_single_file(df, path, bom)
+        return
+    writer = df.write.mode("overwrite").options(**_SINK_OPTIONS)
     if partition_by:
         writer = writer.partitionBy(partition_by)
     writer.csv(path)
@@ -180,22 +194,90 @@ def write_tsv(
         _prepend_bom(path)
 
 
+def _write_single_file(df: DataFrame, path: str, bom: bool) -> None:
+    """One part file holding the same bytes ``df.coalesce(1)`` would write,
+    but written by every core instead of one task.
+
+    Spark writes one part per partition, each with its own header, into a
+    temporary sibling directory; it always writes part 0, even for an empty
+    frame. The driver appends the parts in partition order into one file:
+    the BOM once, the first part whole, and every later part without its
+    header. The finished directory (that file and Spark's ``_SUCCESS``)
+    replaces ``path`` only once it is complete, so a failed write leaves
+    the previous output in place.
+    """
+    path = os.path.abspath(path)
+    parent, name = os.path.split(path)
+    os.makedirs(parent, exist_ok=True)
+    tmp = tempfile.mkdtemp(prefix=f".{name}.", dir=parent)
+    try:
+        parts_dir = os.path.join(tmp, "parts")
+        df.write.mode("overwrite").options(**_SINK_OPTIONS).csv(parts_dir)
+        parts = sorted(
+            (p for p in os.listdir(parts_dir) if _PART_NAME.match(p)),
+            key=lambda p: tuple(map(int, _PART_NAME.match(p).groups())),
+        )
+        done = os.path.join(tmp, "done")
+        os.mkdir(done)
+        _concat(
+            os.path.join(done, parts[0]),
+            [os.path.join(parts_dir, p) for p in parts],
+            bom=bom,
+            # a newline inside a (quoted) column name makes the header span more lines
+            header_lines=1 + sum(c.count("\n") for c in df.columns),
+        )
+        os.replace(os.path.join(parts_dir, "_SUCCESS"), os.path.join(done, "_SUCCESS"))
+        previous = os.path.join(tmp, "previous")
+        had_previous = os.path.lexists(path)
+        if had_previous:
+            os.rename(path, previous)
+        try:
+            os.rename(done, path)
+        except OSError:
+            if had_previous:
+                os.rename(previous, path)
+            raise
+    finally:
+        shutil.rmtree(tmp, ignore_errors=True)
+
+
+def _concat(dst: str, parts: list[str], bom: bool, header_lines: int = 0) -> None:
+    """Write a new file ``dst``: the BOM if asked, then each of ``parts`` in
+    order, skipping the first ``header_lines`` lines of every part after the
+    first. Chunked, so the driver holds one chunk whatever the part size."""
+    with open(dst, "wb") as out:
+        if bom:
+            out.write(_BOM)
+        for i, part in enumerate(parts):
+            with open(part, "rb") as src:
+                if i:
+                    for _ in range(header_lines):
+                        src.readline()
+                shutil.copyfileobj(src, out)
+
+
 def _prepend_bom(path: str) -> None:
     """Prefix each written part file with the UTF-8 BOM (utf-8-sig).
 
-    Also removes Hadoop LocalFS ``.crc`` sidecars for rewritten parts —
-    mutating the file in place invalidates the checksum and would make any
-    later Spark read of the directory fail with ChecksumException.
+    Each part is copied, BOM first, into a hidden temp file beside it that
+    then replaces it (``os.replace``): the part is never truncated in
+    place, and the driver holds one chunk of it at a time. Also removes
+    Hadoop LocalFS ``.crc`` sidecars for rewritten parts — the new file no
+    longer matches the checksum, and any later Spark read of the directory
+    would fail with ChecksumException.
     """
-    for part in set(
-        glob.glob(os.path.join(path, "**", "part-*.csv"), recursive=True)
-        + glob.glob(os.path.join(path, "part-*.csv"))
-    ):
+    for part in sorted(glob.glob(os.path.join(path, "**", "part-*.csv"), recursive=True)):
         with open(part, "rb") as f:
-            data = f.read()
-        if not data.startswith(b"\xef\xbb\xbf"):
-            with open(part, "wb") as f:
-                f.write(b"\xef\xbb\xbf" + data)
-            crc = os.path.join(os.path.dirname(part), f".{os.path.basename(part)}.crc")
-            if os.path.exists(crc):
-                os.remove(crc)
+            if f.read(len(_BOM)) == _BOM:
+                continue
+        folder, name = os.path.split(part)
+        tmp = os.path.join(folder, f".{name}.bom")
+        try:
+            _concat(tmp, [part], bom=True)
+            os.replace(tmp, part)
+        finally:
+            with contextlib.suppress(FileNotFoundError):
+                os.remove(tmp)
+        crc = os.path.join(folder, f".{name}.crc")
+        if os.path.exists(crc):
+            os.remove(crc)

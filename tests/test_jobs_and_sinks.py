@@ -8,10 +8,32 @@ import glob
 import io
 import os
 
+import pytest
 from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.config import PipelineConfig
 from monthly_report_etl_spark.jobs import run_export_job, run_merge_job
+from monthly_report_etl_spark.sources import read_tsv_directory, write_tsv
+from monthly_report_etl_spark.sources.csv import _SINK_OPTIONS
+
+BOM = b"\xef\xbb\xbf"
+
+
+def _assert_single_file_matches_coalesce(df, out, tmp_path):
+    """``out`` holds what ``write_tsv(df, out, single_file=True, bom=True)``
+    must write: exactly the bytes one ``coalesce(1)`` task writes with the
+    sink options, BOM once in front, in one part file beside ``_SUCCESS``,
+    with no temporary directory left next to it."""
+    ref_dir = str(tmp_path / "coalesce_reference")
+    df.coalesce(1).write.options(**_SINK_OPTIONS).csv(ref_dir)
+    (ref_part,) = glob.glob(os.path.join(ref_dir, "part-*.csv"))
+    (part,) = glob.glob(os.path.join(out, "part-*.csv"))
+    data = open(part, "rb").read()
+    assert data == BOM + open(ref_part, "rb").read()
+    assert data.count(BOM) == 1
+    assert os.path.exists(os.path.join(out, "_SUCCESS"))
+    parent = os.path.dirname(out)
+    assert [n for n in os.listdir(parent) if n.startswith(".")] == []
 
 
 def test_export_and_merge_jobs(spark, fixture_dir, tmp_path):
@@ -31,8 +53,7 @@ def test_export_and_merge_jobs(spark, fixture_dir, tmp_path):
     merged = run_merge_job(spark, out_dir, merged_dir)
     assert merged.count() == n_expected
 
-    files = glob.glob(os.path.join(merged_dir, "part-*.csv"))
-    assert len(files) == 1  # S6 single-file contract
+    _assert_single_file_matches_coalesce(merged, merged_dir, tmp_path)  # S6
 
 
 def test_export_job_sized_parquet_output(spark, fixture_dir, tmp_path, monkeypatch):
@@ -102,14 +123,14 @@ def test_tsv_contract_bytes(spark, fixture_dir, tmp_path):
     # QUOTE_ALL: every field of the raw first data line is quoted
     first_line = text.splitlines()[1]
     assert all(f.startswith('"') and f.endswith('"') for f in first_line.split("\t"))
+    # the BOM rewrite leaves no temp file beside any part
+    assert glob.glob(os.path.join(out_dir, "**", ".*.bom"), recursive=True) == []
 
 
 def test_skip_bad_files_drops_whole_file(spark, tmp_path):
     """S4 fidelity: the reference skips a whole unreadable CSV with a
     warning and keeps going (merge_all_lenders.py:46-49). A file with a
     corrupt row must contribute ZERO rows; good files are untouched."""
-    from monthly_report_etl_spark.sources import read_tsv_directory
-
     d = tmp_path / "tsvs"
     d.mkdir()
     (d / "good.csv").write_text('a\tb\n"1"\t"x"\n"2"\t"y"\n')
@@ -127,9 +148,8 @@ def test_skip_bad_files_drops_whole_file(spark, tmp_path):
 def test_tsv_roundtrip_hostile_strings(spark, tmp_path):
     """Sink-contract fuzz: tabs, quotes, backslashes, and (with
     multi_line=True, the pandas-fidelity mode) embedded newlines all
-    survive write_tsv → read_tsv_directory byte-exact."""
-    from monthly_report_etl_spark.sources import read_tsv_directory, write_tsv
-
+    survive write_tsv → read_tsv_directory byte-exact, and the single-file
+    sink writes them exactly as one ``coalesce(1)`` task would."""
     nasty = [
         ("tab", "a\tb"),
         ("quote", 'say "hi"'),
@@ -143,6 +163,88 @@ def test_tsv_roundtrip_hostile_strings(spark, tmp_path):
     write_tsv(df, out, single_file=True, bom=True)
     back = {r["k"]: r["v"] for r in read_tsv_directory(spark, out, multi_line=True).collect()}
     assert back == dict(nasty)
+    _assert_single_file_matches_coalesce(df, out, tmp_path)
+
+
+@pytest.mark.parametrize(
+    "shape", ["empty", "first_partition_empty", "23_partitions", "newline_in_column_name"]
+)
+def test_single_file_sink_matches_coalesce(spark, tmp_path, shape):
+    """The single-file sink concatenates per-partition parts on the driver.
+    These shapes are where that can differ from one task writing every
+    partition: no rows (Spark writes part 0 with only a header), an empty
+    part 0 followed by full parts, part numbers past one digit (the parts
+    must be taken in numeric partition order, not listing order), and a
+    header that spans two lines."""
+    frames = {
+        "empty": lambda: spark.createDataFrame([], "a string, b int"),
+        "first_partition_empty": lambda: spark.range(0, 40, numPartitions=4).filter("id >= 10"),
+        "23_partitions": lambda: spark.range(0, 230, numPartitions=23).selectExpr(
+            "id", "cast(id * 3 as string) AS s"
+        ),
+        "newline_in_column_name": lambda: spark.range(0, 30, numPartitions=3).toDF(
+            "line1\nline2"
+        ),
+    }
+    df = frames[shape]()
+    out = str(tmp_path / "single")
+    write_tsv(df, out, single_file=True, bom=True)
+    _assert_single_file_matches_coalesce(df, out, tmp_path)
+
+
+@pytest.mark.parametrize("failing_step", ["spark_write", "concatenation"])
+def test_single_file_sink_failure_keeps_previous_output(
+    spark, tmp_path, monkeypatch, failing_step
+):
+    """A single-file write that fails, in Spark or in the driver-side
+    concatenation, leaves the previous output in place, byte for byte and
+    readable, and removes its temporary directory."""
+    import monthly_report_etl_spark.sources.csv as csv_mod
+
+    out = str(tmp_path / "merged")
+    good = spark.range(0, 50, numPartitions=4).selectExpr("id", "cast(id * 2 as string) AS twice")
+    write_tsv(good, out, single_file=True, bom=True)
+    before = {n: open(os.path.join(out, n), "rb").read() for n in os.listdir(out)}
+
+    if failing_step == "spark_write":
+        bad = good.withColumn(
+            "id", F.when(F.col("id") == 7, F.raise_error(F.lit("injected"))).otherwise(F.col("id"))
+        )
+    else:
+        def broken_concat(*args, **kwargs):
+            raise OSError("injected")
+
+        monkeypatch.setattr(csv_mod, "_concat", broken_concat)
+        bad = good
+    with pytest.raises(Exception, match="injected"):
+        write_tsv(bad, out, single_file=True, bom=True)
+
+    assert {n: open(os.path.join(out, n), "rb").read() for n in os.listdir(out)} == before
+    assert read_tsv_directory(spark, out).count() == 50
+    assert [n for n in os.listdir(tmp_path) if n.startswith(".")] == []
+
+
+def test_report_directory_listed_on_driver(spark, fixture_dir, tmp_path):
+    """Reading the per-lender report starts no Spark job. Its lender
+    directories outnumber Spark's default parallel-listing threshold (32),
+    above which every read lists them with a distributed job; the session
+    raises the threshold so the driver lists them itself."""
+    out_dir = str(tmp_path / "output")
+    deals = os.path.join(fixture_dir, "exports_deals.parquet")
+    comp = os.path.join(fixture_dir, "competitor_list.csv")
+    run_export_job(spark, deals, comp, out_dir, PipelineConfig())
+    lender_dirs = [d for d in os.listdir(out_dir) if d.startswith("associated_lender=")]
+    assert len(lender_dirs) > 32, "fixture no longer crosses Spark's default threshold"
+
+    sc = spark.sparkContext
+    group = "report_directory_listing"
+    sc.setJobGroup(group, "read the per-lender report")
+    try:
+        read_tsv_directory(spark, out_dir, columns=["time", "scenarioId"])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
 def test_parquet_schema_evolution(spark, tmp_path):
