@@ -1,22 +1,25 @@
 """Operational entry points — the reference's two scripts as engine jobs.
 
 ``run_export_job``  ≙ scripts/run_exports_query.py:main (S5 sink: one TSV
-per lender, QUOTE_ALL/BOM/null-as-empty, validated read-back).
+per lender, QUOTE_ALL/BOM/null-as-empty).
 ``run_merge_job``   ≙ scripts/merge_all_lenders.py:main (S4/U1/S6: read the
 per-lender directory as one table, re-infer ``time``, single merged TSV).
 
 Differences by design (SURVEY §2.12): the export job is ONE partitioned
 write instead of ~48 sequential per-lender queries, and the merge job is a
-directory scan — Spark unions natively. Validation (S7) is a data pass: it
-re-reads every byte the sink wrote, once, with both checks riding that
-scan.
+directory scan — Spark unions natively. Validation (S7) is not a data
+pass: each job counts the rows of its own write with an ``Observation``
+and fails on zero, and the TSV sink always writes the header. Both TSV
+outputs are published by rename, so a failed TSV write leaves the previous
+one in place.
 """
 
 from __future__ import annotations
 
 import os
+import shutil
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.config import PipelineConfig
@@ -37,68 +40,38 @@ def run_export_job(
     config: PipelineConfig | None = None,
     parquet_dir: str | None = None,
 ) -> DataFrame:
-    """Full monthly report → per-lender TSV directory (S5 contract).
+    """Full monthly report → per-lender TSV directory (S5 contract), plus
+    its parquet copy when ``parquet_dir`` is given.
 
-    With ``parquet_dir``, additionally writes the report as parquet
-    through ``write_parquet_sized`` over a staged copy: the analytics copy
-    downstream Spark/DuckDB consumers scan, with file count derived from
-    the staged output's ACTUAL bytes so a wide-parallelism run can't
-    spray thousands of KB-sized files (the small-files guard a 100 TB
-    pipeline needs on every long-lived dataset — and a computed plan's
-    optimizer estimate, a join product, can't be trusted for it).
-
-    Dual-sink economy (r7): the report plan is computed ONCE. When both
-    sinks are requested, the result is staged as parquet first and BOTH
-    the TSV write and the sized parquet write read the staged scan —
-    the naive ``write_tsv(report); write_parquet_sized(report)``
-    sequence executed the full join/agg plan twice, which at 100 TB
-    doubles the dominant cost for a report-sized output.
+    One path for either: the report plan runs once, into a staging parquet
+    beside the output, and an ``Observation`` on that write counts its
+    rows. An empty report raises ``ValueError`` before either sink is
+    touched, so last month's outputs stay as they were. Then, one after
+    the other, both sinks read the staged scan: ``write_tsv`` (published
+    by rename) and, with ``parquet_dir``, ``write_parquet_sized``, whose
+    file count follows the staged output's actual bytes, which the
+    optimizer's estimate for the computed plan does not give (the
+    small-files guard for the copy downstream Spark/DuckDB consumers
+    scan). The staging directory is removed whatever happens.
 
     Returns the report DataFrame (lazy; the writes are the only actions).
     """
-    import shutil
-
     from monthly_report_etl_spark.sources.parquet import write_parquet_sized
 
     raw = spark.read.parquet(deals_path)
     comp = read_lookup_csv(spark, competitor_csv, COMPETITOR_LIST_SCHEMA)
     report = monthly_report(raw, comp, config or PipelineConfig())
-    if parquet_dir is None:
-        write_tsv(report, output_dir, partition_by="associated_lender", bom=True)
-        validate_tsv_output(spark, output_dir)
-        return report
-    staging = parquet_dir.rstrip("/") + "__staging"
-    report.write.mode("overwrite").parquet(staging)
+    staging = (parquet_dir or output_dir).rstrip("/") + "__staging"
+    rows = Observation("export_rows")
     try:
+        observed = report.observe(rows, F.count(F.lit(1)).alias("n"))
+        observed.write.mode("overwrite").parquet(staging)
+        if rows.get["n"] == 0:
+            raise ValueError(f"the report for {output_dir} has no rows; nothing written")
         staged = spark.read.parquet(staging)
-
-        # Dual-sink overlap (r21, guide §2.6): the TSV chain (write +
-        # S7 read-back validation) and the sized parquet write are
-        # INDEPENDENT consumers of the staged bytes — they touch
-        # disjoint output dirs and depend only on the staging write
-        # above. Submitting them from two driver threads lets the sized
-        # writer's narrow phases (its size-derived repartition write is
-        # one task for a report-sized output) back-fill executors the
-        # TSV chain leaves idle, instead of serializing ~2 s of
-        # single-task wall after the TSV chain. Spark's scheduler runs
-        # concurrent driver-thread actions FIFO, which is exactly the
-        # back-fill behavior wanted; outputs are byte-identical because
-        # the sinks were already independent.
-        def _tsv_chain() -> None:
-            write_tsv(
-                staged, output_dir, partition_by="associated_lender", bom=True
-            )
-            validate_tsv_output(spark, output_dir)
-
-        def _parquet_chain() -> None:
+        write_tsv(staged, output_dir, partition_by="associated_lender", bom=True)
+        if parquet_dir is not None:
             write_parquet_sized(staged, parquet_dir)
-
-        from concurrent.futures import ThreadPoolExecutor
-
-        with ThreadPoolExecutor(max_workers=2) as pool:
-            futures = [pool.submit(_tsv_chain), pool.submit(_parquet_chain)]
-            for f in futures:
-                f.result()  # join both; propagate the first failure
     finally:
         # local-filesystem staging cleanup; on an object store the
         # staging prefix would get a lifecycle rule instead
@@ -112,24 +85,30 @@ def run_merge_job(spark: SparkSession, output_dir: str, merged_dir: str) -> Data
     All-string read + ``to_timestamp`` re-inference of ``time`` mirrors
     merge_all_lenders.py:41-59 (the ``partitionBy`` layout moves
     ``associated_lender`` into the directory key; the read restores it).
+    An ``Observation`` on the merged write counts its rows; a merge that
+    wrote none raises ``ValueError``.
     """
     df = read_tsv_directory(spark, output_dir, skip_bad_files=True)
     if "time" in df.columns:
         df = df.withColumn("time", F.to_timestamp("time"))
-    write_tsv(df, merged_dir, single_file=True, bom=True)
-    validate_tsv_output(spark, merged_dir)
+    rows = Observation("merged_rows")
+    write_tsv(
+        df.observe(rows, F.count(F.lit(1)).alias("n")), merged_dir, single_file=True, bom=True
+    )
+    if rows.get["n"] == 0:
+        raise ValueError(f"merged output at {merged_dir} has no rows")
     return df
 
 
 def validate_tsv_output(spark: SparkSession, path: str) -> None:
-    """S7: read-back validation — header arity vs data arity, rows > 0.
+    """Read-back check of a written TSV output: ≥1 column, rows > 0, no
+    row whose every column is NULL.
 
-    Both metrics ride ONE pass via the Observation API (accumulator-backed
-    side metrics on the scan itself) instead of separate count jobs — the
-    pattern for data-quality counters on 100 TB writes, where a second
-    validation scan is a real cost."""
-    from pyspark.sql import Observation
-
+    Neither job runs it: each counts the rows of its own write, and the
+    sink always writes the header. It stays as a standalone probe that
+    re-reads every byte, with all its metrics on one ``Observation`` of
+    that scan.
+    """
     back = read_tsv_directory(spark, path)
     n_cols = len(back.columns)
     if n_cols == 0:

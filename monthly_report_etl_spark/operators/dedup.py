@@ -697,7 +697,7 @@ def simhash_pairs_portable(spark: SparkSession, sf_dir: str) -> DataFrame:
     for c in range(_CHUNKS):
         h = F.bit_count(F.col(f"a.c{c}").bitwiseXOR(F.col(f"b.c{c}")))
         hamming = h if hamming is None else hamming + h
-    # r20 (broadcast-provenance audit, tools/broadcast_audit.py): both
+    # r20 (broadcast-provenance audit): both
     # sides of this self-join are the corpus-growing chunk rows READ
     # FROM THE CHECKPOINT — a LogicalRDD with no usable stats — and the
     # static planner was broadcast-building one side (confirmed by

@@ -23,7 +23,7 @@ pandas semantics that are easy to get wrong (reproduced deliberately):
 * ``rank(ascending=False, method='min')`` is SQL ``RANK() OVER (... DESC)``
   exactly (competition rank).
 * ``.astype(str)`` turns None into the literal string 'None' before the
-  character strip (:60) — faithful by default, switchable.
+  character strip (:60).
 """
 
 from __future__ import annotations
@@ -113,13 +113,13 @@ def add_rank_columns(df: DataFrame, config: PipelineConfig) -> DataFrame:
     return df.join(F.broadcast(pivoted), ["Tier", "exportedLender"], "left")
 
 
-def clean_for_export(df: DataFrame, none_literal: bool = True) -> DataFrame:
+def clean_for_export(df: DataFrame) -> DataFrame:
     """F16-F20 — clean_dataframe (run_exports_query.py:47-73).
 
     * ``time`` → 'yyyy-MM-dd HH:mm:ss' string (pandas ``astype(str)`` on a
       tz-naive datetime, :55-56).
     * string columns: strip ``[]{}"\\,`` (regex, :60). pandas ``astype(str)``
-      first renders None as 'None' — reproduced when ``none_literal``.
+      first renders None as 'None', so NULL becomes the string 'None'.
     * numeric columns: ``pd.to_numeric(errors='coerce')`` → non-ANSI
       ``cast('double')`` (nulls on failure) for string-typed columns only;
       already-numeric columns pass through like to_numeric does.
@@ -129,35 +129,9 @@ def clean_for_export(df: DataFrame, none_literal: bool = True) -> DataFrame:
         out = out.withColumn("time", F.date_format("time", "yyyy-MM-dd HH:mm:ss"))
     for c in STRING_CLEAN_COLUMNS:
         if c in out.columns:
-            col = F.col(c).cast("string")
-            if none_literal:
-                col = F.coalesce(col, F.lit("None"))
+            col = F.coalesce(F.col(c).cast("string"), F.lit("None"))
             out = out.withColumn(c, F.regexp_replace(col, _STRIP_PATTERN, ""))
     for c in NUMERIC_COERCE_COLUMNS:
         if c in out.columns and dict(out.dtypes)[c] == "string":
             out = out.withColumn(c, F.col(c).cast("double"))
     return out
-
-
-def quality_warnings(df: DataFrame) -> DataFrame:
-    """F17 — the reference's dirty-string QA prints (:61-67) as a tiny
-    aggregate report: per column, how many rows still contain commas or
-    JSON-ish wrappers after cleaning."""
-    aggs = []
-    for c in STRING_CLEAN_COLUMNS:
-        if c in df.columns:
-            aggs.append(
-                F.sum(F.col(c).rlike(",").cast("int")).alias(f"{c}_commas")
-            )
-            aggs.append(
-                F.sum(F.col(c).rlike(r"[\[\{].*[\]\}]").cast("int")).alias(f"{c}_jsonish")
-            )
-    return df.agg(*aggs)
-
-
-def null_profile(df: DataFrame) -> DataFrame:
-    """P9/A7 — per-column null counts (run_exports_query.py:232) as one
-    aggregate row instead of a driver-side ``isnull().sum()``."""
-    return df.agg(
-        *[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in df.columns]
-    )

@@ -12,16 +12,15 @@ Three contracts (SURVEY.md §2.1):
 * S5/S6 — TSV sink: tab-delimited, QUOTE_ALL, ``''`` for NULL,
   ``%Y-%m-%d %H:%M:%S%z`` timestamps, ``\\n`` terminator, backslash escape,
   utf-8-sig BOM (run_exports_query.py:75-89, merge_all_lenders.py:63-77).
-  Spark cannot emit a BOM itself, so ``write_tsv(..., bom=True)`` copies
-  every part file on the driver with the BOM in front: a sequential pass
-  over every byte written. For ``single_file=True`` that copy is the
+  Spark cannot emit a BOM itself, so ``write_tsv`` has Spark write into a
+  hidden temporary directory and the driver copies every part file, BOM
+  first, into the tree it then publishes by rename: a sequential pass over
+  every byte written. For ``single_file=True`` that copy is the
   concatenation of the parts, which writes the BOM once.
 """
 
 from __future__ import annotations
 
-import contextlib
-import glob
 import logging
 import os
 import re
@@ -49,8 +48,9 @@ _SINK_OPTIONS = {
 }
 
 _BOM = b"\xef\xbb\xbf"
-# Spark's part-file name: part-<task partition>-<job uuid>-c<file in task>.csv
-_PART_NAME = re.compile(r"^part-(\d+)-.+-c(\d+)\.csv$")
+# Spark's part-file name: part-<task partition>-<job uuid>-c<file in task>.csv,
+# with ".c" for "-c" in a partitioned write
+_PART_NAME = re.compile(r"^part-(\d+)-.+[-.]c(\d+)\.csv$")
 
 
 def read_lookup_csv(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
@@ -177,55 +177,48 @@ def write_tsv(
     directory — at scale the partitioned write replaces the reference's
     48 sequential per-lender jobs. ``single_file=True`` reproduces the
     merged single-file contract (S6): every partition is written in
-    parallel, then the driver concatenates the parts into one file
-    (``_write_single_file``). ``path`` is a local filesystem path: the BOM
-    and the concatenation are driver-side file copies.
+    parallel, and the driver concatenates the parts into one file holding
+    the bytes one ``coalesce(1)`` task would write.
+
+    Both layouts are published the same way. Spark writes into a hidden
+    temporary sibling of ``path``; the driver copies each part file, the
+    BOM first when asked, into a finished tree beside it (one output file
+    per part at the same relative path, or the concatenation), moves
+    Spark's ``_SUCCESS`` there, and only then swaps that tree in for
+    ``path``. A failed write leaves the previous output in place, and the
+    temporary directory is removed either way. ``path`` is a local
+    filesystem path: the BOM and the concatenation are driver-side copies.
     """
-    if single_file:
-        if partition_by:
-            raise ValueError("single_file=True writes one file; it takes no partition_by")
-        _write_single_file(df, path, bom)
-        return
-    writer = df.write.mode("overwrite").options(**_SINK_OPTIONS)
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.csv(path)
-    if bom:
-        _prepend_bom(path)
-
-
-def _write_single_file(df: DataFrame, path: str, bom: bool) -> None:
-    """One part file holding the same bytes ``df.coalesce(1)`` would write,
-    but written by every core instead of one task.
-
-    Spark writes one part per partition, each with its own header, into a
-    temporary sibling directory; it always writes part 0, even for an empty
-    frame. The driver appends the parts in partition order into one file:
-    the BOM once, the first part whole, and every later part without its
-    header. The finished directory (that file and Spark's ``_SUCCESS``)
-    replaces ``path`` only once it is complete, so a failed write leaves
-    the previous output in place.
-    """
+    if single_file and partition_by:
+        raise ValueError("single_file=True writes one file; it takes no partition_by")
     path = os.path.abspath(path)
     parent, name = os.path.split(path)
     os.makedirs(parent, exist_ok=True)
     tmp = tempfile.mkdtemp(prefix=f".{name}.", dir=parent)
     try:
         parts_dir = os.path.join(tmp, "parts")
-        df.write.mode("overwrite").options(**_SINK_OPTIONS).csv(parts_dir)
-        parts = sorted(
-            (p for p in os.listdir(parts_dir) if _PART_NAME.match(p)),
-            key=lambda p: tuple(map(int, _PART_NAME.match(p).groups())),
-        )
+        writer = df.write.options(**_SINK_OPTIONS)
+        if partition_by:
+            writer = writer.partitionBy(partition_by)
+        writer.csv(parts_dir)
+        parts = _part_files(parts_dir)
+        # output file -> the parts it is made of, in order
+        outputs = {parts[0]: parts} if single_file else {p: [p] for p in parts}
         done = os.path.join(tmp, "done")
         os.mkdir(done)
-        _concat(
-            os.path.join(done, parts[0]),
-            [os.path.join(parts_dir, p) for p in parts],
-            bom=bom,
-            # a newline inside a (quoted) column name makes the header span more lines
-            header_lines=1 + sum(c.count("\n") for c in df.columns),
-        )
+        for out, sources in outputs.items():
+            os.makedirs(os.path.dirname(os.path.join(done, out)), exist_ok=True)
+            _concat(
+                os.path.join(done, out),
+                [os.path.join(parts_dir, p) for p in sources],
+                bom=bom,
+                # a newline inside a (quoted) column name makes the header span more lines
+                header_lines=1 + sum(c.count("\n") for c in df.columns),
+            )
+            # the copy is all that is kept; dropping each part as it is copied
+            # keeps the peak near two outputs (the new one and the previous)
+            for p in sources:
+                os.remove(os.path.join(parts_dir, p))
         os.replace(os.path.join(parts_dir, "_SUCCESS"), os.path.join(done, "_SUCCESS"))
         previous = os.path.join(tmp, "previous")
         had_previous = os.path.lexists(path)
@@ -241,6 +234,21 @@ def _write_single_file(df: DataFrame, path: str, bom: bool) -> None:
         shutil.rmtree(tmp, ignore_errors=True)
 
 
+def _part_files(root: str) -> list[str]:
+    """Spark's part files under ``root``, as paths relative to it, ordered
+    by directory, then task partition, then file within the task. Spark
+    always writes part 0 of an unpartitioned write, even for no rows."""
+    found = []
+    for folder, _, names in os.walk(root):
+        rel = os.path.relpath(folder, root)
+        for n in names:
+            m = _PART_NAME.match(n)
+            if m:
+                key = (rel, int(m[1]), int(m[2]))
+                found.append((key, os.path.normpath(os.path.join(rel, n))))
+    return [p for _, p in sorted(found)]
+
+
 def _concat(dst: str, parts: list[str], bom: bool, header_lines: int = 0) -> None:
     """Write a new file ``dst``: the BOM if asked, then each of ``parts`` in
     order, skipping the first ``header_lines`` lines of every part after the
@@ -254,30 +262,3 @@ def _concat(dst: str, parts: list[str], bom: bool, header_lines: int = 0) -> Non
                     for _ in range(header_lines):
                         src.readline()
                 shutil.copyfileobj(src, out)
-
-
-def _prepend_bom(path: str) -> None:
-    """Prefix each written part file with the UTF-8 BOM (utf-8-sig).
-
-    Each part is copied, BOM first, into a hidden temp file beside it that
-    then replaces it (``os.replace``): the part is never truncated in
-    place, and the driver holds one chunk of it at a time. Also removes
-    Hadoop LocalFS ``.crc`` sidecars for rewritten parts — the new file no
-    longer matches the checksum, and any later Spark read of the directory
-    would fail with ChecksumException.
-    """
-    for part in sorted(glob.glob(os.path.join(path, "**", "part-*.csv"), recursive=True)):
-        with open(part, "rb") as f:
-            if f.read(len(_BOM)) == _BOM:
-                continue
-        folder, name = os.path.split(part)
-        tmp = os.path.join(folder, f".{name}.bom")
-        try:
-            _concat(tmp, [part], bom=True)
-            os.replace(tmp, part)
-        finally:
-            with contextlib.suppress(FileNotFoundError):
-                os.remove(tmp)
-        crc = os.path.join(folder, f".{name}.crc")
-        if os.path.exists(crc):
-            os.remove(crc)

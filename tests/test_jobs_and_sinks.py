@@ -123,8 +123,8 @@ def test_tsv_contract_bytes(spark, fixture_dir, tmp_path):
     # QUOTE_ALL: every field of the raw first data line is quoted
     first_line = text.splitlines()[1]
     assert all(f.startswith('"') and f.endswith('"') for f in first_line.split("\t"))
-    # the BOM rewrite leaves no temp file beside any part
-    assert glob.glob(os.path.join(out_dir, "**", ".*.bom"), recursive=True) == []
+    # the publish leaves no hidden temporary directory beside the output
+    assert [n for n in os.listdir(tmp_path) if n.startswith(".")] == []
 
 
 def test_skip_bad_files_drops_whole_file(spark, tmp_path):
@@ -192,19 +192,67 @@ def test_single_file_sink_matches_coalesce(spark, tmp_path, shape):
     _assert_single_file_matches_coalesce(df, out, tmp_path)
 
 
-@pytest.mark.parametrize("failing_step", ["spark_write", "concatenation"])
+def _tree_bytes(root):
+    """{path relative to ``root``: file bytes} for every file under it."""
+    return {
+        os.path.relpath(os.path.join(folder, n), root): open(os.path.join(folder, n), "rb").read()
+        for folder, _, names in os.walk(root)
+        for n in names
+    }
+
+
+def test_partitioned_sink_parts_are_bom_plus_spark_bytes(spark, tmp_path):
+    """Every per-key part the partitioned sink publishes is the BOM followed
+    by exactly the bytes Spark writes for that part with the sink options,
+    at the same relative path (the job id in the name aside), next to
+    ``_SUCCESS`` and without Spark's ``.crc`` sidecars."""
+    df = spark.range(0, 60, numPartitions=4).selectExpr(
+        "id", "cast(id * 2 as string) AS twice", "id % 3 AS k"
+    )
+    ref_dir, out = str(tmp_path / "spark_reference"), str(tmp_path / "published")
+    df.write.partitionBy("k").options(**_SINK_OPTIONS).csv(ref_dir)
+    write_tsv(df, out, partition_by="k", bom=True)
+
+    def parts(root):
+        return {
+            (os.path.dirname(rel), os.path.basename(rel).split("-")[1]): data
+            for rel, data in _tree_bytes(root).items()
+            if os.path.basename(rel).startswith("part-")
+        }
+
+    expected = {key: BOM + data for key, data in parts(ref_dir).items()}
+    assert len(expected) == 3 * 4
+    assert parts(out) == expected
+    published = _tree_bytes(out)
+    assert sorted(n for n in published if not n.startswith("k=")) == ["_SUCCESS"]
+    assert all(os.path.basename(n).startswith("part-") for n in published if n != "_SUCCESS")
+
+
+@pytest.mark.parametrize(
+    "layout, failing_step",
+    [
+        pytest.param("single_file", "spark_write", id="spark_write"),
+        pytest.param("single_file", "concatenation", id="concatenation"),
+        pytest.param("partition_by", "spark_write", id="partition_by-spark_write"),
+        pytest.param("partition_by", "copy", id="partition_by-copy"),
+    ],
+)
 def test_single_file_sink_failure_keeps_previous_output(
-    spark, tmp_path, monkeypatch, failing_step
+    spark, tmp_path, monkeypatch, layout, failing_step
 ):
-    """A single-file write that fails, in Spark or in the driver-side
-    concatenation, leaves the previous output in place, byte for byte and
-    readable, and removes its temporary directory."""
+    """A TSV write that fails, in Spark or in the driver-side copy of the
+    parts, leaves the previous output in place, byte for byte and
+    readable, and removes its temporary directory; for the single merged
+    file and for the per-key (``partition_by``) layout alike."""
     import monthly_report_etl_spark.sources.csv as csv_mod
 
-    out = str(tmp_path / "merged")
-    good = spark.range(0, 50, numPartitions=4).selectExpr("id", "cast(id * 2 as string) AS twice")
-    write_tsv(good, out, single_file=True, bom=True)
-    before = {n: open(os.path.join(out, n), "rb").read() for n in os.listdir(out)}
+    out = str(tmp_path / "published")
+    layout_kw = {"single_file": True} if layout == "single_file" else {"partition_by": "k"}
+    good = spark.range(0, 50, numPartitions=4).selectExpr(
+        "id", "cast(id * 2 as string) AS twice", "id % 3 AS k"
+    )
+    write_tsv(good, out, bom=True, **layout_kw)
+    before = _tree_bytes(out)
 
     if failing_step == "spark_write":
         bad = good.withColumn(
@@ -217,11 +265,45 @@ def test_single_file_sink_failure_keeps_previous_output(
         monkeypatch.setattr(csv_mod, "_concat", broken_concat)
         bad = good
     with pytest.raises(Exception, match="injected"):
-        write_tsv(bad, out, single_file=True, bom=True)
+        write_tsv(bad, out, bom=True, **layout_kw)
 
-    assert {n: open(os.path.join(out, n), "rb").read() for n in os.listdir(out)} == before
+    assert _tree_bytes(out) == before
     assert read_tsv_directory(spark, out).count() == 50
     assert [n for n in os.listdir(tmp_path) if n.startswith(".")] == []
+
+
+def test_export_with_empty_window_keeps_previous_outputs(spark, fixture_dir, tmp_path):
+    """An export whose window holds no rows raises ``ValueError`` before
+    either sink is touched: last month's TSV and parquet outputs stay byte
+    for byte, and no staging or temporary directory is left behind."""
+    out_dir = str(tmp_path / "output")
+    pq_dir = str(tmp_path / "report_parquet")
+    deals = os.path.join(fixture_dir, "exports_deals.parquet")
+    comp = os.path.join(fixture_dir, "competitor_list.csv")
+    run_export_job(spark, deals, comp, out_dir, PipelineConfig(), parquet_dir=pq_dir)
+    before = {d: _tree_bytes(d) for d in (out_dir, pq_dir)}
+    assert all(before.values())
+
+    empty_window = PipelineConfig(
+        "2020-01-01T00:00:00Z", "2020-02-01T00:00:00Z", "2020-01-28"
+    )
+    with pytest.raises(ValueError, match="no rows"):
+        run_export_job(spark, deals, comp, out_dir, empty_window, parquet_dir=pq_dir)
+
+    assert {d: _tree_bytes(d) for d in (out_dir, pq_dir)} == before
+    assert sorted(os.listdir(tmp_path)) == ["output", "report_parquet"]
+
+
+def test_merge_job_over_header_only_tsvs_raises(spark, tmp_path):
+    """A per-lender directory whose files hold only the header merges to no
+    rows, and the merge job fails on it instead of passing silently."""
+    out_dir = tmp_path / "output"
+    for lender in ("lender_a", "lender_b"):
+        d = out_dir / f"associated_lender={lender}"
+        d.mkdir(parents=True)
+        (d / "part-00000.csv").write_bytes(BOM + b'"time"\t"scenarioId"\n')
+    with pytest.raises(ValueError, match="no rows"):
+        run_merge_job(spark, str(out_dir), str(tmp_path / "result"))
 
 
 def test_report_directory_listed_on_driver(spark, fixture_dir, tmp_path):
