@@ -7,15 +7,18 @@ per-lender directory as one table, re-infer ``time``, single merged TSV).
 
 Differences by design (SURVEY §2.12): the export job is ONE partitioned
 write instead of ~48 sequential per-lender queries, and the merge job is a
-directory scan — Spark unions natively. Validation (S7) is not a data
-pass: each job counts the rows of its own write with an ``Observation``
-and fails on zero, and the TSV sink always writes the header. Both TSV
-outputs are published by rename, so a failed TSV write leaves the previous
-one in place.
+directory scan — Spark unions natively. The merge scans the report once:
+a corrupt record fails its write before anything is published, and only
+then does the bad-file probe run, to drop every file that holds one and
+merge again. Validation (S7) is not a data pass: each job counts the rows
+of its own write with an ``Observation`` and fails on zero, and the TSV
+sink always writes the header. Every output is published by rename, so a
+failed run leaves the previous outputs in place.
 """
 
 from __future__ import annotations
 
+import contextlib
 import os
 import shutil
 
@@ -30,6 +33,12 @@ from monthly_report_etl_spark.sources import (
     read_tsv_directory,
     write_tsv,
 )
+from monthly_report_etl_spark.sources.csv import CORRUPT_RECORD, _tsv_reader
+from monthly_report_etl_spark.sources.publish import staged_publish
+
+# the error the merged write fails with on a corrupt record; only this
+# failure starts the bad-file probe
+_CORRUPT_REPORT = "corrupt record in the per-lender report"
 
 
 def run_export_job(
@@ -47,12 +56,14 @@ def run_export_job(
     beside the output, and an ``Observation`` on that write counts its
     rows. An empty report raises ``ValueError`` before either sink is
     touched, so last month's outputs stay as they were. Then, one after
-    the other, both sinks read the staged scan: ``write_tsv`` (published
-    by rename) and, with ``parquet_dir``, ``write_parquet_sized``, whose
-    file count follows the staged output's actual bytes, which the
+    the other, both sinks read the staged scan: with ``parquet_dir``,
+    ``write_parquet_sized`` into a hidden sibling of ``parquet_dir``,
+    whose file count follows the staged output's actual bytes, which the
     optimizer's estimate for the computed plan does not give (the
     small-files guard for the copy downstream Spark/DuckDB consumers
-    scan). The staging directory is removed whatever happens.
+    scan); then ``write_tsv``. The parquet copy is renamed in only after
+    the TSV publish, so a failure in either sink leaves both previous
+    outputs in place. The staging directory is removed whatever happens.
 
     Returns the report DataFrame (lazy; the writes are the only actions).
     """
@@ -69,9 +80,11 @@ def run_export_job(
         if rows.get["n"] == 0:
             raise ValueError(f"the report for {output_dir} has no rows; nothing written")
         staged = spark.read.parquet(staging)
-        write_tsv(staged, output_dir, partition_by="associated_lender", bom=True)
-        if parquet_dir is not None:
-            write_parquet_sized(staged, parquet_dir)
+        with contextlib.ExitStack() as publish_after_tsv:
+            if parquet_dir is not None:
+                new_parquet = publish_after_tsv.enter_context(staged_publish(parquet_dir))
+                write_parquet_sized(staged, new_parquet)
+            write_tsv(staged, output_dir, partition_by="associated_lender", bom=True)
     finally:
         # local-filesystem staging cleanup; on an object store the
         # staging prefix would get a lifecycle rule instead
@@ -85,19 +98,52 @@ def run_merge_job(spark: SparkSession, output_dir: str, merged_dir: str) -> Data
     All-string read + ``to_timestamp`` re-inference of ``time`` mirrors
     merge_all_lenders.py:41-59 (the ``partitionBy`` layout moves
     ``associated_lender`` into the directory key; the read restores it).
-    An ``Observation`` on the merged write counts its rows; a merge that
-    wrote none raises ``ValueError``.
+
+    A clean report is scanned once: a header pass names the columns, and
+    the merged write reads every byte at full width with a corrupt-record
+    column that fails the write on its first non-NULL value, before
+    ``write_tsv`` publishes, so no null-filled corrupt row is ever visible.
+    Only that failure starts the fallback, the reference's skip rule
+    (merge_all_lenders.py:46-49): ``read_tsv_directory(skip_bad_files=True)``
+    drops every file that holds a corrupt record, and the merge is written
+    again. Any other failure propagates. An ``Observation`` on the merged
+    write counts its rows; a merge that wrote none raises ``ValueError``.
     """
-    df = read_tsv_directory(spark, output_dir, skip_bad_files=True)
-    if "time" in df.columns:
-        df = df.withColumn("time", F.to_timestamp("time"))
+    columns = _tsv_reader(spark).csv(output_dir).columns
+    scan = _tsv_reader(spark, columns, corrupt_record=True).csv(output_dir)
+    guarded = scan.filter(
+        F.when(F.col(CORRUPT_RECORD).isNotNull(), F.raise_error(F.lit(_CORRUPT_REPORT)))
+        .otherwise(True)
+    ).drop(CORRUPT_RECORD)
+    try:
+        _write_merged(_with_time(guarded), merged_dir)
+    except Exception as exc:
+        if _CORRUPT_REPORT not in str(exc):
+            raise
+    else:
+        # the report is clean, so the merged rows are its plain read; the
+        # guarded frame is not returned, because a count of it would prune
+        # its scan to the corrupt-record column alone, which Spark refuses
+        return _with_time(read_tsv_directory(spark, output_dir, columns=columns))
+    df = _with_time(read_tsv_directory(spark, output_dir, columns=columns, skip_bad_files=True))
+    _write_merged(df, merged_dir)
+    return df
+
+
+def _with_time(df: DataFrame) -> DataFrame:
+    """The reference's re-inference of ``time`` on the all-string read."""
+    return df.withColumn("time", F.to_timestamp("time")) if "time" in df.columns else df
+
+
+def _write_merged(df: DataFrame, merged_dir: str) -> None:
+    """Write ``df`` as the single merged TSV; raise ``ValueError`` if that
+    wrote no rows."""
     rows = Observation("merged_rows")
     write_tsv(
         df.observe(rows, F.count(F.lit(1)).alias("n")), merged_dir, single_file=True, bom=True
     )
     if rows.get["n"] == 0:
         raise ValueError(f"merged output at {merged_dir} has no rows")
-    return df
 
 
 def validate_tsv_output(spark: SparkSession, path: str) -> None:

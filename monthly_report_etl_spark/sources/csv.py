@@ -7,16 +7,18 @@ Three contracts (SURVEY.md §2.1):
   first column name via ``encoding``.
 * S4 — directory-of-TSVs source: the merge job reads ``output/*.csv`` as
   all-string, tab-delimited, utf-8-sig, skipping unreadable files
-  (merge_all_lenders.py:26,34-49). Spark reads the directory natively; a
-  PERMISSIVE read approximates skip-on-error.
+  (merge_all_lenders.py:26,34-49). Spark reads the directory natively;
+  every read of it takes its options from ``_tsv_reader``. A PERMISSIVE
+  read null-fills malformed rows; ``read_tsv_directory(skip_bad_files=True)``
+  drops every file that holds one, which is the merge job's fallback.
 * S5/S6 — TSV sink: tab-delimited, QUOTE_ALL, ``''`` for NULL,
   ``%Y-%m-%d %H:%M:%S%z`` timestamps, ``\\n`` terminator, backslash escape,
   utf-8-sig BOM (run_exports_query.py:75-89, merge_all_lenders.py:63-77).
   Spark cannot emit a BOM itself, so ``write_tsv`` has Spark write into a
   hidden temporary directory and the driver copies every part file, BOM
-  first, into the tree it then publishes by rename: a sequential pass over
-  every byte written. For ``single_file=True`` that copy is the
-  concatenation of the parts, which writes the BOM once.
+  first, into the tree it then publishes by rename (``staged_publish``): a
+  sequential pass over every byte written. For ``single_file=True`` that
+  copy is the concatenation of the parts, which writes the BOM once.
 """
 
 from __future__ import annotations
@@ -25,11 +27,12 @@ import logging
 import os
 import re
 import shutil
-import tempfile
 
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, DataFrameReader, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
+
+from monthly_report_etl_spark.sources.publish import staged_publish
 
 _LOG = logging.getLogger(__name__)
 
@@ -48,6 +51,8 @@ _SINK_OPTIONS = {
 }
 
 _BOM = b"\xef\xbb\xbf"
+# the column a PERMISSIVE read puts a malformed row's raw text in
+CORRUPT_RECORD = "_corrupt_record"
 # Spark's part-file name: part-<task partition>-<job uuid>-c<file in task>.csv,
 # with ".c" for "-c" in a partitioned write
 _PART_NAME = re.compile(r"^part-(\d+)-.+[-.]c(\d+)\.csv$")
@@ -61,6 +66,35 @@ def read_lookup_csv(spark: SparkSession, path: str, schema: T.StructType | None 
     else:
         reader = reader.option("inferSchema", False)  # all-string, like dtype=str
     return reader.csv(path)
+
+
+def _tsv_reader(
+    spark: SparkSession,
+    columns: list[str] | None = None,
+    corrupt_record: bool = False,
+    multi_line: bool = False,
+) -> DataFrameReader:
+    """The one reader setup for the per-lender TSVs: header, tab, ``\\``
+    escape, ``''`` as NULL, PERMISSIVE. With ``columns``, an explicit
+    all-string schema in that order (plus a trailing ``CORRUPT_RECORD``
+    column when ``corrupt_record``); without, every column read as string
+    from the header."""
+    reader = (
+        spark.read.option("header", True)
+        .option("sep", "\t")
+        .option("nullValue", "")
+        .option("mode", "PERMISSIVE")
+        .option("escape", "\\")
+    )
+    if multi_line:
+        reader = reader.option("multiLine", True)
+    if columns is None:
+        return reader.option("inferSchema", False)
+    fields = [T.StructField(c, T.StringType()) for c in columns]
+    if corrupt_record:
+        fields.append(T.StructField(CORRUPT_RECORD, T.StringType()))
+        reader = reader.option("columnNameOfCorruptRecord", CORRUPT_RECORD)
+    return reader.schema(T.StructType(fields))
 
 
 def read_tsv_directory(
@@ -79,8 +113,10 @@ def read_tsv_directory(
     (merge_all_lenders.py:46-49 drops a whole unreadable CSV with a
     warning and continues): a distributed tagging pass marks corrupt
     records with their source file, only the tiny bad-FILE list crosses
-    the driver, and every row from a bad file is excluded. With the flag
-    off, PERMISSIVE null-fills malformed rows in place.
+    the driver, and every row from a bad file is excluded. It costs a full
+    extra scan, so the merge job runs it only as a fallback, after its
+    single guarded scan met a corrupt record. With the flag off,
+    PERMISSIVE null-fills malformed rows in place.
 
     ``multi_line=True`` makes QUOTED EMBEDDED NEWLINES roundtrip like the
     reference's pandas reader (which handles them natively). It is off by
@@ -89,74 +125,39 @@ def read_tsv_directory(
     it, since the reference strips ``\\t\\n\\r`` before writing (F16) and
     this engine's clean_for_export does the same.
     """
-    reader = (
-        spark.read.option("header", True)
-        .option("sep", "\t")
-        .option("nullValue", "")
-        .option("mode", "PERMISSIVE")
-        .option("escape", "\\")
-    )
-    if multi_line:
-        reader = reader.option("multiLine", True)
     if not skip_bad_files:
-        if columns is not None:
-            schema = T.StructType([T.StructField(c, T.StringType()) for c in columns])
-            reader = reader.schema(schema)
-        else:
-            reader = reader.option("inferSchema", False)
-        return reader.csv(path)
-
-    explicit_columns = columns
+        return _tsv_reader(spark, columns, multi_line=multi_line).csv(path)
     if columns is None:
-        # header pass only (schema inference off): establish the column set
-        columns = spark.read.option("header", True).option("sep", "\t").csv(path).columns
-    data_cols = [c for c in columns]
+        # one header pass (schema inference off) establishes the column set;
+        # the probe and the final read both take it as their schema
+        columns = _tsv_reader(spark, multi_line=multi_line).csv(path).columns
 
     # Probe pass: re-read with an explicit corrupt-record column; a row that
     # fails tokenization (quote damage) or disagrees with the file's data
-    # arity marks its FILE bad. The projection keeps one real data column:
-    # Spark disallows queries whose pruned schema is ONLY the corrupt column
-    # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). Partition
-    # columns are subtracted from the data schema by the reader, so the
-    # arity check is per-file-content, as in the reference. Only distinct
-    # bad file NAMES cross the driver — bounded by file count, never data.
-    probe_schema = T.StructType(
-        [T.StructField(c, T.StringType()) for c in data_cols]
-        + [T.StructField("_corrupt_record", T.StringType())]
-    )
-    probe = (
-        spark.read.option("header", True)
-        .option("sep", "\t")
-        .option("nullValue", "")
-        .option("mode", "PERMISSIVE")
-        .option("escape", "\\")
-        .schema(probe_schema)
-        .option("columnNameOfCorruptRecord", "_corrupt_record")
-        .csv(path)
-    )
+    # arity marks its FILE bad. Partition columns are subtracted from the
+    # data schema by the reader, so the arity check is per-file-content, as
+    # in the reference. Only distinct bad file NAMES cross the driver —
+    # bounded by file count, never data.
+    probe = _tsv_reader(spark, columns, corrupt_record=True, multi_line=multi_line).csv(path)
     # EVERY data column is referenced through the aggregate: CSV column
     # pruning re-scopes malformed-row detection to the required columns
     # only (a quote-broken tail column would go unnoticed), and a scan
-    # reduced to the corrupt column alone is rejected at planning time.
-    # Full-width parsing is also the reference's semantics (pandas parses
-    # whole rows). The per-file counts are discarded; only file names and
-    # one count row per file exist beyond the scan.
+    # reduced to the corrupt column alone is rejected at planning time
+    # (UNSUPPORTED_FEATURE.QUERY_ONLY_CORRUPT_RECORD_COLUMN). Full-width
+    # parsing is also the reference's semantics (pandas parses whole rows).
+    # The per-file counts are discarded; only file names and one count row
+    # per file exist beyond the scan.
     bad_files = [
         r["_src_file"]
-        for r in probe.filter(F.col("_corrupt_record").isNotNull())
+        for r in probe.filter(F.col(CORRUPT_RECORD).isNotNull())
         .groupBy(F.input_file_name().alias("_src_file"))
-        .agg(*[F.count(F.col(c)).alias(f"_n{i}") for i, c in enumerate(data_cols)])
+        .agg(*[F.count(F.col(c)).alias(f"_n{i}") for i, c in enumerate(columns)])
         .collect()
     ]
     for f in sorted(bad_files):
         _LOG.warning("skipping unreadable TSV file (corrupt records): %s", f)
 
-    if explicit_columns is not None:
-        out = reader.schema(
-            T.StructType([T.StructField(c, T.StringType()) for c in explicit_columns])
-        ).csv(path)
-    else:
-        out = reader.option("inferSchema", False).csv(path)
+    out = _tsv_reader(spark, columns, multi_line=multi_line).csv(path)
     if bad_files:
         out = out.withColumn("_src_file", F.input_file_name()).filter(
             ~F.col("_src_file").isin(bad_files)
@@ -191,12 +192,8 @@ def write_tsv(
     """
     if single_file and partition_by:
         raise ValueError("single_file=True writes one file; it takes no partition_by")
-    path = os.path.abspath(path)
-    parent, name = os.path.split(path)
-    os.makedirs(parent, exist_ok=True)
-    tmp = tempfile.mkdtemp(prefix=f".{name}.", dir=parent)
-    try:
-        parts_dir = os.path.join(tmp, "parts")
+    with staged_publish(path) as done:
+        parts_dir = os.path.join(os.path.dirname(done), "parts")
         writer = df.write.options(**_SINK_OPTIONS)
         if partition_by:
             writer = writer.partitionBy(partition_by)
@@ -204,7 +201,6 @@ def write_tsv(
         parts = _part_files(parts_dir)
         # output file -> the parts it is made of, in order
         outputs = {parts[0]: parts} if single_file else {p: [p] for p in parts}
-        done = os.path.join(tmp, "done")
         os.mkdir(done)
         for out, sources in outputs.items():
             os.makedirs(os.path.dirname(os.path.join(done, out)), exist_ok=True)
@@ -220,18 +216,6 @@ def write_tsv(
             for p in sources:
                 os.remove(os.path.join(parts_dir, p))
         os.replace(os.path.join(parts_dir, "_SUCCESS"), os.path.join(done, "_SUCCESS"))
-        previous = os.path.join(tmp, "previous")
-        had_previous = os.path.lexists(path)
-        if had_previous:
-            os.rename(path, previous)
-        try:
-            os.rename(done, path)
-        except OSError:
-            if had_previous:
-                os.rename(previous, path)
-            raise
-    finally:
-        shutil.rmtree(tmp, ignore_errors=True)
 
 
 def _part_files(root: str) -> list[str]:

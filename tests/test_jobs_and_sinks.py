@@ -294,16 +294,186 @@ def test_export_with_empty_window_keeps_previous_outputs(spark, fixture_dir, tmp
     assert sorted(os.listdir(tmp_path)) == ["output", "report_parquet"]
 
 
+_REPORT_HEADER = BOM + b'"time"\t"scenarioId"\n'
+
+
+def _write_lender_report(root, lenders):
+    """A per-lender report: one BOM-prefixed TSV with the sink's header per
+    ``{lender: data lines}`` entry, in the export's directory layout."""
+    for lender, body in lenders.items():
+        d = root / f"associated_lender={lender}"
+        d.mkdir(parents=True, exist_ok=True)
+        (d / "part-00000.csv").write_bytes(_REPORT_HEADER + body)
+
+
 def test_merge_job_over_header_only_tsvs_raises(spark, tmp_path):
     """A per-lender directory whose files hold only the header merges to no
     rows, and the merge job fails on it instead of passing silently."""
     out_dir = tmp_path / "output"
-    for lender in ("lender_a", "lender_b"):
-        d = out_dir / f"associated_lender={lender}"
-        d.mkdir(parents=True)
-        (d / "part-00000.csv").write_bytes(BOM + b'"time"\t"scenarioId"\n')
+    _write_lender_report(out_dir, {"lender_a": b"", "lender_b": b""})
     with pytest.raises(ValueError, match="no rows"):
         run_merge_job(spark, str(out_dir), str(tmp_path / "result"))
+
+
+def test_export_failed_parquet_copy_keeps_previous_outputs(
+    spark, fixture_dir, tmp_path, monkeypatch
+):
+    """A parquet copy that fails in Spark leaves the previous TSV tree and
+    the previous parquet tree byte for byte: the copy is written into a
+    hidden sibling before the TSV write and renamed in only after the TSV
+    publish. No hidden or staging directory is left."""
+    import monthly_report_etl_spark.sources.parquet as parquet_mod
+
+    out_dir = str(tmp_path / "output")
+    pq_dir = str(tmp_path / "report_parquet")
+    deals = os.path.join(fixture_dir, "exports_deals.parquet")
+    comp = os.path.join(fixture_dir, "competitor_list.csv")
+    run_export_job(spark, deals, comp, out_dir, PipelineConfig(), parquet_dir=pq_dir)
+    before = {d: _tree_bytes(d) for d in (out_dir, pq_dir)}
+    assert all(before.values())
+
+    real_write_sized = parquet_mod.write_parquet_sized
+
+    def failing_write_sized(df, path, **kw):
+        lender = F.col("associated_lender")
+        bad = df.withColumn(
+            "associated_lender",
+            F.when(lender.isNotNull(), F.raise_error(F.lit("injected"))).otherwise(lender),
+        )
+        return real_write_sized(bad, path, **kw)
+
+    monkeypatch.setattr(parquet_mod, "write_parquet_sized", failing_write_sized)
+    with pytest.raises(Exception, match="injected"):
+        run_export_job(spark, deals, comp, out_dir, PipelineConfig(), parquet_dir=pq_dir)
+
+    assert {d: _tree_bytes(d) for d in (out_dir, pq_dir)} == before
+    assert sorted(os.listdir(tmp_path)) == ["output", "report_parquet"]
+
+
+def test_clean_merge_scans_report_once(spark, fixture_dir, tmp_path):
+    """A report with no corrupt record merges with at most two Spark jobs
+    (the header pass and the merged write; no bad-file probe), into the
+    same bytes as the probe route: ``read_tsv_directory(skip_bad_files=True)``,
+    ``time`` re-inferred, one BOM-prefixed file."""
+    import hashlib
+
+    out_dir = str(tmp_path / "output")
+    deals = os.path.join(fixture_dir, "exports_deals.parquet")
+    comp = os.path.join(fixture_dir, "competitor_list.csv")
+    run_export_job(spark, deals, comp, out_dir, PipelineConfig())
+
+    sc = spark.sparkContext
+    group = "clean_merge"
+    sc.setJobGroup(group, "merge a clean report")
+    try:
+        run_merge_job(spark, out_dir, str(tmp_path / "result"))
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    assert len(sc.statusTracker().getJobIdsForGroup(group)) <= 2
+
+    probed = read_tsv_directory(spark, out_dir, skip_bad_files=True)
+    write_tsv(
+        probed.withColumn("time", F.to_timestamp("time")),
+        str(tmp_path / "reference"),
+        single_file=True,
+        bom=True,
+    )
+
+    def digest(d):
+        (part,) = glob.glob(os.path.join(d, "part-*.csv"))
+        return hashlib.sha256(open(part, "rb").read()).hexdigest()
+
+    assert digest(str(tmp_path / "result")) == digest(str(tmp_path / "reference"))
+
+
+def _spy_on_probe(monkeypatch, merged_dir):
+    """Patch the merge job's ``read_tsv_directory``: each call that runs the
+    bad-file probe records the merged output's files at that moment."""
+    import monthly_report_etl_spark.jobs as jobs_mod
+
+    seen = []
+    real = jobs_mod.read_tsv_directory
+
+    def spy(spark, path, **kw):
+        if kw.get("skip_bad_files"):
+            seen.append(_tree_bytes(merged_dir))
+        return real(spark, path, **kw)
+
+    monkeypatch.setattr(jobs_mod, "read_tsv_directory", spy)
+    return seen
+
+
+_GOOD_LENDERS = {
+    "lender_a": b'"2025-03-01 00:00:00"\t"a1"\n"2025-03-02 00:00:00"\t"a2"\n',
+    "lender_b": b'"2025-03-03 00:00:00"\t"b1"\n',
+}
+
+
+@pytest.mark.parametrize(
+    "corrupt",
+    [
+        # an unclosed quote: the tokenizer fails inside the file
+        b'"2025-03-04 00:00:00"\t"c1"\n"2025-03-05\t"c2"\n"broken\n',
+        # a row with one field more than the header
+        b'"2025-03-04 00:00:00"\t"c1"\n"2025-03-05 00:00:00"\t"c2"\t"extra"\n',
+    ],
+    ids=["unclosed_quote", "extra_field"],
+)
+def test_merge_job_drops_corrupt_lender_file(spark, tmp_path, monkeypatch, caplog, corrupt):
+    """A lender file holding a corrupt record fails the single-scan merge
+    before it publishes, so the previous merged output stays byte for byte
+    until the bad-file probe's merge replaces it. That merge holds no row
+    from the corrupt file, the warning names the file, and no temporary
+    directory is left."""
+    import logging
+
+    out_dir = tmp_path / "output"
+    merged_dir = str(tmp_path / "result")
+    _write_lender_report(out_dir, _GOOD_LENDERS)
+    run_merge_job(spark, str(out_dir), merged_dir)
+    before = _tree_bytes(merged_dir)
+
+    _write_lender_report(out_dir, {"lender_c": corrupt})
+    probes = _spy_on_probe(monkeypatch, merged_dir)
+    with caplog.at_level(logging.WARNING, logger="monthly_report_etl_spark.sources.csv"):
+        merged = run_merge_job(spark, str(out_dir), merged_dir)
+
+    assert probes == [before]
+    assert {r["scenarioId"] for r in merged.collect()} == {"a1", "a2", "b1"}
+    (part,) = glob.glob(os.path.join(merged_dir, "part-*.csv"))
+    published = list(csv.reader(io.StringIO(open(part, encoding="utf-8-sig").read()), delimiter="\t"))
+    assert sorted(row[1] for row in published[1:]) == ["a1", "a2", "b1"]
+    assert _tree_bytes(merged_dir) != before
+    assert any("associated_lender=lender_c" in m for m in caplog.messages)
+    assert sorted(os.listdir(tmp_path)) == ["output", "result"]
+
+
+@pytest.mark.parametrize("failure", ["missing_report", "merged_copy"])
+def test_merge_job_other_failures_skip_the_probe(spark, tmp_path, monkeypatch, failure):
+    """A merge that fails for any reason but a corrupt record raises that
+    failure as it is and never starts the bad-file probe: a missing report
+    directory fails the header pass, and a failed driver-side copy fails
+    the merged write after Spark wrote it."""
+    import monthly_report_etl_spark.sources.csv as csv_mod
+
+    out_dir = tmp_path / "output"
+    merged_dir = str(tmp_path / "result")
+    probes = _spy_on_probe(monkeypatch, merged_dir)
+    if failure == "missing_report":
+        expected = "PATH_NOT_FOUND"
+    else:
+        _write_lender_report(out_dir, _GOOD_LENDERS)
+
+        def broken_concat(*args, **kwargs):
+            raise OSError("injected")
+
+        monkeypatch.setattr(csv_mod, "_concat", broken_concat)
+        expected = "injected"
+    with pytest.raises(Exception, match=expected):
+        run_merge_job(spark, str(out_dir), merged_dir)
+    assert probes == []
+    assert not os.path.exists(merged_dir)
 
 
 def test_report_directory_listed_on_driver(spark, fixture_dir, tmp_path):
