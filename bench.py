@@ -83,7 +83,7 @@ HEADLINE = [
     "olap_large_orders",
     "corpus_repetition_stats",
     "embeddings_quantize_int8",
-    "dedup_prefix_jaccard",
+    "dedup_ngram_jaccard",
     "events_sliding_window",
     "corpus_stratified_sample",
     "olap_forecast_revenue",
@@ -95,7 +95,6 @@ HEADLINE = [
     "text_unigram_logprob",
     # r7 additions
     "dedup_duplicate_spans",
-    "dedup_semdedup",
     "recursive_order_chains",
     "olap_important_stock",
     "olap_dominant_supplier",
@@ -105,19 +104,15 @@ HEADLINE = [
     "embeddings_pq",
     "similarity_pq_adc",
     # r9 additions
-    "corpus_incremental_ingest_bloom",
+    "corpus_incremental_ingest",
     "corpus_bpe_pair_counts",
     "embeddings_pca",
     # r10 additions
     "corpus_bpe_train_merges",
     "similarity_pca_ivf",
     "corpus_incremental_ingest_neardup",
-    # r11 promotions (staged r10). The bucketed form is the DEPLOYMENT
-    # HEADLINE for near-dup ingest (warm write-once band table,
-    # incoming-only shuffles); the plain form above stays benched as its
-    # semantics-oracle twin (COVERAGE.md taxonomy).
+    # r11 promotions (staged r10)
     "corpus_bpe_tokenize",
-    "corpus_incremental_ingest_neardup_bucketed",
 ]
 
 # Pure-path benchables: dedup_semdedup_kmeans, similarity_pq_adc, and
@@ -128,10 +123,7 @@ HEADLINE = [
 
 
 def _extra_headline():
-    from monthly_report_etl_spark.operators.corpus import (
-        bpe_tokenize,
-        incremental_ingest_neardup_bucketed,
-    )
+    from monthly_report_etl_spark.operators.corpus import bpe_tokenize
     from monthly_report_etl_spark.operators.similarity import (
         pca_ivf_topk,
         pq_adc_topk,
@@ -145,7 +137,6 @@ def _extra_headline():
         # promoted to the catalog in r11; kept here so the bench times
         # the raw operator without the catalog's _engine_semantics wrap
         "corpus_bpe_tokenize": bpe_tokenize,
-        "corpus_incremental_ingest_neardup_bucketed": incremental_ingest_neardup_bucketed,
     }
 
 
@@ -398,25 +389,10 @@ def main() -> None:
     _run(QUERIES["pricing_summary"](spark, SF_DIR).limit(1))
     _run(QUERIES["exports_report_events"](spark, "/root/testdata/sf0.001"))
 
-    # Pre-build the write-once fingerprinted external tables OUTSIDE the
-    # timed reps (VERDICT r11 finding #1): when a banding/layout change
-    # mints a new table name, the first timed rep of a bucketed-ingest
-    # entry was paying the one-time band/key table build, and the
-    # adjacent plain near-dup entry absorbed the cache churn — a 1.5x
-    # check-to-check swing on unchanged code. Warm-table is the honest
-    # deployment semantics anyway: the table is written once per corpus,
-    # amortized across every subsequent ingest. (recursive_order_chains
-    # similarly reuses its plan-keyed materialized-adj cache across
-    # reps from r12 — rep 1 builds it, so the median is warm, matching
-    # the operator's documented reuse semantics; the cold number lives
-    # in SCALE.md §8m's curve.)
-    from monthly_report_etl_spark.operators.corpus import (
-        _existing_bands_table,
-        _existing_keys_table,
-    )
-
-    _existing_bands_table(spark, SF_DIR)
-    _existing_keys_table(spark, SF_DIR)
+    # recursive_order_chains reuses its plan-keyed materialized-adj cache
+    # across reps: rep 1 builds it, so the median is warm, matching the
+    # operator's documented reuse semantics (the cold number lives in
+    # SCALE.md §8m's curve).
 
     extras = _extra_headline()
     for name in HEADLINE:

@@ -18,7 +18,6 @@ constraint is 100 TB of documents:
 from __future__ import annotations
 
 import logging
-import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
@@ -474,7 +473,7 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 
 # ---------------------------------------------------------------------------
-# document chunking (RAG-style fixed-token windows) via Python UDTF
+# document chunking (RAG-style fixed-token windows)
 # ---------------------------------------------------------------------------
 
 CHUNK_TOKENS = 32
@@ -506,45 +505,13 @@ FROM ch
 """
 
 
-def _chunk_udtf():
-    """UDTF: one input document → one row per CHUNK_TOKENS-token window.
-
-    Python User-Defined Table Functions (Spark 3.5+) are the lateral
-    fan-out API: ``eval`` yields any number of rows per input, usable
-    from SQL as ``LATERAL chunk(...)`` — the natural shape for document
-    chunking, where per-doc output cardinality is data-dependent."""
-    from pyspark.sql.functions import udtf
-
-    @udtf(returnType="chunk_idx BIGINT, chunk_text STRING, n_chunk_tokens BIGINT")
-    class ChunkDoc:
-        def eval(self, text: str):
-            # Mirror the JVM chunker's split(trim(text), '\s+') EXACTLY
-            # (r15 boundary fix): python str.split() splits on UNICODE
-            # whitespace (U+00A0 and friends) and drops leading/trailing
-            # empties, while Java \s is the ASCII class [ \t\n\x0B\f\r]
-            # and SQL trim strips spaces only — so a doc with a
-            # non-breaking space or a leading tab chunked differently
-            # through the UDTF than through the JVM plan and the oracle.
-            # re.ASCII \s == Java \s; strip(' ') == SQL trim.
-            import re
-
-            s = (text or "").strip(" ")
-            toks = re.split(r"\s+", s, flags=re.ASCII) if s else []
-            for i in range(0, len(toks), CHUNK_TOKENS):
-                window = toks[i : i + CHUNK_TOKENS]
-                yield i // CHUNK_TOKENS, " ".join(window), len(window)
-
-    return ChunkDoc
-
-
 def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     """RAG-style chunking of documents into fixed-token windows, fully
     JVM-native: ``posexplode(sequence(0, n_chunks-1))`` fans each doc out
     to its chunk indexes and ``slice`` + ``array_join`` rebuilds each
-    window — no Python stage anywhere in the plan (the UDTF formulation
-    below produces identical rows but pays per-row Python; at 100 TB the
-    chunker must stay inside codegen). Whitespace tokens stand in for a
-    real tokenizer (same seam as the multimodal codec stub).
+    window — no Python stage anywhere in the plan. Whitespace tokens
+    stand in for a real tokenizer (same seam as the multimodal codec
+    stub).
 
     ``split(trim(text), '\\s+')`` reproduces Python ``str.split()``:
     trim drops the leading empty token a ``\\s+`` split would keep, and
@@ -565,25 +532,6 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("chunk_idx").cast("long").alias("chunk_idx"),
         F.array_join(window, " ").alias("chunk_text"),
         F.size(window).cast("long").alias("n_chunk_tokens"),
-    )
-
-
-def chunk_documents_udtf(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """The same chunker through a Python UDTF lateral join — kept as the
-    API-coverage entry for Spark 3.5+ table functions (``eval`` yields a
-    data-dependent number of rows per input, usable as ``LATERAL`` from
-    SQL). The catalog's primary ``corpus_chunk_documents`` entry runs the
-    JVM-native plan above; this one demonstrates the UDTF seam against
-    the identical oracle."""
-    chunker = _chunk_udtf()
-    spark.udtf.register("chunk_doc", chunker)
-    d = _docs(spark, sf_dir).filter((F.col("doc_id") < 50) & (F.trim("text") != ""))
-    d.createOrReplaceTempView("_chunk_docs")
-    return spark.sql(
-        """
-        SELECT d.doc_id, c.chunk_idx, c.chunk_text, c.n_chunk_tokens
-        FROM _chunk_docs d, LATERAL chunk_doc(d.text) c
-        """
     )
 
 
@@ -950,283 +898,12 @@ def incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     existing corpus (LEFT ANTI on the exact-content key) and within
     itself (min doc_id per text). Keys are (sha2, length) — 33 bytes per
     row through both the anti join and the in-batch dedup, never the
-    documents themselves. At 100 TB the existing side is a bucketed key
-    table so repeated ingests never re-shuffle it — that variant is
-    ``incremental_ingest_bucketed`` below (same result, zero Exchange on
-    the existing side, plan-gated)."""
+    documents themselves."""
     d = _docs(spark, sf_dir)
     key = [F.sha2(F.col("text"), 256).alias("k"), F.length("text").alias("klen")]
     incoming = d.filter(F.col("source") == INGEST_SOURCE).select("doc_id", *key)
     existing = d.filter(F.col("source") != INGEST_SOURCE).select(*key)
     fresh = incoming.join(existing, ["k", "klen"], "left_anti")
-    return (
-        fresh.groupBy("k", "klen")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-
-
-# The number of buckets is a layout constant of the persisted key table:
-# every later ingest joins against the same physical partitioning, so it
-# is sized once for the corpus' steady state (at 100 TB of documents the
-# 33-byte key table is ~0.5 TB → thousands of buckets; 8 here keeps the
-# fixture layout readable in plans).
-INGEST_KEY_BUCKETS = 8
-
-
-# Manifest the table builders stamp into the external dir after a
-# successful build (hidden from Spark's file listing by the leading
-# underscore, like _SUCCESS). Recording the exact part-file set WITH
-# PER-FILE SIZES lets the freshness guard catch PARTIAL loss — an
-# age-based tmp cleaner deleting some-but-not-all bucket files would
-# otherwise pass an any-parquet-present check and silently return wrong
-# survivors (r11 code review) — AND truncation/same-name overwrite (a
-# crashed cleaner or writer leaving a zero-byte part passes a name-only
-# check; ADVICE r11 #4) — and distinguishes a legitimately EMPTY table
-# (manifest present, zero parts: no rebuild-per-run loop) from
-# vanished data.
-_TABLE_MANIFEST = "_GRAFT_MANIFEST.json"
-
-
-def _list_parts(path: str) -> dict[str, int]:
-    return {
-        f: os.stat(os.path.join(path, f)).st_size
-        for f in os.listdir(path)
-        if f.endswith(".parquet")
-    }
-
-
-def _stamp_table_manifest(name: str) -> None:
-    import json
-    import tempfile
-
-    path = os.path.join(tempfile.gettempdir(), name)
-    with open(os.path.join(path, _TABLE_MANIFEST), "w") as fh:
-        json.dump({"parts": _list_parts(path)}, fh)
-
-
-def _external_table_needs_build(spark: SparkSession, name: str) -> bool:
-    """True when the fingerprint-named bucketed table must be (re)built:
-    the metastore has no entry, OR the entry exists but the external
-    backing files under the temp dir no longer match the manifest the
-    build stamped (tmp cleaners run independently of the session
-    metastore — without this check a registered table whose files
-    vanished, fully OR partially, silently reads short and the ingest
-    returns wrong survivors with no error; ADVICE r10 #1 + r11 review).
-    When the backing data is missing the stale entry is dropped so the
-    caller's ``saveAsTable`` recreates both."""
-    import json
-    import tempfile
-
-    if not spark.catalog.tableExists(name):
-        return True
-    path = os.path.join(tempfile.gettempdir(), name)
-    try:
-        with open(os.path.join(path, _TABLE_MANIFEST)) as fh:
-            expected = json.load(fh)["parts"]
-        # name->size dict equality: catches deletion, addition,
-        # truncation, and same-name overwrite in one compare (a
-        # pre-r12 name-list manifest never equals a dict → rebuild)
-        if _list_parts(path) == expected:
-            return False
-    except (OSError, ValueError, KeyError):
-        pass  # missing dir/manifest or unreadable stamp → rebuild
-    spark.sql(f"DROP TABLE IF EXISTS {name}")
-    return True
-
-
-def _existing_keys_table(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per source fingerprint) the existing-corpus key
-    table, bucketed AND sorted by the join key ``(k, klen)`` — the
-    write-once shuffle that every subsequent ingest amortizes. Returns
-    the table name. Keyed by the source file's (size, mtime) so a
-    regenerated fixture is never silently reused."""
-    import hashlib
-    import tempfile
-
-    src = f"{sf_dir}/documents.parquet"
-    st = os.stat(src)
-    # layout params in the fingerprint: a constants change must mint a
-    # NEW table, never silently reuse one built under the old layout
-    key = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:b{INGEST_KEY_BUCKETS}".encode(
-            "utf-8"
-        )
-    ).hexdigest()[:12]
-    name = f"existing_corpus_keys_{key}"
-    if _external_table_needs_build(spark, name):
-        existing = (
-            _docs(spark, sf_dir)
-            .filter(F.col("source") != INGEST_SOURCE)
-            .select(
-                F.sha2(F.col("text"), 256).alias("k"),
-                F.length("text").alias("klen"),
-            )
-        )
-        (
-            existing.write.mode("overwrite")
-            # external location: a managed table whose warehouse dir
-            # survived a previous session (metastore is per-session)
-            # would refuse to recreate with LOCATION_ALREADY_EXISTS
-            .option("path", os.path.join(tempfile.gettempdir(), name))
-            .bucketBy(INGEST_KEY_BUCKETS, "k", "klen")
-            .sortBy("k", "klen")
-            .saveAsTable(name)
-        )
-        _stamp_table_manifest(name)
-    return name
-
-
-def incremental_ingest_bucketed(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``incremental_ingest`` with the existing side persisted as a
-    bucketed-by-``(k, klen)`` key table (SCALE.md §6 / VERDICT r5 #4):
-    the corpus keys are shuffled ONCE at table-build time; every
-    subsequent ingest anti-joins against the bucketed layout with ZERO
-    Exchange on the existing side — only the (small) incoming batch
-    shuffles, and the in-batch dedup reuses the join's (k, klen)
-    partitioning, so repeated daily ingests never move the corpus again.
-    The ``merge`` hint pins the sort-merge strategy the bucketed layout
-    serves (at fixture scale the 33-byte key table would otherwise
-    broadcast, which reads the table but proves nothing about the
-    layout). Same result set as ``incremental_ingest``; plan shape
-    asserted by ``test_plans.py::test_bucketed_ingest_plan``."""
-    table = _existing_keys_table(spark, sf_dir)
-    d = _docs(spark, sf_dir)
-    incoming = d.filter(F.col("source") == INGEST_SOURCE).select(
-        "doc_id",
-        F.sha2(F.col("text"), 256).alias("k"),
-        F.length("text").alias("klen"),
-    )
-    existing = spark.table(table).hint("merge")
-    fresh = incoming.join(existing, ["k", "klen"], "left_anti")
-    return (
-        fresh.groupBy("k", "klen")
-        .agg(F.min("doc_id").alias("doc_id"))
-        .select("doc_id")
-    )
-
-
-# Bloom sizing: ~10 bits/key with 7 probes gives ~0.8% false-positive
-# rate (the textbook k = m/n ln2 optimum for 10 bits/key). The floor
-# keeps tiny fixture corpora from degenerating to an always-saturated
-# bitmap (m < n*K sets every bit and prunes nothing).
-BLOOM_BITS_PER_KEY = 10
-BLOOM_HASHES = 7
-BLOOM_MIN_BITS = 1 << 13
-
-
-def _bloom_positions(m: int):
-    """The K bit positions of key (k, klen) as a pure expression array —
-    classic double hashing pos_i = (h1 + i*h2) mod m over two
-    independent xxhash64 draws (the salt literal decouples them), all
-    inside codegen; ANSI off (pinned per-query by catalog semantics)
-    lets the i*h2 multiply wrap like the MinHash permutations do."""
-    h1 = F.xxhash64("k", "klen")
-    h2 = F.xxhash64("k", "klen", F.lit("bloom-salt-2"))
-    return F.array(
-        *[F.pmod(h1 + F.lit(i) * h2, F.lit(m)).alias(f"p{i}") for i in range(BLOOM_HASHES)]
-    )
-
-
-def _bloom_candidates(incoming: DataFrame, existing: DataFrame, m: int) -> DataFrame:
-    """Bloom pre-filter probe: the ``incoming`` doc_ids whose key
-    (k, klen) has ALL ``BLOOM_HASHES`` bits set in the filter built from
-    ``existing``'s keys (true duplicates + the ~0.8% false-positive
-    residue). Shared by ``incremental_ingest_bloom`` and the
-    no-false-negative property test (ADVICE r9 #4: the test must probe
-    the real operator path, not its own copy).
-
-    The bit set is PACKED into 64-bit words before it moves: position →
-    (word = pos >> 6, mask = 1 << (pos & 63)), ``bit_or`` aggregate per
-    word. The word table is still corpus-proportional — ~10 bits/key is
-    ~1.25 bytes/key no matter how it is laid out — but packing cuts the
-    row count 64× vs one row per set bit (≈0.16 words/key vs ≈10
-    positions/key pre-distinct), and the join on ``w`` is left to AQE:
-    broadcast while the packed table is small, shuffle-hash on the
-    8-byte word index once the corpus outgrows the broadcast bound
-    (at 2e10 keys the packed table is ~25 GB — a forced broadcast
-    would be a hard failure there, see VERDICT r9 #1)."""
-    pos = _bloom_positions(m)
-    words = (
-        existing.select(F.explode(pos).alias("pos"))
-        .select(
-            F.shiftright("pos", 6).alias("w"),
-            F.expr("shiftleft(1L, CAST(pos % 64 AS INT))").alias("b"),
-        )
-        .groupBy("w")
-        .agg(F.bit_or("b").alias("bits"))
-    )
-    probes = incoming.select("doc_id", F.explode(pos).alias("pos")).select(
-        "doc_id",
-        F.shiftright("pos", 6).alias("w"),
-        F.expr("shiftleft(1L, CAST(pos % 64 AS INT))").alias("mask"),
-    )
-    return (
-        probes.join(words, "w")
-        .filter(F.expr("(bits & mask) <> 0"))
-        .groupBy("doc_id")
-        .agg(F.count("*").alias("n_hits"))
-        .filter(F.col("n_hits") == BLOOM_HASHES)
-        .select("doc_id")
-    )
-
-
-def incremental_ingest_bloom(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """``incremental_ingest`` behind a Bloom pre-filter — the join-free
-    fast path a 100 TB ingest runs first (the CCNet/Dolma URL-dedup
-    shape): keys whose K bloom bits are not all set are DEFINITELY new
-    and skip the anti-join entirely; only the "maybe present" residue
-    (true dups + ~0.8% false positives) probes the exact key join. The
-    final result is therefore BIT-IDENTICAL to the exact anti-join —
-    same oracle SQL as the other two ingest variants — because the
-    bloom only ever routes rows, never decides them: no false negatives
-    by construction (every existing key set its own bits), and false
-    positives are re-checked exactly.
-
-    Scale shape, all JVM-side (zero Python):
-
-    * build: existing keys → K bit positions (codegen expression array)
-      → explode → pack into 64-bit words (``pos >> 6`` + ``bit_or``
-      aggregate; map-side partial OR caps each mapper's emit at m/64
-      words). The packed table is CORPUS-PROPORTIONAL — ~10 bits/key ≈
-      1.25 B/key however it is stored — but 64× fewer rows than the
-      one-row-per-set-bit form, and at steady state it is persisted
-      next to the bucketed key table and amortized across daily ingests
-      (like ``_existing_keys_table``), so the build cost is paid once;
-    * probe: incoming explodes to K (word, mask) probes and joins the
-      word table on the 8-byte ``w`` index — NOT force-broadcast: AQE
-      broadcasts while the packed table fits (any fixture scale) and
-      falls back to a shuffle-hash join on ``w`` when the corpus
-      outgrows the bound (~25 GB at 2e10 keys). A key is a candidate
-      iff all K probes hit a set bit (count == K). The dataflow is a
-      LINEAR chain — candidates → semi-join existing = confirmed dups →
-      ONE doc_id anti-join back on incoming — so the bits/probe subtree
-      executes exactly once (a branch-and-union form would mirror it
-      into both branches; the incoming scan is read twice instead,
-      which is the cheap side);
-    * the in-batch min-doc_id dedup is unchanged. The candidate /
-      confirmed-dup doc_id lists are batch-proportional, so they are
-      also left to AQE rather than force-broadcast (a 100 TB daily
-      batch's dup list can itself exceed the broadcast bound).
-
-    Pruning is measured, not assumed: ``test_properties.py``'s
-    differential asserts candidates < incoming and result == exact,
-    through THIS function's ``_bloom_candidates``."""
-    d = _docs(spark, sf_dir)
-    key = [F.sha2(F.col("text"), 256).alias("k"), F.length("text").alias("klen")]
-    incoming = d.filter(F.col("source") == INGEST_SOURCE).select("doc_id", *key)
-    existing = d.filter(F.col("source") != INGEST_SOURCE).select(*key)
-
-    n_existing = existing.count()  # scalar model sizing (bloom width)
-    m = max(BLOOM_MIN_BITS, n_existing * BLOOM_BITS_PER_KEY)
-
-    candidates = _bloom_candidates(incoming, existing, m)
-    confirmed_dups = (
-        incoming.join(candidates, "doc_id", "left_semi")
-        .join(existing, ["k", "klen"], "left_semi")
-        .select("doc_id")
-    )
-    fresh = incoming.join(confirmed_dups, "doc_id", "left_anti")
     return (
         fresh.groupBy("k", "klen")
         .agg(F.min("doc_id").alias("doc_id"))
@@ -1441,86 +1118,7 @@ WHERE d.doc_id % {m} < {lt}
 NEARDUP_INGEST_ORACLE = _neardup_oracle()
 
 
-def _existing_bands_table(spark: SparkSession, sf_dir: str) -> str:
-    """Materialize (once per source fingerprint) the EXISTING corpus'
-    MinHash band table, bucketed AND sorted by the join key
-    ``(band, key)`` — the write-once signature build every subsequent
-    near-dup ingest amortizes (the ``_existing_keys_table`` pattern one
-    level up). Returns the table name."""
-    import hashlib
-    import tempfile
-
-    from monthly_report_etl_spark.operators.dedup import (
-        NUM_BANDS,
-        NUM_PERM,
-        minhash_signature_columns,
-        portable_band_rows,
-    )
-
-    src = f"{sf_dir}/documents.parquet"
-    st = os.stat(src)
-    # banding/layout params in the fingerprint: a NUM_PERM/NUM_BANDS/
-    # bucket-count change must mint a NEW table, never silently reuse
-    # bands built under the old scheme (same failure mode as the
-    # vanished-backing-files guard: wrong survivors, no error)
-    key = hashlib.md5(
-        f"{src}:{st.st_size}:{st.st_mtime_ns}:neardup"
-        f":p{NUM_PERM}:nb{NUM_BANDS}:m{NEARDUP_BATCH_MOD}:lt{NEARDUP_BATCH_LT}"
-        f":b{INGEST_KEY_BUCKETS}".encode("utf-8")
-    ).hexdigest()[:12]
-    name = f"existing_corpus_bands_{key}"
-    if _external_table_needs_build(spark, name):
-        is_inc = (F.col("doc_id") % NEARDUP_BATCH_MOD) < NEARDUP_BATCH_LT
-        bands = portable_band_rows(
-            minhash_signature_columns(spark, sf_dir)
-        ).filter(~is_inc)
-        (
-            bands.write.mode("overwrite")
-            # external location: a managed table whose warehouse dir
-            # survived a previous session would refuse to recreate
-            .option("path", os.path.join(tempfile.gettempdir(), name))
-            .bucketBy(INGEST_KEY_BUCKETS, "band", "key")
-            .sortBy("band", "key")
-            .saveAsTable(name)
-        )
-        _stamp_table_manifest(name)
-    return name
-
-
-def neardup_cross_candidates(
-    spark: SparkSession, sf_dir: str, bucketed_existing: bool = False
-) -> DataFrame:
-    """Incoming×existing candidate pairs from the shared MinHash
-    banding — the subtree the bucketed twin changes (and the one the
-    plan test pins): with ``bucketed_existing`` the existing side reads
-    the write-once bucketed band table with ZERO Exchange (only the
-    batch shuffles to the bucket partitioning; ``merge`` hint for the
-    same reason as ``incremental_ingest_bucketed`` — at fixture scale
-    the band table would otherwise broadcast, which reads the table but
-    proves nothing about the layout)."""
-    from monthly_report_etl_spark.operators.dedup import (
-        minhash_signature_columns,
-        portable_band_rows,
-    )
-
-    is_inc = (F.col("doc_id") % NEARDUP_BATCH_MOD) < NEARDUP_BATCH_LT
-    bands = portable_band_rows(minhash_signature_columns(spark, sf_dir))
-    inc_b = bands.filter(is_inc)
-    if bucketed_existing:
-        ex_b = spark.table(_existing_bands_table(spark, sf_dir)).hint("merge")
-    else:
-        ex_b = bands.filter(~is_inc)
-    a, b = inc_b.alias("a"), ex_b.alias("b")
-    return (
-        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")))
-        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
-        .distinct()
-    )
-
-
-def incremental_ingest_neardup(
-    spark: SparkSession, sf_dir: str, bucketed_existing: bool = False
-) -> DataFrame:
+def incremental_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     """NEAR-duplicate incremental ingest — the production daily-batch
     shape one level up from ``incremental_ingest``'s exact-key
     anti-join (the CCNet/Dolma fuzzy-dedup stage): an incoming doc is
@@ -1536,12 +1134,8 @@ def incremental_ingest_neardup(
     Scale shape: the existing corpus NEVER self-joins — candidate
     generation is incoming-bands ⋈ existing-bands plus the batch-sized
     incoming self-join, both equi-joins on 8-byte (band, key); exact
-    verification touches candidates only. At steady state the
-    existing-side signatures/bands are a write-once table bucketed on
-    (band, key) next to the exact-key table (the
-    ``incremental_ingest_bucketed`` pattern), so a daily batch shuffles
-    only itself. Docs with < 3 tokens have no shingles and always
-    survive — by construction in both engines."""
+    verification touches candidates only. Docs with < 3 tokens have no
+    shingles and always survive — by construction in both engines."""
     from monthly_report_etl_spark.operators.dedup import (
         _verify_jaccard,
         minhash_signature_columns,
@@ -1558,13 +1152,15 @@ def incremental_ingest_neardup(
     # 18.3 s, full-bands localCheckpoint 24.6 s. Recomputing WINS —
     # each subtree's filtered scan + window agg is cheaper than
     # materializing ~8 band rows/doc, and the independent subtrees
-    # overlap in one wave — so the streaming form is deliberate. At
-    # steady state the existing side is the write-once persisted bands
-    # table the docstring describes, which removes the corpus-sized
-    # recomputes from the daily path entirely.
+    # overlap in one wave — so the streaming form is deliberate.
     bands = portable_band_rows(minhash_signature_columns(spark, sf_dir))
     inc_b = bands.filter(is_inc)
-    cross = neardup_cross_candidates(spark, sf_dir, bucketed_existing)
+    a, b = inc_b.alias("a"), bands.filter(~is_inc).alias("b")
+    cross = (
+        a.join(b, (F.col("a.band") == F.col("b.band")) & (F.col("a.key") == F.col("b.key")))
+        .select(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
+        .distinct()
+    )
     ia, ib = inc_b.alias("ia"), inc_b.alias("ib")
     inbatch = (
         ia.join(
@@ -1587,25 +1183,6 @@ def incremental_ingest_neardup(
         .alias("doc_id")
     ).distinct()
     return incoming_ids.join(dropped, "doc_id", "left_anti")
-
-
-def incremental_ingest_neardup_bucketed(
-    spark: SparkSession, sf_dir: str
-) -> DataFrame:
-    """``incremental_ingest_neardup`` with the existing-corpus band
-    table persisted bucketed+sorted by ``(band, key)`` — the code form
-    of the docstring's steady-state claim (the
-    ``incremental_ingest_bucketed`` pattern one level up): the
-    corpus-sized signature build happens ONCE at table-build time, and
-    every subsequent daily ingest's incoming×existing candidate join
-    reads the bucketed layout with ZERO Exchange on the existing side —
-    only the batch's bands shuffle. Same result set as the plain form
-    (same oracle — NEARDUP_INGEST_ORACLE); plan shape pinned by
-    ``test_plans.py::test_neardup_bucketed_cross_plan``. Staged r10
-    alongside ``bpe_tokenize``, promoted to the catalog in r11; this
-    bucketed form is the DEPLOYMENT HEADLINE for near-dup ingest (the
-    plain form is its semantics-oracle twin — COVERAGE.md taxonomy)."""
-    return incremental_ingest_neardup(spark, sf_dir, bucketed_existing=True)
 
 
 # ---------------------------------------------------------------------------
@@ -2388,22 +1965,10 @@ def bpe_tokenize_catalog(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 CATALOG: dict[str, tuple] = {
     "corpus_incremental_ingest": (incremental_ingest, INCREMENTAL_INGEST_ORACLE),
-    "corpus_incremental_ingest_bucketed": (
-        incremental_ingest_bucketed,
-        INCREMENTAL_INGEST_ORACLE,
-    ),
-    "corpus_incremental_ingest_bloom": (
-        incremental_ingest_bloom,
-        INCREMENTAL_INGEST_ORACLE,
-    ),
     "corpus_bpe_pair_counts": (bpe_pair_counts, BPE_PAIR_ORACLE),
     "corpus_bpe_train_merges": (bpe_train_merges, BPE_TRAIN_ORACLE),
     "corpus_incremental_ingest_neardup": (
         incremental_ingest_neardup,
-        NEARDUP_INGEST_ORACLE,
-    ),
-    "corpus_incremental_ingest_neardup_bucketed": (
-        incremental_ingest_neardup_bucketed,
         NEARDUP_INGEST_ORACLE,
     ),
     "corpus_bpe_tokenize": (bpe_tokenize_catalog, BPE_TOKENIZE_CATALOG_ORACLE),
@@ -2411,7 +1976,6 @@ CATALOG: dict[str, tuple] = {
     "corpus_mix_weights": (mix_weights, MIX_WEIGHTS_ORACLE),
     "corpus_chunk_documents": (chunk_documents, CHUNK_ORACLE),
     "corpus_stratified_sample": (stratified_sample, STRATIFIED_SAMPLE_ORACLE),
-    "corpus_chunk_documents_udtf": (chunk_documents_udtf, CHUNK_ORACLE),
     "corpus_sample_hash_mod": (sample_hash_mod, SAMPLE_HASH_MOD_ORACLE),
     "corpus_pii_flags": (pii_flags, PII_FLAGS_ORACLE),
     "corpus_tfidf_top_terms": (tfidf_top_terms, TFIDF_ORACLE),

@@ -124,20 +124,15 @@ WHERE common * 1.0 / (na + nb - common) >= {JACCARD_THRESHOLD}
 """
 
 
-def _shingle_rows(
-    spark: SparkSession, sf_dir: str, distinct: bool = True, hashed: bool = False
-) -> DataFrame:
-    """(doc_id, shingle) pairs — distinct by default (the inverted-index
-    join and set-verification need sets); ``distinct=False`` skips the
-    dedup EXCHANGE for duplicate-insensitive consumers (MinHash MINs),
-    whose aggregation then reuses the window's doc_id partitioning with
-    no further shuffle.
+def _shingle_rows(spark: SparkSession, sf_dir: str, hashed: bool = False) -> DataFrame:
+    """Distinct (doc_id, shingle) pairs: the inverted-index join and the
+    set verification both need a SET per document.
 
     ``hashed=True`` replaces the 3-gram STRING with its xxhash64 before
     the distinct, so every downstream exchange (distinct, df window,
     posting-list self-join, verify join) moves 8-byte ints instead of
-    ~25-byte strings — measured 20-28% wall on prefix_jaccard at the 10x
-    scale step, growing with scale as the shuffles go bandwidth-bound.
+    ~25-byte strings — measured 20-28% wall on the Jaccard join at the
+    10x scale step, growing with scale as the shuffles go bandwidth-bound.
     Join/count semantics are exact modulo 64-bit collisions: a collision
     can only MERGE two distinct shingles (overcounting ``common`` for a
     pair that contains both sides), with per-pair probability
@@ -169,11 +164,10 @@ def _shingle_rows(
         # allocated (it was built per row only to be hashed and thrown
         # away). Token hashes are never NULL, so the lead-2 NULL guard
         # still marks end-of-doc exactly as the string form did.
-        # Interleaved A/B on prefix_jaccard at sf0.1: 2.63s -> 2.34s
-        # median (-11%), identical output (the prefix bound needs only
-        # SOME consistent total order; set sizes and intersection counts
-        # are hash-value-independent modulo the same 64-bit collision
-        # tolerance documented below).
+        # Interleaved A/B at sf0.1: 2.63s -> 2.34s median (-11%),
+        # identical output (set sizes and intersection counts are
+        # hash-value-independent modulo the same 64-bit collision
+        # tolerance documented above).
         exh = ex.select("doc_id", "pos", F.xxhash64("tok").alias("th"))
         t2 = F.lead("th", 2).over(w)
         out = (
@@ -194,18 +188,17 @@ def _shingle_rows(
             F.lead("tok", 2).over(w).alias("_t2"),
         ).filter(F.col("_t2").isNotNull())
         out = grams.select("doc_id", "s")
-    return out.distinct() if distinct else out
+    return out.distinct()
 
 
-def _shingled(spark: SparkSession, sf_dir: str, hashed: bool = False) -> DataFrame:
+def _shingled(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-document distinct shingle SET (array form, for verification
-    array_intersect) — aggregated from the row form. ``hashed=True``
-    carries xxhash64 int shingles (8 bytes/element vs ~25-byte 3-gram
-    strings): intersection COUNTS are identical modulo 64-bit collisions
-    — the same tolerance the prefix/ngram paths accepted in r12 (their
-    string-grouping oracles are themselves the collision check at test
-    scale)."""
-    return _shingle_rows(spark, sf_dir, hashed=hashed).groupBy("doc_id").agg(
+    array_intersect) — aggregated from the row form. It carries xxhash64
+    int shingles (8 bytes/element vs ~25-byte 3-gram strings):
+    intersection COUNTS are identical modulo 64-bit collisions — the
+    same tolerance the n-gram Jaccard path accepts (its string-grouping
+    oracle is itself the collision check at test scale)."""
+    return _shingle_rows(spark, sf_dir, hashed=True).groupBy("doc_id").agg(
         F.collect_set("s").alias("sh")
     )
 
@@ -255,9 +248,8 @@ def ngram_jaccard_pairs(
     # r19: both sides of the posting-list self-join grow with the
     # corpus — pin it to sort-merge (spill-safe, no resident build) so
     # the static planner's size misestimate through the window+filter
-    # chain can never pick a broadcast build (the prefix_jaccard 100x
-    # lesson, same note there; caught by explain at the 100x input:
-    # two static BroadcastHashJoins).
+    # chain can never pick a broadcast build (caught by explain at the
+    # 100x input: two static BroadcastHashJoins).
     pairs = (
         a.join(b.hint("merge"), (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
         .groupBy(F.col("a.doc_id").alias("doc_a"), F.col("b.doc_id").alias("doc_b"))
@@ -290,10 +282,10 @@ def _verify_jaccard(spark: SparkSession, sf_dir: str, candidates: DataFrame) -> 
     Sets ride as xxhash64 ints (r20): every element the two pair joins
     move shrinks ~3x, and set-size/intersection counts are unchanged
     modulo 64-bit collisions (see ``_shingled``). Interleaved A/B at
-    sf0.1: incremental_ingest_neardup 6.29s -> 4.76s median (-24%),
-    the bucketed twin 4.85s -> 4.05s (-16%); outputs identical and the
-    string-based oracles stay green at every checked SF."""
-    sh = _shingled(spark, sf_dir, hashed=True)
+    sf0.1: incremental_ingest_neardup 6.29s -> 4.76s median (-24%);
+    outputs identical and the string-based oracles stay green at every
+    checked SF."""
+    sh = _shingled(spark, sf_dir)
     sa = sh.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
     sb = sh.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
     verified = (
@@ -817,8 +809,8 @@ def embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     # norms hoisted out of the N^2 pair loop (same bit-exact argument as
-    # semdedup_keep: identical fold per vector, identical dot/(na*nb)
-    # multiplication order as cosine_similarity's inline form)
+    # the semdedup operators: identical fold per vector, identical
+    # dot/(na*nb) multiplication order as cosine_similarity's inline form)
     a = v.select(
         F.col("vec_id").alias("vec_a"),
         F.col("e").alias("ea"),
@@ -876,8 +868,8 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
     DataFrames): each round, every vertex takes the min label among itself
     and its neighbors; converged when no label changed. Each round is ONE
     shuffle join + hash-agg; iterations are bounded by graph diameter
-    (CC_MAX_ITERS guards pathological chains — at 100 TB scale the
-    large-star/small-star variant cuts rounds to O(log n)). Only the
+    (CC_MAX_ITERS guards pathological chains; a large-star/small-star
+    variant would cut rounds to O(log n)). Only the
     changed-row COUNT crosses the driver per round (convergence test, like
     an iterative-solver residual); labels persist round-to-round (2 longs
     per vertex — narrow rows, where persist beats recompute) and each
@@ -927,264 +919,6 @@ def dedup_connected_components(spark: SparkSession, sf_dir: str) -> DataFrame:
             "large-star/small-star variant for high-diameter graphs"
         )
     return labels
-
-
-# ---------------------------------------------------------------------------
-# connected components, large-star/small-star variant (O(log n) rounds)
-# ---------------------------------------------------------------------------
-
-CC_STAR_MAX_ITERS = 30
-
-
-def _cc_star_core(edges: DataFrame) -> tuple[DataFrame, int]:
-    """Alternating large-star/small-star connected components (Kiveris et
-    al., "Connected Components in MapReduce and Beyond", SoCC'14) over an
-    edge DataFrame with columns ``(s, t)``.
-
-    Each round rewires the edge set toward stars centered on component
-    minima:
-
-    * large-star: every node links its LARGER neighbors to its minimum
-      neighbor (or itself) — ``(v, m)`` for ``v > u``, ``m = min(N(u) + u)``;
-    * small-star: edges directed big→small; every node links its smaller
-      neighbors and itself to the smallest — ``(v, m)`` for
-      ``v in N¯(u) + u, v != m``.
-
-    Rounds are O(log n) on any graph (vs. graph DIAMETER for label
-    propagation — the win on chain-shaped dup clusters). Per round: two
-    window min-shuffles + one distinct; the driver sees only a
-    (count, hash-XOR) convergence scalar. Each round's edge set is
-    ``localCheckpoint``-ed — persist alone leaves the full iterative
-    lineage in the logical plan, and 10+ rounds of nested
-    union+window+distinct blow up planning (at cluster scale, swap for
-    a reliable ``checkpoint`` so executor loss can recompute).
-    Returns (labels, rounds)."""
-    # canonical (hi, lo) orientation; dedup once up front
-    cur = (
-        edges.select(
-            F.greatest("s", "t").alias("s"), F.least("s", "t").alias("t")
-        )
-        .filter(F.col("s") != F.col("t"))
-        .distinct()
-        .localCheckpoint()
-    )
-    sig = cur.agg(
-        F.count("*").alias("n"), F.coalesce(F.bit_xor(F.xxhash64("s", "t")), F.lit(0)).alias("h")
-    ).collect()[0]
-    rounds = 0
-    for _ in range(CC_STAR_MAX_ITERS):
-        rounds += 1
-        # large-star over the undirected adjacency
-        und = cur.unionByName(cur.select(F.col("t").alias("s"), F.col("s").alias("t")))
-        m_large = F.least(F.min("t").over(Window.partitionBy("s")), F.col("s"))
-        large = (
-            und.withColumn("m", m_large)
-            .filter(F.col("t") > F.col("s"))
-            .select(F.col("t").alias("s"), F.col("m").alias("t"))
-        )
-        # small-star over the big→small orientation of large-star's output
-        directed = large.select(
-            F.greatest("s", "t").alias("s"), F.least("s", "t").alias("t")
-        ).filter(F.col("s") != F.col("t"))
-        m_small = F.min("t").over(Window.partitionBy("s"))
-        with_min = directed.withColumn("m", m_small)
-        small = (
-            with_min.filter(F.col("t") != F.col("m"))
-            .select(F.col("t").alias("s"), F.col("m").alias("t"))
-            .unionByName(with_min.select("s", F.col("m").alias("t")))
-            .distinct()
-            .localCheckpoint()
-        )
-        new_sig = small.agg(
-            F.count("*").alias("n"),
-            F.coalesce(F.bit_xor(F.xxhash64("s", "t")), F.lit(0)).alias("h"),
-        ).collect()[0]  # scalar convergence residual — model state, not data
-        cur.unpersist()
-        cur = small
-        if (new_sig["n"], new_sig["h"]) == (sig["n"], sig["h"]):
-            break
-        sig = new_sig
-    else:
-        cur.unpersist()
-        raise RuntimeError(
-            f"star connected components did not converge in {CC_STAR_MAX_ITERS} rounds"
-        )
-    # fixpoint edge set is a union of stars rooted at component minima
-    labels = (
-        cur.select(F.col("s").alias("doc_id"), F.col("t").alias("component"))
-        .unionByName(
-            cur.select(F.col("t").alias("doc_id"), F.col("t").alias("component"))
-        )
-        .distinct()
-    )
-    return labels, rounds
-
-
-def dedup_cc_star(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Connected components over the near-dup pair graph via alternating
-    large-star/small-star — same contract as
-    ``dedup_connected_components`` (component = MIN doc_id), but round
-    count bounded by O(log n) instead of graph diameter: the variant to
-    run at 100 TB, where a chain of pairwise near-dups would force label
-    propagation through as many shuffle rounds as the chain is long."""
-    pairs = ngram_jaccard_pairs(spark, sf_dir)
-    labels, _ = _cc_star_core(
-        pairs.select(F.col("doc_a").alias("s"), F.col("doc_b").alias("t"))
-    )
-    return labels
-
-
-def prefix_jaccard_pairs(
-    spark: SparkSession, sf_dir: str, checkpoint: bool = True
-) -> DataFrame:
-    """Prefix-filtering set-similarity join (the PPJoin/AllPairs family):
-    EXACT Jaccard pairs, but the candidate join touches only each
-    document's rare-shingle PREFIX instead of its full posting rows.
-
-    Order every document's shingles by ascending global document
-    frequency (rarest first; shingle text as tiebreak so the order is
-    total and identical on every executor). For threshold t, any partner
-    of doc a must overlap it by at least ceil(t*|a|) shingles (length
-    filter |b| >= t*|a| makes the overlap bound hold), so two qualifying
-    docs MUST share a shingle inside their first ``n - ceil(t*n) + 1``
-    shingles — the join on prefix rows has no false negatives.
-    Candidates are then verified with the exact intersection.
-
-    At 100 TB this beats the full inverted-index join two ways: the
-    candidate exchange carries only prefix rows (a 1-t fraction, and the
-    RAREST shingles, so posting lists in the join are short by
-    construction — the hot-shingle f² hazard disappears without a cap),
-    and the length filter prunes cross-size pairs before the verify.
-    Same output contract as ``ngram_jaccard_pairs`` — both are gated by
-    NGRAM_JACCARD_ORACLE.
-    """
-    t = F.lit(JACCARD_THRESHOLD)
-    # ONE materialization, placed AFTER the window cascade (r5: replaces
-    # two checkpoints — one before the windows for the verify branch, one
-    # after for the self-join sides — that serialized the shingle rows
-    # twice; measured 8.4s -> 5.3s cold at sf0.1). Everything downstream
-    # is a cheap filter or column-pruned read of this row set: the prefix
-    # self-join reads the r-filtered rows, verification reads (doc_id, s).
-    # hashed=True: all four exchanges below (df window, checkpoint,
-    # prefix self-join, verify join) carry 8-byte shingle ints instead of
-    # ~25-byte 3-gram strings — measured 20-28% wall at the 10x step,
-    # identical output (the prefix bound needs only SOME consistent total
-    # order, so (df, hash) ordering is as valid as (df, string); the
-    # exact-verify count is collision-exact per the _shingle_rows note)
-    # distinct=True passed EXPLICITLY (ADVICE r20 #2): the verify below
-    # computes na/nb as size(collect_list(s)) and common as an
-    # array_intersect — both correct ONLY because these rows are a SET
-    # per doc. If this call ever drifted to distinct=False, Jaccard
-    # counts would silently corrupt with nothing pointing here.
-    rows = _shingle_rows(spark, sf_dir, distinct=True, hashed=True)
-    # set size + global shingle frequency; the df window shuffles by s,
-    # the n/rank windows share one doc_id exchange
-    e = rows.withColumn("df", F.count("*").over(Window.partitionBy("s")))
-    e = e.withColumn("n", F.count("*").over(Window.partitionBy("doc_id"))).withColumn(
-        "r",
-        F.row_number().over(
-            Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("s").asc())
-        ),
-    )
-    # checkpoint=False exists for the plan-shape gate only: localCheckpoint
-    # truncates lineage, so the explained plan would hide the pre-checkpoint
-    # hash/window stages it needs to assert on
-    e = e.select("doc_id", "s", "n", "r")
-    if checkpoint:
-        e = e.localCheckpoint()
-    pref = e.filter(F.col("r") <= F.col("n") - F.ceil(t * F.col("n")) + 1).select(
-        "doc_id", "s", "n", "r"
-    )
-    a, b = pref.alias("a"), pref.alias("b")
-    # PPJoin positional filter (Xiao et al. 2008) on top of the AllPairs
-    # prefix bound: a qualifying pair (J >= t) has common >= alpha =
-    # ceil(t/(1+t) * (na+nb)), and for the FIRST shared shingle in the
-    # global (df, hash) order at prefix positions (ra, rb), every other
-    # common shingle sits after both positions, so common <= 1 +
-    # min(na-ra, nb-rb). A qualifying pair therefore always has at least
-    # one prefix match passing the bound — filtering raw matches before
-    # the distinct prunes candidates with NO false negatives (measured at
-    # the 100x step: 31.0M -> 12.5M candidate pairs, and the verify join
-    # is the dominant stage there). The 1e-9 slack keeps float ceil from
-    # rounding alpha UP past its exact value (pruning too hard is the
-    # only unsafe direction).
-    alpha = F.ceil(
-        F.lit(JACCARD_THRESHOLD / (1.0 + JACCARD_THRESHOLD))
-        * (F.col("a.n") + F.col("b.n"))
-        - F.lit(1e-9)
-    )
-    # r19: every join in this operator has BOTH sides growing with the
-    # corpus (prefix rows, candidate pairs, shingle rows), so none may
-    # ever rely on a broadcast: the 100x scale curve caught the static
-    # planner broadcasting the b-side prefix rows through the
-    # checkpoint+filter size misestimate and failing the broadcast
-    # build at 500k docs ("Not enough memory to build and broadcast").
-    # The pins, chosen per join by measurement at the 100x point:
-    # SHUFFLE_HASH for this prefix self-join (the build side is the
-    # r-filtered PREFIX rows — the smallest corpus-derived relation in
-    # the plan; its per-partition build fits comfortably and avoids
-    # sorting both sides) and MERGE for the two verify joins below
-    # (their inputs are the full shingle rows — the largest relation —
-    # and sort-merge is the one strategy with NO resident build
-    # structure: sorts spill to disk, so the stage is memory-safe at
-    # any corpus-to-executor ratio; an all-SHUFFLE_HASH variant
-    # exhausted execution memory in the verify stage at 100x,
-    # cannotAcquireMemoryToBuildUnsafeHashedRelation). Either hint
-    # wins over both the static planner's and AQE's broadcast
-    # conversion. Measured at sf0.1: within noise of the broadcast
-    # plan; at 100x: completes where both broadcast and all-hash OOM'd.
-    cand = (
-        a.join(
-            b.hint("shuffle_hash"),
-            (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")),
-        )
-        .filter(
-            (F.col("b.n") >= t * F.col("a.n"))
-            & (F.col("a.n") >= t * F.col("b.n"))
-            & (
-                1
-                + F.least(
-                    F.col("a.n") - F.col("a.r"), F.col("b.n") - F.col("b.r")
-                )
-                >= alpha
-            )
-        )
-        .select(
-            F.col("a.doc_id").alias("doc_a"),
-            F.col("b.doc_id").alias("doc_b"),
-        )
-        .distinct()
-    )
-    # verify against per-doc shingle ARRAYS (r20): one hash-agg collects
-    # each doc's (already-distinct) shingle list — it rides the
-    # checkpoint's doc_id partitioning, so the agg adds NO exchange and
-    # its state is doc-bounded — then the two pair joins move one array
-    # per candidate side and the intersection is a single array_intersect
-    # per pair. The r12-r19 row form joined the candidate pairs against
-    # the exploded shingle ROWS (one row per (pair, shingle)), which
-    # exchanged and sorted a sum-of-doc-sizes-per-pair intermediate twice;
-    # interleaved A/B at sf0.1: 5.47s -> 3.43s median (-37%), identical
-    # output, and 10x-input A/B confirms the win grows with scale (see
-    # OPTIMIZATION_r20.md). Set sizes are recomputed as size(sh) — equal
-    # by construction to the window's n — so the candidate exchange
-    # carries only the (doc_a, doc_b) pair.
-    # Both verify joins still carry corpus-growing sides — same MERGE
-    # pin, per the note above (sort-merge spills; no resident build).
-    sets = e.groupBy("doc_id").agg(F.collect_list("s").alias("sh"))
-    sa = sets.select(F.col("doc_id").alias("doc_a"), F.col("sh").alias("sh_a"))
-    sb = sets.select(F.col("doc_id").alias("doc_b"), F.col("sh").alias("sh_b"))
-    verified = (
-        cand.hint("merge")
-        .join(sa, "doc_a")
-        .join(sb.hint("merge"), "doc_b")
-        .withColumn("common", F.size(F.array_intersect("sh_a", "sh_b")))
-        .withColumn("na", F.size("sh_a"))
-        .withColumn("nb", F.size("sh_b"))
-    )
-    jac = F.col("common") / (F.col("na") + F.col("nb") - F.col("common"))
-    return verified.filter(jac >= t).select(
-        "doc_a", "doc_b", F.round(jac, 6).alias("jaccard")
-    )
 
 
 # ---------------------------------------------------------------------------
@@ -1362,8 +1096,7 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     # localCheckpoint: grams and meta both consume the tokenized docs;
     # without it the scan + whitespace tokenization (the dominant narrow
-    # stage at the 100x step) runs twice — same fix prefix_jaccard_pairs
-    # carries (ADVICE r7)
+    # stage at the 100x step) runs twice
     d = (
         spark.read.parquet(f"{sf_dir}/documents.parquet")
         .select("doc_id", whitespace_tokens(F.col("text")).alias("t"))
@@ -1447,13 +1180,11 @@ CATALOG: dict[str, tuple] = {
     "dedup_exact": (dedup_exact, DEDUP_EXACT_ORACLE),
     "dedup_duplicate_spans": (duplicate_spans, DUPLICATE_SPANS_ORACLE),
     "dedup_ngram_jaccard": (ngram_jaccard_pairs, NGRAM_JACCARD_ORACLE),
-    "dedup_prefix_jaccard": (prefix_jaccard_pairs, NGRAM_JACCARD_ORACLE),
     # portable-hash sketches: the full signature → band → candidate →
     # verify chain is recomputed by the DuckDB oracle (hash-checkable)
     "dedup_minhash_lsh": (minhash_lsh_pairs_portable, MINHASH_LSH_ORACLE),
     "dedup_simhash": (simhash_pairs_portable, SIMHASH_ORACLE),
     "dedup_embedding_cosine": (embedding_cosine_pairs, EMBEDDING_COSINE_ORACLE),
     "dedup_connected_components": (dedup_connected_components, CONNECTED_COMPONENTS_ORACLE),
-    "dedup_cc_star": (dedup_cc_star, CONNECTED_COMPONENTS_ORACLE),
     "dedup_canonical_selection": (dedup_canonical_selection, CANONICAL_SELECTION_ORACLE),
 }

@@ -15,10 +15,9 @@ Scale design (100 TB of vectors):
   scale with the corpus so the scan fraction shrinks as 1/sqrt(k)), then
   each query probes its nearest clusters with exact re-rank; the catalog
   entry is hash-checked as exact rows + a recall floor boolean;
-* SemDeDup (three kernels sharing one drop rule): portable-hash buckets
-  (bit-recomputable semantics pin), exact-global O(n^2) baseline, and
-  the trained-k-means scale path with a per-cluster dense gram kernel
-  above 10k vectors (SCALE.md §8d/8e);
+* SemDeDup (two kernels sharing one drop rule): the exact-global O(n^2)
+  baseline, and the trained-k-means scale path with a per-cluster dense
+  gram kernel above 10k vectors (SCALE.md §8e);
 * PQ compresses vectors 64x into trained sub-codebook codes and searches
   them via ADC lookup tables with an exact re-rank of the shortlist —
   the storage + query layout a 100 TB vector index actually runs.
@@ -342,12 +341,10 @@ ANN_LSH_ORACLE = _ann_lsh_oracle()
 # ---------------------------------------------------------------------------
 # SemDeDup-style semantic dedup (Abbas et al. 2023): partition the embedding
 # space, then within each partition drop every vector that has a
-# sufficiently-similar lower-id neighbor. The paper partitions with k-means;
-# here the partitioner is the portable ±1-integer-hyperplane bucket (table 0
-# of the ANN scheme above) so the WHOLE chain — bucket bits, in-bucket pair
-# cosines, drop rule — is bit-recomputable by the DuckDB oracle. The
-# k-means-partitioned twin at scale is ivf_topk's trained quantizer; this
-# entry pins the dedup semantics hash-exactly.
+# sufficiently-similar lower-id neighbor. The exact-global baseline here uses
+# one partition, so its whole chain — pair cosines, drop rule — is
+# bit-recomputable by the DuckDB oracle; the paper's k-means-partitioned form
+# is semdedup_kmeans_keep below.
 # ---------------------------------------------------------------------------
 
 SEMDEDUP_TAU = 0.25
@@ -363,12 +360,12 @@ def _semdedup_drop_rule(b0: DataFrame, broadcast_lower: bool = False) -> DataFra
     index-order drop rule (deliberately NOT transitive closure; the
     CC-based transitive variant is dedup_connected_components' family).
 
-    Shared verbatim by the portable-hash entry (hash-pinned semantics),
-    the exact-global baseline (bucket = const) and the trained-k-means
-    scale path — the pytest differentials in test_dedup_similarity.py
-    ride this shared rule. Norms arrive hoisted in ``nrm``: each vector
-    sits in ~n_b pairs and l2_norm re-evaluated per pair was ~2/3 of
-    the fold work; the pair cosine keeps cosine_similarity's exact
+    Shared verbatim by the exact-global baseline (bucket = const) and
+    the trained-k-means path — the pytest differentials in
+    test_dedup_similarity.py ride this shared rule. Norms arrive
+    hoisted in ``nrm``: each vector sits in ~n_b pairs and l2_norm
+    re-evaluated per pair was ~2/3 of the fold work; the pair cosine
+    keeps cosine_similarity's exact
     arithmetic — dot/(lo_norm * hi_norm) in that multiplication order —
     so results are bit-identical to the inline form the oracles mirror.
     ``broadcast_lower`` turns the bucket equi-join into a broadcast (the
@@ -403,29 +400,6 @@ def _semdedup_drop_rule(b0: DataFrame, broadcast_lower: bool = False) -> DataFra
             F.col("nn_lower_cos") < SEMDEDUP_TAU, F.lit(True)
         ).alias("keep"),
     )
-
-
-def semdedup_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """Per-vector SemDeDup verdict over the PORTABLE partitioner: bucket
-    id = table 0 of the ±1-integer-hyperplane scheme, so the WHOLE chain
-    — bucket bits, in-bucket pair cosines, drop rule — is
-    bit-recomputable by the DuckDB oracle. This entry pins the dedup
-    SEMANTICS hash-exactly; it is NOT the scale path: the bucket id has
-    only 2^LSH_BITS = 16 values, so pair fan-out is ~n^2/16 (measured
-    super-linear in SCALE.md §8d). The paper's contract — partitions
-    whose count grows with the corpus — is semdedup_kmeans_keep below,
-    differentially tested against this rule on shared buckets."""
-    v = read_vectors(spark, sf_dir).select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    bucket_udf = _bucket_array_udf_int()
-    b0 = v.select(
-        "vec_id",
-        "e",
-        bucket_udf(F.col("e"))[0].cast("long").alias("bucket"),
-        l2_norm(F.col("e")).alias("nrm"),
-    )
-    return _semdedup_drop_rule(b0)
 
 
 def semdedup_exact_global(spark: SparkSession, sf_dir: str) -> DataFrame:
@@ -472,40 +446,6 @@ def _pair_cos_sql(lo: str = "lo", hi: str = "hi") -> str:
     )
 
 
-def _semdedup_oracle() -> str:
-    bit_terms = []
-    for b in range(LSH_BITS):
-        wlist = "[" + ", ".join(str(x) for x in PM1_WEIGHTS[b]) + "]"
-        dot = (
-            "list_reduce(list_prepend(CAST(0 AS BIGINT), "
-            f"list_transform(range(1, {_DIM} + 1), "
-            f"i -> q[i] * ({wlist})[i])), (a, x) -> a + x)"
-        )
-        bit_terms.append(f"(CASE WHEN {dot} > 0 THEN {1 << b} ELSE 0 END)")
-    return f"""
-WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
-           WHERE embedding IS NOT NULL),
-qz AS (
-    SELECT vec_id, e,
-           list_transform(e, x -> CAST(floor(x * {QUANT_SCALE}) AS BIGINT)) AS q
-    FROM v
-),
-b0 AS (
-    SELECT vec_id, e, CAST({' + '.join(bit_terms)} AS BIGINT) AS bucket
-    FROM qz
-),
-nn AS (
-    SELECT hi.vec_id, MAX(ROUND({_pair_cos_sql()}, 6)) AS nn_lower_cos
-    FROM b0 hi JOIN b0 lo
-      ON lo.bucket = hi.bucket AND lo.vec_id < hi.vec_id
-    GROUP BY hi.vec_id
-)
-SELECT b.vec_id, b.bucket, nn.nn_lower_cos,
-       COALESCE(nn.nn_lower_cos < {SEMDEDUP_TAU}, TRUE) AS keep
-FROM b0 b LEFT JOIN nn ON nn.vec_id = b.vec_id
-"""
-
-
 SEMDEDUP_EXACT_ORACLE = f"""
 WITH v AS (SELECT vec_id, CAST(embedding AS DOUBLE[]) AS e FROM embeddings
            WHERE embedding IS NOT NULL),
@@ -520,13 +460,9 @@ FROM v b LEFT JOIN nn ON nn.vec_id = b.vec_id
 """
 
 
-SEMDEDUP_ORACLE = _semdedup_oracle()
-
-
 CATALOG: dict[str, tuple] = {
     "similarity_knn_brute_force": (knn_brute_force, KNN_ORACLE),
     "similarity_ann_lsh": (ann_lsh_topk_portable, ANN_LSH_ORACLE),
-    "dedup_semdedup": (semdedup_keep, SEMDEDUP_ORACLE),
     "dedup_semdedup_exact": (semdedup_exact_global, SEMDEDUP_EXACT_ORACLE),
 }
 
@@ -1242,14 +1178,13 @@ def semdedup_kmeans_keep(
     corpus with a k-means trained in embedding space — k scaled so
     clusters hold ~``cluster_target`` vectors — then apply the identical
     lower-id drop rule per cluster (``_semdedup_drop_rule``, shared
-    verbatim with the hash-pinned portable entry and the exact-global
-    baseline).
+    verbatim with the exact-global baseline).
 
     Scale design (the 100 TB path; clears VERDICT r7's one weak flag):
 
     * pair fan-out: k grows with n, so in-cluster pairs total ~n x
-      cluster_target — LINEAR in the corpus, vs n^2/16 for the fixed
-      16-bucket portable twin (both measured in SCALE.md §8d);
+      cluster_target — LINEAR in the corpus, vs n^2/16 for a fixed
+      16-bucket partitioner;
     * training: Lloyd iterations run on a deterministic stride sample
       capped at max(32k, 2048) vectors (the ≥~32-points-per-centroid
       rule of thumb), so training cost tracks the MODEL size, not the
@@ -1343,8 +1278,8 @@ def semdedup_kmeans_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
       intersection join needed — the clustering-quality claim, same
       aggregate-floor contract as similarity_ivf_topk's recall_ok).
 
-    The pure scale path stays ``semdedup_kmeans_keep`` (benched and on
-    the SCALE.md §8d curve without this O(n^2) verification harness).
+    The pure scale path stays ``semdedup_kmeans_keep`` (without this
+    O(n^2) verification harness).
     """
     # localCheckpoint: the exact-global O(n^2) plan feeds BOTH the flags
     # aggregate and the output rows — without it the dominant pair join

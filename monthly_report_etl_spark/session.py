@@ -30,7 +30,8 @@ def get_spark(
     * ``spark.sql.ansi.enabled=false`` — the reference coerces with
       ``pd.to_numeric(errors='coerce')`` (run_exports_query.py:69-71);
       non-ANSI ``cast`` nulls on failure instead of raising.
-    * AQE on — runtime coalescing of the 32-way local shuffles and skew-join
+    * AQE on — runtime coalescing of the local shuffles (``shuffle_partitions``
+      defaults to ``SPARK_GRAFT_CPUS``, the local core count) and skew-join
       splitting at cluster scale.
     * ``spark.sql.sources.parallelPartitionDiscovery.threshold=4096`` —
       Spark lists a set of paths with a distributed job (0.3–0.6 s each,
@@ -38,16 +39,16 @@ def get_spark(
       holds more paths than this (default 32). Reading the per-lender report
       lists its 48 lender directories, and CSV header inference lists its
       part files one by one: lenders × write tasks, about 190 at 4 cores and
-      1,500 at 32. Above the default, each read of the report (the export's
-      read-back validation, the merge job's reads) started one such job per
-      listing. 4096 keeps these lists on the driver up to about 80 cores; a
-      larger tree still lists in parallel.
+      1,500 at 32. Above the default, each read of the report (the merge
+      job's header pass and scan) started one such job per listing. 4096
+      keeps these lists on the driver up to about 80 cores; a larger tree
+      still lists in parallel.
     """
     cpus = os.environ.get("SPARK_GRAFT_CPUS", "32")
     if master is None:
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
-        shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", cpus))
+        shuffle_partitions = int(cpus)
 
     builder = (
         SparkSession.builder.appName(app_name)

@@ -245,78 +245,6 @@ def test_hot_shingle_cap_bounds_join_fanout(spark, tmp_path):
     assert m["hot_shingle_rows_dropped"] < m["shingle_rows_total"]
 
 
-def test_cc_star_chain_converges_logarithmically(spark):
-    """A 64-node chain is the adversarial case for label propagation
-    (needs ~diameter rounds); the large-star/small-star alternation must
-    land the same labels in O(log n) rounds."""
-    n = 64
-    edges = spark.createDataFrame([(i, i + 1) for i in range(n - 1)], "s long, t long")
-    labels, rounds = dedup._cc_star_core(edges)
-    got = {r["doc_id"]: r["component"] for r in labels.collect()}
-    assert got == {i: 0 for i in range(n)}
-    assert rounds <= 12, f"star CC took {rounds} rounds on a 64-chain"
-
-
-def test_cc_star_matches_label_propagation(spark, sf_dir):
-    """Both CC variants must produce identical labels on the real
-    near-dup pair graph (they also share the recursive-CTE oracle)."""
-    star = {
-        (r["doc_id"], r["component"])
-        for r in dedup.dedup_cc_star(spark, sf_dir).collect()
-    }
-    prop = {
-        (r["doc_id"], r["component"])
-        for r in dedup.dedup_connected_components(spark, sf_dir).collect()
-    }
-    assert star == prop and len(star) > 0
-
-
-def test_cc_star_random_graphs_match_union_find(spark):
-    """Star CC vs a driver-side union-find on random graphs — covers
-    shapes (forests, cliques, multi-component mixes) the fixture's pair
-    graph never produces."""
-    import random
-
-    def union_find_labels(n_nodes, edge_list):
-        parent = list(range(n_nodes))
-
-        def find(x):
-            while parent[x] != x:
-                parent[x] = parent[parent[x]]
-                x = parent[x]
-            return x
-
-        for a, b in edge_list:
-            ra, rb = find(a), find(b)
-            if ra != rb:
-                parent[max(ra, rb)] = min(ra, rb)
-        # component = min node id reachable
-        comp = {}
-        for x in range(n_nodes):
-            comp.setdefault(find(x), []).append(x)
-        out = {}
-        for members in comp.values():
-            m = min(members)
-            for x in members:
-                out[x] = m
-        return out
-
-    for seed in (1, 7, 42):
-        rng = random.Random(seed)
-        n = 40
-        edge_list = [
-            (rng.randrange(n), rng.randrange(n)) for _ in range(rng.randrange(20, 60))
-        ]
-        edge_list = [(a, b) for a, b in edge_list if a != b]
-        edges = spark.createDataFrame(edge_list, "s long, t long")
-        labels, _ = dedup._cc_star_core(edges)
-        got = {r["doc_id"]: r["component"] for r in labels.collect()}
-        want = union_find_labels(n, edge_list)
-        touched = {x for e in edge_list for x in e}
-        want = {x: want[x] for x in touched}  # star CC only labels non-isolated nodes
-        assert got == want, f"seed {seed}"
-
-
 def test_sketch_partial_merge_within_error_bounds(spark, sf_dir):
     """The HLL/KLL partial-merge rollup must land near the exact answers:
     HLL default lgK=12 keeps relative error ~1.6% (assert 5%); the merged
@@ -339,48 +267,6 @@ def test_sketch_partial_merge_within_error_bounds(spark, sf_dir):
     for k, r in rows.items():
         if k != "ALL":
             assert r["distinct_custs_est"] <= est["distinct_custs_est"] * 1.05
-
-
-def test_prefix_filter_is_lossless_and_prunes(spark, sf_dir):
-    """Prefix-filtering must (a) return exactly the inverted-index join's
-    pair set — no false negatives (the AllPairs prefix theorem) — and
-    (b) generate strictly fewer candidate join rows than the full
-    posting-list self-join (the point of the technique)."""
-    from pyspark.sql import Window
-
-    full = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup.ngram_jaccard_pairs(spark, sf_dir).collect()
-    }
-    pref = {
-        (r["doc_a"], r["doc_b"], r["jaccard"])
-        for r in dedup.prefix_jaccard_pairs(spark, sf_dir).collect()
-    }
-    assert pref == full and len(full) > 0
-
-    # candidate-volume comparison: join rows over full posting lists vs
-    # over prefix rows only
-    rows = dedup._shingle_rows(spark, sf_dir)
-    t = dedup.JACCARD_THRESHOLD
-    e = rows.withColumn("df", F.count("*").over(Window.partitionBy("s")))
-    e = e.withColumn("n", F.count("*").over(Window.partitionBy("doc_id"))).withColumn(
-        "r",
-        F.row_number().over(
-            Window.partitionBy("doc_id").orderBy(F.col("df").asc(), F.col("s").asc())
-        ),
-    )
-    pref_rows = e.filter(F.col("r") <= F.col("n") - F.ceil(F.lit(t) * F.col("n")) + 1)
-    full_cand = (
-        rows.alias("a")
-        .join(rows.alias("b"), (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .count()
-    )
-    pref_cand = (
-        pref_rows.alias("a")
-        .join(pref_rows.alias("b"), (F.col("a.s") == F.col("b.s")) & (F.col("a.doc_id") < F.col("b.doc_id")))
-        .count()
-    )
-    assert pref_cand < full_cand
 
 
 def test_portable_hash_constants_stay_inside_int64():
@@ -416,21 +302,18 @@ def test_portable_hash_constants_stay_inside_int64():
 
 
 def test_semdedup_family_soundness_chain(spark, sf_dir):
-    """The three SemDeDup entries share one drop rule over different
-    partitioners, which fixes a containment chain on their drop sets:
-    portable-hash drops ⊆ exact-global drops and trained-k-means drops ⊆
-    exact-global drops (any in-partition lower-id neighbor >= tau is a
-    global one). The k-means path must also clear the aggregate
-    drop-recall floor its checked catalog twin asserts, cover every
-    vector exactly once, and use the corpus-scaled cluster count."""
+    """The two SemDeDup entries share one drop rule over different
+    partitioners, which fixes a containment on their drop sets:
+    trained-k-means drops ⊆ exact-global drops (any in-partition
+    lower-id neighbor >= tau is a global one). The k-means path must
+    also clear the aggregate drop-recall floor its checked catalog twin
+    asserts, cover every vector exactly once, and use the corpus-scaled
+    cluster count."""
     exact = similarity.semdedup_exact_global(spark, sf_dir).toPandas()
-    portable = similarity.semdedup_keep(spark, sf_dir).toPandas()
     km = similarity.semdedup_kmeans_keep(spark, sf_dir).toPandas()
 
     ex_drop = set(exact[~exact["keep"]]["vec_id"])
-    po_drop = set(portable[~portable["keep"]]["vec_id"])
     km_drop = set(km[~km["keep"]]["vec_id"])
-    assert po_drop <= ex_drop
     assert km_drop <= ex_drop, "k-means semdedup dropped a non-duplicate"
     assert len(km_drop) >= similarity.SEMDEDUP_KM_RECALL_FLOOR * len(ex_drop)
 
@@ -441,39 +324,6 @@ def test_semdedup_family_soundness_chain(spark, sf_dir):
         min(similarity.SEMDEDUP_KM_MAX_K, n // similarity.SEMDEDUP_CLUSTER_TARGET),
     )
     assert km["bucket"].nunique() <= expected_k
-
-
-def test_semdedup_drop_rule_differential_on_shared_buckets(spark, sf_dir):
-    """The oracle-twin differential (VERDICT r7 #1): feed the SHARED drop
-    rule the portable partitioner's bucket column through the same
-    (b0 → rule) seam the k-means path uses, and the verdicts must equal
-    the hash-pinned dedup_semdedup entry row for row — so the only
-    degree of freedom in semdedup_kmeans_keep is the partitioner, never
-    the dedup semantics."""
-    from monthly_report_etl_spark.functions.vectors import l2_norm
-
-    v = spark.read.parquet(f"{sf_dir}/embeddings.parquet").select(
-        "vec_id", F.col("embedding").cast("array<double>").alias("e")
-    )
-    b0 = v.select(
-        "vec_id",
-        "e",
-        similarity._bucket_array_udf_int()(F.col("e"))[0].cast("long").alias("bucket"),
-        l2_norm(F.col("e")).alias("nrm"),
-    ).localCheckpoint(eager=True)  # same seam as semdedup_kmeans_keep
-    via_rule = (
-        similarity._semdedup_drop_rule(b0)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    entry = (
-        similarity.semdedup_keep(spark, sf_dir)
-        .toPandas()
-        .sort_values("vec_id")
-        .reset_index(drop=True)
-    )
-    assert via_rule.equals(entry)
 
 
 def test_semdedup_kmeans_checked_flags_are_true(spark, sf_dir):
@@ -814,95 +664,6 @@ def test_neardup_ingest_drop_paths_non_vacuous(spark, sf_dir):
     assert dropped == cross_drops | inbatch_drops, (
         dropped - (cross_drops | inbatch_drops)
     )
-
-
-def test_neardup_bucketed_twin_identical(spark, sf_dir):
-    """The bucketed-existing-bands twin must produce the exact survivor
-    set of the plain form (same oracle on r11 promotion) — the layout
-    changes the plan, never the rows."""
-    from monthly_report_etl_spark.operators.corpus import (
-        incremental_ingest_neardup,
-        incremental_ingest_neardup_bucketed,
-    )
-
-    plain = {
-        r["doc_id"] for r in incremental_ingest_neardup(spark, sf_dir).collect()
-    }
-    buck = {
-        r["doc_id"]
-        for r in incremental_ingest_neardup_bucketed(spark, sf_dir).collect()
-    }
-    assert plain == buck and plain
-
-
-def test_existing_tables_rebuilt_when_backing_files_vanish(spark, sf_dir):
-    """ADVICE r10 #1: the fingerprint-named bucketed tables live in the
-    temp dir while the metastore entry is per-session state — if /tmp is
-    cleaned under a live session, tableExists stays true but the table
-    reads empty and the ingest silently returns wrong survivors. The
-    guard must detect the vanished backing files and rebuild."""
-    import os
-    import shutil
-    import tempfile
-
-    from monthly_report_etl_spark.operators.corpus import (
-        _existing_bands_table,
-        incremental_ingest_neardup,
-        incremental_ingest_neardup_bucketed,
-    )
-
-    expected = {
-        r["doc_id"] for r in incremental_ingest_neardup(spark, sf_dir).collect()
-    }
-    name = _existing_bands_table(spark, sf_dir)
-    path = os.path.join(tempfile.gettempdir(), name)
-    assert os.path.isdir(path)
-    shutil.rmtree(path)  # the tmp-cleaner scenario: everything gone
-    assert spark.catalog.tableExists(name)  # the stale state ADVICE describes
-    got = {
-        r["doc_id"]
-        for r in incremental_ingest_neardup_bucketed(spark, sf_dir).collect()
-    }
-    assert got == expected and expected
-    assert os.path.isdir(path)  # rebuilt, not read-through-empty
-
-    # PARTIAL loss (r11 review): an age-based cleaner deleting SOME
-    # bucket files must also trigger a rebuild — an any-parquet-present
-    # check would pass and silently return wrong survivors
-    parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-    assert len(parts) > 1, "fixture table too small to exercise partial loss"
-    os.remove(os.path.join(path, parts[0]))
-    got2 = {
-        r["doc_id"]
-        for r in incremental_ingest_neardup_bucketed(spark, sf_dir).collect()
-    }
-    assert got2 == expected
-    # and the rebuild restamped a manifest matching the files on disk
-    from monthly_report_etl_spark.operators.corpus import (
-        _external_table_needs_build,
-    )
-
-    assert not _external_table_needs_build(spark, _existing_bands_table(spark, sf_dir))
-
-    # TRUNCATION (ADVICE r11 #4): a crashed cleaner/writer leaving a
-    # part with the right NAME but wrong SIZE (here: zero bytes) must
-    # also trigger a rebuild — the name-set check passed this and the
-    # read failed later (or read short) instead of rebuilding. Probe
-    # with the captured name: _existing_bands_table itself rebuilds.
-    parts = sorted(f for f in os.listdir(path) if f.endswith(".parquet"))
-    victim = os.path.join(path, parts[0])
-    assert os.path.getsize(victim) > 0
-    with open(victim, "w"):
-        pass  # truncate in place: same name, zero bytes
-    assert _external_table_needs_build(
-        spark, name
-    ), "zero-byte part with a valid name must fail the manifest size check"
-    got3 = {
-        r["doc_id"]
-        for r in incremental_ingest_neardup_bucketed(spark, sf_dir).collect()
-    }
-    assert got3 == expected
-    assert not _external_table_needs_build(spark, name)
 
 
 def test_ivf_trainer_clamps_k_on_sub_k_corpus(spark):

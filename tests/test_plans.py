@@ -70,30 +70,19 @@ def test_dedup_exact_shuffles_hash_not_text(spark, sf_dir):
 
 
 def test_jaccard_shuffles_hashed_shingles_not_strings(spark, sf_dir):
-    """r7: both Jaccard dedup paths must ship shingles as xxhash64 ints
-    through their exchanges — concat_ws builds the 3-gram string once,
+    """r7: the Jaccard dedup path must ship shingles as xxhash64 ints
+    through its exchanges — concat_ws builds the 3-gram string once,
     pre-hash, and the string must not be a shuffle key (20-28% wall at
-    the 10x step; the exchanges are the dominant cost at scale).
-    prefix_jaccard is explained with checkpoint=False because the
-    localCheckpoint it normally takes truncates the visible lineage."""
-    from monthly_report_etl_spark.operators.dedup import (
-        ngram_jaccard_pairs,
-        prefix_jaccard_pairs,
-    )
+    the 10x step; the exchanges are the dominant cost at scale)."""
+    from monthly_report_etl_spark.operators.dedup import ngram_jaccard_pairs
 
-    plans = {
-        "dedup_prefix_jaccard": _plan(
-            prefix_jaccard_pairs(spark, sf_dir, checkpoint=False)
-        ),
-        "dedup_ngram_jaccard": _plan(ngram_jaccard_pairs(spark, sf_dir)),
-    }
-    for name, plan in plans.items():
-        assert "xxhash64" in plan, f"{name}:\n{plan}"
-        exchanges = _lines(plan, "hashpartitioning")
-        assert exchanges, f"{name}:\n{plan}"
-        assert all("concat_ws" not in ln for ln in exchanges), (
-            f"{name}: string shingle used as exchange key\n{plan}"
-        )
+    plan = _plan(ngram_jaccard_pairs(spark, sf_dir))
+    assert "xxhash64" in plan, plan
+    exchanges = _lines(plan, "hashpartitioning")
+    assert exchanges, plan
+    assert all("concat_ws" not in ln for ln in exchanges), (
+        f"string shingle used as exchange key\n{plan}"
+    )
 
 
 def test_r7_new_entries_plan_shapes(spark, sf_dir):
@@ -211,9 +200,9 @@ def test_flagship_no_global_sort_or_cartesian(spark, sf_dir):
 
 def test_chunker_plan_is_jvm_native(spark, sf_dir):
     """corpus_chunk_documents must stay inside codegen end-to-end: the
-    posexplode(sequence)+slice formulation has NO Python stage (the UDTF
-    variant exists separately as API coverage; a per-row Python chunker
-    at 100 TB is the anti-pattern VERDICT r2 #3 flagged)."""
+    posexplode(sequence)+slice formulation has NO Python stage (a
+    per-row Python chunker at 100 TB is the anti-pattern VERDICT r2 #3
+    flagged)."""
     plan = _plan(QUERIES["corpus_chunk_documents"](spark, sf_dir))
     for marker in ("ArrowEvalPython", "BatchEvalPython", "PythonUDTF", "MapInPandas"):
         assert marker not in plan, f"{marker} in native chunker plan:\n{plan}"
@@ -336,25 +325,6 @@ def test_ivf_search_plan_shape(spark, sf_dir):
     assert n_arrow <= 2, f"{n_arrow} ArrowEvalPython stages:\n{plan}"
     assert "BroadcastHashJoin" in plan, plan
     assert "Scan ExistingRDD" in plan, f"tagged corpus not checkpointed:\n{plan}"
-
-
-def test_bucketed_ingest_plan(spark, sf_dir):
-    """corpus_incremental_ingest_bucketed keeps the SCALE.md §6 contract:
-    the existing-corpus key table is read through its bucketed layout
-    (``Bucketed: true``) and contributes NO Exchange — the only hash
-    exchange in the whole plan is the incoming batch shuffling to the
-    bucket partitioning (the in-batch dedup then reuses the join's
-    (k, klen) clustering). The anti join is the sort-merge strategy the
-    bucketed+sorted layout serves."""
-    plan = _plan(QUERIES["corpus_incremental_ingest_bucketed"](spark, sf_dir))
-    assert "Bucketed: true" in plan, plan
-    assert "SortMergeJoin" in plan and "LeftAnti" in plan, plan
-    # one hashpartitioning in the whole plan: the incoming batch's
-    # ENSURE_REQUIREMENTS exchange to the bucket partitioning (this plan
-    # renders under AdaptiveSparkPlan, where exchange arguments sit on
-    # their own "Arguments: hashpartitioning(...)" detail lines)
-    n = len(_lines(plan, "hashpartitioning"))
-    assert n == 1, f"expected only the incoming-side exchange, got {n}:\n{plan}"
 
 
 def test_quantize_int8_no_shuffle_no_python(spark, sf_dir):
@@ -654,43 +624,6 @@ def test_semdedup_gram_kernel_engages_at_scale(spark, tmp_path):
     )
 
 
-def test_bloom_ingest_plan(spark, sf_dir):
-    """corpus_incremental_ingest_bloom keeps its scale contract
-    (re-pinned for the r10 packed/adaptive shape, VERDICT r9 #1): the
-    whole dataflow is JVM expressions (no Python stage anywhere — the
-    bloom probes are codegen xxhash64 arithmetic), the bit set is
-    PACKED into 64-bit words by a ``bit_or`` aggregate before it moves
-    (never shipped one-row-per-set-bit), NO join side is force-broadcast
-    (the word table and the dup lists are corpus/batch-proportional —
-    broadcast is AQE's runtime call, so the static plan must keep the
-    shuffle form available rather than hint it away), and the
-    candidate-probe subtree appears exactly ONCE — the r9 review caught
-    a branch-and-union form that mirrored the bits build + probe into
-    both branches (two Generates per subtree => four total); the linear
-    confirmed-dups chain keeps it at two (bits build + incoming
-    probe)."""
-    import re
-
-    df = QUERIES["corpus_incremental_ingest_bloom"](spark, sf_dir)
-    plan = _plan(df)
-    assert "BatchEvalPython" not in plan and "EvalPython" not in plan, plan
-    assert "CartesianProduct" not in plan, plan
-    assert "bit_or" in plan, f"bit set not packed into words:\n{plan}"
-    # AQE must own the broadcast decision: a stats-driven broadcast of
-    # the small fixture scan is fine (and will appear), but no join may
-    # carry a planner-FORCED strategy hint — a hinted broadcast of the
-    # corpus-proportional word table or the batch-proportional dup
-    # lists cannot be downgraded at 100 TB. Hints survive analysis as
-    # ResolvedHint nodes in the analyzed logical plan, so absence there
-    # proves no forced strategy anywhere in the tree.
-    analyzed = df._jdf.queryExecution().analyzed().toString()
-    assert "ResolvedHint" not in analyzed, (
-        f"forced join-strategy hint in bloom ingest:\n{analyzed}"
-    )
-    n_gen = len([l for l in plan.splitlines() if re.match(r"\(\d+\) Generate", l)])
-    assert n_gen == 2, f"probe subtree duplicated ({n_gen} Generates):\n{plan}"
-
-
 def test_catalog_wide_plan_hygiene(spark, sf_dir):
     """r9 consolidation sweep: EVERY catalog entry's physical plan is
     free of the two unconditional scale-killers —
@@ -706,17 +639,12 @@ def test_catalog_wide_plan_hygiene(spark, sf_dir):
     guarantees no FUTURE entry (or edit to an untested one) can ship
     either marker unnoticed. Building a plan executes any driver-side
     model work (counts, Lloyd training), so this also smoke-drives every
-    entry's construction path at sf0.001. ``BatchEvalPythonUDTF`` (the
-    deliberate UDTF API-coverage twin's batched generator) is a
-    different operator from scalar BatchEvalPython and is excluded by
-    the negative lookahead."""
-    import re
-
+    entry's construction path at sf0.001."""
     offenders = {}
     for name, fn in QUERIES.items():
         plan = _plan(fn(spark, sf_dir))
         bad = []
-        if re.search(r"BatchEvalPython(?!UDTF)", plan):
+        if "BatchEvalPython" in plan:
             bad.append("BatchEvalPython")
         if "CartesianProduct" in plan:
             bad.append("CartesianProduct")
@@ -725,37 +653,11 @@ def test_catalog_wide_plan_hygiene(spark, sf_dir):
     assert not offenders, f"plan-hygiene offenders: {offenders}"
 
 
-def test_neardup_bucketed_cross_plan(spark, sf_dir):
-    """incremental_ingest_neardup_bucketed's steady-state contract
-    (staged r10): the existing-corpus BAND table is read through its
-    bucketed (band, key) layout (``Bucketed: true``) and contributes NO
-    Exchange to the incoming×existing candidate join — the only hash
-    exchange in the cross-candidates subtree is the incoming batch's
-    bands shuffling to the bucket partitioning, plus the distinct's
-    own aggregation exchange. The join is the sort-merge strategy the
-    bucketed+sorted layout serves."""
-    from monthly_report_etl_spark.operators.corpus import neardup_cross_candidates
-
-    plan = _plan(neardup_cross_candidates(spark, sf_dir, bucketed_existing=True))
-    assert "Bucketed: true" in plan, plan
-    assert "SortMergeJoin" in plan, plan
-    # exactly THREE hashpartitioning exchanges, all on the incoming /
-    # post-join path: (a) the signature window's doc_id exchange while
-    # building the BATCH's bands, (b) the batch bands aligning to the
-    # (band, key) bucket partitioning, (c) the candidate distinct. The
-    # bucketed existing side contributes NONE — a fourth exchange means
-    # the corpus-side bands started shuffling again.
-    n = len(_lines(plan, "hashpartitioning"))
-    assert n == 3, f"expected doc_id + bucket-align + distinct, got {n}:\n{plan}"
-    # and none of them keys on the existing table's columns: the only
-    # (band, key) exchange is the batch's ENSURE_REQUIREMENTS
-    assert len([ln for ln in _lines(plan, "hashpartitioning") if "band#" in ln]) == 1, plan
-
-
 def test_pca_ivf_no_data_proportional_hints(spark, sf_dir):
-    """VERDICT r10 #6 (the post-Bloom no-forced-hints policy, extended
-    to the similarity family): pca_ivf_topk's re-rank must NOT force-
-    broadcast the shortlist or the query frame — both are bounded by
+    """VERDICT r10 #6 (the no-forced-hints policy for data-proportional
+    join sides, extended to the similarity family): pca_ivf_topk's
+    re-rank must NOT force-broadcast the shortlist or the query frame —
+    both are bounded by
     the fixed N_QUERIES set today, so AQE broadcasts them anyway, but a
     hint would become the scale bug the moment the query set becomes an
     input table. A family-wide zero-ResolvedHint ban would be WRONG:

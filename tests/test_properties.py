@@ -253,49 +253,6 @@ def test_semdedup_kernels_agree_on_random_vectors(spark, vecs, n_buckets):
             assert abs(fc - gc) <= 1e-6, f"vec {vid}: nn fold={fc} gram={gc}"
 
 
-def test_bloom_ingest_matches_exact_and_prunes(spark, sf_dir):
-    """The Bloom pre-filtered ingest must be BIT-IDENTICAL to the exact
-    anti-join (the bloom routes rows, never decides them), and the
-    pre-filter must actually prune: the candidate set entering the exact
-    join is a strict subset of the incoming batch and contains every
-    true duplicate (no false negatives — an existing key always finds
-    its own bits set). Also measures the false-positive residue against
-    the ~0.8% design rate (assert a loose 10x bound; at fixture scale
-    the floor-sized bitmap makes the rate conservative-low). The
-    candidate set probed here is the OPERATOR's own ``_bloom_candidates``
-    (ADVICE r9 #4: a copy-pasted rebuild would test the test, not the
-    code — pruning/no-false-negative now bind to the real probe path)."""
-    from monthly_report_etl_spark.operators import corpus as C
-
-    exact = {
-        r["doc_id"] for r in C.incremental_ingest(spark, sf_dir).collect()
-    }
-    bloom = {
-        r["doc_id"]
-        for r in C.incremental_ingest_bloom(spark, sf_dir).collect()
-    }
-    assert bloom == exact
-
-    d = C._docs(spark, sf_dir)
-    key = [F.sha2(F.col("text"), 256).alias("k"), F.length("text").alias("klen")]
-    incoming = d.filter(F.col("source") == C.INGEST_SOURCE).select("doc_id", *key)
-    existing = d.filter(F.col("source") != C.INGEST_SOURCE).select(*key)
-    n_in = incoming.count()
-    n_existing = existing.count()
-    m = max(C.BLOOM_MIN_BITS, n_existing * C.BLOOM_BITS_PER_KEY)
-    candidates = C._bloom_candidates(incoming, existing, m)
-    cand = {r["doc_id"] for r in candidates.collect()}
-    true_dups = {
-        r["doc_id"]
-        for r in incoming.join(existing, ["k", "klen"], "left_semi").collect()
-    }
-    assert true_dups <= cand, "false negative: a real dup bypassed the check"
-    assert len(cand) < n_in, "bloom pruned nothing"
-    fp = len(cand) - len(true_dups)
-    n_new = n_in - len(true_dups)
-    assert n_new == 0 or fp / n_new <= 0.08, (fp, n_new)
-
-
 @settings(**_SETTINGS)
 @given(
     words=st.lists(
@@ -3771,24 +3728,22 @@ def test_dedup_boundary_cases_match_hand_derivation(spark, tmp_path):
     assert got_de == {1: 2, 2: 2, 3: 1, 4: 1, 5: 2, 7: 1, 8: 1}
     # {1,9} NULL group, {2,10} empty group, {5,6} identical text
 
-    # --- dedup_ngram_jaccard / dedup_prefix_jaccard: inclusive 0.5 ---
-    for entry in ("dedup_ngram_jaccard", "dedup_prefix_jaccard"):
-        got_pairs = {
-            (r["doc_a"], r["doc_b"]): r["jaccard"]
-            for r in QUERIES[entry](spark, d).collect()
-        }
-        assert got_pairs == {(5, 6): 1.0, (5, 7): 0.5, (6, 7): 0.5}, entry
-        # sub-3-token docs (1,2,3,4,9,10) emit NO shingles and NO pairs;
-        # J = exactly 0.5 is KEPT (>= threshold, not >)
+    # --- dedup_ngram_jaccard: inclusive 0.5 ---
+    got_pairs = {
+        (r["doc_a"], r["doc_b"]): r["jaccard"]
+        for r in QUERIES["dedup_ngram_jaccard"](spark, d).collect()
+    }
+    assert got_pairs == {(5, 6): 1.0, (5, 7): 0.5, (6, 7): 0.5}
+    # sub-3-token docs (1,2,3,4,9,10) emit NO shingles and NO pairs;
+    # J = exactly 0.5 is KEPT (>= threshold, not >)
 
     # --- connected components: {5,6,7} one cluster, everyone else alone ---
-    for entry in ("dedup_connected_components", "dedup_cc_star"):
-        got_cc = {
-            r["doc_id"]: r["component"]
-            for r in QUERIES[entry](spark, d).collect()
-        }
-        in_cluster = {k: v for k, v in got_cc.items() if k in (5, 6, 7)}
-        assert in_cluster == {5: 5, 6: 5, 7: 5}, entry
+    got_cc = {
+        r["doc_id"]: r["component"]
+        for r in QUERIES["dedup_connected_components"](spark, d).collect()
+    }
+    in_cluster = {k: v for k, v in got_cc.items() if k in (5, 6, 7)}
+    assert in_cluster == {5: 5, 6: 5, 7: 5}
 
     # --- canonical selection: the 4-token doc wins its cluster;
     #     every NULL/empty/short singleton survives ---
@@ -3810,7 +3765,7 @@ def test_dedup_boundary_cases_match_hand_derivation(spark, tmp_path):
 
 
 def test_oracles_agree_on_dedup_boundary_fixture(spark, tmp_path):
-    """Gate leg of the tenth fixture: seven REGISTERED dedup oracles
+    """Gate leg of the tenth fixture: six REGISTERED dedup oracles
     (including the full portable MinHash/SimHash recompute chains) on
     the same adversarial parquet, hash-compared gate-style."""
     import duckdb
@@ -3828,11 +3783,9 @@ def test_oracles_agree_on_dedup_boundary_fixture(spark, tmp_path):
         [
             "dedup_exact",
             "dedup_ngram_jaccard",
-            "dedup_prefix_jaccard",
             "dedup_minhash_lsh",
             "dedup_simhash",
             "dedup_connected_components",
-            "dedup_cc_star",
             "dedup_canonical_selection",
         ],
     )
@@ -4283,19 +4236,27 @@ def test_r13_text_corpus_boundary_hand_derivation(spark, tmp_path):
     # (none here, but empty doc 2 must land deterministically)
     assert got_sp[2] in ("train", "val", "test")
 
-    # --- chunker: UDTF rows == JVM rows EXACTLY, including the
-    # tab-led doc (leading empty token kept: 6 tokens, ' '-led text),
-    # the NBSP doc ('a\xa0b' is ONE token under Java \s), and the
-    # tab-only doc (['',''] -> chunk_text ' ', n_chunk_tokens 2) ---
+    # --- chunker: JVM rows == a Python chunker's rows EXACTLY,
+    # including the tab-led doc (leading empty token kept: 6 tokens,
+    # ' '-led text), the NBSP doc ('a\xa0b' is ONE token under Java \s),
+    # and the tab-only doc (['',''] -> chunk_text ' ', n_chunk_tokens 2).
+    # re.ASCII \s == Java \s; strip(' ') == SQL trim ---
+    import re
+
+    from monthly_report_etl_spark.operators.corpus import CHUNK_TOKENS
+
     jvm = {
         (r["doc_id"], r["chunk_idx"]): (r["chunk_text"], r["n_chunk_tokens"])
         for r in QUERIES["corpus_chunk_documents"](spark, d).collect()
     }
-    udtf = {
-        (r["doc_id"], r["chunk_idx"]): (r["chunk_text"], r["n_chunk_tokens"])
-        for r in QUERIES["corpus_chunk_documents_udtf"](spark, d).collect()
-    }
-    assert jvm == udtf
+    py = {}
+    for doc_id, text in zip(docs.doc_id, docs.text):
+        s = (text or "").strip(" ")
+        toks = re.split(r"\s+", s, flags=re.ASCII) if s else []
+        for i in range(0, len(toks), CHUNK_TOKENS):
+            window = toks[i : i + CHUNK_TOKENS]
+            py[(int(doc_id), i // CHUNK_TOKENS)] = (" ".join(window), len(window))
+    assert jvm == py
     assert jvm[(15, 0)] == (" Tab led doc with words", 6)
     assert jvm[(8, 0)] == ("a\xa0b c", 2)
     assert jvm[(16, 0)] == (" ", 2)
@@ -4347,7 +4308,7 @@ def test_oracles_agree_on_r13_text_corpus_boundary_fixture(spark, tmp_path):
             "corpus_source_lang_rollup",
             "corpus_train_val_test_split",
             "corpus_feature_hashing",
-            "corpus_chunk_documents_udtf",
+            "corpus_chunk_documents",
             "jsonl_roundtrip_docs",
             # r15 fuzz finding: quality_score's n_tokens is the \S+-run
             # count (regexp form), whose divergence from the split form
@@ -5121,11 +5082,11 @@ def test_embeddings_boundary_hand_derivation(spark, tmp_path):
 
 
 def test_oracles_agree_on_embeddings_boundary_fixture(spark, tmp_path):
-    """Gate leg of the seventeenth fixture: all thirteen vector-family
-    oracles on the same adversarial parquet -- including the three
-    r14-latest entries (dedup_semdedup, dedup_semdedup_kmeans,
-    embeddings_pq) whose shared read_vectors change rides receipts
-    until their r17 cohort rows; this differential, running on every
+    """Gate leg of the seventeenth fixture: all twelve vector-family
+    oracles on the same adversarial parquet -- including the two
+    r14-latest entries (dedup_semdedup_kmeans, embeddings_pq) whose
+    shared read_vectors change rides receipts until their r17 cohort
+    rows; this differential, running on every
     pytest invocation, is that receipt."""
     import duckdb
 
@@ -5150,7 +5111,6 @@ def test_oracles_agree_on_embeddings_boundary_fixture(spark, tmp_path):
             "embeddings_pca",
             "embeddings_quantize_int8",
             "embeddings_standardize",
-            "dedup_semdedup",
             "dedup_semdedup_exact",
             "dedup_semdedup_kmeans",
             "embeddings_pq",

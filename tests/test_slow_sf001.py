@@ -31,9 +31,9 @@ SF001_DIR = "/root/testdata/sf0.01"
 # differential).
 HEAVIEST = [
     "similarity_pq_adc",
-    "corpus_incremental_ingest_bloom",
+    "corpus_incremental_ingest",
     "embeddings_pca",
-    "dedup_prefix_jaccard",
+    "dedup_ngram_jaccard",
     "dedup_simhash",
     "dedup_minhash_lsh",
     "similarity_ivf_topk",

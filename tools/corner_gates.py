@@ -444,8 +444,8 @@ def main() -> int:
         print(f"{corner}: {len(ENTRIES) - len(bad)}/{len(ENTRIES)} ok; "
               f"bad: {bad}", flush=True)
         failures += len(bad)
-    # Threshold: across the full family (~11 corners x 141 entries =
-    # ~1550 gate executions) the observed historical transient rate is
+    # Threshold: across the full family (~11 corners x 134 entries =
+    # ~1470 gate executions) the observed historical transient rate is
     # zero-to-low single digits; more than 3 in one run means something
     # nondeterministic is loose and deserves a human eye, not a pass.
     print(f"TOTAL corners={len(corners)} failures={failures} "

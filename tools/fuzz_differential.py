@@ -498,7 +498,7 @@ ENTRIES = [
     "corpus_mix_weights", "corpus_pack_sequences",
     "corpus_pack_sequences_ranged", "corpus_stratified_sample",
     "corpus_pii_flags", "corpus_decontaminate", "corpus_bpe_pair_counts",
-    "dedup_cc_star", "dedup_connected_components",
+    "dedup_connected_components",
     # r16 second admission wave: the whole multimodal family — probing
     # it found the oracles modeled payloads as per-CHAR ascii() streams
     # (ASCII-only, fine on the sf corpora, wrong on 'café'); they now
@@ -539,19 +539,16 @@ ENTRIES = [
     "corpus_length_buckets", "corpus_normalize_dedup",
     "corpus_repetition_stats", "corpus_source_lang_rollup",
     "corpus_train_val_test_split", "corpus_feature_hashing",
-    "corpus_chunk_documents", "corpus_chunk_documents_udtf",
+    "corpus_chunk_documents",
     "corpus_sample_hash_mod", "corpus_length_trim", "dedup_exact",
     # sink/ingest admission wave (r16 continuation): these were excluded
     # as "file-sink/manifest entries the per-seed view harness doesn't
-    # model", but each keys its external state by the SOURCE FILE's
-    # path+size+mtime fingerprint (or md5(sf_dir) for the JSONL stage
-    # dir), so per-seed temp dirs mint per-seed state with no collisions
-    # and no cross-seed reuse. The generator now samples 'src19'
-    # (= INGEST_SOURCE) so the incoming batch is non-empty.
+    # model", but the one with external state (the JSONL stage dir) keys
+    # it by md5(sf_dir), so per-seed temp dirs mint per-seed state with
+    # no collisions and no cross-seed reuse. The generator now samples
+    # 'src19' (= INGEST_SOURCE) so the incoming batch is non-empty.
     "union_by_name", "jsonl_roundtrip_docs",
-    "corpus_incremental_ingest", "corpus_incremental_ingest_bucketed",
-    "corpus_incremental_ingest_bloom", "corpus_incremental_ingest_neardup",
-    "corpus_incremental_ingest_neardup_bucketed",
+    "corpus_incremental_ingest", "corpus_incremental_ingest_neardup",
     "multimodal_byte_stats", "upsert_full_outer", "topk_orders",
     "month_membership_filter",
     # TPC-H/OLAP family (needs the dimension chain the generator builds)
@@ -599,10 +596,10 @@ ENTRIES = [
     "similarity_knn_brute_force", "similarity_ann_lsh",
     "dedup_embedding_cosine", "embeddings_pca",
     "embeddings_quantize_int8", "embeddings_standardize",
-    "dedup_semdedup", "dedup_semdedup_exact",
+    "dedup_semdedup_exact",
     # deterministic text-dedup entries over the documents table
     "dedup_minhash_lsh", "dedup_simhash", "dedup_ngram_jaccard",
-    "dedup_prefix_jaccard", "dedup_duplicate_spans",
+    "dedup_duplicate_spans",
     "dedup_canonical_selection", "corpus_tfidf_top_terms",
     "corpus_bigram_top", "corpus_ngram_novelty",
     "date_funcs_extended",

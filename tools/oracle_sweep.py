@@ -3,7 +3,7 @@ catalog entries at an arbitrary scale directory (verify skill surface 4,
 promoted out of /tmp heredocs at r18 so the standing receipt doesn't
 depend on scratch files surviving between sessions).
 
-  python tools/oracle_sweep.py            # all 148 entries (full sweep)
+  python tools/oracle_sweep.py            # all 141 entries (full sweep)
 
 Optional: --sf-dir DIR (default /root/testdata/sf0.01), or explicit
 entry names as positional args. Exits nonzero on any mismatch. The

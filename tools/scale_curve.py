@@ -10,7 +10,7 @@ Usage:
     SPARK_GRAFT_SCALE_REPLICAS=30 SPARK_GRAFT_SCALE_TABLES=documents \
         python tools/make_scale_data.py
     SPARK_GRAFT_SCALE_POINTS="sf0.1=/root/testdata/sf0.1,30x=/tmp/spark_graft_scale/sf3" \
-    SPARK_GRAFT_SCALE_QUERIES="dedup_prefix_jaccard,dedup_minhash_lsh" \
+    SPARK_GRAFT_SCALE_QUERIES="dedup_ngram_jaccard,dedup_minhash_lsh" \
     SPARK_GRAFT_SCALE_REPS=3 python tools/scale_curve.py
 
 A ratio near the data step is linear scaling; materially above it means
@@ -45,7 +45,7 @@ QUERIES_UNDER_TEST = [
     q
     for q in os.environ.get(
         "SPARK_GRAFT_SCALE_QUERIES",
-        "dedup_prefix_jaccard,dedup_minhash_lsh,dedup_simhash,"
+        "dedup_ngram_jaccard,dedup_minhash_lsh,dedup_simhash,"
         "similarity_ann_lsh,similarity_ivf_topk,similarity_knn_brute_force,"
         "corpus_tfidf_top_terms,corpus_decontaminate,exports_report_events,"
         "olap_shipping_priority,olap_market_share",
