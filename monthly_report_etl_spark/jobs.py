@@ -5,12 +5,13 @@ per lender, QUOTE_ALL/BOM/null-as-empty).
 ``run_merge_job``   ≙ scripts/merge_all_lenders.py:main (S4/U1/S6: read the
 per-lender directory as one table, re-infer ``time``, single merged TSV).
 
-Differences by design (SURVEY §2.12): the export job is ONE partitioned
-write instead of ~48 sequential per-lender queries, and the merge job is a
-directory scan — Spark unions natively. The merge scans the report once:
-a corrupt record fails its write before anything is published, and only
-then does the bad-file probe run, to drop every file that holds one and
-merge again. Validation (S7) is not a data pass: each job counts the rows
+Differences by design (SURVEY §2.12): the export job runs the report plan
+once, as one parquet write that is also its parquet copy, and writes the
+per-lender TSV from those files, instead of ~48 sequential per-lender
+queries; the merge job is a directory scan — Spark unions natively. The
+merge scans the report once: a corrupt record fails its write before
+anything is published, and only then does the bad-file probe run, to drop
+every file that holds one and merge again. Validation (S7) is not a data pass: each job counts the rows
 of its own write with an ``Observation`` and fails on zero, and the TSV
 sink always writes the header. Every output is published by rename, so a
 failed run leaves the previous outputs in place.
@@ -20,7 +21,8 @@ from __future__ import annotations
 
 import contextlib
 import os
-import shutil
+import tempfile
+from collections.abc import Iterator
 
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
@@ -52,44 +54,46 @@ def run_export_job(
     """Full monthly report → per-lender TSV directory (S5 contract), plus
     its parquet copy when ``parquet_dir`` is given.
 
-    One path for either: the report plan runs once, into a staging parquet
-    beside the output, and an ``Observation`` on that write counts its
-    rows. An empty report raises ``ValueError`` before either sink is
-    touched, so last month's outputs stay as they were. Then, one after
-    the other, both sinks read the staged scan: with ``parquet_dir``,
-    ``write_parquet_sized`` into a hidden sibling of ``parquet_dir``,
-    whose file count follows the staged output's actual bytes, which the
-    optimizer's estimate for the computed plan does not give (the
-    small-files guard for the copy downstream Spark/DuckDB consumers
-    scan); then ``write_tsv``. The parquet copy is renamed in only after
-    the TSV publish, so a failure in either sink leaves both previous
-    outputs in place. The staging directory is removed whatever happens.
+    One path for either: the report plan runs once, as one parquet write
+    into a hidden temporary directory, and an ``Observation`` on that write
+    counts its rows. An empty report raises ``ValueError`` before the TSV
+    sink is touched, so last month's outputs stay as they were. The TSV
+    sink then reads the staged files. With ``parquet_dir``, the staged
+    tree IS the parquet copy: it is built in a hidden sibling of
+    ``parquet_dir`` and renamed in only after the TSV publish, so a failure
+    anywhere leaves both previous outputs in place. Without, it is built
+    in a hidden sibling of ``output_dir`` and removed on exit. The plan
+    ends in ``repartition("associated_lender")`` and a sort within
+    partitions, so the copy holds at most ``spark.sql.shuffle.partitions``
+    files, each lender's rows in one of them, ordered by
+    (``associated_lender``, ``scenarioId``).
 
     Returns the report DataFrame (lazy; the writes are the only actions).
     """
-    from monthly_report_etl_spark.sources.parquet import write_parquet_sized
-
     raw = spark.read.parquet(deals_path)
     comp = read_lookup_csv(spark, competitor_csv, COMPETITOR_LIST_SCHEMA)
     report = monthly_report(raw, comp, config or PipelineConfig())
-    staging = (parquet_dir or output_dir).rstrip("/") + "__staging"
     rows = Observation("export_rows")
-    try:
-        observed = report.observe(rows, F.count(F.lit(1)).alias("n"))
-        observed.write.mode("overwrite").parquet(staging)
+    stage = staged_publish(parquet_dir) if parquet_dir is not None else _scratch_beside(output_dir)
+    with stage as staged:
+        report.observe(rows, F.count(F.lit(1)).alias("n")).write.parquet(staged)
         if rows.get["n"] == 0:
             raise ValueError(f"the report for {output_dir} has no rows; nothing written")
-        staged = spark.read.parquet(staging)
-        with contextlib.ExitStack() as publish_after_tsv:
-            if parquet_dir is not None:
-                new_parquet = publish_after_tsv.enter_context(staged_publish(parquet_dir))
-                write_parquet_sized(staged, new_parquet)
-            write_tsv(staged, output_dir, partition_by="associated_lender", bom=True)
-    finally:
-        # local-filesystem staging cleanup; on an object store the
-        # staging prefix would get a lifecycle rule instead
-        shutil.rmtree(staging, ignore_errors=True)
+        write_tsv(
+            spark.read.parquet(staged), output_dir, partition_by="associated_lender", bom=True
+        )
     return report
+
+
+@contextlib.contextmanager
+def _scratch_beside(path: str) -> Iterator[str]:
+    """Yield a path to build a tree at, inside a hidden temporary sibling
+    of ``path`` that is removed on exit: ``staged_publish`` without the
+    publish."""
+    parent, name = os.path.split(os.path.abspath(path))
+    os.makedirs(parent, exist_ok=True)
+    with tempfile.TemporaryDirectory(prefix=f".{name}.", dir=parent) as tmp:
+        yield os.path.join(tmp, "new")
 
 
 def run_merge_job(spark: SparkSession, output_dir: str, merged_dir: str) -> DataFrame:
@@ -194,7 +198,7 @@ def main() -> None:  # pragma: no cover - thin CLI
     spark = get_spark(app_name="monthly_report_job")
     cfg = PipelineConfig(args.start_date, args.end_date, args.report_date)
     run_export_job(spark, args.deals, args.competitors, args.output_dir, cfg)
-    run_merge_job(spark, args.output_dir, os.path.join(args.merged_dir))
+    run_merge_job(spark, args.output_dir, args.merged_dir)
     spark.stop()
 
 

@@ -33,8 +33,6 @@ from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.config import PipelineConfig
 
-TIER_COLUMNS = ["Category", "Tier", "Tier Category", "Link to Image"]
-
 STRING_CLEAN_COLUMNS = [
     "associated_lender",
     "exportedLender",

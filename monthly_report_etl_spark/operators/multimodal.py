@@ -37,15 +37,6 @@ except Exception:  # pragma: no cover - container has no PIL
 
 FRAME_SIZE = 64  # bytes per synthetic "frame"
 
-MEDIA_SCHEMA = T.StructType(
-    [
-        T.StructField("doc_id", T.LongType()),
-        T.StructField("payload", T.BinaryType()),
-        T.StructField("media_type", T.StringType()),
-        T.StructField("n_bytes", T.LongType()),
-    ]
-)
-
 FEATURE_SCHEMA = T.StructType(
     [
         T.StructField("doc_id", T.LongType()),

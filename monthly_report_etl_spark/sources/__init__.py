@@ -1,8 +1,7 @@
-from monthly_report_etl_spark.sources.parquet import read_table, read_exports_deals  # noqa: F401
+from monthly_report_etl_spark.sources.parquet import read_table  # noqa: F401
 from monthly_report_etl_spark.sources.csv import (  # noqa: F401
     read_lookup_csv,
     read_tsv_directory,
     write_tsv,
 )
 from monthly_report_etl_spark.sources.json import read_jsonl, write_jsonl  # noqa: F401
-from monthly_report_etl_spark.sources.xlsx import read_lookup_xlsx, read_xlsx_rows  # noqa: F401

@@ -72,7 +72,6 @@ def _tsv_reader(
     spark: SparkSession,
     columns: list[str] | None = None,
     corrupt_record: bool = False,
-    multi_line: bool = False,
 ) -> DataFrameReader:
     """The one reader setup for the per-lender TSVs: header, tab, ``\\``
     escape, ``''`` as NULL, PERMISSIVE. With ``columns``, an explicit
@@ -86,8 +85,6 @@ def _tsv_reader(
         .option("mode", "PERMISSIVE")
         .option("escape", "\\")
     )
-    if multi_line:
-        reader = reader.option("multiLine", True)
     if columns is None:
         return reader.option("inferSchema", False)
     fields = [T.StructField(c, T.StringType()) for c in columns]
@@ -102,7 +99,6 @@ def read_tsv_directory(
     path: str,
     columns: list[str] | None = None,
     skip_bad_files: bool = False,
-    multi_line: bool = False,
 ) -> DataFrame:
     """S4/U1: union-by-directory of per-lender TSVs, every column string.
 
@@ -117,20 +113,13 @@ def read_tsv_directory(
     extra scan, so the merge job runs it only as a fallback, after its
     single guarded scan met a corrupt record. With the flag off,
     PERMISSIVE null-fills malformed rows in place.
-
-    ``multi_line=True`` makes QUOTED EMBEDDED NEWLINES roundtrip like the
-    reference's pandas reader (which handles them natively). It is off by
-    default because multiLine parsing sacrifices byte-range splittability
-    (one task per file — wrong at 100 TB); in-contract data never needs
-    it, since the reference strips ``\\t\\n\\r`` before writing (F16) and
-    this engine's clean_for_export does the same.
     """
     if not skip_bad_files:
-        return _tsv_reader(spark, columns, multi_line=multi_line).csv(path)
+        return _tsv_reader(spark, columns).csv(path)
     if columns is None:
         # one header pass (schema inference off) establishes the column set;
         # the probe and the final read both take it as their schema
-        columns = _tsv_reader(spark, multi_line=multi_line).csv(path).columns
+        columns = _tsv_reader(spark).csv(path).columns
 
     # Probe pass: re-read with an explicit corrupt-record column; a row that
     # fails tokenization (quote damage) or disagrees with the file's data
@@ -138,7 +127,7 @@ def read_tsv_directory(
     # data schema by the reader, so the arity check is per-file-content, as
     # in the reference. Only distinct bad file NAMES cross the driver —
     # bounded by file count, never data.
-    probe = _tsv_reader(spark, columns, corrupt_record=True, multi_line=multi_line).csv(path)
+    probe = _tsv_reader(spark, columns, corrupt_record=True).csv(path)
     # EVERY data column is referenced through the aggregate: CSV column
     # pruning re-scopes malformed-row detection to the required columns
     # only (a quote-broken tail column would go unnoticed), and a scan
@@ -157,7 +146,7 @@ def read_tsv_directory(
     for f in sorted(bad_files):
         _LOG.warning("skipping unreadable TSV file (corrupt records): %s", f)
 
-    out = _tsv_reader(spark, columns, multi_line=multi_line).csv(path)
+    out = _tsv_reader(spark, columns).csv(path)
     if bad_files:
         out = out.withColumn("_src_file", F.input_file_name()).filter(
             ~F.col("_src_file").isin(bad_files)

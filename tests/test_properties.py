@@ -138,60 +138,8 @@ def test_clean_idempotent(spark, fixture_dir):
 
 
 # ---------------------------------------------------------------------------
-# r8: xlsx round-trip and the SemDeDup dual-kernel equivalence
+# r8: the SemDeDup dual-kernel equivalence
 # ---------------------------------------------------------------------------
-
-_cell = st.one_of(
-    st.none(),
-    st.text(
-        alphabet=st.characters(
-            codec="utf-8", exclude_categories=("Cs", "Cc"), max_codepoint=0x2FFF
-        ),
-        max_size=12,
-    ),
-)
-
-
-@settings(**_SETTINGS)
-@given(
-    data=st.lists(
-        st.lists(_cell, min_size=1, max_size=5), min_size=1, max_size=6
-    ),
-    inline=st.booleans(),
-)
-def test_xlsx_roundtrip_arbitrary_tables(spark, tmp_path_factory, data, inline):
-    """Any small table of unicode strings/blanks survives the stdlib
-    xlsx write → read_xlsx_rows round-trip: same rectangle (rows padded
-    to the widest), blanks as None, both shared-string and inline-string
-    encodings. Empty string cells write as a cell containing '' — the
-    reader returns them as '' through the raw row API (the lookup
-    DataFrame layer is where '' maps to NULL, matching the CSV twin)."""
-    from monthly_report_etl_spark.sources.xlsx import read_xlsx_rows
-    from tests.test_jobs_and_sinks import _write_minimal_xlsx
-
-    width = max(len(r) for r in data)
-    path = str(tmp_path_factory.mktemp("xlsx") / "t.xlsx")
-    _write_minimal_xlsx(path, data, inline=inline)
-    got = read_xlsx_rows(path)
-    # rows whose cells are all None write no <c> elements and vanish
-    # (sparse-row semantics — same as a fully blank Excel row)
-    expected = [
-        [v for v in r] + [None] * (width - len(r))
-        for r in data
-        if any(v is not None for v in r)
-    ]
-    if not expected:
-        assert got == []
-        return
-    exp_width = max(
-        max(i for i, v in enumerate(r) if v is not None) + 1
-        for r in data
-        if any(v is not None for v in r)
-    )
-    expected = [
-        [r[i] if i < len(r) else None for i in range(exp_width)] for r in expected
-    ]
-    assert got == expected
 
 
 @settings(**_SETTINGS)
