@@ -28,14 +28,6 @@ class PipelineConfig:
     report_date: str = "2025-08-28"
 
     @property
-    def start_ts(self) -> datetime:
-        return _parse_utc(self.start_date)
-
-    @property
-    def end_ts(self) -> datetime:
-        return _parse_utc(self.end_date)
-
-    @property
     def report_month(self) -> datetime:
         """First day of the report month — run_exports_query.py:182."""
         d = _parse_utc(self.report_date)

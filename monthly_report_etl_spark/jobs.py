@@ -19,11 +19,6 @@ failed run leaves the previous outputs in place.
 
 from __future__ import annotations
 
-import contextlib
-import os
-import tempfile
-from collections.abc import Iterator
-
 from pyspark.sql import DataFrame, Observation, SparkSession
 from pyspark.sql import functions as F
 
@@ -49,20 +44,19 @@ def run_export_job(
     competitor_csv: str,
     output_dir: str,
     config: PipelineConfig | None = None,
-    parquet_dir: str | None = None,
+    *,
+    parquet_dir: str,
 ) -> DataFrame:
-    """Full monthly report → per-lender TSV directory (S5 contract), plus
-    its parquet copy when ``parquet_dir`` is given.
+    """Full monthly report → per-lender TSV directory (S5 contract) plus
+    its parquet copy in ``parquet_dir``.
 
-    One path for either: the report plan runs once, as one parquet write
-    into a hidden temporary directory, and an ``Observation`` on that write
-    counts its rows. An empty report raises ``ValueError`` before the TSV
-    sink is touched, so last month's outputs stay as they were. The TSV
-    sink then reads the staged files. With ``parquet_dir``, the staged
-    tree IS the parquet copy: it is built in a hidden sibling of
-    ``parquet_dir`` and renamed in only after the TSV publish, so a failure
-    anywhere leaves both previous outputs in place. Without, it is built
-    in a hidden sibling of ``output_dir`` and removed on exit. The plan
+    The report plan runs once, as one parquet write into a hidden sibling
+    of ``parquet_dir``, and an ``Observation`` on that write counts its
+    rows. An empty report raises ``ValueError`` before the TSV sink is
+    touched, so last month's outputs stay as they were. The TSV sink then
+    reads the staged files, and the staged tree, which IS the parquet
+    copy, is renamed in only after the TSV publish, so a failure anywhere
+    leaves both previous outputs in place. The plan
     ends in ``repartition("associated_lender")`` and a sort within
     partitions, so the copy holds at most ``spark.sql.shuffle.partitions``
     files, each lender's rows in one of them, ordered by
@@ -74,8 +68,7 @@ def run_export_job(
     comp = read_lookup_csv(spark, competitor_csv, COMPETITOR_LIST_SCHEMA)
     report = monthly_report(raw, comp, config or PipelineConfig())
     rows = Observation("export_rows")
-    stage = staged_publish(parquet_dir) if parquet_dir is not None else _scratch_beside(output_dir)
-    with stage as staged:
+    with staged_publish(parquet_dir) as staged:
         report.observe(rows, F.count(F.lit(1)).alias("n")).write.parquet(staged)
         if rows.get["n"] == 0:
             raise ValueError(f"the report for {output_dir} has no rows; nothing written")
@@ -83,17 +76,6 @@ def run_export_job(
             spark.read.parquet(staged), output_dir, partition_by="associated_lender", bom=True
         )
     return report
-
-
-@contextlib.contextmanager
-def _scratch_beside(path: str) -> Iterator[str]:
-    """Yield a path to build a tree at, inside a hidden temporary sibling
-    of ``path`` that is removed on exit: ``staged_publish`` without the
-    publish."""
-    parent, name = os.path.split(os.path.abspath(path))
-    os.makedirs(parent, exist_ok=True)
-    with tempfile.TemporaryDirectory(prefix=f".{name}.", dir=parent) as tmp:
-        yield os.path.join(tmp, "new")
 
 
 def run_merge_job(spark: SparkSession, output_dir: str, merged_dir: str) -> DataFrame:
@@ -190,6 +172,7 @@ def main() -> None:  # pragma: no cover - thin CLI
     p.add_argument("--deals", required=True)
     p.add_argument("--competitors", required=True)
     p.add_argument("--output-dir", default="output")
+    p.add_argument("--parquet-dir", default="output_parquet")
     p.add_argument("--merged-dir", default="result")
     p.add_argument("--start-date", default=PipelineConfig.start_date)
     p.add_argument("--end-date", default=PipelineConfig.end_date)
@@ -197,7 +180,9 @@ def main() -> None:  # pragma: no cover - thin CLI
     args = p.parse_args()
     spark = get_spark(app_name="monthly_report_job")
     cfg = PipelineConfig(args.start_date, args.end_date, args.report_date)
-    run_export_job(spark, args.deals, args.competitors, args.output_dir, cfg)
+    run_export_job(
+        spark, args.deals, args.competitors, args.output_dir, cfg, parquet_dir=args.parquet_dir
+    )
     run_merge_job(spark, args.output_dir, args.merged_dir)
     spark.stop()
 

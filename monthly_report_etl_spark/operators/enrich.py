@@ -4,12 +4,13 @@ Mirrors /root/reference/scripts/run_exports_query.py:
 
 * ``enrich_with_tiers``   — the competitor-list left join (:223-225, J1)
 * ``add_rank_columns``    — prepare_rank_data (:106-168): 3-month filter,
-  per-(Tier, lender, month) counts, competition rank, pivot, merge-back
+  per-(Tier, lender) counts for each lagged month, competition rank,
+  merge-back
 * ``clean_for_export``    — clean_dataframe (:47-73): stringify time,
   strip TSV-hostile characters, numeric coercion
 
-All lazy DataFrame ops; the rank pivot operates on an aggregate whose size
-is bounded by (#tiers x #lenders x 3), so every join back to the fact rows
+All lazy DataFrame ops; the ranks are windows over one aggregate whose
+size is bounded by (#tiers x #lenders), so the join back to the fact rows
 is a broadcast — no extra big-side shuffle at any scale.
 
 pandas semantics that are easy to get wrong (reproduced deliberately):
@@ -19,7 +20,9 @@ pandas semantics that are easy to get wrong (reproduced deliberately):
   after the left merge-back their rank columns are NULL.
 * ``pivot_table(fill_value=0)`` zero-fills months a (Tier, lender) pair
   missed, but pairs absent from the whole 3-month window get NULL ranks
-  (they're not in the pivot at all).
+  (they're not in the pivot at all). No pivot is built here: the one
+  aggregate holds a row per pair seen in the window, with 0 for a missed
+  month.
 * ``rank(ascending=False, method='min')`` is SQL ``RANK() OVER (... DESC)``
   exactly (competition rank).
 * ``.astype(str)`` turns None into the literal string 'None' before the
@@ -80,35 +83,38 @@ def add_rank_columns(df: DataFrame, config: PipelineConfig) -> DataFrame:
     rank columns survive the merge-back (:157-161); current-month rank and
     all scenario counts are computed and dropped by the reference — we
     never compute them.
+
+    One aggregate keyed by (Tier, lender) over the 3-month window holds,
+    per lagged month, the pair's scenario count and whether it had any row
+    that month; each lagged rank is a window over that aggregate. A pair
+    with no row in the month counts 0, which is never strictly greater
+    than another pair's count, so it never moves a present pair's
+    competition rank; it gets 0 instead of a rank (the pivot's fill). A
+    present pair whose ``scenarioId``s are all NULL counts 0 and is still
+    ranked, as pandas ranks it.
     """
     cur, m1, m2 = config.month_offsets()
     month = F.date_trunc("month", F.col("time"))
+    lagged = {"rank_in_tier_one_month": m1, "rank_in_tier_two_months": m2}
 
-    counts = (
+    aggs = []
+    for name, m in lagged.items():
+        aggs.append(F.count(F.when(month == m, F.col("scenarioId"))).alias(f"_n_{name}"))
+        aggs.append(F.max(month == m).alias(f"_seen_{name}"))
+    pairs = (
         df.filter(month.isin([cur, m1, m2]))
         # pandas groupby drops NaN keys: unlisted lenders (NULL Tier) are
         # excluded from the ranking universe (run_exports_query.py:121)
         .filter(F.col("Tier").isNotNull() & F.col("exportedLender").isNotNull())
-        .groupBy(F.col("Tier"), F.col("exportedLender"), month.alias("month"))
-        .agg(F.count("scenarioId").alias("scenario_count"))
+        .groupBy("Tier", "exportedLender")
+        .agg(*aggs)
     )
-    rank = F.rank().over(
-        Window.partitionBy("Tier", "month").orderBy(F.desc("scenario_count"))
-    )
-    ranked = counts.withColumn("rank_in_tier", rank)
-
-    # pivot_table(index=[Tier, lender], columns=Month, fill_value=0) then
-    # keep the two lagged rank columns (run_exports_query.py:128-158)
-    pivoted = ranked.groupBy("Tier", "exportedLender").agg(
-        F.coalesce(
-            F.max(F.when(F.col("month") == m1, F.col("rank_in_tier"))), F.lit(0)
-        ).alias("rank_in_tier_one_month"),
-        F.coalesce(
-            F.max(F.when(F.col("month") == m2, F.col("rank_in_tier"))), F.lit(0)
-        ).alias("rank_in_tier_two_months"),
-    )
+    for name in lagged:
+        rank = F.rank().over(Window.partitionBy("Tier").orderBy(F.desc(f"_n_{name}")))
+        pairs = pairs.withColumn(name, F.when(F.col(f"_seen_{name}"), rank).otherwise(0))
+    pairs = pairs.select("Tier", "exportedLender", *lagged)
     # bounded by #tiers x #lenders — always broadcastable
-    return df.join(F.broadcast(pivoted), ["Tier", "exportedLender"], "left")
+    return df.join(F.broadcast(pairs), ["Tier", "exportedLender"], "left")
 
 
 def clean_for_export(df: DataFrame) -> DataFrame:

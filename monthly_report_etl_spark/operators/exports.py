@@ -6,13 +6,17 @@ a single lazy Catalyst plan; nothing is collected.
 
 Scale design (100 TB):
 
-* ``results`` JSON is parsed ONCE with an explicit schema (the reference
-  re-parses ``::JSON[]`` at 3 sites — sql:37,124,156) and the raw string is
-  dropped immediately, so the wide JSON never rides through shuffles.
+* ``results`` JSON is parsed at ONE site with an explicit schema (the
+  reference re-parses ``::JSON[]`` at 3 sites — sql:37,124,156) and the raw
+  string is dropped immediately, so the wide JSON never rides through
+  shuffles. The executed plan still runs that site in two branches: the
+  main one and the ``global_stats`` aggregate's.
 * Dedup is ONE hash aggregation keyed by ``scenarioId`` (one shuffle with
   map-side partial aggregation).
-* Global denominators are computed as tiny aggregates joined back via
-  broadcast — never a single-partition window (SURVEY §2.5 W1-W3).
+* Global denominators are computed as one tiny aggregate joined back via
+  broadcast — never a single-partition window over a frame that grows
+  with the data (SURVEY §2.5 W1-W3); the totals' window runs on the
+  ≤#purposes-row aggregate only.
 * The reference's per-lender loop (48 full re-runs of the query,
   run_exports_query.py:208-218) collapses into ONE pass: a broadcast
   cross join against the ~48-row lender list with a per-row array lookup —
@@ -38,7 +42,7 @@ DuckDB 1.0 running the reference SQL — see tests/test_exports_pipeline.py):
 
 from __future__ import annotations
 
-from pyspark.sql import Column, DataFrame
+from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.schemas import (
@@ -198,42 +202,41 @@ def global_stats(df: DataFrame) -> DataFrame:
     The reference uses ``COUNT(DISTINCT scenarioId) OVER ()`` /
     ``OVER (PARTITION BY loanPurpose)`` / ``SUM(...) OVER ()``
     (exports_results.sql:107-115). Spark windows cannot take DISTINCT, and
-    an empty-partition window funnels ALL data through one partition — a
-    100 TB non-starter. Faithful rewrite: tiny aggregates broadcast back.
+    an empty-partition window over the rows funnels ALL data through one
+    partition — a 100 TB non-starter. Faithful rewrite: one tiny aggregate,
+    broadcast back once.
 
-    One per-purpose aggregate (keyed by loanPurpose, map-side partials)
-    yields all three denominators: the global count/sum re-aggregate its
-    ≤#purposes rows — valid because step 2 guarantees one row per
-    scenarioId, so scenarios never span two purposes and per-group distinct
-    counts add up. The executed plan still runs the upstream scan →
-    ``from_json`` → dedup three times: once for the main branch, once under
-    the totals broadcast and once under the per-purpose broadcast. Spark
-    shares no diamond subplans, and the three branches prune different
-    columns (the per-purpose broadcast drops ``_sum_lp``), so none of their
-    dedup exchanges is reused. With ``get_lenders``' own scan, an export
-    reads the raw input four times.
+    The aggregate is keyed by loanPurpose (map-side partials) and holds
+    the per-purpose distinct count and amount sum; the two totals are
+    window sums over the whole aggregate. That single-partition window
+    sees at most #purposes rows, never a row per scenario. Summing the
+    per-purpose distinct counts is valid because step 2 guarantees one row
+    per scenarioId, so scenarios never span two purposes.
+
+    Spark shares no diamond subplans, so this branch still runs the
+    upstream scan → ``from_json`` → dedup once more beside the main branch;
+    with ``get_lenders``' own scan, an export reads the raw input three
+    times.
 
     NULL loanPurpose groups together under PARTITION BY, so the join back
-    is null-safe (``eqNullSafe``). Both joined sides are broadcast: no
-    shuffle of the big side at any scale.
+    is null-safe (``eqNullSafe``), and broadcast: no shuffle of the big
+    side at any scale.
     """
-    per_purpose = df.groupBy(F.col("loanPurpose").alias("_lp")).agg(
-        F.countDistinct("scenarioId").alias("count_all_loan_purpose"),
-        F.sum("totalProposedLoanAmount").alias("_sum_lp"),
-    )
-    totals = per_purpose.agg(
-        F.sum("count_all_loan_purpose").alias("count_all_unique_scenario_id"),
-        F.sum("_sum_lp").alias("sum_all_total_proposed_loan_amount"),
-    )
-    return (
-        df.crossJoin(F.broadcast(totals))
-        .join(
-            F.broadcast(per_purpose.drop("_sum_lp")),
-            F.col("loanPurpose").eqNullSafe(F.col("_lp")),
-            "left",
+    everything = Window.partitionBy()
+    stats = (
+        df.groupBy(F.col("loanPurpose").alias("_lp"))
+        .agg(
+            F.countDistinct("scenarioId").alias("count_all_loan_purpose"),
+            F.sum("totalProposedLoanAmount").alias("_sum_lp"),
         )
-        .drop("_lp")
+        .withColumn(
+            "count_all_unique_scenario_id", F.sum("count_all_loan_purpose").over(everything)
+        )
+        .withColumn("sum_all_total_proposed_loan_amount", F.sum("_sum_lp").over(everything))
     )
+    return df.join(
+        F.broadcast(stats), F.col("loanPurpose").eqNullSafe(F.col("_lp")), "left"
+    ).drop("_lp", "_sum_lp")
 
 
 def get_lenders(raw_df: DataFrame) -> DataFrame:

@@ -25,13 +25,18 @@ def monthly_report(
     raw_df: DataFrame,
     competitor_df: DataFrame,
     config: PipelineConfig | None = None,
-    clean: bool = True,
 ) -> DataFrame:
     """raw exports_deals + competitor list → final 28-column report.
 
     Column contract: FIXTURES.md §A4 — the query's 22 columns plus
     Category / Tier / Tier Category / Link to Image and the two lagged
-    rank columns.
+    rank columns, cleaned for the TSV sink.
+
+    Before the checkpoint the plan scans the raw input three times (the
+    main branch, the ``global_stats`` aggregate and the lender list) and
+    runs the ``from_json`` → dedup chain in two of them; after it, the
+    rank step is one (Tier, lender) aggregate and one rank window,
+    broadcast back.
     """
     config = config or PipelineConfig()
     # enrich first, order last — the reference sorts in SQL and the pandas
@@ -40,25 +45,20 @@ def monthly_report(
     # joins would reshuffle anyway
     df = exports.exports_pipeline(raw_df, config.start_date, config.end_date, sort="none")
     df = enrich_with_tiers(df, competitor_df)
-    # add_rank_columns consumes its input twice (rank-universe aggregate +
-    # merge-back), and Spark shares no diamond subplans: profiled at bench
-    # scale (r20), the rank step re-executed the whole scan→dedup→explode→
-    # classify→tiers chain a second time, tripling the plan's cost (1.7s →
-    # 4.8s warm). localCheckpoint(eager=False) materializes the enriched
-    # rows ONCE (executor-local, lazily at first action) so both branches
-    # read them back — interleaved A/B at sf0.1: 6.59s → 5.49s median
-    # (-17%), 6.10s → 4.65s min. The materialized set is report-sized (the
-    # job's own output, which export jobs write to a sink anyway), so the
-    # disk cost is output-scale, not input-scale. An earlier experiment
-    # with .persist() doubled wall time — persist routes through the
-    # CacheManager (plan-matching, block eviction accounting) where
-    # localCheckpoint is a plain RDD materialization; on a multi-node
-    # cluster swap for reliable checkpoint() if executor loss must be
-    # survivable mid-job.
+    # add_rank_columns consumes its input twice (its (Tier, lender)
+    # aggregate + the merge-back), and Spark shares no diamond subplans, so
+    # without a cut the rank branch re-executes the whole scan → dedup →
+    # explode → classify → tiers chain. localCheckpoint(eager=False)
+    # materializes the enriched rows ONCE (executor-local, lazily at the
+    # first action) and both branches read them back; unlike persist() it
+    # is a plain RDD materialization, with no CacheManager plan matching or
+    # eviction accounting. The materialized set is report-sized, so the
+    # disk cost is output-scale, not input-scale; on a multi-node cluster
+    # swap for reliable checkpoint() if executor loss must be survivable
+    # mid-job.
     df = df.localCheckpoint(eager=False)
     df = add_rank_columns(df, config)
-    if clean:
-        df = clean_for_export(df)
+    df = clean_for_export(df)
     return df.repartition("associated_lender").sortWithinPartitions(
         "associated_lender", "scenarioId"
     )

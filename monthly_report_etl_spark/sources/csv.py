@@ -58,14 +58,10 @@ CORRUPT_RECORD = "_corrupt_record"
 _PART_NAME = re.compile(r"^part-(\d+)-.+[-.]c(\d+)\.csv$")
 
 
-def read_lookup_csv(spark: SparkSession, path: str, schema: T.StructType | None = None) -> DataFrame:
-    """S3: small dimension CSV (header, comma, possible BOM)."""
-    reader = spark.read.option("header", True).option("encoding", "UTF-8")
-    if schema is not None:
-        reader = reader.schema(schema)
-    else:
-        reader = reader.option("inferSchema", False)  # all-string, like dtype=str
-    return reader.csv(path)
+def read_lookup_csv(spark: SparkSession, path: str, schema: T.StructType) -> DataFrame:
+    """S3: small dimension CSV (header, comma, possible BOM) with an
+    explicit schema."""
+    return spark.read.option("header", True).option("encoding", "UTF-8").schema(schema).csv(path)
 
 
 def _tsv_reader(

@@ -43,7 +43,9 @@ def test_export_and_merge_jobs(spark, fixture_dir, tmp_path):
     deals = os.path.join(fixture_dir, "exports_deals.parquet")
     comp = os.path.join(fixture_dir, "competitor_list.csv")
 
-    report = run_export_job(spark, deals, comp, out_dir, PipelineConfig())
+    report = run_export_job(
+        spark, deals, comp, out_dir, PipelineConfig(), parquet_dir=str(tmp_path / "parquet")
+    )
     n_expected = report.count()
 
     # one directory per lender
@@ -106,7 +108,9 @@ def test_tsv_contract_bytes(spark, fixture_dir, tmp_path):
     out_dir = str(tmp_path / "contract")
     deals = os.path.join(fixture_dir, "exports_deals.parquet")
     comp = os.path.join(fixture_dir, "competitor_list.csv")
-    run_export_job(spark, deals, comp, out_dir, PipelineConfig())
+    run_export_job(
+        spark, deals, comp, out_dir, PipelineConfig(), parquet_dir=str(tmp_path / "parquet")
+    )
 
     part = glob.glob(os.path.join(out_dir, "associated_lender=*", "part-*.csv"))[0]
     raw = open(part, "rb").read()
@@ -359,7 +363,9 @@ def test_clean_merge_scans_report_once(spark, fixture_dir, tmp_path):
     out_dir = str(tmp_path / "output")
     deals = os.path.join(fixture_dir, "exports_deals.parquet")
     comp = os.path.join(fixture_dir, "competitor_list.csv")
-    run_export_job(spark, deals, comp, out_dir, PipelineConfig())
+    run_export_job(
+        spark, deals, comp, out_dir, PipelineConfig(), parquet_dir=str(tmp_path / "parquet")
+    )
 
     sc = spark.sparkContext
     group = "clean_merge"
@@ -483,7 +489,9 @@ def test_report_directory_listed_on_driver(spark, fixture_dir, tmp_path):
     out_dir = str(tmp_path / "output")
     deals = os.path.join(fixture_dir, "exports_deals.parquet")
     comp = os.path.join(fixture_dir, "competitor_list.csv")
-    run_export_job(spark, deals, comp, out_dir, PipelineConfig())
+    run_export_job(
+        spark, deals, comp, out_dir, PipelineConfig(), parquet_dir=str(tmp_path / "parquet")
+    )
     lender_dirs = [d for d in os.listdir(out_dir) if d.startswith("associated_lender=")]
     assert len(lender_dirs) > 32, "fixture no longer crosses Spark's default threshold"
 
@@ -575,7 +583,9 @@ def test_merged_time_reinference(spark, fixture_dir, tmp_path):
     out_dir, merged_dir = str(tmp_path / "o"), str(tmp_path / "m")
     deals = os.path.join(fixture_dir, "exports_deals.parquet")
     comp = os.path.join(fixture_dir, "competitor_list.csv")
-    run_export_job(spark, deals, comp, out_dir, PipelineConfig())
+    run_export_job(
+        spark, deals, comp, out_dir, PipelineConfig(), parquet_dir=str(tmp_path / "parquet")
+    )
     merged = run_merge_job(spark, out_dir, merged_dir)
     assert dict(merged.dtypes)["time"] == "timestamp"
     assert merged.filter(F.col("time").isNull()).count() == 0

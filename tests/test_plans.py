@@ -14,10 +14,10 @@ import pytest
 from monthly_report_etl_spark.catalog import QUERIES
 
 
-def _plan(df) -> str:
+def _plan(df, mode: str = "formatted") -> str:
     buf = io.StringIO()
     with contextlib.redirect_stdout(buf):
-        df.explain(mode="formatted")
+        df.explain(mode=mode)
     return buf.getvalue()
 
 
@@ -208,31 +208,57 @@ def test_chunker_plan_is_jvm_native(spark, sf_dir):
         assert marker not in plan, f"{marker} in native chunker plan:\n{plan}"
 
 
-def test_monthly_report_plan_shape(spark, sf_dir, tmp_path):
-    """The full monthly-report plan keeps its at-scale contract: no
-    range-sampling global sort, no cartesian product, no Python stage,
-    and exactly ONE deliberate repartition — the per-lender
-    REPARTITION_BY_COL that feeds the sink's file layout. (Since r20 the
-    enriched frame is localCheckpoint'ed before add_rank_columns — the
-    rank diamond otherwise re-executed the whole upstream chain; the
-    pre-checkpoint plan is separately gated by the flagship
-    exports_report_events tests.)"""
-    from monthly_report_etl_spark.config import PipelineConfig
+def _report_inputs(spark, tmp_path):
     from monthly_report_etl_spark.fixtures import write_fixture
-    from monthly_report_etl_spark.plans import monthly_report
     from monthly_report_etl_spark.schemas import COMPETITOR_LIST_SCHEMA
     from monthly_report_etl_spark.sources import read_lookup_csv
 
-    out = str(tmp_path / "mr_fixture")
-    write_fixture(out, n_scenarios=200, seed=7)
-    raw = spark.read.parquet(f"{out}/exports_deals.parquet")
-    comp = read_lookup_csv(spark, f"{out}/competitor_list.csv", COMPETITOR_LIST_SCHEMA)
-    plan = _plan(monthly_report(raw, comp, PipelineConfig()))
+    deals_path, comp_path = write_fixture(str(tmp_path / "mr_fixture"), n_scenarios=200, seed=7)
+    raw = spark.read.parquet(deals_path)
+    return raw, read_lookup_csv(spark, comp_path, COMPETITOR_LIST_SCHEMA)
+
+
+def test_monthly_report_plan_shape(spark, tmp_path):
+    """The full monthly-report plan keeps its at-scale contract: no
+    range-sampling global sort, no cartesian product, no Python stage,
+    exactly ONE deliberate repartition — the per-lender
+    REPARTITION_BY_COL that feeds the sink's file layout — and two hash
+    exchanges in the rank step (the (Tier, lender) aggregate and the
+    rank window on Tier). The enriched frame is localCheckpoint'ed before
+    add_rank_columns, so this plan starts at the checkpoint; the plan
+    before it is gated by test_report_plan_before_checkpoint_shape."""
+    from monthly_report_etl_spark.config import PipelineConfig
+    from monthly_report_etl_spark.plans import monthly_report
+
+    raw, comp = _report_inputs(spark, tmp_path)
+    report = monthly_report(raw, comp, PipelineConfig())
+    plan = _plan(report)
     assert "rangepartitioning" not in plan, plan
     assert "CartesianProduct" not in plan, plan
     assert "Python" not in plan, plan
     reparts = _lines(plan, "REPARTITION_BY_COL")
     assert len(reparts) == 1, f"expected exactly 1 deliberate repartition:\n{plan}"
+    n_hash = len(_lines(_plan(report, "simple"), "Exchange hashpartitioning"))
+    assert n_hash == 3, f"{n_hash} hash exchanges (rank step 2 + repartition 1):\n{plan}"
+
+
+def test_report_plan_before_checkpoint_shape(spark, tmp_path):
+    """The enriched report before the checkpoint scans the raw input three
+    times: the main branch, the global_stats aggregate's branch, and
+    get_lenders' one-column scan — each dedup branch parses ``results``
+    once. No cartesian product, no range-sampling sort."""
+    from monthly_report_etl_spark.config import PipelineConfig
+    from monthly_report_etl_spark.operators.enrich import enrich_with_tiers
+    from monthly_report_etl_spark.operators.exports import exports_pipeline
+
+    raw, comp = _report_inputs(spark, tmp_path)
+    cfg = PipelineConfig()
+    df = enrich_with_tiers(exports_pipeline(raw, cfg.start_date, cfg.end_date, sort="none"), comp)
+    plan = _plan(df, "simple")
+    scans = _lines(plan, "FileScan parquet")  # the competitor list is a CSV scan
+    assert len(scans) == 3, f"{len(scans)} raw scans:\n{plan}"
+    assert "CartesianProduct" not in plan, plan
+    assert "rangepartitioning" not in plan, plan
 
 
 def test_ann_lsh_plan_shape(spark, sf_dir):

@@ -7,7 +7,7 @@ from __future__ import annotations
 import json
 
 import pytest
-from hypothesis import given, settings, strategies as st
+from hypothesis import example, given, settings, strategies as st
 from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.operators import exports
@@ -18,6 +18,8 @@ _SETTINGS = dict(max_examples=5, deadline=None)
 
 _lender = st.sampled_from(["a", "b", "c", None])
 _tristate = st.sampled_from(["true", "false", None])
+_purpose = st.sampled_from(["purchase", "refinance", None])
+_amount = st.one_of(st.none(), st.integers(100_000, 2_000_000).map(float))
 
 
 @st.composite
@@ -51,6 +53,8 @@ def _event_rows(draw):
                 "isValidExport": True,
                 "exportedLender": draw(_lender),
                 "results": json.dumps(elements),
+                "loanPurpose": draw(_purpose),
+                "totalProposedLoanAmount": draw(_amount),
             }
         )
     return rows
@@ -115,6 +119,66 @@ def test_classifier_is_total(spark, rows):
     labels = {r["performance"] for r in result.select("performance").distinct().collect()}
     assert labels <= set(exports.PERFORMANCE_LABELS)
     assert result.filter(F.col("performance").isNull()).count() == 0
+
+
+def _passing_row(t: int, scenario: str, purpose, amount) -> dict:
+    return {
+        "time": f"2025-03-01T00:00:{t:02d}.000000",
+        "scenarioId": scenario,
+        "isValidExport": True,
+        "exportedLender": "a",
+        "results": json.dumps(
+            [{"lenderName": "a", "doesService": "true", "maxBorrowingCapacity": 5e5}]
+        ),
+        "loanPurpose": purpose,
+        "totalProposedLoanAmount": amount,
+    }
+
+
+@settings(**_SETTINGS)
+@given(rows=_event_rows())
+@example(
+    rows=[
+        _passing_row(1, "s0", None, 1e5),
+        _passing_row(2, "s1", None, None),
+        _passing_row(3, "s2", "purchase", 2e5),
+        _passing_row(4, "s3", "refinance", 3e5),
+    ]
+)
+def test_global_stats_match_distinct_windows(spark, rows):
+    """global_stats (one aggregate, broadcast back) equals the reference's
+    ``COUNT(DISTINCT) OVER`` / ``SUM OVER`` windows (exports_results.sql:
+    107-115) run in DuckDB on the same deduped passing rows; NULL purposes
+    form one group."""
+    import duckdb
+
+    from tests.utils import assert_frames_match
+
+    df = _to_df(spark, rows)
+    b = exports.base(df, "2025-01-01T00:00:00Z", "2026-01-01T00:00:00Z")
+    passing = exports.filter_passing(exports.flag_failing(exports.dedup_latest(b)))
+    cols = ["scenarioId", "loanPurpose", "totalProposedLoanAmount"]
+    stats = [
+        "count_all_loan_purpose",
+        "count_all_unique_scenario_id",
+        "sum_all_total_proposed_loan_amount",
+    ]
+    actual = exports.global_stats(passing).select(*cols, *stats).toPandas()
+
+    con = duckdb.connect()
+    con.register("passing", passing.select(*cols).toPandas())
+    expected = con.execute(
+        """
+        SELECT *,
+               COUNT(DISTINCT "scenarioId") OVER (PARTITION BY "loanPurpose")
+                   AS count_all_loan_purpose,
+               COUNT(DISTINCT "scenarioId") OVER () AS count_all_unique_scenario_id,
+               SUM("totalProposedLoanAmount") OVER () AS sum_all_total_proposed_loan_amount
+        FROM passing
+        """
+    ).fetchdf()
+    con.close()
+    assert_frames_match(actual, expected)
 
 
 def test_clean_idempotent(spark, fixture_dir):
