@@ -1330,7 +1330,7 @@ def jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     key = hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:12]
     path = os.path.join(tempfile.gettempdir(), f"jsonl_docs_{key}")
-    write_jsonl(d, path, keep_nulls=True)
+    write_jsonl(d, path)
     return read_jsonl(
         spark,
         path,

@@ -3,6 +3,5 @@ from monthly_report_etl_spark.functions.text import (  # noqa: F401
     fingerprint,
     language_scores,
     regex_token_count,
-    shingles,
     whitespace_tokens,
 )

@@ -76,24 +76,3 @@ def fingerprint(text: Column) -> Column:
         F.lit(0).cast("long"),
         lambda acc, c: (acc * 31 + F.ascii(c)) % FINGERPRINT_MOD,
     )
-
-
-def shingles(tokens: Column, n: int = 3) -> Column:
-    """Distinct n-gram (word) shingles; fewer than n tokens → empty set.
-
-    PERFORMANCE WARNING: this is a higher-order-function expression
-    (CodegenFallback — interpreted). Fine for per-row projections, but do
-    NOT feed it into ``explode``/Generate or reference it from multiple
-    expressions: CollapseProject re-inlines it per consumer and the nested
-    tree is re-evaluated each time (measured 10-30x slowdowns). For hot
-    paths use the relational formulation in
-    ``operators/dedup._shingle_rows`` (posexplode + window leads).
-    """
-    idx_last = F.size(tokens) - n
-    grams = F.transform(
-        F.sequence(F.lit(0), idx_last),
-        lambda i: F.concat_ws(" ", *[F.element_at(tokens, i + j + 1) for j in range(n)]),
-    )
-    return F.when(F.size(tokens) >= n, F.array_distinct(grams)).otherwise(
-        F.array().cast("array<string>")
-    )

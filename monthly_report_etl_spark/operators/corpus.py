@@ -703,9 +703,7 @@ WHERE r <= CEIL({STRATIFIED_FRACTION} * n)
 """
 
 
-def stratified_sample(
-    spark: SparkSession, sf_dir: str, fraction: float = STRATIFIED_FRACTION
-) -> DataFrame:
+def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Stratified sampling with EXACT per-stratum counts: keep
     ceil(f * n_lang) docs per language, chosen by ranking on a portable
     content-independent hash (md5 of the id) — deterministic across
@@ -714,9 +712,7 @@ def stratified_sample(
     on partition layout. The rank and count windows share one lang
     exchange; at 100 TB the shuffle carries (id, lang, source) only.
     Strata with fewer than 1/f docs still contribute their ceil — no
-    empty strata, the property sampleBy cannot promise. ``fraction``
-    parameterizes consumers (e.g. the train-on-sample BPE path); the
-    catalog entry pins the default."""
+    empty strata, the property sampleBy cannot promise."""
     d = _docs(spark, sf_dir)
     rank_w = Window.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
@@ -725,7 +721,7 @@ def stratified_sample(
         d.select("doc_id", "lang", "source")
         .withColumn("r", F.row_number().over(rank_w))
         .withColumn("n", F.count("*").over(Window.partitionBy("lang")))
-        .filter(F.col("r") <= F.ceil(F.lit(fraction) * F.col("n")))
+        .filter(F.col("r") <= F.ceil(F.lit(STRATIFIED_FRACTION) * F.col("n")))
         .select("doc_id", "lang", "source")
     )
 
@@ -1337,15 +1333,11 @@ def _release_vocab_frame(df: DataFrame) -> None:
             "falling back to GC-deferred reclamation", exc)
 
 
-def _merge_apply_expr(syms, left: str, right: str):
+def _merge_apply_expr(left: str, right: str):
     """Greedy left-to-right non-overlap application of ONE merge pair as
-    a pure JVM ``aggregate()`` fold over a symbol-array column (state =
+    a pure JVM ``aggregate()`` fold over the ``syms`` array (state =
     (emitted symbols, carry); carry==left ∧ next==right → emit merged,
-    reset). Shared by the sequential trainer and the merge-table apply
-    path (`_bpe_apply_merge_table`) so the train-time and encode-time
-    semantics can never drift apart. Accepts a Column so applications
-    can be CHAINED (the output of one fold feeding the next) in a
-    single Project."""
+    reset). The sequential trainer's per-merge step."""
 
     def _acc(out, carry):
         return F.named_struct(F.lit("out"), out, F.lit("carry"), carry)
@@ -1353,7 +1345,7 @@ def _merge_apply_expr(syms, left: str, right: str):
     merged_lit = F.lit(left + right)
     null_s = F.lit(None).cast("string")
     return F.aggregate(
-        syms,
+        "syms",
         _acc(F.array().cast("array<string>"), null_s),
         lambda acc, s: F.when(acc["carry"].isNull(), _acc(acc["out"], s))
         .when(
@@ -1367,17 +1359,14 @@ def _merge_apply_expr(syms, left: str, right: str):
     )
 
 
-def _bpe_initial_vocab(
-    spark: SparkSession, sf_dir: str, docs: DataFrame | None = None
-) -> DataFrame:
+def _bpe_initial_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The single corpus pass both trainers share: word frequencies
     (corpus-sized shuffle down to vocab size), each word split to its
     character symbols. PERSISTED — ownership passes to the trainer.
     Extracted (r11 review) so a tokenization change can never be
     applied to one trainer and silently break the pinned bit-for-bit
-    equivalence of the other. ``docs`` overrides the corpus frame (the
-    train-on-sample path passes the sampled subset)."""
-    d = _docs(spark, sf_dir) if docs is None else docs
+    equivalence of the other."""
+    d = _docs(spark, sf_dir)
     words = (
         d.filter(F.trim("text") != "")
         .select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
@@ -1391,7 +1380,6 @@ def _bpe_train(
     spark: SparkSession,
     sf_dir: str,
     n_merges: int = BPE_MERGES,
-    docs: DataFrame | None = None,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame, DataFrame | None]:
     """Core BPE training loop; returns (merge table, final vocab frame
     ``(w, syms, freq)``, parent frame). BOTH frames are PERSISTED and
@@ -1403,9 +1391,8 @@ def _bpe_train(
     whole word-freq aggregation + N merge folds to replay from the
     corpus, breaking the corpus-touched-once contract (ADVICE r10 #2).
     ``bpe_train_merges`` needs neither and releases both immediately.
-    See ``bpe_train_merges`` for the scale contract. ``docs`` overrides
-    the corpus frame (train-on-sample)."""
-    vocab = _bpe_initial_vocab(spark, sf_dir, docs)
+    See ``bpe_train_merges`` for the scale contract."""
+    vocab = _bpe_initial_vocab(spark, sf_dir)
     prev: DataFrame | None = None
     merges: list[tuple[int, str, str, int]] = []
     try:
@@ -1440,7 +1427,7 @@ def _bpe_train(
                 break
             left, right, cnt = top[0]["l"], top[0]["r"], int(top[0]["cnt"])
             merges.append((rank, left, right, cnt))
-            new_syms = _merge_apply_expr(F.col("syms"), left, right)
+            new_syms = _merge_apply_expr(left, right)
             if rank % BPE_LINEAGE_TRUNC_EVERY == 0 and rank < n_merges:
                 # lineage truncation point: the eager checkpoint
                 # materializes this fold NOW off the parent's cache (one
@@ -1508,7 +1495,6 @@ def _bpe_train_batched(
     sf_dir: str,
     n_merges: int = BPE_MERGES,
     batch_m: int = BPE_BATCH_M,
-    docs: DataFrame | None = None,
 ) -> tuple[list[tuple[int, str, str, int]], DataFrame, DataFrame | None]:
     """``_bpe_train`` with BATCHED merge selection (VERDICT r10 #5 — the
     standard trick for production merge counts): each round counts pairs
@@ -1549,7 +1535,7 @@ def _bpe_train_batched(
     the collected list is exhausted (fewer pairs than the batch), no
     boundary pairs exist, so no creations by non-terminal members can
     outrank the batch."""
-    vocab = _bpe_initial_vocab(spark, sf_dir, docs)
+    vocab = _bpe_initial_vocab(spark, sf_dir)
     prev: DataFrame | None = None
     merges: list[tuple[int, str, str, int]] = []
     rounds = 0
@@ -1757,20 +1743,8 @@ def bpe_tokenize(
     _release_vocab_frame(vocab)
     if parent is not None:
         _release_vocab_frame(parent)
-    return _bpe_segment_docs(spark, sf_dir, seg)
-
-
-def _bpe_segment_docs(
-    spark: SparkSession, sf_dir: str, seg: DataFrame
-) -> DataFrame:
-    """The ONE corpus pass shared by every tokenize variant: explode
-    word instances with position, equi-join the ``(w, syms)`` word →
-    symbol-sequence map (vocab-sized right side, AQE picks broadcast vs
-    shuffle), reassemble per doc with ``array_sort(struct(wpos, syms))``
-    + ``flatten`` (no window; the groupBy's exchange is the only
-    shuffle). ``seg`` must cover every word of the corpus — both
-    callers build it FROM the corpus' own word vocabulary, so the inner
-    join drops nothing."""
+    # the word → symbols map is built from the corpus' own word
+    # vocabulary, so the inner join drops nothing
     d = _docs(spark, sf_dir)
     docw = (
         d.filter(F.trim("text") != "")
@@ -1795,159 +1769,6 @@ def _bpe_segment_docs(
             F.size("tokens").cast("long").alias("n_tokens"),
             "tokens",
         )
-    )
-
-
-# Fold-chain length for the merge-table apply path: how many merge
-# applications are composed into ONE Project before an eager
-# localCheckpoint truncates the plan. Same plan-depth rationale as
-# BPE_LINEAGE_TRUNC_EVERY (the apply chain nests fold EXPRESSIONS
-# rather than stacking InMemoryRelations, but analysis cost still grows
-# with depth, and 8 is the depth the N=8 catalog entry has always
-# exercised). Longer chains were measured (r12) and are NOT a lever:
-# at N=64 on a 294k-word vocabulary, chain 8/32/64 read 24.6/27.1/22.4 s
-# (noise-level; per-element expression cost grows with depth and eats
-# the saved checkpoints), and on a tiny vocab chain=64 regresses ~1.5x
-# from analysis cost alone.
-BPE_APPLY_CHAIN = BPE_LINEAGE_TRUNC_EVERY
-
-
-def _bpe_apply_merge_table(
-    words: DataFrame,
-    merges: list[tuple[int, str, str, int]],
-    chain: int = BPE_APPLY_CHAIN,
-) -> DataFrame:
-    """ENCODE side of BPE for an arbitrary word vocabulary: apply a
-    trained merge table to ``words`` ``(w, syms)`` strictly in rank
-    order — the classic tokenizer-apply rule, needed whenever the
-    vocabulary contains words the trainer never saw (the train-on-sample
-    path). Each merge is one `_merge_apply_expr` fold; ``chain`` folds
-    are COMPOSED into a single Project (zero jobs, zero shuffles), then
-    an eager localCheckpoint truncates the plan. Scale shape: N merges
-    cost ceil(N/chain) narrow vocab-sized jobs with NO exchanges and NO
-    driver round-trips besides the checkpoints — strictly cheaper per
-    merge than training, whose every iteration also pays a pair-count
-    shuffle + a top-pair collect. Returns an eagerly CHECKPOINTED frame
-    independent of ``words`` (the caller may release its input
-    immediately; the result itself is GC-reclaimed after use, as with
-    ``bpe_tokenize``'s seg map)."""
-    df = words.select("w", "syms")
-    own_prev: DataFrame | None = None
-    col = F.col("syms")
-    pending = 0
-    # ADVICE r12 #1: release the in-flight intermediate checkpoints on
-    # any failure, mirroring _bpe_train — without this, a fold job dying
-    # mid-chain leaks one vocab-sized localCheckpoint RDD per completed
-    # chain boundary until JVM GC, exactly where memory is tightest.
-    # (`nxt` itself cannot leak: either localCheckpoint raised before it
-    # was bound, or it already became `own_prev`/`df`.)
-    try:
-        for _rank, left, right, *_ in merges:
-            col = _merge_apply_expr(col, left, right)
-            pending += 1
-            if pending == chain:
-                nxt = df.select("w", col.alias("syms")).localCheckpoint(eager=True)
-                if own_prev is not None:
-                    _release_vocab_frame(own_prev)
-                own_prev, df = nxt, nxt
-                col = F.col("syms")
-                pending = 0
-        if pending or own_prev is None:
-            nxt = df.select("w", col.alias("syms")).localCheckpoint(eager=True)
-            if own_prev is not None:
-                _release_vocab_frame(own_prev)
-            df = nxt
-        return df
-    except BaseException:
-        if own_prev is not None:
-            _release_vocab_frame(own_prev)
-        raise
-
-
-def bpe_tokenize_sampled(
-    spark: SparkSession,
-    sf_dir: str,
-    n_merges: int = BPE_MERGES,
-    fraction: float = STRATIFIED_FRACTION,
-    batch_m: int = BPE_BATCH_M,
-) -> DataFrame:
-    """TRAIN-ON-SAMPLE BPE (VERDICT r11 #4 — the production mitigation
-    SCALE.md §8k names, now a real path): train the merge table on a
-    deterministic stratified SAMPLE of the corpus, then tokenize the
-    FULL corpus with it. This is the industry norm for production merge
-    counts — the ~0.3 s/merge training ceiling (§8k) rides the vocab of
-    whatever corpus it is given, so training on ceil(f·n) docs per
-    language bounds the loop's input while `_bpe_apply_merge_table`
-    extends the learned merges to full-corpus words the trainer never
-    saw (per-word greedy rank-order application — exactly how a trained
-    tokenizer encodes unseen text).
-
-    Pipeline: `stratified_sample(fraction)` ids → left-semi join the
-    corpus (one scan) → `_bpe_train_batched` on the sampled docs (the
-    scale-path trainer; merges identical to sequential by the pinned
-    equivalence) → build the FULL corpus' word vocabulary (second scan)
-    → apply the merge table in rank order (ceil(N/chain) narrow jobs,
-    zero shuffles) → `_bpe_segment_docs` (third scan + the groupBy
-    exchange). Three corpus scans total, constant in N.
-
-    With fraction=1.0 the sample is the whole corpus, the trained
-    merges equal `bpe_train_merges`'s, and the output is BIT-IDENTICAL
-    to `bpe_tokenize` (pinned by pytest) — the apply path reproduces
-    the trainer's final vocab state because both compose the same
-    `_merge_apply_expr` folds in the same order. Divergence at
-    fraction<1 is measured, not assumed: `bpe_sample_divergence`."""
-    sample_ids = stratified_sample(spark, sf_dir, fraction).select("doc_id")
-    sampled_docs = _docs(spark, sf_dir).join(sample_ids, "doc_id", "left_semi")
-    merges, vocab, parent = _bpe_train_batched(
-        spark, sf_dir, n_merges, batch_m, docs=sampled_docs
-    )
-    # sample-trained vocab state covers only sample words — release it;
-    # the full-corpus map is built by applying the merge TABLE instead
-    _release_vocab_frame(vocab)
-    if parent is not None:
-        _release_vocab_frame(parent)
-    full_words = _bpe_initial_vocab(spark, sf_dir)
-    seg = _bpe_apply_merge_table(full_words, merges)  # checkpointed result
-    _release_vocab_frame(full_words)
-    return _bpe_segment_docs(spark, sf_dir, seg)
-
-
-def bpe_sample_divergence(
-    spark: SparkSession,
-    sf_dir: str,
-    n_merges: int = BPE_MERGES,
-    fraction: float = STRATIFIED_FRACTION,
-) -> DataFrame:
-    """Measure what train-on-sample COSTS in tokenization fidelity vs
-    full-corpus training (VERDICT r11 #4 asked for the measurement, not
-    just the path): one row of corpus-level metrics —
-
-    * ``n_docs``: documents tokenized (identical doc sets by
-      construction: both variants emit every doc with ≥1 word);
-    * ``identical_doc_frac``: fraction of documents whose token
-      sequences are exactly equal under both tokenizers;
-    * ``token_inflation``: sum(sampled n_tokens) / sum(full n_tokens) —
-      >1 means the sample-trained tokenizer segments the corpus into
-      more pieces (the expected direction: merges picked on a sample
-      compress the full corpus no better than merges picked on it);
-    * ``jaccard_tokens_mean``: mean per-doc Jaccard overlap of the two
-      token SETS (order-insensitive robustness check).
-
-    Driver-side result is ONE row — safe to collect at any scale."""
-    full = bpe_tokenize(spark, sf_dir, n_merges).alias("f")
-    samp = bpe_tokenize_sampled(spark, sf_dir, n_merges, fraction).alias("s")
-    j = full.join(samp, "doc_id", "inner")
-    same = (F.col("f.tokens") == F.col("s.tokens")).cast("double")
-    inter = F.size(F.array_intersect("f.tokens", "s.tokens"))
-    union = F.size(F.array_union("f.tokens", "s.tokens"))
-    jac = F.when(union > 0, inter / union).otherwise(F.lit(1.0))
-    return j.agg(
-        F.count("*").cast("long").alias("n_docs"),
-        F.round(F.avg(same), 6).alias("identical_doc_frac"),
-        F.round(
-            F.sum("s.n_tokens") / F.sum("f.n_tokens"), 6
-        ).alias("token_inflation"),
-        F.round(F.avg(jac), 6).alias("jaccard_tokens_mean"),
     )
 
 

@@ -375,14 +375,11 @@ def final_select(df: DataFrame, sort: str = "within_partitions") -> DataFrame:
     return out
 
 
-def exports_pipeline(
-    raw_df: DataFrame,
-    start_date: str,
-    end_date: str,
-    sort: str = "within_partitions",
-) -> DataFrame:
+def exports_pipeline(raw_df: DataFrame, start_date: str, end_date: str) -> DataFrame:
     """Steps 1-7 composed — semantically the union of the reference's
     per-lender runs over every distinct lender, as ONE Catalyst plan.
+    The rows are unordered: ``monthly_report`` enriches them further and
+    lays out the report itself.
     """
     lenders = get_lenders(raw_df)
     df = base(raw_df, start_date, end_date)
@@ -393,4 +390,4 @@ def exports_pipeline(
     df = explode_lender_results(df, lenders)
     df = extract_performance(df)
     df = classify_performance(df)
-    return final_select(df, sort=sort)
+    return final_select(df, sort="none")

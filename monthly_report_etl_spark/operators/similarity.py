@@ -123,26 +123,6 @@ LSH_TABLES = 8
 _DIM = 64
 
 
-def _lit_dot(e_col: F.Column, weights: list[float]) -> F.Column:
-    """dot(e, literal weight vector) as plain indexed arithmetic:
-    ``e[0]*w0 + e[1]*w1 + ...`` summed in a balanced tree.
-
-    MEASURED CAVEAT: at 64 dims x many weight vectors this tree exceeds
-    codegen's huge-method limit and evaluates INTERPRETED — fine on tiny
-    row counts (the 10-row query probes below), 6s/2000 rows as a wide
-    projection. Every high-row-count dot product in this module goes
-    through the Arrow/numpy matmul UDFs instead (_bucket_array_udf_int,
-    _assign_centroid_udf).
-    """
-    terms = [e_col[d] * F.lit(w) for d, w in enumerate(weights)]
-    while len(terms) > 1:
-        terms = [
-            terms[i] + terms[i + 1] if i + 1 < len(terms) else terms[i]
-            for i in range(0, len(terms), 2)
-        ]
-    return terms[0]
-
-
 # ---------------------------------------------------------------------------
 # portable-hash ANN-LSH (oracle-checkable end to end)
 # ---------------------------------------------------------------------------
@@ -516,21 +496,6 @@ def _normalized(df: DataFrame, vec_col: str = "e") -> DataFrame:
     )
 
 
-def _nearest_centroid(vec_col, centroids: list[list[float]]):
-    """argmax dot(vec, centroid) as a pure expression tree (array_max over
-    (dot, -cid) structs) — the REFERENCE formulation kept for spot-check
-    tests; the data path uses _assign_centroid_udf (same arithmetic,
-    vectorized) because a k x dim expression tree exceeds codegen's
-    method limit and evaluates interpreted. The struct stores ``-cid`` so
-    exact dot-product ties break toward the LOWEST cid, identical to
-    np.argmax's first-max rule in the UDF path."""
-    scored = []
-    for cid, c in enumerate(centroids):
-        dot = _lit_dot(vec_col, list(c))
-        scored.append(F.struct(dot.alias("dot"), F.lit(-cid).alias("ncid")))
-    return -F.array_max(F.array(*scored))["ncid"]
-
-
 def _assign_centroid_udf(centroids: list[list[float]]):
     """Arrow-vectorized nearest-centroid tag: (batch x dim) @ (dim x k)
     → np.argmax per row (first max on exact ties — the same ground truth
@@ -662,8 +627,11 @@ def _lloyd_fused_udf(k: int, iters: int):
 def _probe_cids_udf(centroids: list[list[float]], probes: int):
     """Per-query probe list (top ``probes`` centroids by dot) as one
     Arrow matmul + argsort — replaces the k x dim literal expression tree
-    (~1k nodes for 16x64), which Catalyst analyzed and then evaluated
-    INTERPRETED on every plan build (see _lit_dot's measured caveat).
+    (~1k nodes for 16x64), which Catalyst analyzed on every plan build
+    and then evaluated INTERPRETED: a dot product over 64 dims x many
+    literal weight vectors exceeds codegen's huge-method limit (measured
+    at 6 s per 2000 rows as a wide projection). Every high-row-count dot
+    product in this module is an Arrow/numpy matmul UDF for that reason.
 
     Tie-break convention (pinned r7): equal dot products break to the
     LOWEST cid — the stable argsort over ``-dot`` keeps ascending-cid

@@ -24,7 +24,7 @@ from monthly_report_etl_spark.operators.enrich import (
 def monthly_report(
     raw_df: DataFrame,
     competitor_df: DataFrame,
-    config: PipelineConfig | None = None,
+    config: PipelineConfig,
 ) -> DataFrame:
     """raw exports_deals + competitor list → final 28-column report.
 
@@ -38,12 +38,11 @@ def monthly_report(
     rank step is one (Tier, lender) aggregate and one rank window,
     broadcast back.
     """
-    config = config or PipelineConfig()
     # enrich first, order last — the reference sorts in SQL and the pandas
     # merges are stable/order-preserving (run_exports_query.py:224,157), so
     # ordering once at the end is equivalent and avoids sorting rows that
     # joins would reshuffle anyway
-    df = exports.exports_pipeline(raw_df, config.start_date, config.end_date, sort="none")
+    df = exports.exports_pipeline(raw_df, config.start_date, config.end_date)
     df = enrich_with_tiers(df, competitor_df)
     # add_rank_columns consumes its input twice (its (Tier, lender)
     # aggregate + the merge-back), and Spark shares no diamond subplans, so

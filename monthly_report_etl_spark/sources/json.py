@@ -7,11 +7,10 @@ training-data-pipeline extension. Scale notes:
 
 * JSONL is line-splittable, so a 100 TB corpus parallelizes by byte range
   exactly like CSV/parquet — no file-level skew beyond file sizes;
-* ALWAYS pass an explicit schema when reading at scale: schema inference
-  is a full extra pass over the data;
-* ``keep_nulls=True`` writes explicit ``"field": null`` entries so every
-  line carries the full schema (stable downstream inference at the cost
-  of bytes); the default drops null fields like Spark does.
+* the reader takes an explicit schema: schema inference is a full extra
+  pass over the data;
+* the sink writes explicit ``"field": null`` entries, so every line
+  carries the full schema (stable downstream reads at the cost of bytes).
 """
 
 from __future__ import annotations
@@ -20,32 +19,13 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import types as T
 
 
-def write_jsonl(
-    df: DataFrame,
-    path: str,
-    partition_by: str | None = None,
-    keep_nulls: bool = False,
-    compression: str | None = None,
-) -> None:
-    """Write one JSON object per line (Spark's native json sink)."""
-    writer = df.write.mode("overwrite").option("ignoreNullFields", not keep_nulls)
-    if compression:
-        writer = writer.option("compression", compression)
-    if partition_by:
-        writer = writer.partitionBy(partition_by)
-    writer.json(path)
+def write_jsonl(df: DataFrame, path: str) -> None:
+    """Write one JSON object per line (Spark's native json sink), nulls
+    included."""
+    df.write.mode("overwrite").option("ignoreNullFields", False).json(path)
 
 
-def read_jsonl(
-    spark: SparkSession,
-    path: str,
-    schema: T.StructType | str | None = None,
-    mode: str = "PERMISSIVE",
-) -> DataFrame:
-    """Read a JSONL directory/file. Explicit schema strongly preferred
-    (inference is an extra full pass); PERMISSIVE null-fills malformed
-    lines, DROPMALFORMED drops them, FAILFAST raises."""
-    reader = spark.read.option("mode", mode)
-    if schema is not None:
-        reader = reader.schema(schema)
-    return reader.json(path)
+def read_jsonl(spark: SparkSession, path: str, schema: T.StructType | str) -> DataFrame:
+    """Read a JSONL directory/file under ``schema``; malformed lines
+    null-fill (Spark's PERMISSIVE default)."""
+    return spark.read.schema(schema).json(path)

@@ -7,11 +7,10 @@ fixture, BASELINE.json north star).
   10 minutes are dropped, so state size is O(windows in flight), not
   O(stream length) — the 100 TB/day streaming shape.
 * ``sessionize_batch`` — gap-based sessionization expressed with lag +
-  windowed cumsum; in streaming the same semantics come from
-  ``session_window`` (both included; the batch form is oracle-checkable).
-* ``stateful_user_counts`` — arbitrary stateful processing via
-  ``applyInPandasWithState`` (running per-user counters with timeout) —
-  the custom-stateful-operator template.
+  windowed cumsum (oracle-checkable).
+* ``dedup_stream`` and ``interval_join_stream`` — watermark-bounded
+  streaming dedup and stream-stream join; ``tools/stream_soak.py``
+  measures their state.
 
 events.parquet has shipped with ``ts`` as TIMESTAMP(NANOS) (rounds 1-4)
 and TIMESTAMP(MICROS) (round 5+); ``_read_events_stream`` probes the
@@ -23,14 +22,10 @@ from __future__ import annotations
 import os
 import shutil
 import tempfile
-from collections.abc import Iterator
-
-import pandas as pd
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
-from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
@@ -150,38 +145,6 @@ def windowed_counts_stream(
     )
 
 
-def sliding_window_stream(spark: SparkSession, src_dir: str) -> DataFrame:
-    """readStream → watermark(10 min) → 1-hour windows every 15 minutes —
-    the streaming twin of ``analytics.events_sliding_window`` (each event
-    in exactly 4 windows; state = open windows inside the watermark
-    horizon, so 4 window-groups per key at steady state)."""
-    stream = _read_events_stream(spark, src_dir)
-    return (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
-        .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
-        .select(F.col("w.start").alias("window_start"), "event_type", "n_events", "sum_value")
-    )
-
-
-def run_sliding_window_once(
-    spark: SparkSession, sf_dir: str, query_name: str = "sliding_counts"
-) -> DataFrame:
-    src = _stage_events_dir(sf_dir)
-    q = (
-        sliding_window_stream(spark, src)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
-
-
 def run_windowed_counts_once(
     spark: SparkSession,
     sf_dir: str,
@@ -213,7 +176,7 @@ def run_windowed_counts_once(
 
 
 # ---------------------------------------------------------------------------
-# sessionization — batch form (oracle-checkable) mirroring session_window
+# sessionization — batch form (oracle-checkable)
 # ---------------------------------------------------------------------------
 
 SESSIONIZE_ORACLE = f"""
@@ -263,7 +226,7 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # Full microsecond precision: cast('long') truncates to seconds, which
     # would split a gap in (1800s, 1801s] differently from the INTERVAL
-    # comparison in the oracle and from session_window.
+    # comparison in the oracle.
     gap = F.unix_micros(F.col("ts")) - F.lag(F.unix_micros(F.col("ts"))).over(w)
     marked = ev.withColumn(
         "is_new",
@@ -278,53 +241,6 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.min("ts").alias("session_start"),
         F.max("ts").alias("session_end"),
     )
-
-
-# ---------------------------------------------------------------------------
-# arbitrary stateful processing template
-# ---------------------------------------------------------------------------
-
-_STATE_SCHEMA = "n LONG"
-_STATEFUL_OUTPUT_SCHEMA = "user_id LONG, n_events_total LONG"
-
-
-def _count_events(
-    key: tuple, batches: Iterator[pd.DataFrame], state: GroupState
-) -> Iterator[pd.DataFrame]:
-    (n,) = state.get if state.exists else (0,)
-    for pdf in batches:
-        n += len(pdf)
-    state.update((n,))
-    yield pd.DataFrame({"user_id": [key[0]], "n_events_total": [n]})
-
-
-def stateful_user_counts(spark: SparkSession, src_dir: str) -> DataFrame:
-    """Custom stateful streaming operator: running per-user event counts
-    via ``applyInPandasWithState`` (update mode, no timeout)."""
-    stream = _read_events_stream(spark, src_dir)
-    return stream.groupBy("user_id").applyInPandasWithState(
-        _count_events,
-        outputStructType=_STATEFUL_OUTPUT_SCHEMA,
-        stateStructType=_STATE_SCHEMA,
-        outputMode="update",
-        timeoutConf=GroupStateTimeout.NoTimeout,
-    )
-
-
-def run_stateful_counts_once(spark: SparkSession, sf_dir: str, query_name: str = "stateful_counts") -> DataFrame:
-    src = _stage_events_dir(sf_dir)
-    q = (
-        stateful_user_counts(spark, src)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
 
 
 # batch tumbling-window counts — same windowing semantics, oracle-checkable.
@@ -459,88 +375,7 @@ def interval_join_stream(
     ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
 
 
-def run_interval_join_once(
-    spark: SparkSession, sf_dir: str, query_name: str = "interval_join"
-) -> DataFrame:
-    src = _stage_events_dir(sf_dir)
-    q = (
-        interval_join_stream(spark, src)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
-
-
 CATALOG["streaming_interval_join_batch"] = (interval_join_batch, INTERVAL_JOIN_ORACLE)
-
-
-# ---------------------------------------------------------------------------
-# transformWithStateInPandas (Spark 4 arbitrary-state v2 API)
-# ---------------------------------------------------------------------------
-
-try:  # the v2 state API speaks protobuf to the JVM; gate on the package
-    from google.protobuf import descriptor  # noqa: F401
-
-    HAS_TWS_DEPS = True
-except Exception:  # pragma: no cover - container lacks python-protobuf
-    HAS_TWS_DEPS = False
-
-
-def _running_agg_processor():
-    """StatefulProcessor: per-user running (count, sum) via ValueState —
-    the transformWithState twin of stateful_user_counts, on the v2 API
-    (typed state handles, timers, TTL support)."""
-    import pandas as pd  # noqa: F811 - local import keeps module import light
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    class RunningAgg(StatefulProcessor):
-        def init(self, handle) -> None:
-            self._state = handle.getValueState("agg", "n LONG, total DOUBLE")
-
-        def handleInputRows(self, key, rows, timer_values):
-            if self._state.exists():
-                prev = self._state.get()
-                n, total = int(prev[0]), float(prev[1])
-            else:
-                n, total = 0, 0.0
-            for pdf in rows:
-                n += len(pdf)
-                total += float(pdf["value"].dropna().sum())
-            self._state.update((n, total))
-            yield pd.DataFrame(
-                {"user_id": [key[0]], "n_events": [n], "sum_value": [round(total, 2)]}
-            )
-
-        def close(self) -> None:
-            pass
-
-    return RunningAgg()
-
-
-def transform_with_state_counts(spark: SparkSession, src_dir: str) -> DataFrame:
-    """Per-user running aggregates via ``transformWithStateInPandas``.
-
-    Requires the python ``protobuf`` package (HAS_TWS_DEPS) and the
-    RocksDB state store provider
-    (``spark.sql.streaming.stateStore.providerClass`` =
-    ``...state.RocksDBStateStoreProvider``) set BEFORE the session's
-    first streaming query."""
-    if not HAS_TWS_DEPS:  # pragma: no cover
-        raise ImportError("transformWithState needs the python protobuf package")
-    stream = _read_events_stream(spark, src_dir)
-    return stream.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_running_agg_processor(),
-        outputStructType="user_id LONG, n_events LONG, sum_value DOUBLE",
-        outputMode="Update",
-        timeMode="None",
-    )
 
 
 def dedup_stream(
@@ -562,122 +397,3 @@ def dedup_stream(
         .dropDuplicatesWithinWatermark(["user_id", "event_type"])
         .select("user_id", "event_type", "event_id")
     )
-
-
-def run_dedup_stream_once(
-    spark: SparkSession, sf_dir: str, query_name: str = "dedup_stream"
-) -> DataFrame:
-    src = _stage_events_dir(sf_dir)
-    q = (
-        dedup_stream(spark, src)
-        .writeStream.outputMode("append")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
-
-
-def run_windowed_counts_to_tsv(
-    spark: SparkSession, sf_dir: str, out_dir: str, query_name: str = "windowed_to_tsv"
-) -> None:
-    """Streaming aggregation → reference TSV sink via ``foreachBatch``:
-    each micro-batch's updated result lands through the SAME sink
-    contract (tab/QUOTE_ALL/BOM) the batch jobs use — the pattern for
-    pointing an existing batch sink at a stream without a new writer.
-    Complete output mode: every batch rewrites the (small, aggregated)
-    result — idempotent against replays."""
-    from monthly_report_etl_spark.sources.csv import write_tsv
-
-    src = _stage_events_dir(sf_dir)
-
-    def _sink(batch_df: DataFrame, batch_id: int) -> None:
-        write_tsv(batch_df, out_dir, single_file=True, bom=True)
-
-    q = (
-        windowed_counts_stream(spark, src)
-        .writeStream.outputMode("complete")
-        .foreachBatch(_sink)
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def run_windowed_counts_to_parquet(
-    spark: SparkSession,
-    sf_dir: str,
-    out_dir: str,
-    checkpoint_dir: str,
-    query_name: str = "windowed_to_parquet",
-) -> None:
-    """Streaming aggregation → parquet files in APPEND mode with a
-    CHECKPOINT — the exactly-once file-sink contract: offsets + window
-    state live in the checkpoint, finalized windows (watermark passed)
-    are written once, and a RESTARTED query resumes from the checkpoint
-    instead of re-reading and re-emitting (the restart test drives this
-    twice and asserts zero duplicate rows). Append mode means rows land
-    only when their window is final — the tail windows inside the
-    watermark horizon stay in state, which is the correct unbounded-
-    stream behavior (complete/foreachBatch is the finite-replay form
-    above)."""
-    src = _stage_events_dir(sf_dir)
-    q = (
-        windowed_counts_stream(spark, src)
-        .writeStream.outputMode("append")
-        .format("parquet")
-        .option("path", out_dir)
-        .option("checkpointLocation", checkpoint_dir)
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-
-
-def session_window_stream(spark: SparkSession, src_dir: str) -> DataFrame:
-    """Streaming sessionization via the native ``session_window`` — the
-    streaming twin of ``sessionize_batch`` (same 30-minute gap): state per
-    open session, closed by the watermark, merged on overlap."""
-    stream = _read_events_stream(spark, src_dir)
-    return (
-        stream.withWatermark("ts", "10 minutes")
-        .groupBy(
-            F.session_window("ts", f"{SESSION_GAP_MINUTES} minutes").alias("w"),
-            "user_id",
-        )
-        .agg(F.count("*").alias("n_events"))
-        .select(
-            "user_id",
-            F.col("w.start").alias("session_start"),
-            F.col("w.end").alias("session_end"),
-            "n_events",
-        )
-    )
-
-
-def run_session_window_once(
-    spark: SparkSession, sf_dir: str, query_name: str = "session_windows"
-) -> DataFrame:
-    src = _stage_events_dir(sf_dir)
-    q = (
-        session_window_stream(spark, src)
-        .writeStream.outputMode("complete")
-        .format("memory")
-        .queryName(query_name)
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)

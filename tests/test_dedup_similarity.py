@@ -162,21 +162,23 @@ def test_ivf_recall_vs_brute_force(spark, sf_dir):
 
 
 def test_ivf_assignment_is_nearest_centroid(spark, sf_dir):
-    """Every corpus vector's cluster tag is argmax-dot over the trained
-    centroids (spot-checked driver-side for 20 vectors)."""
+    """The data path's cluster tag (``_assign_centroid_udf``, the UDF
+    ``ivf_topk`` tags the corpus with) is argmax-dot over the trained
+    centroids (spot-checked driver-side with numpy for 20 vectors)."""
     import numpy as np
     from pyspark.sql import functions as F
 
     cents = np.array(similarity.train_ivf_centroids(spark, sf_dir))
     v = spark.read.parquet(f"{sf_dir}/embeddings.parquet").limit(20).collect()
-    from monthly_report_etl_spark.operators.similarity import _nearest_centroid, _normalized
+    from monthly_report_etl_spark.operators.similarity import _assign_centroid_udf, _normalized
 
     df = _normalized(
         spark.read.parquet(f"{sf_dir}/embeddings.parquet")
         .select("vec_id", F.col("embedding").cast("array<double>").alias("e"))
         .limit(20)
     )
-    tagged = {r["vec_id"]: r["cid"] for r in df.withColumn("cid", _nearest_centroid(F.col("e"), [list(c) for c in cents])).collect()}
+    assign = _assign_centroid_udf([list(c) for c in cents])
+    tagged = {r["vec_id"]: r["cid"] for r in df.withColumn("cid", assign(F.col("e"))).collect()}
     for r in v:
         e = np.array(r["embedding"], dtype=np.float64)
         e = e / np.linalg.norm(e)

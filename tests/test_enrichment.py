@@ -102,7 +102,7 @@ def test_enrichment_matches_oracle(spark, fixture_dir):
 
     comp = read_lookup_csv(spark, comp_path, COMPETITOR_LIST_SCHEMA)
     raw = spark.read.parquet(deals_path)
-    report = exports.exports_pipeline(raw, config.start_date, config.end_date, sort="none")
+    report = exports.exports_pipeline(raw, config.start_date, config.end_date)
     actual = _enrich(report, comp, config).toPandas()
 
     assert len(actual) == len(ref)  # enrichment never changes cardinality
@@ -117,7 +117,7 @@ def test_enrich_tail_matches_oracle_on_spark_report(spark, tmp_path, seed):
     deals_path, comp_path = write_fixture(str(tmp_path), n_scenarios=300, seed=seed)
     config = PipelineConfig()
     raw = spark.read.parquet(deals_path)
-    report = exports.exports_pipeline(raw, START, END, sort="none").localCheckpoint()
+    report = exports.exports_pipeline(raw, START, END).localCheckpoint()
     comp = read_lookup_csv(spark, comp_path, COMPETITOR_LIST_SCHEMA)
 
     ref = report.toPandas()
@@ -191,7 +191,7 @@ def test_clean_for_export(spark, fixture_dir):
     config = PipelineConfig()
     raw = spark.read.parquet(deals_path)
     comp = read_lookup_csv(spark, comp_path, COMPETITOR_LIST_SCHEMA)
-    report = exports.exports_pipeline(raw, config.start_date, config.end_date, sort="none")
+    report = exports.exports_pipeline(raw, config.start_date, config.end_date)
     cleaned = clean_for_export(_enrich(report, comp, config)).toPandas()
 
     # time rendered like pandas astype(str) on tz-naive datetimes

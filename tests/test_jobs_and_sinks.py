@@ -506,77 +506,6 @@ def test_report_directory_listed_on_driver(spark, fixture_dir, tmp_path):
     assert list(sc.statusTracker().getJobIdsForGroup(group)) == []
 
 
-def test_parquet_schema_evolution(spark, tmp_path):
-    """mergeSchema: a dataset written in two schema generations (v2 adds
-    a column) reads as the union schema with nulls for missing fields —
-    the append-only schema-evolution contract a long-lived 100 TB corpus
-    depends on."""
-    from pyspark.sql import functions as F
-
-    p = str(tmp_path / "evolving")
-    spark.range(3).select(F.col("id"), F.lit("a").alias("tag")).write.parquet(f"{p}/gen=1")
-    spark.range(3, 6).select(
-        F.col("id"), F.lit("b").alias("tag"), (F.col("id") * 10).alias("score")
-    ).write.parquet(f"{p}/gen=2")
-    merged = spark.read.option("mergeSchema", True).parquet(p)
-    assert set(merged.columns) == {"id", "tag", "score", "gen"}
-    assert merged.count() == 6
-    assert merged.filter(F.col("score").isNull()).count() == 3  # v1 rows null-fill
-    assert merged.filter((F.col("gen") == 2) & F.col("score").isNotNull()).count() == 3
-
-
-def test_python_datasource_synthetic_docs(spark):
-    """Custom source via the Spark 4 Python Data Source API: declared
-    schema, planned partitions, per-partition deterministic reads."""
-    from monthly_report_etl_spark.sources.synthetic import _make_doc, register
-
-    register(spark)
-    df = (
-        spark.read.format("synthetic_docs")
-        .option("numDocs", 120)
-        .option("numPartitions", 5)
-        .load()
-    )
-    assert df.count() == 120
-    assert df.rdd.getNumPartitions() == 5
-    assert dict(df.dtypes) == {"doc_id": "bigint", "text": "string", "n_words": "int"}
-    got = {r["doc_id"]: (r["text"], r["n_words"]) for r in df.collect()}
-    assert len(got) == 120  # doc_ids unique across partitions
-    for i in (0, 61, 119):
-        did, text, n = _make_doc(i)
-        assert got[i] == (text, n)
-
-
-def test_python_datasource_manifest_sink(spark, tmp_path):
-    """Custom sink via the Python Data Source API: per-task part files,
-    driver-side commit publishing a manifest of exactly the committed
-    files and total row count."""
-    import json
-
-    from monthly_report_etl_spark.sources.synthetic import register
-
-    register(spark)
-    out = str(tmp_path / "mj")
-    (
-        spark.range(100)
-        .selectExpr("id", "id * 2 AS twice")
-        .repartition(4)
-        .write.format("manifest_jsonl")
-        .option("path", out)
-        .mode("append")
-        .save()
-    )
-    man = json.load(open(os.path.join(out, "_MANIFEST.json")))
-    assert man["n_rows"] == 100 and len(man["files"]) == 4
-    rows = []
-    for f in man["files"]:
-        with open(os.path.join(out, f)) as fh:
-            rows += [json.loads(line) for line in fh]
-    assert len(rows) == 100
-    assert sum(r["id"] for r in rows) == 4950
-    assert all(r["twice"] == 2 * r["id"] for r in rows)
-
-
 def test_merged_time_reinference(spark, fixture_dir, tmp_path):
     """merge job re-infers `time` (merge_all_lenders.py:58-59): the merged
     frame's time parses to timestamps, nulls only where source was null."""
@@ -589,37 +518,6 @@ def test_merged_time_reinference(spark, fixture_dir, tmp_path):
     merged = run_merge_job(spark, out_dir, merged_dir)
     assert dict(merged.dtypes)["time"] == "timestamp"
     assert merged.filter(F.col("time").isNull()).count() == 0
-
-
-def test_dynamic_partition_overwrite_touches_only_written_partitions(spark, sf_dir, tmp_path):
-    """partitionOverwriteMode=dynamic: an overwrite that writes only one
-    lang's rows replaces THAT partition directory and leaves every other
-    partition byte-identical — the idempotent-daily-rerun contract (a
-    static overwrite would wipe the whole table first)."""
-    out = str(tmp_path / "docs_parted")
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet").select("doc_id", "lang")
-    d.write.partitionBy("lang").parquet(out)
-    before = {
-        r["lang"]: r["n"]
-        for r in spark.read.parquet(out).groupBy("lang").agg(F.count("*").alias("n")).collect()
-    }
-    prev = spark.conf.get("spark.sql.sources.partitionOverwriteMode", "static")
-    spark.conf.set("spark.sql.sources.partitionOverwriteMode", "dynamic")
-    try:
-        (
-            d.filter(F.col("lang") == "en")
-            .withColumn("doc_id", F.col("doc_id") + 10_000_000)
-            .write.mode("overwrite")
-            .partitionBy("lang")
-            .parquet(out)
-        )
-    finally:
-        spark.conf.set("spark.sql.sources.partitionOverwriteMode", prev)
-    back = spark.read.parquet(out)
-    after = {r["lang"]: r["n"] for r in back.groupBy("lang").agg(F.count("*").alias("n")).collect()}
-    assert after == before  # same row counts everywhere
-    assert back.filter((F.col("lang") == "en") & (F.col("doc_id") < 10_000_000)).count() == 0
-    assert back.filter((F.col("lang") != "en") & (F.col("doc_id") >= 10_000_000)).count() == 0
 
 
 def test_write_parquet_sized_targets_file_count(spark, sf_dir, tmp_path):

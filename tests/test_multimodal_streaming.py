@@ -9,6 +9,17 @@ from monthly_report_etl_spark.operators import multimodal
 from monthly_report_etl_spark.streaming import events_stream
 
 
+def _run_to_memory(spark, stream, query_name):
+    """Drive an append-mode streaming frame over its whole (finite) source
+    into a memory table and return that table."""
+    q = stream.writeStream.outputMode("append").format("memory").queryName(query_name).start()
+    try:
+        q.processAllAvailable()
+    finally:
+        q.stop()
+    return spark.table(query_name)
+
+
 def test_decode_features_match_numpy(spark, sf_dir):
     """The Arrow/mapInPandas path must reproduce a driver-side numpy
     computation exactly (deterministic stub decode)."""
@@ -99,95 +110,17 @@ def test_streaming_windowed_counts_match_batch(spark, sf_dir):
     assert len(s) > 0
 
 
-def test_stateful_user_counts(spark, sf_dir):
-    result = events_stream.run_stateful_counts_once(spark, sf_dir, "sc_test")
-    got = {r["user_id"]: r["n_events_total"] for r in result.collect()}
-    from monthly_report_etl_spark.catalog import _events
-
-    expected = {
-        r["user_id"]: r["n"]
-        for r in _events(spark, sf_dir).groupBy("user_id").agg(F.count("*").alias("n")).collect()
-    }
-    assert got == expected
-
-
 def test_dedup_stream_one_row_per_key(spark, sf_dir):
     """Watermarked streaming dropDuplicates: exactly one surviving event
     per (user_id, event_type) key, and every batch key is represented."""
-    res = events_stream.run_dedup_stream_once(spark, sf_dir, "ds_test")
+    src = events_stream._stage_events_dir(sf_dir)
+    res = _run_to_memory(spark, events_stream.dedup_stream(spark, src), "ds_test")
     from monthly_report_etl_spark.catalog import _events
 
     keys = res.groupBy("user_id", "event_type").count()
     assert keys.filter(F.col("count") > 1).count() == 0
     expected = _events(spark, sf_dir).select("user_id", "event_type").distinct().count()
     assert res.count() == expected
-
-
-def test_foreach_batch_tsv_sink(spark, sf_dir, tmp_path):
-    """foreachBatch → the reference TSV contract: the streamed aggregate
-    written through write_tsv equals the batch aggregation read back."""
-    out = str(tmp_path / "stream_tsv")
-    events_stream.run_windowed_counts_to_tsv(spark, sf_dir, out, "fb_test")
-    from monthly_report_etl_spark.sources import read_tsv_directory
-
-    back = read_tsv_directory(spark, out)
-    batch = events_stream.tumbling_window_counts(spark, sf_dir)
-    assert back.count() == batch.count()
-    got = {
-        (r["window_start"], r["event_type"]): (int(r["n_events"]), float(r["sum_value"]))
-        for r in back.collect()
-    }
-    expected = {
-        (r["window_start"].strftime("%Y-%m-%d %H:%M:%S+0000"), r["event_type"]): (
-            r["n_events"],
-            round(r["sum_value"], 2),
-        )
-        for r in batch.collect()
-    }
-    assert got == expected
-
-
-def test_transform_with_state_matches_batch(spark, sf_dir):
-    """transformWithStateInPandas running aggregates == batch groupBy.
-    Skips where the python protobuf package (required by the v2 state
-    API) is absent; the operator itself import-guards identically."""
-    import pytest
-
-    if not events_stream.HAS_TWS_DEPS:
-        pytest.skip(
-            "container-level blocker: the python protobuf package (required by "
-            "transformWithStateInPandas's v2 state protocol) is not installed "
-            "and package installs are unavailable in this environment; the "
-            "operator is import-guarded and this test runs wherever protobuf "
-            "exists"
-        )
-    spark.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    src = events_stream._stage_events_dir(sf_dir)
-    q = (
-        events_stream.transform_with_state_counts(spark, src)
-        .writeStream.outputMode("update")
-        .format("memory")
-        .queryName("tws_ct")
-        .start()
-    )
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    got = {r["user_id"]: (r["n_events"], r["sum_value"]) for r in spark.table("tws_ct").collect()}
-    from monthly_report_etl_spark.catalog import _events
-
-    expected = {
-        r["user_id"]: (r["n"], r["s"])
-        for r in _events(spark, sf_dir)
-        .groupBy("user_id")
-        .agg(F.count("*").alias("n"), F.round(F.sum("value"), 2).alias("s"))
-        .collect()
-    }
-    assert got == expected
 
 
 def test_sessionize_properties(spark, sf_dir):
@@ -204,23 +137,13 @@ def test_sessionize_properties(spark, sf_dir):
 def test_interval_join_stream_matches_batch(spark, sf_dir):
     """The stream-stream interval join (watermarks both sides) must emit
     exactly the batch click→purchase attribution pairs on a replay."""
-    streamed = events_stream.run_interval_join_once(spark, sf_dir, "ij_test")
+    src = events_stream._stage_events_dir(sf_dir)
+    streamed = _run_to_memory(spark, events_stream.interval_join_stream(spark, src), "ij_test")
     batch = events_stream.interval_join_batch(spark, sf_dir)
     s = {(r["click_id"], r["purchase_id"]) for r in streamed.collect()}
     b = {(r["click_id"], r["purchase_id"]) for r in batch.collect()}
     assert s == b
     assert len(s) > 0
-
-
-def test_session_window_stream_matches_batch_sessionize(spark, sf_dir):
-    """The native session_window streaming query must partition events
-    into the same sessions as the batch lag/cumsum formulation (same
-    30-min gap): identical session count per user and total events."""
-    sw = events_stream.run_session_window_once(spark, sf_dir, "sw_test")
-    batch = events_stream.sessionize_batch(spark, sf_dir)
-    s = {(r["user_id"], r["session_start"]): r["n_events"] for r in sw.collect()}
-    b = {(r["user_id"], r["session_start"]): r["n_events"] for r in batch.collect()}
-    assert s == b
 
 
 def test_real_png_through_decode_features(spark):
@@ -319,51 +242,6 @@ def test_png_fallback_unfilters_every_filter_type():
     assert np.array_equal(decoded, img.reshape(-1))
 
 
-def test_streaming_parquet_sink_checkpoint_recovery(spark, sf_dir, tmp_path):
-    """Exactly-once through the checkpointed parquet sink: the first run
-    appends the finalized windows once; a RESTART against the same
-    checkpoint (source fully consumed) emits nothing new — zero
-    duplicate rows. Emitted rows must agree with the batch twin."""
-    out = str(tmp_path / "out")
-    ckpt = str(tmp_path / "ckpt")
-    events_stream.run_windowed_counts_to_parquet(spark, sf_dir, out, ckpt, "ck_test")
-    first = spark.read.parquet(out)
-    n1 = first.count()
-    assert n1 > 0
-    events_stream.run_windowed_counts_to_parquet(spark, sf_dir, out, ckpt, "ck_test2")
-    again = spark.read.parquet(out)
-    assert again.count() == n1, "restart re-emitted rows despite checkpoint"
-    # every emitted (finalized) row matches the batch aggregation
-    batch = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in events_stream.tumbling_window_counts(spark, sf_dir).collect()
-    }
-    for r in first.collect():
-        assert batch[(r["window_start"], r["event_type"])] == (
-            r["n_events"],
-            r["sum_value"],
-        )
-
-
-def test_streaming_sliding_window_matches_batch(spark, sf_dir):
-    """The hopping-window streaming query must equal the batch
-    events_sliding_window entry exactly (replay has no late data)."""
-    from monthly_report_etl_spark.operators import analytics
-
-    streamed = events_stream.run_sliding_window_once(spark, sf_dir, "sw_test")
-    batch = analytics.events_sliding_window(spark, sf_dir)
-    s = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in streamed.collect()
-    }
-    b = {
-        (r["window_start"], r["event_type"]): (r["n_events"], r["sum_value"])
-        for r in batch.collect()
-    }
-    assert s == b
-    assert len(s) > 0
-
-
 def test_events_reader_handles_both_ts_layouts(spark, tmp_path):
     """The events fixture has shipped with ts as TIMESTAMP(NANOS)
     (rounds 1-4) and TIMESTAMP(MICROS) (round 5+). Both the batch reader
@@ -427,28 +305,19 @@ def test_events_reader_handles_both_ts_layouts(spark, tmp_path):
 
 
 def test_dependency_matrix_matches_coverage_doc():
-    """COVERAGE.md's container dependency matrix must track reality
-    (VERDICT r5 #8): if python-protobuf or PIL appears in this
-    container, this test fails, forcing the doc row and the associated
-    skip gates to be revisited instead of silently rotting. Also pins
-    the catalog-entry count the doc cites."""
+    """COVERAGE.md's container dependency matrix must track reality: if
+    PIL appears in this container, this test fails, forcing the doc row
+    and the decode fallback it names to be revisited instead of silently
+    rotting. Also pins the catalog-entry count the doc cites."""
     import os
     import re
 
     from monthly_report_etl_spark.catalog import ORACLES, QUERIES
     from monthly_report_etl_spark.operators import multimodal
-    from monthly_report_etl_spark.streaming import events_stream
 
     root = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
     with open(os.path.join(root, "COVERAGE.md")) as f:
         doc = f.read()
-
-    tws_row = next(ln for ln in doc.splitlines() if "`HAS_TWS_DEPS`" in ln)
-    doc_says_absent = "**absent**" in tws_row
-    assert doc_says_absent != events_stream.HAS_TWS_DEPS, (
-        "COVERAGE.md dependency matrix is stale: HAS_TWS_DEPS is "
-        f"{events_stream.HAS_TWS_DEPS} but the doc row says {tws_row!r}"
-    )
 
     pil_row = next(ln for ln in doc.splitlines() if "| PIL |" in ln)
     assert ("absent" in pil_row) != multimodal._HAS_PIL, (

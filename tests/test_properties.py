@@ -114,7 +114,7 @@ def test_classifier_is_total(spark, rows):
     """performance is never NULL and always one of the 7 labels."""
     df = _to_df(spark, rows)
     result = exports.exports_pipeline(
-        df, "2025-01-01T00:00:00Z", "2026-01-01T00:00:00Z", sort="none"
+        df, "2025-01-01T00:00:00Z", "2026-01-01T00:00:00Z"
     )
     labels = {r["performance"] for r in result.select("performance").distinct().collect()}
     assert labels <= set(exports.PERFORMANCE_LABELS)
@@ -651,149 +651,6 @@ def test_bpe_batched_selfcomposable_regression(spark):
     )
 
 
-def test_bpe_tokenize_sampled_fraction1_identical(spark, sf_dir):
-    """VERDICT r11 #4: with fraction=1.0 the stratified sample IS the
-    corpus, so the sample-trained merge table equals the full trainer's
-    and the merge-table APPLY path (`_bpe_apply_merge_table`, rank-order
-    fold composition over the full word vocabulary) must reproduce
-    `bpe_tokenize`'s trained-vocab-state segmentation BIT-FOR-BIT —
-    pinning that the encode side and the train side apply merges
-    identically."""
-    from monthly_report_etl_spark.operators.corpus import (
-        bpe_tokenize,
-        bpe_tokenize_sampled,
-    )
-
-    full = {
-        r["doc_id"]: (r["n_tokens"], list(r["tokens"]))
-        for r in bpe_tokenize(spark, sf_dir).collect()
-    }
-    samp = {
-        r["doc_id"]: (r["n_tokens"], list(r["tokens"]))
-        for r in bpe_tokenize_sampled(spark, sf_dir, fraction=1.0).collect()
-    }
-    assert samp == full and full
-
-
-@settings(**_SETTINGS)
-@given(
-    words=st.lists(
-        st.text(alphabet="abcxy ", min_size=0, max_size=12),
-        min_size=1,
-        max_size=30,
-    )
-)
-def test_bpe_tokenize_sampled_matches_python_reference(spark, words):
-    """End-to-end python differential for the train-on-sample path at
-    fraction=0.5: replicate the deterministic stratified sample (md5
-    rank per lang, keep ceil(f*n)), train sequential-greedy BPE on the
-    sampled docs only, apply the merge table in rank order to EVERY
-    corpus word (including words the trainer never saw — the case
-    fraction=1.0 cannot reach), segment, and compare exactly."""
-    import hashlib
-    import math
-    import os
-    import re as _re
-    import tempfile
-    from collections import Counter
-
-    import pandas as pd
-
-    from monthly_report_etl_spark.operators.corpus import (
-        BPE_MERGES,
-        bpe_tokenize_sampled,
-    )
-
-    frac = 0.5
-    n = len(words)
-    ranked = sorted(
-        range(n), key=lambda i: (hashlib.md5(str(i).encode()).hexdigest(), i)
-    )
-    keep = set(ranked[: math.ceil(frac * n)])
-
-    def doc_words(doc):
-        return [w for w in _re.split(r"\s+", doc.strip()) if w]
-
-    wf: Counter = Counter()
-    for i in keep:
-        wf.update(doc_words(words[i]))
-    vocab = {w: list(w) for w in wf}
-    merges: list[tuple[str, str]] = []
-    for _ in range(BPE_MERGES):
-        pc: Counter = Counter()
-        for w, syms in vocab.items():
-            for k in range(len(syms) - 1):
-                pc[(syms[k], syms[k + 1])] += wf[w]
-        if not pc:
-            break
-        (l, r), _cnt = min(pc.items(), key=lambda kv: (-kv[1], kv[0]))
-        merges.append((l, r))
-        for w, syms in vocab.items():
-            out, k = [], 0
-            while k < len(syms):
-                if k + 1 < len(syms) and syms[k] == l and syms[k + 1] == r:
-                    out.append(l + r)
-                    k += 2
-                else:
-                    out.append(syms[k])
-                    k += 1
-            vocab[w] = out
-
-    def encode(w):
-        syms = list(w)
-        for l, r in merges:
-            out, k = [], 0
-            while k < len(syms):
-                if k + 1 < len(syms) and syms[k] == l and syms[k + 1] == r:
-                    out.append(l + r)
-                    k += 2
-                else:
-                    out.append(syms[k])
-                    k += 1
-            syms = out
-        return syms
-
-    ref = {
-        i: [t for w in doc_words(doc) for t in encode(w)]
-        for i, doc in enumerate(words)
-        if doc_words(doc)
-    }
-
-    outdir = tempfile.mkdtemp()
-    pd.DataFrame(
-        {
-            "doc_id": range(n),
-            "text": list(words),
-            "lang": "en",
-            "source": "s",
-            "n_chars": [len(w) for w in words],
-        }
-    ).to_parquet(os.path.join(outdir, "documents.parquet"), index=False)
-
-    got = {
-        r["doc_id"]: list(r["tokens"])
-        for r in bpe_tokenize_sampled(spark, outdir, fraction=frac).collect()
-    }
-    assert got == ref
-
-
-def test_bpe_sample_divergence_metrics(spark, sf_dir):
-    """The divergence measurement itself: one metrics row, sane ranges;
-    fraction=1.0 must report zero divergence on every metric."""
-    from monthly_report_etl_spark.operators.corpus import bpe_sample_divergence
-
-    row = bpe_sample_divergence(spark, sf_dir).collect()[0]
-    assert row["n_docs"] > 0
-    assert 0.0 <= row["identical_doc_frac"] <= 1.0
-    assert row["token_inflation"] > 0
-    assert 0.0 <= row["jaccard_tokens_mean"] <= 1.0
-
-    exact = bpe_sample_divergence(spark, sf_dir, fraction=1.0).collect()[0]
-    assert exact["identical_doc_frac"] == 1.0
-    assert exact["token_inflation"] == 1.0
-    assert exact["jaccard_tokens_mean"] == 1.0
-
-
 def test_bpe_lineage_truncation_frees_checkpoint_storage(spark, sf_dir):
     """ADVICE r11 #3: the lineage-truncation branch replaces the vocab
     with a localCheckpoint frame whose storage the CacheManager does NOT
@@ -871,47 +728,6 @@ def test_release_fallback_warns_once_per_exception_type(monkeypatch, caplog):
     # a NEW cause after the first latch must still warn
     assert levels_for(ValueError("cause B")) == [logging.WARNING]
     assert levels_for(ValueError("cause B, again")) == [logging.DEBUG]
-
-
-def test_bpe_apply_merge_table_releases_on_error(spark, monkeypatch):
-    """ADVICE r12 #1: `_bpe_apply_merge_table` must release its in-flight
-    intermediate checkpoint frames when a fold job dies mid-chain — the
-    same try/BaseException contract `_bpe_train` carries — instead of
-    leaking one vocab-sized localCheckpoint RDD per completed chain
-    boundary until JVM GC. Control-flow pin: boundary 1 checkpoints
-    fine, boundary 2 raises; the boundary-1 frame must be handed to
-    `_release_vocab_frame` before the error propagates."""
-    from monthly_report_etl_spark.operators import corpus as C
-
-    words = spark.createDataFrame(
-        [("ab", ["a", "b"]), ("abc", ["a", "b", "c"])],
-        "w string, syms array<string>",
-    )
-    merges = [(0, "a", "b", 5), (1, "ab", "c", 3)]
-
-    released = []
-    monkeypatch.setattr(C, "_release_vocab_frame", released.append)
-
-    # patch the CONCRETE DataFrame class (classic/connect subclass) —
-    # the pyspark.sql.DataFrame base is abstract in Spark 4
-    cls = type(words)
-    orig = cls.localCheckpoint
-    calls = {"n": 0}
-
-    def failing_second(self, eager=True):
-        calls["n"] += 1
-        if calls["n"] == 2:
-            raise RuntimeError("simulated fold-job failure at boundary 2")
-        return orig(self, eager=eager)
-
-    monkeypatch.setattr(cls, "localCheckpoint", failing_second)
-    with pytest.raises(RuntimeError, match="boundary 2"):
-        C._bpe_apply_merge_table(words, merges, chain=1)
-    assert calls["n"] == 2
-    assert len(released) == 1, (
-        "the completed boundary-1 checkpoint frame was not released on "
-        "mid-chain failure"
-    )
 
 
 def test_bpe_batched_fuzz_corpora_regression(spark):
