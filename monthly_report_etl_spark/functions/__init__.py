@@ -1,4 +1,4 @@
-from monthly_report_etl_spark.functions.vectors import cosine_similarity, dot, l2_norm  # noqa: F401
+from monthly_report_etl_spark.functions.vectors import dot, l2_norm  # noqa: F401
 from monthly_report_etl_spark.functions.text import (  # noqa: F401
     fingerprint,
     language_scores,

@@ -29,12 +29,6 @@ def l2_norm(a: Column) -> Column:
     )
 
 
-def cosine_similarity(a: Column, b: Column) -> Column:
-    """Cosine similarity; NULL when either vector has zero norm."""
-    na, nb = l2_norm(a), l2_norm(b)
-    return F.when((na > 0) & (nb > 0), dot(a, b) / (na * nb))
-
-
 def read_vectors(spark, sf_dir: str):
     """The ``embeddings`` scan with the index contract applied: a row
     whose embedding is NULL is not an indexable vector and is dropped AT

@@ -810,7 +810,7 @@ def embedding_cosine_pairs(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     # norms hoisted out of the N^2 pair loop (same bit-exact argument as
     # the semdedup operators: identical fold per vector, identical
-    # dot/(na*nb) multiplication order as cosine_similarity's inline form)
+    # dot / (na * nb) multiplication order as the inline form)
     a = v.select(
         F.col("vec_id").alias("vec_a"),
         F.col("e").alias("ea"),

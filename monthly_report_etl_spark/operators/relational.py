@@ -16,15 +16,12 @@ union-tag + running-last trick — one shuffle, no per-group pandas).
 
 from __future__ import annotations
 
-import logging
 import os
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.functions.vectors import read_vectors
-
-_log = logging.getLogger(__name__)
 
 
 def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
@@ -399,13 +396,6 @@ ORDER_CHAINS_ORACLE = (
 )
 
 
-# Single-slot handle for the materialized adj cache: (key, DataFrame) of
-# the most recently materialized orders table. See the eviction note in
-# recursive_order_chains — same-table reuse is plan-keyed and free; a
-# DIFFERENT table evicts the previous fact-sized entry.
-_ADJ_CACHE_SLOT: dict = {}
-
-
 def recursive_order_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-customer burst chains via an ENGINE-SIDE recursive CTE
     (Spark 4 ``WITH RECURSIVE``): a chain starts at an order with no
@@ -448,31 +438,15 @@ def recursive_order_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
       turns 20 rebuilds into one.
 
     After the fix: 30x 28.0 s / 100x 25.4 s — monotone-flat, and the
-    100 TB plan is the one you'd want (per-level shuffle join against
-    a disk-backed materialized adj; MEMORY_AND_DISK spills rather than
-    OOMs on a cluster). The cache is keyed by adj's canonicalized plan,
-    so repeated calls on the same orders table REUSE one entry instead
-    of stacking copies; it stays resident for the session (fact-sized —
-    the deliberate trade for the 20-level reuse).
-
-    r13 (VERDICT r12 #6 / ADVICE r12): the cache is SINGLE-SLOT across
-    distinct orders tables — materializing adj for a DIFFERENT orders
-    source unpersists the previously materialized one first, so a
-    long-lived session sweeping many replicas (tools/scale_curve.py)
-    holds at most ONE fact-sized entry instead of accumulating one per
-    table for the session lifetime. r14 (ADVICE r13): the slot key uses
-    ``os.path.realpath`` — symlink spellings of the same table share the
-    warm entry — and a same-key call reuses the slot's OWN frame (under
-    realpath keying a symlink spelling yields a different canonical scan
-    plan, so plan-keyed reuse alone would double-materialize); a failure
-    during materialization unpersists + clears the slot rather than
-    leaving a registered-but-untracked entry. The
-    slot assumes SEQUENTIAL driver use (true for the catalog, driver
-    gate, bench, and scale_curve): a concurrent caller on a different
-    table could unpersist an adj whose recursion is still running —
-    Spark would recompute the evicted levels (a perf fallback, never a
-    wrong answer), the same degradation class as cache eviction under
-    MEMORY_AND_DISK pressure.
+    plan is the one you'd want on a cluster (per-level shuffle join
+    against a disk-backed materialized adj; MEMORY_AND_DISK spills
+    rather than OOMs). Spark keys its cache by canonicalized plan, so a
+    repeated call on the same orders table reuses the one entry instead
+    of stacking copies (``persist`` on an already-cached plan is a
+    no-op), and an entry dropped from outside (``clearCache``) is simply
+    rebuilt by the next call. Pointing ``orders_rcte`` at a DIFFERENT
+    orders table cascade-uncaches the adj built over the old view, so a
+    session holds one fact-sized adj at a time.
 
     Working set: the recursion's own state SHRINKS every iteration
     (only still-extending chains survive the join filter), and depth
@@ -483,89 +457,9 @@ def recursive_order_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise it to ~heads x avg depth; the depth-20 guard keeps the level
     limit irrelevant.
     """
-    # realpath, not abspath (ADVICE r13): two symlink spellings of the
-    # SAME orders directory must hit the same slot — abspath treated
-    # them as distinct tables and rebuilt the fact-sized cache on each
-    # alternation (perf only, never wrong results)
-    key = (
-        spark.sparkContext.applicationId,
-        os.path.realpath(os.path.join(sf_dir, "orders.parquet")),
-    )
-    prev = _ADJ_CACHE_SLOT.pop("slot", None)
-    if prev is not None and prev[0] == key:
-        # self-heal before reusing: if something external uncached the
-        # slot frame (a host app's clearCache, a dropped cache), reusing
-        # it would silently recompute adj at every recursion level on
-        # every future same-key call — fall through to a rebuild instead
-        # (nothing to unpersist: the frame is already uncached)
-        try:
-            lvl = prev[1].storageLevel
-            if not (lvl.useMemory or lvl.useDisk):
-                prev = None
-        except Exception as exc:
-            # stale/unqueryable frame: rebuild. But don't DROP it
-            # silently (ADVICE r14) — a frame whose storageLevel probe
-            # failed for an incidental reason (py4j hiccup, interrupted
-            # driver call) may still be cached, and discarding the slot
-            # without unpersisting would leak a fact-sized entry: the
-            # exact silent-leak class the rebuild path WARNs about.
-            # Best-effort unpersist + WARNING, mirroring that handler.
-            try:
-                prev[1].unpersist(blocking=False)
-            except Exception:
-                pass  # genuinely dead frame (session gone): nothing cached
-            _log.warning(
-                "adj cache self-heal could not query slot frame (%s); "
-                "unpersisted best-effort and rebuilding", exc)
-            prev = None
-    if prev is not None and prev[0] == key:
-        # same table: reuse the slot's OWN frame rather than rebuilding
-        # and leaning on plan-keyed cache reuse — under realpath keying a
-        # symlink spelling of the same table produces a DIFFERENT
-        # canonical plan (the scan's file paths differ), so a rebuilt
-        # frame would materialize a second fact-sized entry while the
-        # slot forgets the first. Crucially this path must NOT touch the
-        # orders_rcte temp view: replacing a temp view with a
-        # differently-spelled scan cascade-UNCACHES every cached plan
-        # that was built over the old view — the r14 soak caught a
-        # symlink call silently dropping the warm adj entry that way
-        # (results stayed correct; the recursion just recomputed adj per
-        # level, the exact rebuild this cache exists to avoid).
-        _ADJ_CACHE_SLOT["slot"] = prev
-        adj = prev[1]
-    else:
-        _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_rcte")
-        if prev is not None:
-            try:
-                # blocking=True: the whole point is bounding the
-                # footprint — async removal would let both fact-sized
-                # entries coexist exactly while the new adj materializes
-                prev[1].unpersist(blocking=True)
-            except Exception as exc:
-                # prior session gone → its caches died with it (benign);
-                # any OTHER failure would silently leak a fact-sized
-                # entry, so say so at WARNING (debug is suppressed under
-                # the default root-logger config, which would make this
-                # silent again)
-                _log.warning("previous adj cache unpersist failed (%s); "
-                             "entry died with its session or leaks until GC", exc)
-        adj = spark.sql(_ORDER_CHAINS_ADJ_SQL.format(orders="orders_rcte")).persist()
-        # store the slot BEFORE materializing (ADVICE r13): persist()
-        # already registered adj's plan in the CacheManager, so if
-        # count() dies the next call can still find and evict this
-        # entry — previously a mid-materialization failure left the slot
-        # empty while the plan stayed registered, quietly defeating the
-        # single-slot bound
-        _ADJ_CACHE_SLOT["slot"] = (key, adj)
-        try:
-            adj.count()  # materialize: the InMemoryRelation carries real stats
-        except BaseException:
-            _ADJ_CACHE_SLOT.pop("slot", None)
-            try:
-                adj.unpersist(blocking=False)
-            except Exception:
-                pass  # the original failure is the signal worth propagating
-            raise
+    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_rcte")
+    adj = spark.sql(_ORDER_CHAINS_ADJ_SQL.format(orders="orders_rcte")).persist()
+    adj.count()  # materialize: the InMemoryRelation carries real stats
     adj.createOrReplaceTempView("order_chains_adj")
     return spark.sql(
         "WITH RECURSIVE "

@@ -15,9 +15,9 @@ Scale design (100 TB of vectors):
   scale with the corpus so the scan fraction shrinks as 1/sqrt(k)), then
   each query probes its nearest clusters with exact re-rank; the catalog
   entry is hash-checked as exact rows + a recall floor boolean;
-* SemDeDup (two kernels sharing one drop rule): the exact-global O(n^2)
-  baseline, and the trained-k-means scale path with a per-cluster dense
-  gram kernel above 10k vectors (SCALE.md §8e);
+* SemDeDup (one drop rule, two partitionings): the exact-global O(n^2)
+  baseline, and a trained k-means partitioner whose cluster count grows
+  with the corpus;
 * PQ compresses vectors 64x into trained sub-codebook codes and searches
   them via ADC lookup tables with an exact re-rank of the shortlist —
   the storage + query layout a 100 TB vector index actually runs.
@@ -137,8 +137,9 @@ _DIM = 64
 #   matmul, a codegen fold and DuckDB's list_reduce all agree exactly,
 #   which float dots cannot guarantee near a sign boundary.
 #
-# The exact-cosine re-rank was already portable: cosine_similarity's
-# sequential HOF fold is the same order as the oracle's list_reduce
+# The exact-cosine re-rank was already portable: the inline
+# dot / (na * nb) form's sequential HOF fold is the same order as the
+# oracle's list_reduce
 # (proven by the hash-green similarity_knn_brute_force entry).
 
 QUANT_SCALE = 1_000_000
@@ -345,9 +346,9 @@ def _semdedup_drop_rule(b0: DataFrame, broadcast_lower: bool = False) -> DataFra
     test_dedup_similarity.py ride this shared rule. Norms arrive
     hoisted in ``nrm``: each vector sits in ~n_b pairs and l2_norm
     re-evaluated per pair was ~2/3 of the fold work; the pair cosine
-    keeps cosine_similarity's exact
-    arithmetic — dot/(lo_norm * hi_norm) in that multiplication order —
-    so results are bit-identical to the inline form the oracles mirror.
+    keeps the inline form's exact arithmetic — dot / (na * nb), the
+    norms multiplied first — so results are bit-identical to what the
+    oracles mirror.
     ``broadcast_lower`` turns the bucket equi-join into a broadcast (the
     exact-global case, where the single constant key would otherwise
     land every pair on one shuffle partition)."""
@@ -998,170 +999,34 @@ CATALOG["embeddings_quantize_int8"] = (quantize_int8, QUANTIZE_INT8_ORACLE)
 
 
 # ---------------------------------------------------------------------------
-# SemDeDup over a trained k-means partitioner — the scale path
-# (Abbas et al. 2023 exactly: k grows with the corpus; VERDICT r7 #1)
+# SemDeDup over a trained k-means partitioner
+# (Abbas et al. 2023: k grows with the corpus)
 # ---------------------------------------------------------------------------
 
 SEMDEDUP_CLUSTER_TARGET = 128  # vectors per cluster the k sizing aims for
 SEMDEDUP_KM_MIN_K = 4
 SEMDEDUP_KM_MAX_K = 65_536
 SEMDEDUP_KM_RECALL_FLOOR = 0.5  # aggregate drop-recall vs the exact baseline
-# below this k, exact argmax assignment (n x k flops) is cheaper than the
-# two-level refine and is bit-deterministic — every oracle-tested SF sits
-# here; above it, the n x k term is the measured super-linear piece
-# (SCALE.md §8e) and assignment goes hierarchical (n x ~2 sqrt(k))
-SEMDEDUP_TWO_LEVEL_MIN_K = 256
-# below this corpus size the bit-exact fold drop rule runs (it IS the
-# oracle arithmetic — every driver-tested SF sits here); above it the
-# per-pair fold becomes the measured wall (~25 us/pair: zip_with
-# allocates a fresh 64-array per pair before folding — 12.7M pairs took
-# 320 of the 100x step's 330 s) and the dense per-cluster gram kernel
-# takes over
-SEMDEDUP_GRAM_MIN_N = 10_000
 
 
-def _semdedup_drop_rule_gram(b0: DataFrame) -> DataFrame:
-    """The drop rule as a per-cluster DENSE kernel — the formulation the
-    SemDeDup paper actually computes (one pairwise-similarity matrix per
-    cluster): groupBy(bucket) → applyInPandas; inside a cluster, ONE
-    numpy gram matmul scores all pairs (n_b x n_b x dim flops, no
-    per-pair array allocation), the lower-triangle row-max is
-    ``nn_lower_cos``, and the verdict matches _semdedup_drop_rule's
-    semantics exactly: per-pair round to 6 BEFORE the max, zero-norm
-    pairs NULL, no-lower-neighbor → keep.
-
-    vs the join+fold form (measured at the 100x step, SCALE.md §8e):
-    the fold path's zip_with allocates a fresh 64-double array per pair
-    — ~25 us/pair, 320 s for 12.7M pairs — while this kernel runs the
-    same arithmetic as BLAS in ~tens of seconds END-to-end including
-    the one corpus-sized shuffle (the groupBy ships each vector to its
-    cluster's partition once; pairs never exist as rows). Float caveat:
-    numpy sums in a different order than the sequential fold, so the
-    last ulp can differ BEFORE the 6-digit round — which is why every
-    oracle-tested scale keeps the fold rule (SEMDEDUP_GRAM_MIN_N) and
-    the two kernels are differentially pinned equal-after-round in
-    pytest on the fixture corpus (rounding itself is HALF_UP on both
-    sides; the residual risk is a pre-round last-ulp difference landing
-    exactly on a 6-digit boundary. Its observable worst cases (ADVICE
-    r8): a spurious `kmeans_sound` false alarm in the checked entry, or
-    — in the pure scale path above SEMDEDUP_GRAM_MIN_N, where this
-    kernel's output IS the verdict — a keep flip at the exact tau
-    boundary. Both require cos*1e6 to land within one ulp of an integer
-    half AND that half to straddle tau; never a structurally wrong
-    dedup, and bit-parity above the threshold is explicitly not part of
-    the oracle contract — if it ever becomes one, round via the decimal
-    string repr instead). Memory: one n_b^2 float matrix per
-    cluster — the ~128-vector cluster target bounds it at ~130 KB; a
-    pathological mega-cluster would surface here first, which is the
-    SemDeDup contract (the paper's k sizing exists to prevent it)."""
-    import numpy as np
-
-    def per_cluster(pdf: pd.DataFrame) -> pd.DataFrame:
-        pdf = pdf.sort_values("vec_id")
-        X = np.stack(pdf["e"].to_numpy())
-        nrm = pdf["nrm"].to_numpy()
-        nb = len(pdf)
-        denom = np.outer(nrm, nrm)
-        with np.errstate(divide="ignore", invalid="ignore"):
-            cos = np.where(denom > 0, (X @ X.T) / denom, np.nan)
-        # HALF_UP (round half away from zero), matching Spark/DuckDB
-        # round() — np.round's banker's rounding would disagree exactly
-        # at 6-digit half boundaries, where a verdict could flip
-        cos = np.sign(cos) * np.floor(np.abs(cos) * 1e6 + 0.5) / 1e6
-        lower = np.tril(np.ones((nb, nb), dtype=bool), -1)
-        vals = np.where(lower & ~np.isnan(cos), cos, -np.inf)
-        nn = vals.max(axis=1)
-        has = np.isfinite(nn)
-        return pd.DataFrame(
-            {
-                "vec_id": pdf["vec_id"].to_numpy(),
-                "bucket": pdf["bucket"].to_numpy(),
-                "nn_lower_cos": np.where(has, nn, np.nan),
-                "keep": np.where(has, ~(nn >= SEMDEDUP_TAU), True),
-            }
-        )
-
-    return b0.groupBy("bucket").applyInPandas(
-        per_cluster, "vec_id long, bucket long, nn_lower_cos double, keep boolean"
-    )
-
-
-def _two_level_assign_udf(centroids: list[list[float]]):
-    """Hierarchical nearest-centroid tag: group the k centroids into
-    g = ceil(sqrt(k)) super-centroids with a tiny DRIVER-side Lloyd
-    (model x model — k x dim floats, no data involved), then per Arrow
-    batch: argmax over the g supers, then exact argmax within the chosen
-    group's members — n x ~2 sqrt(k) flops instead of n x k. With k ∝ n
-    (the SemDeDup sizing), exact assignment is Θ(n²/target): measured as
-    the 116-vs-bar-100 overrun at the 100x step (SCALE.md §8e). The
-    refinement is approximate only across group BOUNDARIES — a
-    mis-assigned vector still gets exact pair cosines inside whatever
-    cluster it lands in, so the drop rule stays SOUND by construction;
-    only recall can move, and the sf0.01 recall pin + the checked
-    entry's oracle boolean hold (two-level never engages below
-    SEMDEDUP_TWO_LEVEL_MIN_K, so every oracle-tested SF uses the exact
-    bit-deterministic path)."""
-    import numpy as np
-
-    C = np.array(centroids, dtype=np.float64)  # k x dim
-    k = len(C)
-    g = math.isqrt(k - 1) + 1  # ceil(sqrt(k))
-    G = C[:g].copy()
-    for _ in range(5):
-        gid = np.argmax(C @ G.T, axis=1)
-        for j in range(g):
-            sel = gid == j
-            if sel.any():
-                G[j] = C[sel].mean(0)
-    gid = np.argmax(C @ G.T, axis=1)
-    members = [np.where(gid == j)[0] for j in range(g)]
-
-    @F.pandas_udf("int")
-    def assign(e: pd.Series) -> pd.Series:
-        if not len(e):  # zero-row Arrow batch guard
-            return pd.Series([], dtype="int32")
-        X = np.stack(e.to_numpy())
-        top_g = np.argmax(X @ G.T, axis=1)
-        out = np.empty(len(X), dtype=np.int32)
-        for j in range(g):
-            sel = top_g == j
-            if not sel.any():
-                continue
-            m = members[j]
-            if len(m):
-                out[sel] = m[np.argmax(X[sel] @ C[m].T, axis=1)]
-            else:  # empty group after the model-side Lloyd: exact fallback
-                out[sel] = np.argmax(X[sel] @ C.T, axis=1)
-        return pd.Series(out)
-
-    return assign
-
-
-def semdedup_kmeans_keep(
-    spark: SparkSession,
-    sf_dir: str,
-    cluster_target: int = SEMDEDUP_CLUSTER_TARGET,
-) -> DataFrame:
+def semdedup_kmeans_keep(spark: SparkSession, sf_dir: str) -> DataFrame:
     """SemDeDup as published (Abbas et al. 2023 §3): partition the
     corpus with a k-means trained in embedding space — k scaled so
-    clusters hold ~``cluster_target`` vectors — then apply the identical
-    lower-id drop rule per cluster (``_semdedup_drop_rule``, shared
-    verbatim with the exact-global baseline).
-
-    Scale design (the 100 TB path; clears VERDICT r7's one weak flag):
+    clusters hold ~SEMDEDUP_CLUSTER_TARGET vectors — then apply the
+    identical lower-id drop rule per cluster (``_semdedup_drop_rule``,
+    shared verbatim with the exact-global baseline and mirrored by the
+    oracle).
 
     * pair fan-out: k grows with n, so in-cluster pairs total ~n x
-      cluster_target — LINEAR in the corpus, vs n^2/16 for a fixed
-      16-bucket partitioner;
+      SEMDEDUP_CLUSTER_TARGET — linear in the corpus, vs n^2/16 for a
+      fixed 16-bucket partitioner;
     * training: Lloyd iterations run on a deterministic stride sample
       capped at max(32k, 2048) vectors (the ≥~32-points-per-centroid
-      rule of thumb), so training cost tracks the MODEL size, not the
+      rule of thumb), so training cost tracks the model size, not the
       corpus; only the k x dim centroid matrix crosses to the driver
       (train_ivf_centroids' partials contract);
-    * assignment: one Arrow matmul pass over the corpus (n x k flops
-      per batch); past k ~ 10^5 a two-level coarse quantizer (assign to
-      sqrt(k) super-centroids first) would keep it n x sqrt(k) — noted
-      for cluster deployment, unneeded at any measured point;
+    * assignment: one exact Arrow argmax pass over the corpus (n x k
+      flops per batch);
     * the ``count()`` sizing k is a scalar model decision, and the
       tagged corpus is localCheckpoint'ed because the drop rule reads
       it twice (pair join + verdict join-back) — without it the
@@ -1177,7 +1042,7 @@ def semdedup_kmeans_keep(
         "vec_id", F.col("embedding").cast("array<double>").alias("e")
     )
     n = v.count()  # scalar model sizing, not a data path
-    k = max(SEMDEDUP_KM_MIN_K, min(SEMDEDUP_KM_MAX_K, n // cluster_target))
+    k = max(SEMDEDUP_KM_MIN_K, min(SEMDEDUP_KM_MAX_K, n // SEMDEDUP_CLUSTER_TARGET))
     k = min(k, max(1, n))
     # cosine k-means: train and assign on unit vectors (zero vectors pass
     # through unnormalized — their dot with every centroid is 0 and the
@@ -1206,19 +1071,12 @@ def semdedup_kmeans_keep(
     finally:
         if not fused:
             sample.unpersist()
-    assign_udf = (
-        _two_level_assign_udf(centroids)
-        if k >= SEMDEDUP_TWO_LEVEL_MIN_K
-        else _assign_centroid_udf(centroids)
-    )
     b0 = base.select(
         "vec_id",
         "e",
-        assign_udf(F.col("en")).cast("long").alias("bucket"),
+        _assign_centroid_udf(centroids)(F.col("en")).cast("long").alias("bucket"),
         "nrm",
     ).localCheckpoint(eager=True)
-    if n >= SEMDEDUP_GRAM_MIN_N:
-        return _semdedup_drop_rule_gram(b0)
     return _semdedup_drop_rule(b0)
 
 

@@ -8,9 +8,8 @@ fixture, BASELINE.json north star).
   O(stream length) — the 100 TB/day streaming shape.
 * ``sessionize_batch`` — gap-based sessionization expressed with lag +
   windowed cumsum (oracle-checkable).
-* ``dedup_stream`` and ``interval_join_stream`` — watermark-bounded
-  streaming dedup and stream-stream join; ``tools/stream_soak.py``
-  measures their state.
+* ``interval_join_batch`` — click → purchase attribution as an equi-join
+  on user_id with the 30-minute interval as a post-join predicate.
 
 events.parquet has shipped with ``ts`` as TIMESTAMP(NANOS) (rounds 1-4)
 and TIMESTAMP(MICROS) (round 5+); ``_read_events_stream`` probes the
@@ -69,22 +68,12 @@ def _ts_is_nanos(src_dir: str) -> bool:
     return types.pop() == "timestamp[ns]"
 
 
-def _read_events_stream(
-    spark: SparkSession, src_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def _read_events_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """readStream over the staged events directory, normalizing ``ts`` to
     session-TZ TIMESTAMP across both physical layouts the fixture has
     shipped with (see catalog._events). Streaming sources need an explicit
-    schema, so the probe picks which one matches the files on disk.
-
-    ``max_files_per_trigger`` bounds each micro-batch to that many input
-    files (file-source option) — the soak harness uses it to drive a
-    time-ordered multi-batch run so watermark advance and state eviction
-    actually happen between batches; default (None) keeps the
-    process-everything-in-one-batch behavior the throughput bench times."""
+    schema, so the probe picks which one matches the files on disk."""
     reader = spark.readStream
-    if max_files_per_trigger is not None:
-        reader = reader.option("maxFilesPerTrigger", max_files_per_trigger)
     if _ts_is_nanos(src_dir):
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
         stream = (
@@ -131,12 +120,10 @@ def _stage_events_dir(sf_dir: str) -> str:
     return staged
 
 
-def windowed_counts_stream(
-    spark: SparkSession, src_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
+def windowed_counts_stream(spark: SparkSession, src_dir: str) -> DataFrame:
     """readStream → watermark(10 min) → 1-hour tumbling windows per
     event_type: count + sum(value)."""
-    stream = _read_events_stream(spark, src_dir, max_files_per_trigger)
+    stream = _read_events_stream(spark, src_dir)
     return (
         stream.withWatermark("ts", "10 minutes")
         .groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
@@ -305,8 +292,7 @@ def interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     attributed to each click by the same user in the preceding 30 minutes.
 
     Equi-join on user_id (ONE shuffle pair) with the time interval as a
-    post-join predicate — the exact shape Structured Streaming executes
-    with watermark-bounded state below."""
+    post-join predicate."""
     from monthly_report_etl_spark.catalog import _events
 
     ev = _events(spark, sf_dir)
@@ -332,68 +318,4 @@ def interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def interval_join_stream(
-    spark: SparkSession, src_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming twin: two readStreams, watermarks on BOTH sides, a
-    time-interval join condition. The watermarks bound the buffered state
-    to the attribution window (+ lateness) — without them a stream-stream
-    join's state grows with the stream. State law (measured by
-    ``tools/stream_soak.py``, SCALE.md §8g): buffered rows ≈ arrival
-    rate × (watermark delay + interval span) on each side — it scales
-    with the event RATE inside that horizon, never with stream length;
-    ``max_files_per_trigger`` exists so the soak can drive a
-    multi-batch run where eviction actually happens between batches."""
-    def _stream():
-        return _read_events_stream(spark, src_dir, max_files_per_trigger)
-
-    c = (
-        _stream()
-        .filter(F.col("event_type") == "click")
-        .select("user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts"))
-        .withWatermark("click_ts", "1 hour")
-    )
-    p = (
-        _stream()
-        .filter(F.col("event_type") == "purchase")
-        .select(
-            F.col("user_id").alias("_uid"),
-            F.col("event_id").alias("purchase_id"),
-            F.col("ts").alias("purchase_ts"),
-        )
-        .withWatermark("purchase_ts", "1 hour")
-    )
-    return c.join(
-        p,
-        F.expr(
-            f"""
-            user_id = _uid AND
-            purchase_ts >= click_ts AND
-            purchase_ts <= click_ts + INTERVAL {ATTRIBUTION_WINDOW_MINUTES} MINUTES
-            """
-        ),
-    ).select("user_id", "click_id", "purchase_id", "click_ts", "purchase_ts")
-
-
 CATALOG["streaming_interval_join_batch"] = (interval_join_batch, INTERVAL_JOIN_ORACLE)
-
-
-def dedup_stream(
-    spark: SparkSession, src_dir: str, max_files_per_trigger: int | None = None
-) -> DataFrame:
-    """Streaming exact dedup on the event key, with state truly bounded by
-    the watermark: ``dropDuplicatesWithinWatermark`` evicts a key's state
-    once the watermark passes its event time + delay, so memory is bounded
-    by the lateness horizon (plain ``dropDuplicates`` on a key subset that
-    excludes the event-time column would keep state for every distinct key
-    forever — the watermark does NOT evict it). The trade is explicit:
-    duplicates separated by more than the watermark delay are re-emitted,
-    which is the only state-bounded contract possible on an unbounded
-    stream (the streaming twin of the batch dedup_exact/dedup_latest
-    family)."""
-    stream = _read_events_stream(spark, src_dir, max_files_per_trigger)
-    return (
-        stream.withWatermark("ts", "1 hour")
-        .dropDuplicatesWithinWatermark(["user_id", "event_type"])
-        .select("user_id", "event_type", "event_id")
-    )

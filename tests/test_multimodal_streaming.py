@@ -9,17 +9,6 @@ from monthly_report_etl_spark.operators import multimodal
 from monthly_report_etl_spark.streaming import events_stream
 
 
-def _run_to_memory(spark, stream, query_name):
-    """Drive an append-mode streaming frame over its whole (finite) source
-    into a memory table and return that table."""
-    q = stream.writeStream.outputMode("append").format("memory").queryName(query_name).start()
-    try:
-        q.processAllAvailable()
-    finally:
-        q.stop()
-    return spark.table(query_name)
-
-
 def test_decode_features_match_numpy(spark, sf_dir):
     """The Arrow/mapInPandas path must reproduce a driver-side numpy
     computation exactly (deterministic stub decode)."""
@@ -110,19 +99,6 @@ def test_streaming_windowed_counts_match_batch(spark, sf_dir):
     assert len(s) > 0
 
 
-def test_dedup_stream_one_row_per_key(spark, sf_dir):
-    """Watermarked streaming dropDuplicates: exactly one surviving event
-    per (user_id, event_type) key, and every batch key is represented."""
-    src = events_stream._stage_events_dir(sf_dir)
-    res = _run_to_memory(spark, events_stream.dedup_stream(spark, src), "ds_test")
-    from monthly_report_etl_spark.catalog import _events
-
-    keys = res.groupBy("user_id", "event_type").count()
-    assert keys.filter(F.col("count") > 1).count() == 0
-    expected = _events(spark, sf_dir).select("user_id", "event_type").distinct().count()
-    assert res.count() == expected
-
-
 def test_sessionize_properties(spark, sf_dir):
     sessions = events_stream.sessionize_batch(spark, sf_dir)
     from monthly_report_etl_spark.catalog import _events
@@ -132,18 +108,6 @@ def test_sessionize_properties(spark, sf_dir):
     assert sessions.agg(F.sum("n_events")).collect()[0][0] == n_events
     # no session spans a gap silently: start <= end everywhere
     assert sessions.filter(F.col("session_start") > F.col("session_end")).count() == 0
-
-
-def test_interval_join_stream_matches_batch(spark, sf_dir):
-    """The stream-stream interval join (watermarks both sides) must emit
-    exactly the batch click→purchase attribution pairs on a replay."""
-    src = events_stream._stage_events_dir(sf_dir)
-    streamed = _run_to_memory(spark, events_stream.interval_join_stream(spark, src), "ij_test")
-    batch = events_stream.interval_join_batch(spark, sf_dir)
-    s = {(r["click_id"], r["purchase_id"]) for r in streamed.collect()}
-    b = {(r["click_id"], r["purchase_id"]) for r in batch.collect()}
-    assert s == b
-    assert len(s) > 0
 
 
 def test_real_png_through_decode_features(spark):

@@ -519,9 +519,8 @@ def test_recursive_cte_adj_evicted_on_new_table(spark, sf_dir):
     """r13 (VERDICT r12 #6 / ADVICE r12): the materialized adj cache is
     SINGLE-SLOT across distinct orders tables — materializing adj for a
     different orders source must unpersist the previous entry, so a
-    session sweeping many replicas (tools/scale_curve.py) holds at most
-    one fact-sized cache entry, while same-table reuse (pinned above)
-    is untouched."""
+    session sweeping many orders tables holds at most one fact-sized
+    cache entry, while same-table reuse (pinned above) is untouched."""
     import os
 
     from monthly_report_etl_spark.catalog import QUERIES
@@ -551,76 +550,32 @@ def test_recursive_cte_adj_evicted_on_new_table(spark, sf_dir):
     )
 
 
-def test_recursive_cte_adj_symlink_spelling_keeps_warm_slot(spark, sf_dir, tmp_path):
-    """r14 (ADVICE r13): the slot key uses os.path.realpath, so a
-    SYMLINKED spelling of the same orders directory reuses the warm adj
-    entry instead of evicting + re-materializing it — and, because the
-    same-key branch reuses the slot's own frame, the differently-spelled
-    scan plan cannot mint a second fact-sized cache entry either (the
-    leak a rebuild-under-realpath-keying would silently introduce)."""
-    import os
-
+def test_recursive_cte_adj_self_heals_after_external_uncache(spark, sf_dir):
+    """If something external drops the adj cache (a host application's
+    clearCache), the next call must rebuild it rather than recompute adj
+    at every recursion level: the same rows, adj read from an
+    InMemoryRelation, and a freshly materialized cached RDD."""
     from monthly_report_etl_spark.catalog import QUERIES
 
-    link = tmp_path / "orders_symlink_dir"
-    os.symlink(os.path.realpath(sf_dir), link)
     jsc = spark.sparkContext._jsc.sc()
 
     def _cached_ids():
         return {info.id() for info in jsc.getRDDStorageInfo()}
 
-    # pin the slot to sf_dir, then call through the symlink spelling
-    r_direct = QUERIES["recursive_order_chains"](spark, sf_dir).count()
-    base = _cached_ids()
-    r_link = QUERIES["recursive_order_chains"](spark, str(link)).count()
-    assert r_link == r_direct
-    after = _cached_ids()
-    stacked = after - base
-    assert not stacked, (
-        "a symlink spelling of the same orders table evicted or stacked "
-        f"instead of reusing the warm slot (new cached RDD ids: {stacked})"
-    )
-    # ...and the warm entry must still EXIST: the r14 soak caught the
-    # orders_rcte view replacement cascade-uncaching the adj entry on
-    # the symlink call — "no new ids" alone is also satisfied by the
-    # cache silently vanishing (reuse of an unpersisted frame recomputes
-    # adj at every recursion level). ContextCleaner can asynchronously
-    # drop UNRELATED entries between samples, so assert on the slot's
-    # own frame rather than set equality.
-    from monthly_report_etl_spark.operators.relational import _ADJ_CACHE_SLOT
-
-    slot = _ADJ_CACHE_SLOT.get("slot")
-    assert slot is not None
-    lvl = slot[1].storageLevel  # queries the CacheManager: NONE if uncached
-    assert lvl.useMemory or lvl.useDisk, (
-        "the warm adj cache entry vanished on the symlink-spelling call "
-        "(slot frame no longer persisted)"
-    )
-
-
-def test_recursive_cte_adj_self_heals_after_external_uncache(spark, sf_dir):
-    """r14: the same-key reuse path must not trust the slot blindly — if
-    something external uncached the slot frame (a host application's
-    clearCache), reuse would silently recompute adj at every recursion
-    level on every future same-key call. The call after an external
-    clearCache must REBUILD: correct rows and a persisted slot frame."""
-    from monthly_report_etl_spark.catalog import QUERIES
-    from monthly_report_etl_spark.operators.relational import _ADJ_CACHE_SLOT
-
     n_before = QUERIES["recursive_order_chains"](spark, sf_dir).count()
+    ids_before = _cached_ids()
     spark.catalog.clearCache()
-    slot = _ADJ_CACHE_SLOT.get("slot")
-    assert slot is not None
-    lvl = slot[1].storageLevel
-    assert not (lvl.useMemory or lvl.useDisk), "clearCache did not uncache"
 
-    assert QUERIES["recursive_order_chains"](spark, sf_dir).count() == n_before
-    slot = _ADJ_CACHE_SLOT.get("slot")
-    assert slot is not None
-    lvl = slot[1].storageLevel
-    assert lvl.useMemory or lvl.useDisk, (
-        "same-key call after an external uncache reused the dead frame "
-        "instead of rebuilding the materialized adj"
+    df = QUERIES["recursive_order_chains"](spark, sf_dir)
+    assert df.count() == n_before
+    plan = _plan(df)
+    assert "InMemoryRelation" in plan, (
+        "adj is no longer read from the materialized cache\n" + plan
+    )
+    rebuilt = _cached_ids() - ids_before
+    assert rebuilt, (
+        "call after an external clearCache did not materialize a fresh "
+        "adj cache entry"
     )
 
 
@@ -659,44 +614,6 @@ def test_pq_adc_plan_shape(spark, sf_dir):
     assert "BatchEvalPython" not in plan, plan
     assert "BroadcastHashJoin" in plan, plan
     assert "CartesianProduct" not in plan, plan
-
-
-def test_semdedup_gram_kernel_engages_at_scale(spark, tmp_path):
-    """Above SEMDEDUP_GRAM_MIN_N the k-means SemDeDup must route its
-    drop rule through the per-cluster dense kernel (FlatMapGroupsInPandas
-    from applyInPandas) — a regression to the join+fold path would
-    silently reinstate the ~25 us/pair wall SCALE.md §8e measured. The
-    sub-threshold fixture path must conversely stay on the bit-exact
-    fold rule (SortMergeJoin/BroadcastHashJoin, no grouped-Python
-    stage)."""
-    import pandas as pd
-
-    from monthly_report_etl_spark.operators.similarity import (
-        SEMDEDUP_GRAM_MIN_N,
-        semdedup_kmeans_keep,
-    )
-
-    base = pd.read_parquet("/root/testdata/sf0.001/embeddings.parquet")
-    step = int(base["vec_id"].max()) + 1
-    n_reps = SEMDEDUP_GRAM_MIN_N // len(base) + 1
-    reps = []
-    for i in range(n_reps):
-        r = base.copy(deep=False)
-        r["vec_id"] = r["vec_id"] + i * step
-        reps.append(r)
-    pd.concat(reps, ignore_index=True).to_parquet(
-        tmp_path / "embeddings.parquet", index=False
-    )
-
-    big_plan = _plan(semdedup_kmeans_keep(spark, str(tmp_path)))
-    assert "FlatMapGroupsInPandas" in big_plan, (
-        f"gram kernel not engaged above threshold:\n{big_plan}"
-    )
-
-    small_plan = _plan(semdedup_kmeans_keep(spark, sf_dir="/root/testdata/sf0.001"))
-    assert "FlatMapGroupsInPandas" not in small_plan, (
-        f"oracle-tested scale left the bit-exact fold rule:\n{small_plan}"
-    )
 
 
 def test_catalog_wide_plan_hygiene(spark, sf_dir):

@@ -201,70 +201,6 @@ def test_clean_idempotent(spark, fixture_dir):
     assert_frames_match(twice.toPandas(), once.toPandas())
 
 
-# ---------------------------------------------------------------------------
-# r8: the SemDeDup dual-kernel equivalence
-# ---------------------------------------------------------------------------
-
-
-@settings(**_SETTINGS)
-@given(
-    vecs=st.lists(
-        st.one_of(
-            st.just("zero"),
-            st.lists(
-                st.floats(
-                    min_value=-1.0, max_value=1.0, allow_nan=False, width=64
-                ),
-                min_size=4,
-                max_size=4,
-            ),
-        ),
-        min_size=1,
-        max_size=24,
-    ),
-    n_buckets=st.integers(min_value=1, max_value=3),
-)
-def test_semdedup_kernels_agree_on_random_vectors(spark, vecs, n_buckets):
-    """The fold drop rule and the dense gram kernel must produce the
-    SAME verdicts on arbitrary small corpora — including zero vectors
-    (whose pair cosines are NULL on both kernels by the shared guard)
-    and arbitrary bucket assignments — so the corpus-size kernel switch
-    in semdedup_kmeans_keep can never change a keep decision."""
-    from pyspark.sql import functions as F
-
-    from monthly_report_etl_spark.functions.vectors import l2_norm
-    from monthly_report_etl_spark.operators.similarity import (
-        _semdedup_drop_rule,
-        _semdedup_drop_rule_gram,
-    )
-
-    rows = [
-        (i, [0.0] * 4 if v == "zero" else list(v), i % n_buckets)
-        for i, v in enumerate(vecs)
-    ]
-    df = spark.createDataFrame(
-        rows, "vec_id long, e array<double>, bucket long"
-    ).select("vec_id", "e", "bucket", l2_norm(F.col("e")).alias("nrm"))
-    b0 = df.localCheckpoint(eager=True)
-    fold = {
-        r["vec_id"]: (r["nn_lower_cos"], r["keep"])
-        for r in _semdedup_drop_rule(b0).collect()
-    }
-    gram = {
-        r["vec_id"]: (r["nn_lower_cos"], r["keep"])
-        for r in _semdedup_drop_rule_gram(b0).collect()
-    }
-    assert set(fold) == set(gram)
-    for vid in fold:
-        fc, fk = fold[vid]
-        gc, gk = gram[vid]
-        assert fk == gk, f"vec {vid}: keep fold={fk} gram={gk}"
-        if fc is None or gc is None:
-            assert fc == gc, f"vec {vid}: nn fold={fc} gram={gc}"
-        else:
-            assert abs(fc - gc) <= 1e-6, f"vec {vid}: nn fold={fc} gram={gc}"
-
-
 @settings(**_SETTINGS)
 @given(
     words=st.lists(

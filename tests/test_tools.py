@@ -11,8 +11,10 @@ medians.
 
 import json
 import sys
+from pathlib import Path
 
-sys.path.insert(0, "/root/repo/tools")
+ROOT = Path(__file__).resolve().parents[1]
+sys.path.insert(0, str(ROOT / "tools"))
 
 import bench_compare  # noqa: E402
 
@@ -66,3 +68,36 @@ def test_warm_to_warm_comparison_keeps_warm_label(tmp_path, capsys, monkeypatch)
     # the q1 1.5x warm move must be attributed as a mover
     warm_line = [l for l in out.splitlines() if l.startswith("[warm median]")][0]
     assert "q1" in warm_line and "none" not in warm_line, out
+
+
+def test_tool_and_bench_package_imports_resolve():
+    """Every ``from monthly_report_etl_spark... import name`` in tools/*.py
+    and bench.py, at any depth (most sit inside functions, so importing
+    the script alone would not reach them), names something the package
+    still has — deleting a package function a tool still imports fails
+    here instead of at the tool's next run."""
+    import ast
+    import importlib
+    import importlib.util
+
+    pkg = "monthly_report_etl_spark"
+    missing = []
+    for path in sorted(ROOT.glob("tools/*.py")) + [ROOT / "bench.py"]:
+        for node in ast.walk(ast.parse(path.read_text(), str(path))):
+            if not (
+                isinstance(node, ast.ImportFrom)
+                and node.level == 0
+                and node.module
+                and (node.module == pkg or node.module.startswith(pkg + "."))
+            ):
+                continue
+            mod = importlib.import_module(node.module)
+            for alias in node.names:
+                name = alias.name
+                is_submodule = (
+                    hasattr(mod, "__path__")
+                    and importlib.util.find_spec(f"{node.module}.{name}") is not None
+                )
+                if not (hasattr(mod, name) or is_submodule):
+                    missing.append(f"{path.name}:{node.lineno} {node.module}.{name}")
+    assert not missing, missing
