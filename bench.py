@@ -29,6 +29,7 @@ Streaming surface.
 
 from __future__ import annotations
 
+import atexit
 import json
 import os
 import re
@@ -180,17 +181,15 @@ def _timed(fn) -> dict:
 
 
 def _fixture_paths(sf: float) -> tuple[str, str]:
-    """Generate (once, cached by mtime-keyed path) the exports_deals fixture
-    sized to the scale factor."""
+    """Generate the exports_deals fixture, sized to the scale factor, into
+    a fresh temporary directory that is removed at exit. Nothing is reused
+    across runs, so the data timed is always what the current
+    ``fixtures.py`` generates. Called outside every timing."""
     from monthly_report_etl_spark.fixtures import write_fixture
 
-    n_scenarios = max(500, int(80_000 * sf))
-    out = f"/tmp/spark_graft_bench_fixture_sf{sf}_n{n_scenarios}"
-    deals = os.path.join(out, "exports_deals.parquet")
-    comp = os.path.join(out, "competitor_list.csv")
-    if not (os.path.exists(deals) and os.path.exists(comp)):
-        write_fixture(out, n_scenarios=n_scenarios, seed=42)
-    return deals, comp
+    out = tempfile.mkdtemp(prefix="spark_graft_bench_fixture_")
+    atexit.register(shutil.rmtree, out, ignore_errors=True)
+    return write_fixture(out, n_scenarios=max(500, int(80_000 * sf)), seed=42)
 
 
 def _export_job(spark, deals_path: str, comp_path: str) -> None:

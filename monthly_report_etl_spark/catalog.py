@@ -29,12 +29,21 @@ stand-in.
 
 from __future__ import annotations
 
-import os
 from collections.abc import Callable
 
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
-from pyspark.sql import types as T
+
+from monthly_report_etl_spark.operators import analytics as _analytics
+from monthly_report_etl_spark.operators import corpus as _corpus
+from monthly_report_etl_spark.operators import dedup as _dedup
+from monthly_report_etl_spark.operators import multimodal as _multimodal
+from monthly_report_etl_spark.operators import olap as _olap
+from monthly_report_etl_spark.operators import relational as _relational
+from monthly_report_etl_spark.operators import similarity as _similarity
+from monthly_report_etl_spark.operators import text as _text
+from monthly_report_etl_spark.sources.parquet import read_table
+from monthly_report_etl_spark.streaming import events_stream as _streaming
 
 QueryFn = Callable[[SparkSession, str], DataFrame]
 
@@ -64,37 +73,13 @@ def _engine_semantics(fn: QueryFn) -> QueryFn:
     return wrapped
 
 
-def _register(name: str, oracle: str | None = None):
+def _register(name: str, oracle: str):
     def deco(fn: QueryFn) -> QueryFn:
         QUERIES[name] = _engine_semantics(fn)
-        if oracle is not None:
-            ORACLES[name] = oracle
+        ORACLES[name] = oracle
         return fn
 
     return deco
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        return _events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
-
-
-def _events(spark: SparkSession, sf_dir: str) -> DataFrame:
-    """events.parquet has shipped with two physical layouts for ``ts``:
-    TIMESTAMP(NANOS) (rounds 1-4), which Spark's vectorized reader rejects
-    unless read nanos-as-long and floor-divided to micros, and plain
-    TIMESTAMP(MICROS) (round 5+), which reads directly as TIMESTAMP_NTZ.
-    Normalize both to session-TZ TIMESTAMP (UTC sessions, so values are
-    identical to DuckDB's µs reading either way)."""
-    spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-    df = spark.read.parquet(os.path.join(sf_dir, "events.parquet"))
-    ts_type = df.schema["ts"].dataType
-    if isinstance(ts_type, T.LongType):
-        # integer DIV, not float division — epoch-nanos exceed double's
-        # 2^53 exact-integer range and would round the microsecond
-        return df.withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-    return df.withColumn("ts", F.col("ts").cast("timestamp"))
 
 
 # ---------------------------------------------------------------------------
@@ -188,7 +173,7 @@ def exports_report_events(spark: SparkSession, sf_dir: str) -> DataFrame:
     tiny aggregate + broadcast join-back (never a one-partition window),
     classifier inside codegen, range-partitioned final sort.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     base = ev.filter(
         (F.col("ts") >= F.lit("2024-01-05").cast("timestamp"))
         & (F.col("ts") < F.lit("2024-01-25").cast("timestamp"))
@@ -295,7 +280,7 @@ def filter_project_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P1-P3/P6: projection + boolean/timestamp-range/NOT NULL predicates,
     all pushed into the parquet scan."""
     return (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .filter(
             (F.col("ts") >= F.lit("2024-01-10").cast("timestamp"))
             & (F.col("ts") < F.lit("2024-01-20").cast("timestamp"))
@@ -320,7 +305,7 @@ def month_membership_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     (run_exports_query.py:113-118)."""
     months = [f"2000-0{m}-01" for m in (4, 5, 6)]
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(
             F.date_trunc("month", F.col("o_orderdate")).isin(
                 [F.lit(m).cast("timestamp") for m in months]
@@ -345,7 +330,7 @@ def month_membership_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
 def null_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """P9/A7: per-column null counts as ONE aggregate row (the reference
     collects the frame and runs isnull().sum() driver-side, :232)."""
-    df = _t(spark, sf_dir, "orders")
+    df = read_table(spark, sf_dir, "orders")
     return df.agg(*[F.sum(F.col(c).isNull().cast("long")).alias(c) for c in df.columns])
 
 
@@ -366,9 +351,9 @@ def null_profile_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def lookup_enrich_broadcast(spark: SparkSession, sf_dir: str) -> DataFrame:
     """J1: dimension enrich via broadcast left joins (the tier-lookup
     pattern, run_exports_query.py:224)."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
-    nation = _t(spark, sf_dir, "nation")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
+    nation = read_table(spark, sf_dir, "nation")
     return (
         orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey, "left")
         .join(F.broadcast(nation), customer.c_nationkey == nation.n_nationkey, "left")
@@ -403,7 +388,7 @@ def exists_over_array(spark: SparkSession, sf_dir: str) -> DataFrame:
     semantics this entry mirrors, and the oracle's NULL-skipping
     bool_or) is strictly two-valued. coalesce(..., false) pins the
     EXISTS contract: 'no qualifying row found' is FALSE, not unknown."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     collected = ev.groupBy("user_id").agg(
         F.collect_list(F.struct("event_type", "value")).alias("evs")
     )
@@ -431,7 +416,7 @@ def exists_over_array(spark: SparkSession, sf_dir: str) -> DataFrame:
 def distinct_event_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A1: the driving DISTINCT (get_lenders, run_exports_query.py:38-45)."""
     return (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .select("event_type")
         .filter(F.col("event_type").isNotNull())
         .distinct()
@@ -472,7 +457,7 @@ def dedup_latest_maxby(spark: SparkSession, sf_dir: str) -> DataFrame:
         ),
     ).alias(c)
     return (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.max("ts").alias("time"),
@@ -513,7 +498,7 @@ def collect_types_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
     ``events_user_sequences`` MAX_SEQ_EVENTS pattern) or replace the
     lambda-filter count with a conditional pre-aggregation."""
     return (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .groupBy("user_id")
         .agg(
             F.array_join(F.sort_array(F.collect_list("event_type")), ",").alias("types_csv"),
@@ -540,7 +525,7 @@ def collect_types_sorted(spark: SparkSession, sf_dir: str) -> DataFrame:
 def pricing_summary(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A5 + multi-agg group-by (TPC-H Q1 shape): partial aggregation
     map-side, tiny shuffle, codegen'd expressions."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.filter(F.col("l_shipdate") <= F.lit("2000-09-02").cast("timestamp"))
         .groupBy("l_returnflag", "l_linestatus")
@@ -577,7 +562,7 @@ def global_denominators(spark: SparkSession, sf_dir: str) -> DataFrame:
     """W1-W3: COUNT(DISTINCT) OVER () has no Spark window form and an
     empty-partition window is a single-partition funnel. Rewrite: tiny
     aggregates broadcast-joined back (exports_results.sql:107-115)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     totals = ev.agg(
         F.countDistinct("user_id").alias("count_all_users"),
         F.round(F.sum("value"), 2).alias("sum_all_value"),
@@ -625,8 +610,8 @@ def rank_in_segment_month(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark side and LAST in the oracle — shifting every other rank in the
     partition. Unknown sorts last; invisible on the sf tables (no NULL
     priorities)."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
     months = [F.lit(f"2000-0{m}-01").cast("timestamp") for m in (4, 5, 6)]
     counts = (
         orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
@@ -681,8 +666,8 @@ def rank_in_segment_month(spark: SparkSession, sf_dir: str) -> DataFrame:
 def rank_pivot_merge_back(spark: SparkSession, sf_dir: str) -> DataFrame:
     """A6/J2: pivot (long→wide) of per-month ranks + broadcast merge-back
     (prepare_rank_data, run_exports_query.py:128-161)."""
-    orders = _t(spark, sf_dir, "orders")
-    customer = _t(spark, sf_dir, "customer")
+    orders = read_table(spark, sf_dir, "orders")
+    customer = read_table(spark, sf_dir, "customer")
     m1, m2 = (F.lit("2000-05-01").cast("timestamp"), F.lit("2000-06-01").cast("timestamp"))
     joined = orders.join(F.broadcast(customer), orders.o_custkey == customer.c_custkey)
     counts = (
@@ -741,7 +726,7 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """O1 + LIMIT: total-order top-k (TakeOrderedAndProject — per-partition
     heaps, no global sort materialization). Tiebreak on orderkey."""
     return (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .orderBy(F.desc("o_totalprice"), "o_orderkey")
         .limit(100)
         .select("o_orderkey", "o_custkey", "o_totalprice")
@@ -761,7 +746,7 @@ def topk_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
 def union_by_name(spark: SparkSession, sf_dir: str) -> DataFrame:
     """U1: n-ary union-by-name (pd.concat, merge_all_lenders.py:31-55) —
     columns deliberately in different orders to exercise name alignment."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     high = li.filter(F.col("l_quantity") >= 25).select(
         "l_orderkey", "l_linenumber", "l_quantity", F.lit("high").alias("bucket")
     )
@@ -830,7 +815,7 @@ def json_extract_props(spark: SparkSession, sf_dir: str) -> DataFrame:
     including '4.6'/-4.6'/'4.5' (≥.5 fractions), '.5'/'.'/'+.', '1e5',
     '1e20', 2^53+1, 20-digit overflow, and tab/vtab-padded digits."""
     k = F.get_json_object("props", "$.k")
-    return _t(spark, sf_dir, "events").select(
+    return read_table(spark, sf_dir, "events").select(
         "event_id",
         k.cast("long").alias("k_value"),
         k.isNull().alias("k_missing"),
@@ -932,7 +917,7 @@ def json_variant_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     >2^53 numbers; a portable-SQL fix does not exist because DuckDB's
     json_type cannot distinguish 'x.0' from 'x.5' without re-parsing
     the raw text, which json_extract_string has already re-rendered."""
-    ev = _t(spark, sf_dir, "events").select(
+    ev = read_table(spark, sf_dir, "events").select(
         "event_id", F.try_parse_json("props").alias("v")
     )
     return ev.select(
@@ -974,7 +959,7 @@ def case_classifier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .when(v < 50, "Failed Out of Scope Deals")
         .otherwise("Unknown")
     )
-    return _t(spark, sf_dir, "events").select("event_id", label.alias("label"))
+    return read_table(spark, sf_dir, "events").select("event_id", label.alias("label"))
 
 
 @_register(
@@ -996,7 +981,7 @@ def regex_clean_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
     Spark's rlike propagates NULL — invisible on the sf tables (no
     NULL texts), divergent at the boundary. DuckDB's bare
     regexp_matches is NULL-propagating, matching rlike exactly."""
-    return _t(spark, sf_dir, "documents").select(
+    return read_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.regexp_replace("text", "[aeiou]", "").alias("devoweled"),
         F.col("text").rlike("spark").alias("mentions_spark"),
@@ -1019,7 +1004,7 @@ def regex_clean_strings(spark: SparkSession, sf_dir: str) -> DataFrame:
 def date_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F21-F24: month truncate/label/arithmetic (run_exports_query.py:113-121,
     182-184)."""
-    return _t(spark, sf_dir, "events").select(
+    return read_table(spark, sf_dir, "events").select(
         "event_id",
         F.date_trunc("month", "ts").alias("month_start"),
         F.date_format("ts", "yyyy-MM").alias("month_label"),
@@ -1057,7 +1042,7 @@ def grouping_sets_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     where ANSI/DuckDB emit one grand-total row — the oracle's HAVING
     count(*) > 0 mirror matches the rollup/cube twins (rationale at
     relational.py ROLLUP_ORACLE); vacuous on non-empty input."""
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("_gs_orders")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("_gs_orders")
     return spark.sql(
         """
         SELECT o_orderpriority, o_orderstatus,
@@ -1088,7 +1073,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
     full precision, exactly the oracle's INTERVAL arithmetic (a seconds
     cast would misplace sub-second boundary rows). RANGE includes all
     peers of the current timestamp in both engines → deterministic."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     w = (
         Window.partitionBy("o_custkey")
         # parquet column is TIMESTAMP_NTZ; cast to (UTC-pinned) TIMESTAMP
@@ -1116,7 +1101,7 @@ def window_range_frame(spark: SparkSession, sf_dir: str) -> DataFrame:
 def filtered_agg_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """FILTER-clause aggregates (conditional aggregation) — expressed as
     aggregate-over-CASE so partial aggregation still applies map-side."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.count(F.when(F.col("o_totalprice") > 150000, 1)).alias("n_big"),
         F.round(
@@ -1159,7 +1144,7 @@ def calendar_spine_monthly(spark: SparkSession, sf_dir: str) -> DataFrame:
     the monthly aggregate, so empty months surface as zero rows. The spine
     is 80 rows (sequence + explode on the driver's literal range) and
     BROADCASTS; the aggregate side shuffles once on a month key."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     spine = spark.range(1).select(
         F.explode(
             F.sequence(
@@ -1223,7 +1208,7 @@ def string_funcs_customer(spark: SparkSession, sf_dir: str) -> DataFrame:
     (levenshtein('Ü','U') = 2, measured) while Spark counts
     CHARACTERS; the levenshtein input column (c_mktsegment) stays
     ASCII in generation."""
-    c = _t(spark, sf_dir, "customer")
+    c = read_table(spark, sf_dir, "customer")
     return c.select(
         "c_custkey",
         F.upper("c_name").alias("up"),
@@ -1259,7 +1244,7 @@ def date_funcs_extended(spark: SparkSession, sf_dir: str) -> DataFrame:
     pin the ISO numbering (Monday=1) instead; last_day returns DATE in
     Spark, TIMESTAMP in DuckDB — cast both; date_add truncates to DATE, so
     day arithmetic uses an INTERVAL."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return ev.select(
         "event_id",
         F.last_day("ts").cast("timestamp").alias("month_end"),
@@ -1292,7 +1277,7 @@ def order_nulls_handling(spark: SparkSession, sf_dir: str) -> DataFrame:
     divergence (Spark defaults NULLS FIRST ascending, DuckDB NULLS LAST)
     — every ordering on a nullable key must pin it explicitly, as here
     on both sides."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     w1 = Window.partitionBy("event_type").orderBy(
         F.col("value").desc_nulls_last(), "event_id"
     )
@@ -1325,7 +1310,7 @@ def jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     from monthly_report_etl_spark.sources.json import read_jsonl, write_jsonl
 
-    d = _t(spark, sf_dir, "documents").select(
+    d = read_table(spark, sf_dir, "documents").select(
         "doc_id", "text", "lang", "source", F.col("n_chars").cast("long").alias("n_chars")
     )
     key = hashlib.md5(sf_dir.encode("utf-8")).hexdigest()[:12]
@@ -1336,39 +1321,6 @@ def jsonl_roundtrip_docs(spark: SparkSession, sf_dir: str) -> DataFrame:
         path,
         schema="doc_id LONG, text STRING, lang STRING, source STRING, n_chars LONG",
     ).select("doc_id", "text", "lang", "source", "n_chars")
-
-
-def _register_extension_catalogs() -> None:
-    """Merge the extension operators' (fn, oracle) tables into the registry.
-
-    Deferred import at module bottom (the extension modules are standalone;
-    catalog is the single wiring point the driver sees).
-    """
-    from monthly_report_etl_spark.operators import analytics as _analytics
-    from monthly_report_etl_spark.operators import corpus as _corpus
-    from monthly_report_etl_spark.operators import dedup as _dedup
-    from monthly_report_etl_spark.operators import multimodal as _multimodal
-    from monthly_report_etl_spark.operators import olap as _olap
-    from monthly_report_etl_spark.operators import relational as _relational
-    from monthly_report_etl_spark.operators import similarity as _similarity
-    from monthly_report_etl_spark.operators import text as _text
-    from monthly_report_etl_spark.streaming import events_stream as _streaming
-
-    for module in (
-        _text,
-        _dedup,
-        _similarity,
-        _multimodal,
-        _streaming,
-        _relational,
-        _olap,
-        _corpus,
-        _analytics,
-    ):
-        for name, (fn, oracle) in module.CATALOG.items():
-            QUERIES[name] = _engine_semantics(fn)
-            if oracle is not None:
-                ORACLES[name] = oracle
 
 
 @_register(
@@ -1383,12 +1335,26 @@ def _register_extension_catalogs() -> None:
 def numeric_coercion(spark: SparkSession, sf_dir: str) -> DataFrame:
     """F18: pd.to_numeric(errors='coerce') — unparseable → NULL
     (run_exports_query.py:69-71); non-ANSI cast nulls on failure."""
-    return _t(spark, sf_dir, "documents").select(
+    return read_table(spark, sf_dir, "documents").select(
         "doc_id",
         F.col("lang").cast("double").alias("lang_as_num"),
         F.col("n_chars").cast("string").cast("double").alias("n_chars_num"),
     )
 
 
-_register_extension_catalogs()
+# The operator modules' own (fn, oracle) tables, merged after this
+# module's entries so QUERIES and ORACLES list those first.
+for _module in (
+    _text,
+    _dedup,
+    _similarity,
+    _multimodal,
+    _streaming,
+    _relational,
+    _olap,
+    _corpus,
+    _analytics,
+):
+    for _name, (_fn, _oracle) in _module.CATALOG.items():
+        _register(_name, _oracle)(_fn)
 

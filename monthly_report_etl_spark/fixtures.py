@@ -42,17 +42,22 @@ RATE_TYPES = ["Fixed", "Variable", "Split"]
 LVR_BUCKETS = ["<60", "60-70", "70-80", "80-90", "90+"]
 TRANSACTION_TYPES = ["Purchase", "Refinance", "Top-up"]
 PRIMARY_INCOMES = ["PAYG", "Self-Employed", "Rental"]
+N_LENDERS = 48
+# event times are drawn from [WINDOW_START, WINDOW_END), inside the
+# config window and spanning more than 4 calendar months
+WINDOW_START = "2025-02-01"
+WINDOW_END = "2025-08-30"
 
 
-def lender_names(n: int = 48) -> list[str]:
-    return [f"lender_{i:02d}" for i in range(n)]
+def lender_names() -> list[str]:
+    return [f"lender_{i:02d}" for i in range(N_LENDERS)]
 
 
-def make_competitor_list(n: int = 48) -> pd.DataFrame:
+def make_competitor_list() -> pd.DataFrame:
     """48-row lender→tier dimension (FIXTURES.md §A3). One lender
     (lender_47) is reserved: it never appears in exports_deals, and
     exports_deals uses one lender absent from this list."""
-    names = lender_names(n)
+    names = lender_names()
     rows = []
     for i, name in enumerate(names):
         rows.append(
@@ -67,18 +72,11 @@ def make_competitor_list(n: int = 48) -> pd.DataFrame:
     return pd.DataFrame(rows)
 
 
-def make_exports_deals(
-    n_scenarios: int = 400,
-    n_lenders: int = 48,
-    seed: int = 42,
-    start: str = "2025-02-01",
-    end: str = "2025-08-30",
-) -> pd.DataFrame:
+def make_exports_deals(n_scenarios: int = 400, seed: int = 42) -> pd.DataFrame:
     rng = np.random.RandomState(seed)
-    names = lender_names(n_lenders)
-    active = names[:-1] + ["unlisted_lender"]  # lender_47 absent; one unknown present
-    start_ts = pd.Timestamp(start)
-    span_sec = int((pd.Timestamp(end) - start_ts).total_seconds())
+    active = lender_names()[:-1] + ["unlisted_lender"]  # lender_47 absent; one unknown present
+    start_ts = pd.Timestamp(WINDOW_START)
+    span_sec = int((pd.Timestamp(WINDOW_END) - start_ts).total_seconds())
 
     rows = []
     used_times: set[int] = set()

@@ -11,6 +11,8 @@ from __future__ import annotations
 from pyspark.sql import Column
 from pyspark.sql import functions as F
 
+from monthly_report_etl_spark.sources.parquet import read_table
+
 
 def dot(a: Column, b: Column) -> Column:
     """Sequential-fold dot product of two equal-length array columns."""
@@ -50,6 +52,4 @@ def read_vectors(spark, sf_dir: str):
     wrong-dim row is a corrupt upstream write, not a boundary this
     engine reinterprets.)
     """
-    return spark.read.parquet(f"{sf_dir}/embeddings.parquet").filter(
-        F.col("embedding").isNotNull()
-    )
+    return read_table(spark, sf_dir, "embeddings").filter(F.col("embedding").isNotNull())

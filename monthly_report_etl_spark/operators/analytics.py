@@ -18,18 +18,10 @@ partitioning), so sessionization is ONE shuffle end-to-end.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        from monthly_report_etl_spark.catalog import _events
-
-        return _events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from monthly_report_etl_spark.sources.parquet import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -75,7 +67,7 @@ def events_funnel(spark: SparkSession, sf_dir: str) -> DataFrame:
     1-row count are map-side after that. No joins, no second shuffle.
     """
     w = Window.partitionBy("user_id")
-    e = _t(spark, sf_dir, "events").select("user_id", "ts", "event_type")
+    e = read_table(spark, sf_dir, "events").select("user_id", "ts", "event_type")
     e = e.withColumn(
         "t_view", F.min(F.when(F.col("event_type") == "view", F.col("ts"))).over(w)
     )
@@ -137,7 +129,7 @@ def events_retention_cohort(spark: SparkSession, sf_dir: str) -> DataFrame:
     (cohort, week) distinct-count agg — the cohort matrix is
     weeks x weeks, tiny regardless of fact size.
     """
-    e = _t(spark, sf_dir, "events").select(
+    e = read_table(spark, sf_dir, "events").select(
         "user_id", F.date_trunc("week", F.col("ts")).alias("active_week")
     )
     e = e.withColumn(
@@ -209,7 +201,7 @@ def events_sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     e = (
-        _t(spark, sf_dir, "events")
+        read_table(spark, sf_dir, "events")
         .filter(F.col("ts").isNotNull())
         .select("user_id", "event_id", "ts")
     )
@@ -277,7 +269,7 @@ def stats_moments_group(spark: SparkSession, sf_dir: str) -> DataFrame:
     """
     x = F.col("o_totalprice")
     m = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .groupBy("o_orderpriority")
         .agg(
             F.count("*").alias("n"),
@@ -332,7 +324,7 @@ def window_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.col("o_totalprice").asc_nulls_last(),
         F.col("o_orderkey").asc_nulls_last(),
     )
-    return _t(spark, sf_dir, "orders").select(
+    return read_table(spark, sf_dir, "orders").select(
         "o_orderkey",
         "o_orderpriority",
         F.round(F.percent_rank().over(w), 6).alias("pct_rank"),
@@ -388,7 +380,7 @@ def events_sliding_window(spark: SparkSession, sf_dir: str) -> DataFrame:
     (2000-01-01) sits on the same 15-minute grid as epoch 0. Pinned by
     ``test_sliding_window_pre_epoch_floor``; the tumbling twin already
     agreed across 1900-2100 (its oracle never divided epochs)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour", "15 minutes").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
@@ -455,7 +447,7 @@ def events_user_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     one (Spark's array_sort over (ts, ...) structs orders a NULL ts
     FIRST; DuckDB's string_agg ORDER BY ts puts it LAST, silently
     reversing the training string). Filtered out on both sides."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = read_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w_rn = Window.partitionBy("user_id").orderBy(F.desc("ts"), F.desc("event_id"))
     w_all = Window.partitionBy("user_id")
     kept = (
@@ -523,7 +515,7 @@ def events_last_touch_attribution(spark: SparkSession, sf_dir: str) -> DataFrame
     ORDER BY DESC tie-break) instead of a window over the joined rows.
     The interval join shuffles both sides on user_id; everything after
     rides that partitioning."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     clicks = ev.filter(F.col("event_type") == "click").select(
         "user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
     )

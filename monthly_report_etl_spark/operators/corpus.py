@@ -24,6 +24,7 @@ from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.functions.text import fingerprint, whitespace_tokens
 from monthly_report_etl_spark.operators.dedup import TOKS_SQL as _DEDUP_TOKS_SQL
+from monthly_report_etl_spark.sources.parquet import read_table
 
 _log = logging.getLogger(__name__)
 
@@ -35,10 +36,6 @@ BIGRAM_TOP_K = 20
 EMAIL_REGEX = r"[A-Za-z0-9._%+-]+@[A-Za-z0-9.-]+\.[A-Za-z]{2,}"
 URL_REGEX = r"https?://[^\s]+"
 NUMBER_REGEX = r"[0-9]+"
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
 
 
 # ---------------------------------------------------------------------------
@@ -74,7 +71,7 @@ def sample_hash_mod(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Deterministic ~1/SAMPLE_MOD sample keyed on the portable content
     fingerprint — no RNG, reproducible across engines and runs; a pure
     projection + filter (no shuffle, no sampling operator state)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     fp = fingerprint(F.col("text"))
     return (
         d.select("doc_id", fp.alias("doc_fingerprint"))
@@ -100,7 +97,7 @@ FROM documents
 def pii_flags(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Pattern flags + redaction — single projection pass, all regexes
     evaluated inside codegen; the shape of a PII scrub stage."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.regexp_like("text", F.lit(EMAIL_REGEX)).alias("has_email"),
@@ -155,7 +152,7 @@ def tfidf_top_terms(spark: SparkSession, sf_dir: str) -> DataFrame:
     shares no diamond subplans); (3) window over doc_id for the top-k
     rank. Ranking keys are the ROUNDED score then term, so cross-engine
     1-ulp ln() differences cannot flip the order."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     n_docs = d.count()  # driver scalar: one count job over a pruned scan
     tok = (
         d.filter(F.trim("text") != "")
@@ -201,7 +198,7 @@ def bigram_top(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead over (doc, pos)) — never with array-lambda shingles, which are
     interpreted AND re-evaluated per Generate consumer. Top-k is
     TakeOrdered (per-partition heaps), not a global sort."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     tok = (
         d.filter(F.trim("text") != "")
         .select("doc_id", F.posexplode(F.split(F.trim("text"), r"\s+")).alias("pos", "tok"))
@@ -237,7 +234,7 @@ FROM documents GROUP BY 1
 def length_buckets(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Corpus length histogram (100-char buckets) — one partial-aggregated
     shuffle over a tiny bucket key space."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     ln = F.length("text")
     return (
         d.select((F.floor(ln / 100) * 100).cast("long").alias("bucket_lo"), ln.alias("_l"))
@@ -290,7 +287,7 @@ def train_val_test_split(spark: SparkSession, sf_dir: str) -> DataFrame:
     into otherwise('test'). Neither silent assignment is defensible for
     a document with no content; both sides now propagate NULL
     explicitly (the family convention: NULL in → NULL out)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     slot = fingerprint(F.col("text")) % 100
     split = (
         F.when(F.col("text").isNull(), F.lit(None).cast("string"))
@@ -341,7 +338,7 @@ def pack_sequences(spark: SparkSession, sf_dir: str) -> DataFrame:
     accept one partially-filled bin per range boundary. The single-window
     form here is the oracle-exact semantics those variants approximate.
     """
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     # array_size, not size (r14, eleventh boundary fixture): size() is -1
     # for a NULL array under non-ANSI legacy semantics, so a NULL document
     # SUBTRACTED one token from every later running total — a silent
@@ -405,7 +402,7 @@ def pack_sequences_ranged(spark: SparkSession, sf_dir: str) -> DataFrame:
     window (parallel, bounded state), at the cost of at most one partial
     bin per range boundary. bin_id is per-range; (range_id, bin_id) is
     the global bin key."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
         F.floor(F.col("doc_id") / PACK_RANGE_DOCS).cast("long").alias("range_id"),
@@ -464,7 +461,7 @@ def feature_hashing(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Hashing-trick bag-of-words: token → fingerprint mod HASH_DIM →
     per-(doc, dim) counts. One explode + one hash-agg shuffle; the
     classic RNG-free featurizer for corpus-scale classical models."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     tok = d.filter(F.trim("text") != "").select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("term")
     )
@@ -517,7 +514,9 @@ def chunk_documents(spark: SparkSession, sf_dir: str) -> DataFrame:
     trim drops the leading empty token a ``\\s+`` split would keep, and
     the empty-document case is excluded by the same filter both sides.
     """
-    d = _docs(spark, sf_dir).filter((F.col("doc_id") < 50) & (F.trim("text") != ""))
+    d = read_table(spark, sf_dir, "documents").filter(
+        (F.col("doc_id") < 50) & (F.trim("text") != "")
+    )
     toks = F.split(F.trim("text"), r"\s+")
     d = d.select("doc_id", toks.alias("toks"))
     n_chunks = F.ceil(F.size("toks") / F.lit(CHUNK_TOKENS)).cast("int")
@@ -579,7 +578,7 @@ def repetition_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle. No per-doc O(n^2) lambda scans.
     """
     base = (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .filter(F.trim("text") != "")
         .select("doc_id", F.split(F.trim("text"), r"\s+").alias("toks"))
     )
@@ -639,7 +638,7 @@ def normalize_dedup(spark: SparkSession, sf_dir: str) -> DataFrame:
         )
     )
     return (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .select("doc_id", F.md5(norm).alias("norm_hash"))
         .groupBy("norm_hash")
         .agg(
@@ -676,7 +675,7 @@ def source_lang_rollup(spark: SparkSession, sf_dir: str) -> DataFrame:
     pipeline runs per ingest batch. One Expand + single shuffle;
     GROUPING() separates subtotal rows from real NULLs."""
     return (
-        _docs(spark, sf_dir)
+        read_table(spark, sf_dir, "documents")
         .rollup("source", "lang")
         .agg(
             F.grouping("source").cast("long").alias("g_source"),
@@ -713,7 +712,7 @@ def stratified_sample(spark: SparkSession, sf_dir: str) -> DataFrame:
     exchange; at 100 TB the shuffle carries (id, lang, source) only.
     Strata with fewer than 1/f docs still contribute their ceil — no
     empty strata, the property sampleBy cannot promise."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     rank_w = Window.partitionBy("lang").orderBy(
         F.md5(F.col("doc_id").cast("string")), "doc_id"
     )
@@ -895,7 +894,7 @@ def incremental_ingest(spark: SparkSession, sf_dir: str) -> DataFrame:
     itself (min doc_id per text). Keys are (sha2, length) — 33 bytes per
     row through both the anti join and the in-batch dedup, never the
     documents themselves."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     key = [F.sha2(F.col("text"), 256).alias("k"), F.length("text").alias("klen")]
     incoming = d.filter(F.col("source") == INGEST_SOURCE).select("doc_id", *key)
     existing = d.filter(F.col("source") != INGEST_SOURCE).select(*key)
@@ -941,7 +940,7 @@ def length_trim(spark: SparkSession, sf_dir: str) -> DataFrame:
     docs are noise, very long ones skew packing). percent_rank over
     (n_tokens, doc_id) makes the boundary total-ordered and identical
     across engines; one window exchange keyed by source."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     t = d.select(
         "doc_id",
         "source",
@@ -991,7 +990,7 @@ def mix_weights(spark: SparkSession, sf_dir: str) -> DataFrame:
     between natural frequency (overweights crawl) and uniform
     (overweights tiny curated sets). One rollup keyed by source; the
     normalizer folds in as a broadcast scalar, all in one lazy plan."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     per = d.groupBy("source").agg(
         F.count("*").alias("n_docs"),
         # array_size (r14): size() is -1 for NULL text, so every NULL doc
@@ -1056,7 +1055,7 @@ def bpe_pair_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     and shuffling the corpus every merge iteration. Top-k via
     TakeOrderedAndProject (per-partition heaps, no global sort) with a
     total (count desc, pair) tiebreak for cross-engine determinism."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     words = (
         d.filter(F.trim("text") != "")
         .select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
@@ -1139,7 +1138,7 @@ def incremental_ingest_neardup(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
     is_inc = (F.col("doc_id") % NEARDUP_BATCH_MOD) < NEARDUP_BATCH_LT
-    incoming_ids = _docs(spark, sf_dir).select("doc_id").filter(is_inc)
+    incoming_ids = read_table(spark, sf_dir, "documents").select("doc_id").filter(is_inc)
     # The band table feeds four join subtrees whose pushed-down doc_id
     # filters make them non-shareable (no ReusedExchange), so the
     # signature aggregation re-runs per subtree — flagged by the r10
@@ -1366,7 +1365,7 @@ def _bpe_initial_vocab(spark: SparkSession, sf_dir: str) -> DataFrame:
     Extracted (r11 review) so a tokenization change can never be
     applied to one trainer and silently break the pinned bit-for-bit
     equivalence of the other."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     words = (
         d.filter(F.trim("text") != "")
         .select(F.explode(F.split(F.trim("text"), r"\s+")).alias("w"))
@@ -1618,9 +1617,7 @@ def bpe_train_merges_batched(
     )
 
 
-def bpe_train_merges(
-    spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
-) -> DataFrame:
+def bpe_train_merges(spark: SparkSession, sf_dir: str) -> DataFrame:
     """The FULL BPE training loop (Sennrich et al. 2016), extending
     ``bpe_pair_counts`` from one counting pass to the N-iteration merge
     table a tokenizer build consumes: each iteration counts adjacent
@@ -1651,7 +1648,7 @@ def bpe_train_merges(
     2.96s -> 1.72s median (-42%). The one-pair-at-a-time loop survives
     as ``bpe_train_merges_sequential`` — the reference form the
     equivalence tests compare against."""
-    return bpe_train_merges_batched(spark, sf_dir, n_merges)
+    return bpe_train_merges_batched(spark, sf_dir)
 
 
 def bpe_train_merges_sequential(
@@ -1702,9 +1699,7 @@ BPE_TOKENIZE_CATALOG_ORACLE = BPE_TOKENIZE_ORACLE.replace(
 assert BPE_TOKENIZE_CATALOG_ORACLE != BPE_TOKENIZE_ORACLE
 
 
-def bpe_tokenize(
-    spark: SparkSession, sf_dir: str, n_merges: int = BPE_MERGES
-) -> DataFrame:
+def bpe_tokenize(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Apply the trained merge table to the corpus — the CONSUMER side
     of BPE, completing train → tokenize: every document's whitespace
     words are segmented by the final vocab state ``_bpe_train`` already
@@ -1735,7 +1730,7 @@ def bpe_tokenize(
     batched fold applies the identical pairs in identical rank order —
     the pinned equivalence). Interleaved A/B at sf0.1: 3.35s -> 2.11s
     median (-37%) for the full train+segment chain."""
-    _, vocab, parent = _bpe_train_batched(spark, sf_dir, n_merges)
+    _, vocab, parent = _bpe_train_batched(spark, sf_dir, BPE_MERGES)
     # the eager checkpoint materializes the word→symbols map off the
     # PARENT's still-live cache (one fold, zero corpus reads); only then
     # is it safe to release both training caches (ADVICE r10 #2)
@@ -1745,7 +1740,7 @@ def bpe_tokenize(
         _release_vocab_frame(parent)
     # the word → symbols map is built from the corpus' own word
     # vocabulary, so the inner join drops nothing
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     docw = (
         d.filter(F.trim("text") != "")
         .select(

@@ -37,6 +37,7 @@ from monthly_report_etl_spark.functions.text import (
     whitespace_tokens,
 )
 from monthly_report_etl_spark.functions.vectors import dot, l2_norm, read_vectors
+from monthly_report_etl_spark.sources.parquet import read_table
 
 # ---------------------------------------------------------------------------
 # exact dedup
@@ -61,7 +62,7 @@ def dedup_exact(spark: SparkSession, sf_dir: str) -> DataFrame:
     is identical to grouping by the text itself; the text column is
     dropped before the exchange (column pruning keeps the scan narrow).
     """
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     keyed = d.select(
         F.sha2(F.col("text"), 256).alias("_h"),
         F.length("text").alias("_len"),
@@ -150,7 +151,7 @@ def _shingle_rows(spark: SparkSession, sf_dir: str, hashed: bool = False) -> Dat
     The window shuffle is keyed by doc_id and reused by the downstream
     per-doc aggregations.
     """
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", whitespace_tokens(F.col("text")).alias("toks")).filter(
         F.size("toks") >= 3
     )
@@ -344,7 +345,7 @@ def _shingle_hash_rows(spark: SparkSession, sf_dir: str) -> DataFrame:
     fingerprints — the token fingerprint (the one interpreted HOF) is
     computed ONCE per token row; the 3-gram combine is window leads +
     codegen'd arithmetic, never building shingle strings at all."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     toks = d.select("doc_id", whitespace_tokens(F.col("text")).alias("toks")).filter(
         F.size("toks") >= 3
     )
@@ -646,7 +647,7 @@ def simhash_chunk_columns(spark: SparkSession, sf_dir: str) -> DataFrame:
     double-affine parities and packs the 8 chunk values — see
     _portable_chunks_udf for why this is not an expression-tree
     aggregate."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     toks = d.select(
         "doc_id", F.explode(whitespace_tokens(F.col("text"))).alias("tok")
     )
@@ -1098,7 +1099,7 @@ def duplicate_spans(spark: SparkSession, sf_dir: str) -> DataFrame:
     # without it the scan + whitespace tokenization (the dominant narrow
     # stage at the 100x step) runs twice
     d = (
-        spark.read.parquet(f"{sf_dir}/documents.parquet")
+        read_table(spark, sf_dir, "documents")
         .select("doc_id", whitespace_tokens(F.col("text")).alias("t"))
         .localCheckpoint(eager=True)
     )

@@ -45,11 +45,7 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
-from monthly_report_etl_spark.schemas import (
-    DEDUP_PAYLOAD_COLUMNS,
-    RESULT_SCHEMA,
-    RESULTS_ARRAY_SCHEMA,
-)
+from monthly_report_etl_spark.schemas import RESULT_SCHEMA, RESULTS_ARRAY_SCHEMA
 
 PASSTHROUGH_COLUMNS = [
     "primaryIncome",
@@ -66,6 +62,14 @@ PASSTHROUGH_COLUMNS = [
     "paygIncome",
     "weeklyRentalIncome",
     "selfEmployedIncome",
+]
+
+# Payload columns deduped with MAX_BY(col, time) — exports_results.sql:55-71.
+DEDUP_PAYLOAD_COLUMNS = [
+    "results",
+    "exportedLender",
+    *PASSTHROUGH_COLUMNS,
+    "exported_lender_result",
 ]
 
 FINAL_COLUMNS = [

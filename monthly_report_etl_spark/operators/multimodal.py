@@ -28,6 +28,8 @@ from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from monthly_report_etl_spark.sources.parquet import read_table
+
 try:  # real codecs, if ever present in the image
     import PIL.Image  # noqa: F401
 
@@ -64,7 +66,7 @@ FRAME_SCHEMA = T.StructType(
 def media_table(spark: SparkSession, sf_dir: str) -> DataFrame:
     """``documents`` text → opaque binary payload + metadata (the stand-in
     media table; a real pipeline reads parquet with a binary column)."""
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     payload = F.encode(F.col("text"), "utf-8")
     return d.select(
         "doc_id",
@@ -252,7 +254,7 @@ FROM documents
 
 
 def byte_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
-    d = spark.read.parquet(f"{sf_dir}/documents.parquet")
+    d = read_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.length(F.encode(F.col("text"), "utf-8")).cast("long").alias("n_bytes"),

@@ -19,14 +19,10 @@ top-k is TakeOrdered (per-partition heaps), never a global sort.
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from monthly_report_etl_spark.sources.parquet import read_table
 
 
 SHIPPING_PRIORITY_ORACLE = """
@@ -50,11 +46,11 @@ def shipping_priority(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     customer broadcasts; orders⋈lineitem shuffles on orderkey once and the
     grouped agg reuses that partitioning (no second exchange)."""
-    c = _t(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = read_table(spark, sf_dir, "customer").filter(F.col("c_mktsegment") == "BUILDING")
+    o = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") < F.lit("1998-03-15").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_shipdate") > F.lit("1998-03-15").cast("timestamp")
     )
     return (
@@ -90,14 +86,14 @@ def local_supplier_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q5 shape: 5-way join with a cross-dimension equality (supplier and
     customer share a nation) → per-nation revenue. supplier/nation/customer
     broadcast; the single big shuffle is lineitem⋈orders."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
-    s = _t(spark, sf_dir, "supplier")
-    n = _t(spark, sf_dir, "nation")
+    li = read_table(spark, sf_dir, "lineitem")
+    s = read_table(spark, sf_dir, "supplier")
+    n = read_table(spark, sf_dir, "nation")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -135,9 +131,9 @@ LIMIT 20
 
 def returned_items(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q10 shape: returned-lineitem revenue per customer, top-20."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -172,13 +168,13 @@ def regional_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     side (completes coverage of every testdata table). The three dims
     broadcast as one chained lookup; lineitem⋈orders is the only
     shuffle."""
-    r = _t(spark, sf_dir, "region")
-    n = _t(spark, sf_dir, "nation")
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").filter(
+    r = read_table(spark, sf_dir, "region")
+    n = read_table(spark, sf_dir, "nation")
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").filter(
         F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp")
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -211,7 +207,7 @@ def unpivot_part(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Wide→long unpivot (``stack``/UNPIVOT) — the inverse of A6's pivot.
     NULL metrics are KEPT (Spark's unpivot default); the oracle uses the
     explicit UNION ALL form because DuckDB's UNPIVOT drops NULL cells."""
-    p = _t(spark, sf_dir, "part")
+    p = read_table(spark, sf_dir, "part")
     return p.select(
         "p_partkey",
         F.col("p_retailprice").cast("double").alias("retailprice"),
@@ -232,7 +228,7 @@ FROM (
 def posexplode_tokens(spark: SparkSession, sf_dir: str) -> DataFrame:
     """posexplode — ordinal-preserving explode (DuckDB needs a lateral
     generate_series to express the ordinal)."""
-    d = _t(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
+    d = read_table(spark, sf_dir, "documents").filter(F.col("doc_id") < 20)
     return d.select(
         "doc_id", F.posexplode(F.split("text", " ")).alias("pos", "tok")
     ).withColumn("pos", F.col("pos").cast("long"))
@@ -255,11 +251,11 @@ def promo_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     SF (at 100 TB part is fact-sized — the partkey equi-join shuffles
     both sides, and the single-row ratio is a map-side partial
     aggregate)."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-09-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-10-01").cast("timestamp"))
     )
-    p = _t(spark, sf_dir, "part")
+    p = read_table(spark, sf_dir, "part")
     rev = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     return (
         li.join(F.broadcast(p), li.l_partkey == p.p_partkey)
@@ -290,11 +286,11 @@ def order_priority_semijoin(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q4 shape: EXISTS against the fact side compiled as a LEFT SEMI
     join (no row multiplication, lineitem deduped by the join itself).
     Both sides shuffle on orderkey; the priority rollup is a 5-row agg."""
-    o = _t(spark, sf_dir, "orders").filter(
+    o = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1997-04-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
+    li = read_table(spark, sf_dir, "lineitem").filter(F.col("l_returnflag") == "R")
     return (
         o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
         .groupBy("o_orderpriority")
@@ -327,8 +323,8 @@ def small_quantity_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
     result as the correlated form, since the average is per partkey), and
     the final join is agg-to-fact on partkey, co-partitioned with the agg
     that produced it."""
-    bp = _t(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#7").select("p_partkey")
-    li = _t(spark, sf_dir, "lineitem").join(
+    bp = read_table(spark, sf_dir, "part").filter(F.col("p_brand") == "Brand#7").select("p_partkey")
+    li = read_table(spark, sf_dir, "lineitem").join(
         F.broadcast(bp), F.col("l_partkey") == F.col("p_partkey"), "left_semi"
     )
     per_part = li.groupBy("l_partkey").agg(F.avg("l_quantity").alias("avg_qty"))
@@ -365,14 +361,14 @@ def large_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Q18 shape: HAVING over a fact-side rollup, merged back onto orders
     and customer, top-20. The quantity rollup and the orders join share
     the orderkey shuffle; customer broadcasts; top-k is TakeOrdered."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     big = (
         li.groupBy("l_orderkey")
         .agg(F.sum("l_quantity").alias("sum_qty"))
         .filter(F.col("sum_qty") > 150)
     )
-    o = _t(spark, sf_dir, "orders")
-    c = _t(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders")
+    c = read_table(spark, sf_dir, "customer")
     return (
         big.join(o, big.l_orderkey == o.o_orderkey)
         .join(F.broadcast(c), o.o_custkey == c.c_custkey)
@@ -404,7 +400,7 @@ def forecast_revenue(spark: SparkSession, sf_dir: str) -> DataFrame:
     whether predicates reach the parquet scan (all three land in
     PushedFilters) and the sum stays in one map-side partial + 1-row
     final. No joins, no wide shuffle at any scale."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
         & (F.col("l_discount") >= 0.02)
@@ -438,8 +434,8 @@ def dormant_rich_customers(spark: SparkSession, sf_dir: str) -> DataFrame:
     the fact side, then a per-nation rollup. The anti join shuffles on
     custkey; orders is projected to the join key only before the
     exchange (column pruning keeps the anti side narrow)."""
-    c = _t(spark, sf_dir, "customer")
-    o = _t(spark, sf_dir, "orders").select("o_custkey")
+    c = read_table(spark, sf_dir, "customer")
+    o = read_table(spark, sf_dir, "orders").select("o_custkey")
     avg_bal = c.filter(F.col("c_acctbal") > 0).agg(
         F.avg("c_acctbal").alias("avg_bal")
     )
@@ -476,8 +472,8 @@ def priority_linecount(spark: SparkSession, sf_dir: str) -> DataFrame:
     range predicates land in the lineitem scan's PushedFilters; the
     priority CASE is evaluated post-join and folds into the map-side
     partial aggregation."""
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
-    li = _t(spark, sf_dir, "lineitem").filter(
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = read_table(spark, sf_dir, "lineitem").filter(
         F.col("l_returnflag").isin("R", "A")
         & (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
@@ -514,8 +510,8 @@ def order_count_distribution(spark: SparkSession, sf_dir: str) -> DataFrame:
     nullable key per customer, then a histogram of the counts. Two
     aggregations; the second one's input is one row per customer, so the
     custkey exchange dominates and the c_count exchange is tiny."""
-    c = _t(spark, sf_dir, "customer").select("c_custkey")
-    o = _t(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
+    c = read_table(spark, sf_dir, "customer").select("c_custkey")
+    o = read_table(spark, sf_dir, "orders").select("o_custkey", "o_orderkey", "o_orderpriority")
     per_cust = (
         c.join(
             o,
@@ -551,7 +547,7 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     aggregate instead of re-scanning lineitem), the 1-row MAX is
     broadcast back, and the supplier dimension joins by broadcast. No
     single-partition window, no second fact scan."""
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1997-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1997-04-01").cast("timestamp"))
     )
@@ -565,7 +561,7 @@ def top_revenue_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
         .localCheckpoint()
     )
     mx = revenue.agg(F.max("total_revenue").alias("mx"))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         revenue.join(F.broadcast(mx), F.col("total_revenue") == F.col("mx"))
         .join(F.broadcast(s), F.col("s_suppkey") == F.col("supplier_no"))
@@ -591,10 +587,10 @@ def disjunctive_brackets(spark: SparkSession, sf_dir: str) -> DataFrame:
     (each bracket's part-side and lineitem-side ranges OR-folded per
     side) and evaluates the cross-side residual post-join; the dimension
     side broadcasts."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_quantity", "l_extendedprice", "l_discount"
     )
-    p = _t(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
+    p = read_table(spark, sf_dir, "part").select("p_partkey", "p_brand", "p_size")
     bracket = (
         (
             (F.col("p_brand") == "Brand#12")
@@ -662,12 +658,12 @@ def last_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
     "no other supplier shipped later" without ever self-joining lineitem
     (the top-2 trick — at 100 TB the double correlated join is quadratic
     in per-order lines; this is one shuffle)."""
-    o = _t(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
+    o = read_table(spark, sf_dir, "orders").filter(F.col("o_orderstatus") == "F").select(
         "o_orderkey"
     )
     # attributable shipments only (r15): see LAST_SHIPPER_ORACLE
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .select("l_orderkey", "l_suppkey", "l_shipdate")
         .filter(F.col("l_suppkey").isNotNull() & F.col("l_shipdate").isNotNull())
     )
@@ -683,7 +679,7 @@ def last_shipper(spark: SparkSession, sf_dir: str) -> DataFrame:
     # later — i.e. this supplier's latest line sits AT the order maximum
     # (ties qualify on both sides: '>' is strict in the NOT EXISTS)
     keep = per_os.filter((F.col("n_sup") >= 2) & (F.col("smax") == F.col("max1")))
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name")
     return (
         keep.join(F.broadcast(s), F.col("s_suppkey") == F.col("l_suppkey"))
         .groupBy("s_name")
@@ -725,24 +721,24 @@ def nation_pair_volume(spark: SparkSession, sf_dir: str) -> DataFrame:
     broadcast into supplier/customer BEFORE the fact join, so the OR
     pair condition runs on two cheap tagged columns post-join; the only
     shuffle is lineitem⋈orders on the orderkey."""
-    n = _t(spark, sf_dir, "nation").filter(
+    n = read_table(spark, sf_dir, "nation").filter(
         F.col("n_name").isin("NATION_1", "NATION_2")
     )
     s = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("supp_nation"))
     )
     c = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .join(F.broadcast(n), F.col("c_nationkey") == F.col("n_nationkey"))
         .select("c_custkey", F.col("n_name").alias("cust_nation"))
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("l_shipdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_custkey")
     joined = (
         li.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(o, F.col("l_orderkey") == F.col("o_orderkey"))
@@ -802,14 +798,14 @@ def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
     the share computed as a conditional-sum ratio in ONE aggregation —
     no self-join, no second pass. Every dim broadcasts; the one shuffle
     is lineitem⋈orders."""
-    p = _t(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
-    n = _t(spark, sf_dir, "nation")
-    r = _t(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
+    p = read_table(spark, sf_dir, "part").filter(F.col("p_type") == "PROMO").select("p_partkey")
+    n = read_table(spark, sf_dir, "nation")
+    r = read_table(spark, sf_dir, "region").filter(F.col("r_name") == "ASIA")
     asia_nations = n.join(
         F.broadcast(r), F.col("n_regionkey") == F.col("r_regionkey")
     ).select(F.col("n_nationkey").alias("asia_nationkey"))
     c = (
-        _t(spark, sf_dir, "customer")
+        read_table(spark, sf_dir, "customer")
         .join(
             F.broadcast(asia_nations),
             F.col("c_nationkey") == F.col("asia_nationkey"),
@@ -817,15 +813,15 @@ def market_share(spark: SparkSession, sf_dir: str) -> DataFrame:
         .select("c_custkey")
     )
     s = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
-    o = _t(spark, sf_dir, "orders").filter(
+    o = read_table(spark, sf_dir, "orders").filter(
         (F.col("o_orderdate") >= F.lit("1996-01-01").cast("timestamp"))
         & (F.col("o_orderdate") < F.lit("1998-01-01").cast("timestamp"))
     )
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     vol = F.col("l_extendedprice") * (1 - F.col("l_discount"))
     joined = (
         li.join(F.broadcast(p), F.col("l_partkey") == F.col("p_partkey"))
@@ -873,18 +869,18 @@ def product_profit(spark: SparkSession, sf_dir: str) -> DataFrame:
     shuffle is lineitem⋈orders; profit folds two fact columns and the
     broadcast part attribute in one codegen'd expression."""
     p = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(F.col("p_name").like("%red%"))
         .select("p_partkey", "p_retailprice")
     )
-    n = _t(spark, sf_dir, "nation")
+    n = read_table(spark, sf_dir, "nation")
     s = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))
         .select("s_suppkey", F.col("n_name").alias("nation"))
     )
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
-    li = _t(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderdate")
+    li = read_table(spark, sf_dir, "lineitem")
     amount = F.col("l_extendedprice") * (1 - F.col("l_discount")) - 0.6 * F.col(
         "p_retailprice"
     ) * F.col("l_quantity")
@@ -938,10 +934,10 @@ def cheapest_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     still resolves by the suppkey tie-break, matching the oracle's
     ROW_NUMBER over an all-NULL key. The oracle pins NULLS LAST
     explicitly rather than riding DuckDB's default."""
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
-    li = _t(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_acctbal")
+    li = read_table(spark, sf_dir, "lineitem").select("l_partkey", "l_suppkey")
     p = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(F.col("p_type") == "PROMO")
         .select("p_partkey", "p_name")
     )
@@ -1034,14 +1030,14 @@ def yearly_growth(spark: SparkSession, sf_dir: str) -> DataFrame:
     10^18 — twelve orders of magnitude above any real price — and rows
     beyond it are excluded identically by both engines rather than
     summed approximately in a re-order-dependent double."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     o = (
-        _t(spark, sf_dir, "orders")
+        read_table(spark, sf_dir, "orders")
         .filter(F.col("o_orderdate").isNotNull())
         .select("o_orderkey", "o_orderdate")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = read_table(spark, sf_dir, "nation")
     yearly = (
         li.join(o, F.col("l_orderkey") == F.col("o_orderkey"))
         .join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
@@ -1099,11 +1095,11 @@ def important_stock(spark: SparkSession, sf_dir: str) -> DataFrame:
     scan of the fact table), and the nation restriction is a broadcast
     semi-chain applied BEFORE the groupBy so the aggregate only sees
     1/25th of the rows."""
-    li = _t(spark, sf_dir, "lineitem").select(
+    li = read_table(spark, sf_dir, "lineitem").select(
         "l_partkey", "l_suppkey", "l_extendedprice", "l_quantity"
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_nationkey")
+    n = read_table(spark, sf_dir, "nation").filter(F.col("n_name") == "NATION_3")
     nat_suppliers = s.join(
         F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey")
     ).select("s_suppkey")
@@ -1157,17 +1153,17 @@ def supplier_part_types(spark: SparkSession, sf_dir: str) -> DataFrame:
     convention; the blocklist side has no NULL keys by construction,
     so the NOT-IN empty-on-NULL-blocklist frontier does not arise)."""
     li = (
-        _t(spark, sf_dir, "lineitem")
+        read_table(spark, sf_dir, "lineitem")
         .filter(F.col("l_suppkey").isNotNull())
         .select("l_partkey", "l_suppkey")
     )
     bad = (
-        _t(spark, sf_dir, "supplier")
+        read_table(spark, sf_dir, "supplier")
         .filter(F.col("s_acctbal") < 0)
         .select("s_suppkey")
     )
     p = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(
             (F.col("p_brand") != "Brand#13")
             & (F.col("p_type") != "PROMO")
@@ -1219,11 +1215,11 @@ def dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominating several parts and is duplicate-cheap (output is bounded
     by #suppliers)."""
     p = (
-        _t(spark, sf_dir, "part")
+        read_table(spark, sf_dir, "part")
         .filter(F.col("p_name").startswith("blue"))
         .select("p_partkey")
     )
-    li = _t(spark, sf_dir, "lineitem").filter(
+    li = read_table(spark, sf_dir, "lineitem").filter(
         (F.col("l_shipdate") >= "1998-01-01") & (F.col("l_shipdate") < "1999-01-01")
     )
     pair = (
@@ -1235,8 +1231,8 @@ def dominant_supplier(spark: SparkSession, sf_dir: str) -> DataFrame:
     dominant = pair.withColumn("part_qty", F.sum("pair_qty").over(w)).filter(
         F.col("pair_qty") > 0.5 * F.col("part_qty")
     )
-    s = _t(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
-    n = _t(spark, sf_dir, "nation").select("n_nationkey", "n_name")
+    s = read_table(spark, sf_dir, "supplier").select("s_suppkey", "s_name", "s_nationkey")
+    n = read_table(spark, sf_dir, "nation").select("n_nationkey", "n_name")
     return (
         dominant.join(F.broadcast(s), F.col("l_suppkey") == F.col("s_suppkey"))
         .join(F.broadcast(n), F.col("s_nationkey") == F.col("n_nationkey"))

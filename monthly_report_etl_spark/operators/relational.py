@@ -16,20 +16,11 @@ union-tag + running-last trick — one shuffle, no per-group pandas).
 
 from __future__ import annotations
 
-import os
-
 from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from monthly_report_etl_spark.functions.vectors import read_vectors
-
-
-def _t(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    if name == "events":
-        from monthly_report_etl_spark.catalog import _events
-
-        return _events(spark, sf_dir)
-    return spark.read.parquet(os.path.join(sf_dir, f"{name}.parquet"))
+from monthly_report_etl_spark.sources.parquet import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -55,7 +46,7 @@ def set_ops(spark: SparkSession, sf_dir: str) -> DataFrame:
     """INTERSECT / EXCEPT (distinct semantics — Spark ``intersect`` /
     ``exceptAll``'s distinct sibling). Both compile to aggregations over a
     hash shuffle, scale-clean."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     big = o.filter(F.col("o_totalprice") > 150000).select("o_custkey")
     urgent = o.filter(F.col("o_orderpriority") == "1-URGENT").select("o_custkey")
     inter = big.intersect(urgent).agg(F.count("*").alias("n")).select(
@@ -99,7 +90,7 @@ HAVING count(*) > 0
 def rollup_lineitem(spark: SparkSession, sf_dir: str) -> DataFrame:
     """ROLLUP with grouping_id — subtotal levels in one pass (Spark
     expands grouping sets before the hash agg; still a single shuffle)."""
-    li = _t(spark, sf_dir, "lineitem")
+    li = read_table(spark, sf_dir, "lineitem")
     return (
         li.rollup("l_returnflag", "l_linestatus")
         .agg(
@@ -123,7 +114,7 @@ HAVING count(*) > 0
 
 
 def cube_orders(spark: SparkSession, sf_dir: str) -> DataFrame:
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return (
         o.cube("o_orderstatus", "o_orderpriority")
         .agg(F.grouping_id().cast("long").alias("gid"), F.count("*").alias("n"))
@@ -147,8 +138,8 @@ FROM orders o WHERE NOT EXISTS (SELECT 1 FROM lineitem l WHERE l.l_orderkey = o.
 def semi_anti_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     """left_semi / left_anti — EXISTS / NOT EXISTS as join types (no
     payload duplication, early-out probe side)."""
-    o = _t(spark, sf_dir, "orders")
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey")
+    o = read_table(spark, sf_dir, "orders")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey")
     semi = (
         o.join(li, o.o_orderkey == li.l_orderkey, "left_semi")
         .agg(F.count("*").alias("n"))
@@ -207,7 +198,7 @@ def asof_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLS LAST). The conjunct reaches the parquet scan as
     IsNotNull(ts), so timeline-less rows never leave the source.
     """
-    ev = _t(spark, sf_dir, "events").filter(
+    ev = read_table(spark, sf_dir, "events").filter(
         F.col("event_type").isin("purchase", "click") & F.col("ts").isNotNull()
     )
     tagged = ev.withColumn(
@@ -247,7 +238,7 @@ def range_join_bucketized(spark: SparkSession, sf_dir: str) -> DataFrame:
     align to a fixed grid, ``floor(value/width)`` turns it into a hash
     join — the standard rewrite for banding/bucketing dims at scale.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     buckets = spark.range(0, 10).select(
         F.col("id").alias("bucket_id"),
         F.concat(F.lit("band_"), F.col("id")).alias("band"),
@@ -289,7 +280,7 @@ def percentiles(spark: SparkSession, sf_dir: str) -> DataFrame:
     PERCENTILE_CONT). For 100 TB use ``percentile_approx`` (t-digest,
     mergeable partial state); exact kept here because the oracle can
     verify it."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     return o.groupBy("o_orderpriority").agg(
         F.round(F.percentile("o_totalprice", F.lit(0.25)), 4).alias("p25"),
         F.round(F.percentile("o_totalprice", F.lit(0.50)), 4).alias("p50"),
@@ -327,7 +318,7 @@ def window_family(spark: SparkSession, sf_dir: str) -> DataFrame:
     window partitioning (single shuffle by user_id, all functions share
     the sort). NULL-ts events are excluded (r15): no event time, no
     position on the timeline (see WINDOW_FAMILY_ORACLE)."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = read_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     wf = w.rowsBetween(-2, 0)
     return ev.select(
@@ -457,7 +448,7 @@ def recursive_order_chains(spark: SparkSession, sf_dir: str) -> DataFrame:
     raise it to ~heads x avg depth; the depth-20 guard keeps the level
     limit irrelevant.
     """
-    _t(spark, sf_dir, "orders").createOrReplaceTempView("orders_rcte")
+    read_table(spark, sf_dir, "orders").createOrReplaceTempView("orders_rcte")
     adj = spark.sql(_ORDER_CHAINS_ADJ_SQL.format(orders="orders_rcte")).persist()
     adj.count()  # materialize: the InMemoryRelation carries real stats
     adj.createOrReplaceTempView("order_chains_adj")
@@ -503,8 +494,8 @@ def salted_join(spark: SparkSession, sf_dir: str) -> DataFrame:
     (e.g. pre-3.0 clusters or broadcast-disabled builds). B=8 multiplies
     the small side's shuffle volume 8x — use on genuinely skewed keys.
     """
-    li = _t(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
-    o = _t(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
+    li = read_table(spark, sf_dir, "lineitem").select("l_orderkey", "l_linenumber")
+    o = read_table(spark, sf_dir, "orders").select("o_orderkey", "o_orderpriority")
     salted_probe = li.withColumn(
         "_salt", (F.pmod(F.xxhash64("l_orderkey", "l_linenumber"), F.lit(_SALT_BUCKETS)))
     )
@@ -578,7 +569,7 @@ def array_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     boundary. The oracle now FILTERs NULLs in the aggregates, COALESCEs
     the empty list, and COALESCEs both string joins to ''.
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     t = ev.groupBy("user_id").agg(
         F.sort_array(F.collect_set("event_type")).alias("types"),
         F.sort_array(F.collect_list("value")).alias("vals"),
@@ -626,7 +617,7 @@ def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
     the pytest asserts the HLL estimate lands within its error bound of
     the exact count (tests/test_dedup_similarity.py-style differential).
     """
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return ev.agg(
         F.approx_count_distinct("user_id", rsd=0.02).alias("approx_users"),
         F.approx_count_distinct("event_type", rsd=0.02).alias("approx_types"),
@@ -636,7 +627,7 @@ def approx_aggregates(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 def exact_distinct_bounds(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Exact companions for the approx sketches (oracle-checked)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     return ev.agg(
         F.countDistinct("user_id").alias("exact_users"),
         F.countDistinct("event_type").alias("exact_types"),
@@ -663,7 +654,7 @@ def map_functions(spark: SparkSession, sf_dir: str) -> DataFrame:
     """MapType coverage: build a per-user event_type→sum map with
     map_from_entries, probe with element_at, count with map_keys.
     DuckDB's MAP[key] returns a list — the oracle indexes [1]."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     per = ev.groupBy("user_id", "event_type").agg(F.sum("value").alias("s"))
     maps = per.groupBy("user_id").agg(
         F.map_from_entries(
@@ -691,7 +682,7 @@ def sketch_partial_merge(spark: SparkSession, sf_dir: str) -> DataFrame:
     input is 5 sketch rows). Estimates are engine-specific binaries →
     rows-only for the SQL gate; the error-bound differential vs the exact
     answers is in pytest."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     # n_prices guard (r15 boundary hunt): kll_sketch_agg_double over a
     # group whose prices are ALL NULL produces an EMPTY sketch buffer,
     # and kll_sketch_get_quantile_double RAISES on it
@@ -777,7 +768,7 @@ def sketch_partial_merge_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     oracle recomputes, plus booleans holding the sketch estimates to
     their error bounds (HLL relative error; KLL median by EXACT rank of
     the estimate, the bound KLL actually guarantees)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     est = sketch_partial_merge(spark, sf_dir)
     exact = o.groupBy("o_orderpriority").agg(
         F.countDistinct("o_custkey").alias("exact_distinct_custs")
@@ -863,7 +854,7 @@ def approx_aggregates_checked(spark: SparkSession, sf_dir: str) -> DataFrame:
     HLL++/t-digest estimates held to their bounds: distinct counts by
     relative error (3x rsd), the approx median by the EXACT rank of the
     estimate (percentile_approx guarantees rank accuracy 1/N_buckets)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     est = approx_aggregates(spark, sf_dir)
     exact = ev.agg(
         F.countDistinct("user_id").alias("exact_users"),
@@ -984,7 +975,7 @@ def sketch_count_min(spark: SparkSession, sf_dir: str) -> DataFrame:
     # NULL FIRST on the Spark side, LAST in DuckDB, so the two engines
     # even disagreed on WHICH row vanished. The sketch counts keys;
     # NULL is not a key — excluded from cells and ranking on both sides.
-    ev = _t(spark, sf_dir, "events").select("user_id").filter(
+    ev = read_table(spark, sf_dir, "events").select("user_id").filter(
         F.col("user_id").isNotNull()
     )
     u = F.col("user_id") % CM_P
@@ -1077,7 +1068,7 @@ def upsert_full_outer(spark: SparkSession, sf_dir: str) -> DataFrame:
     One shuffle pair on the key; at scale the base side would be bucketed
     on the key so repeated merges never re-shuffle it (see
     tests/test_plans.py::test_bucketed_join_no_shuffle)."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     updates = (
         o.filter(F.col("o_orderkey") % 3 == 0)
         .select("o_orderkey", (F.floor("o_totalprice") + 0.25).alias("new_price"))
@@ -1122,7 +1113,7 @@ def window_fill_forward(spark: SparkSession, sf_dir: str) -> DataFrame:
     NULLS running last_value) — the standard time-series gap-filling op,
     one shuffle shared with any other user_id-partitioned window.
     NULL-ts events are excluded (r15): see FILL_FORWARD_ORACLE."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = read_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = (
         Window.partitionBy("user_id")
         .orderBy("ts", "event_id")
@@ -1183,7 +1174,7 @@ def scd2_history(spark: SparkSession, sf_dir: str) -> DataFrame:
     lead for the closing timestamp. All four window/agg passes share the
     ONE user_id shuffle (same partitioning key throughout). NULL-ts
     events are excluded (r15): see SCD2_ORACLE."""
-    ev = _t(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
+    ev = read_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     changed = F.when(
         ~F.lag("event_type").over(w).eqNullSafe(F.col("event_type")), 1
@@ -1238,7 +1229,7 @@ def islands_active_months(spark: SparkSession, sf_dir: str) -> DataFrame:
     customer via the row_number-difference trick (month - rn months is
     constant within a run). distinct → window → hash-agg, all on the one
     o_custkey shuffle."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     d = o.select(
         "o_custkey", F.date_trunc("month", "o_orderdate").alias("m")
     ).distinct()
@@ -1272,8 +1263,8 @@ def join_hints_shuffle_hash(spark: SparkSession, sf_dir: str) -> DataFrame:
     fits in memory — the planner-control knob for when the optimizer's
     default is wrong at a known data shape. Result is hint-invariant
     (the oracle is the plain join)."""
-    li = _t(spark, sf_dir, "lineitem")
-    o = _t(spark, sf_dir, "orders").hint("shuffle_hash")
+    li = read_table(spark, sf_dir, "lineitem")
+    o = read_table(spark, sf_dir, "orders").hint("shuffle_hash")
     return (
         li.join(o, li.l_orderkey == o.o_orderkey)
         .groupBy("o_orderpriority")
@@ -1326,7 +1317,7 @@ def stats_corr(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Statistical aggregate family (Pearson corr, sample covariance /
     stddev / variance) — single hash-agg with map-side partials; both
     engines use sample (n-1) semantics for the _samp forms."""
-    o = _t(spark, sf_dir, "orders")
+    o = read_table(spark, sf_dir, "orders")
     ck = F.col("o_custkey").cast("double")
     cov = F.covar_samp("o_totalprice", ck)
     # relative-epsilon zero clamp, mirrored in the oracle (r18 negatives
@@ -1433,7 +1424,7 @@ def dq_violations(spark: SparkSession, sf_dir: str) -> DataFrame:
     a predicate counted via conditional aggregation, rows unpivoted to a
     (rule, n_violations, n_checked) report — the expectations pattern
     without a second pass per rule (one job, not len(rules) jobs)."""
-    ev = _t(spark, sf_dir, "events")
+    ev = read_table(spark, sf_dir, "events")
     rules = {
         "value_non_negative": F.col("value") < 0,
         "event_type_in_domain": ~F.col("event_type").isin(

@@ -405,8 +405,9 @@ def semdedup_exact_global(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
 
 
-def _pair_cos_sql(lo: str = "lo", hi: str = "hi") -> str:
-    """Guarded pair cosine between two row aliases carrying DOUBLE[] ``e``
+def _pair_cos_sql() -> str:
+    """Guarded pair cosine between the row aliases ``lo`` and ``hi``, each
+    carrying DOUBLE[] ``e``
     — the same fold order and zero-norm guard as _semdedup_drop_rule
     (ADVICE r7: the guard is mirrored so a zero vector yields NULL on
     both engines by construction, not by divide-by-zero luck)."""
@@ -419,11 +420,11 @@ def _pair_cos_sql(lo: str = "lo", hi: str = "hi") -> str:
             f"i -> {a}.e[i] * {b}.e[i])), (acc, x) -> acc + x)"
         )
 
-    lo_n = f"sqrt({fold(lo, lo)})"
-    hi_n = f"sqrt({fold(hi, hi)})"
+    lo_n = f"sqrt({fold('lo', 'lo')})"
+    hi_n = f"sqrt({fold('hi', 'hi')})"
     return (
         f"CASE WHEN {lo_n} > 0 AND {hi_n} > 0 "
-        f"THEN {fold(lo, hi)} / ({lo_n} * {hi_n}) END"
+        f"THEN {fold('lo', 'hi')} / ({lo_n} * {hi_n}) END"
     )
 
 
@@ -490,11 +491,9 @@ def _train_stride(n: int, cap: int) -> int:
     return max(1, n // cap)
 
 
-def _normalized(df: DataFrame, vec_col: str = "e") -> DataFrame:
-    n = l2_norm(F.col(vec_col))
-    return df.withColumn(
-        vec_col, F.transform(F.col(vec_col), lambda x: x / n)
-    )
+def _normalized(df: DataFrame) -> DataFrame:
+    n = l2_norm(F.col("e"))
+    return df.withColumn("e", F.transform(F.col("e"), lambda x: x / n))
 
 
 def _assign_centroid_udf(centroids: list[list[float]]):
@@ -561,10 +560,10 @@ _FUSED_TRAIN_MAX_ROWS = 1 << 18
 _FUSED_TRAIN_MAX_FLOPS = 4_000_000_000
 
 
-def _fused_train_ok(n_rows: int, k: int, iters: int, dim: int = 64) -> bool:
+def _fused_train_ok(n_rows: int, k: int, iters: int) -> bool:
     return (
         n_rows <= _FUSED_TRAIN_MAX_ROWS
-        and n_rows * k * dim * max(1, iters) <= _FUSED_TRAIN_MAX_FLOPS
+        and n_rows * k * _DIM * max(1, iters) <= _FUSED_TRAIN_MAX_FLOPS
     )
 
 
@@ -1148,6 +1147,9 @@ PQ_M = 16              # subspaces
 PQ_K = 16              # centroids per subspace -> 4-bit codes
 PQ_DSUB = _DIM // PQ_M
 PQ_ITERS = 3
+# ADC shortlist width per query, as a multiple of top_k; the exact
+# re-rank runs over these candidates only
+PQ_ADC_SHORTLIST_MULT = 5
 # mean cosine(original, PQ reconstruction) over the corpus. Config swept
 # before pinning (numpy reference impl, 3 iters, first-K init): M=8/K=16
 # gave 0.63-0.66, M=16/K=16 gives 0.81-0.82 at every SF for 64-bit codes
@@ -1262,7 +1264,7 @@ def _pq_fused_udf(iters: int):
 
 
 def train_pq_codebooks(
-    spark: SparkSession, sf_dir: str, iters: int = PQ_ITERS,
+    spark: SparkSession, sf_dir: str,
     v: DataFrame | None = None,
     allow_empty: bool = False,
     fused: bool = True,
@@ -1314,7 +1316,7 @@ def train_pq_codebooks(
             rows = (
                 v.select("vec_id", "e")
                 .repartition(1)
-                .mapInPandas(_pq_fused_udf(iters), "m int, cid int, c array<double>")
+                .mapInPandas(_pq_fused_udf(PQ_ITERS), "m int, cid int, c array<double>")
                 .collect()
             )  # M x K model rows: the trained codebooks, not a data path
             if not rows:
@@ -1346,7 +1348,7 @@ def train_pq_codebooks(
         codebooks = [
             init[:, m * PQ_DSUB : (m + 1) * PQ_DSUB].tolist() for m in range(PQ_M)
         ]
-        for _ in range(iters):
+        for _ in range(PQ_ITERS):
             parts = v.select("e").mapInPandas(
                 _pq_partials_udf(codebooks), _PQ_PARTIAL_SCHEMA
             )
@@ -1492,8 +1494,7 @@ CATALOG["embeddings_pq"] = (pq_checked, PQ_CHECKED_ORACLE)
 
 
 def pq_adc_topk(
-    spark: SparkSession, sf_dir: str, top_k: int = TOP_K,
-    shortlist_mult: int = 5,
+    spark: SparkSession, sf_dir: str, top_k: int = TOP_K
 ) -> DataFrame:
     """ADC search over the PQ-encoded corpus with exact re-rank (the
     IVFPQ refine step): each query precomputes an M x K inner-product
@@ -1501,7 +1502,7 @@ def pq_adc_topk(
     M table lookups + adds, never touching the original floats — the
     query path a PQ index runs at 100 TB, where the raw vectors aren't
     resident. The ADC pass produces a shortlist of ``top_k x
-    shortlist_mult`` candidates per query; only THOSE rows re-join the
+    PQ_ADC_SHORTLIST_MULT`` candidates per query; only THOSE rows re-join the
     raw vectors for an exact-cosine re-rank (ADC alone recalls ~0.5@10
     on this corpus — it is a candidate generator, which is exactly how
     production PQ indexes use it; with the 5x shortlist + re-rank,
@@ -1542,7 +1543,7 @@ def pq_adc_topk(
         "qmd,mkd->qmk", Qn.reshape(len(Q), PQ_M, PQ_DSUB), C
     )
 
-    shortlist = top_k * shortlist_mult
+    shortlist = top_k * PQ_ADC_SHORTLIST_MULT
 
     def score_partition(batches):
         for pdf in batches:
@@ -1739,8 +1740,8 @@ def train_pca_model(
     return mu, V, w
 
 
-def pca_project(spark: SparkSession, sf_dir: str, r: int = PCA_R) -> DataFrame:
-    """Project every vector onto the top-r principal components (the
+def pca_project(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Project every vector onto the top-``PCA_R`` principal components (the
     whitening/compression pass), emitting per-vector reconstruction
     diagnostics in the SAME Arrow pass: y = Vᵀ(x-mu), cosine(x, x̂),
     residual energy ||x-x̂||², centered energy ||x-mu||² (their
@@ -1749,7 +1750,7 @@ def pca_project(spark: SparkSession, sf_dir: str, r: int = PCA_R) -> DataFrame:
     epsilon in pca_checked, ADVICE r16)."""
     import numpy as np
 
-    model = train_pca_model(spark, sf_dir, r, allow_empty=True)
+    model = train_pca_model(spark, sf_dir, allow_empty=True)
     if model is None:
         # empty corpus → empty projection, correct schema (the flags
         # downstream aggregate to NULL over zero rows and the per-vector

@@ -26,10 +26,7 @@ from monthly_report_etl_spark.functions.text import (
     stopword_regex,
     whitespace_tokens,
 )
-
-
-def _docs(spark: SparkSession, sf_dir: str) -> DataFrame:
-    return spark.read.parquet(f"{sf_dir}/documents.parquet")
+from monthly_report_etl_spark.sources.parquet import read_table
 
 
 # ---------------------------------------------------------------------------
@@ -57,7 +54,7 @@ def token_stats(spark: SparkSession, sf_dir: str) -> DataFrame:
     its own NULL ``n_bpe_tokens``/``n_chars_exact`` (and the oracle's
     NULL). ``F.array_size`` propagates NULL. Invisible on the sf tables
     (no NULL texts)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     return d.select(
         "doc_id",
         F.array_size(whitespace_tokens(F.col("text"))).cast("long").alias("n_ws_tokens"),
@@ -102,7 +99,7 @@ LANGUAGE_ID_ORACLE = _lang_oracle()
 def language_id(spark: SparkSession, sf_dir: str) -> DataFrame:
     """n-gram/stopword language-ID: per-language stopword hit counts,
     argmax with a fixed priority order on ties."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     scores = language_scores(F.col("text"))
     out = d.select("doc_id", *[c.alias(f"score_{lang}") for lang, c in scores.items()])
     langs = list(LANGUAGE_STOPWORDS)
@@ -164,7 +161,7 @@ def quality_score(spark: SparkSession, sf_dir: str) -> DataFrame:
     beside its own NULL ratios. Both sides now NULL-propagate the
     composite: no text, no score. Invisible on the sf tables (no NULL
     texts)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     n_chars = F.length("text").cast("long")
     # Three single-pass regexp_counts over the raw column — no array
     # materialization (split+size) and no lower() string copy:
@@ -221,7 +218,7 @@ FROM documents
 def doc_fingerprint(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Polynomial rolling-hash fingerprint per document (portable
     arithmetic, not an engine hash — so the oracle can recompute it)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     return d.select("doc_id", fingerprint(F.col("text")).alias("doc_fingerprint"))
 
 
@@ -242,7 +239,7 @@ def lang_mismatch(spark: SparkSession, sf_dir: str) -> DataFrame:
     (stopword argmax) disagrees with the stored ``lang`` label — the
     standard audit before trusting provenance metadata in a training
     mix. Pure projection on top of language_id; no extra shuffle."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     pred = language_id(spark, sf_dir).select("doc_id", "predicted_lang")
     return (
         d.select("doc_id", F.col("lang").alias("labeled_lang"))
@@ -290,7 +287,7 @@ def unigram_logprob(spark: SparkSession, sf_dir: str) -> DataFrame:
     the per-doc rollup is the only other exchange. Both engines compute
     AVG(ln(p)) on identical doubles; ROUND(,6) absorbs the last-ulp
     libm/summation-order difference."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     tok = d.filter(F.trim("text") != "").select(
         "doc_id", F.explode(F.split(F.trim("text"), r"\s+")).alias("term")
     )
@@ -353,7 +350,7 @@ def c4_filter(spark: SparkSession, sf_dir: str) -> DataFrame:
     Pure per-row projection — three regexp passes and two contains, all
     codegen, zero shuffles; like every text op here it scales linearly
     and prunes the scan to (doc_id, text)."""
-    d = _docs(spark, sf_dir)
+    d = read_table(spark, sf_dir, "documents")
     # Shared whitespace tokenizer (trim + split, empty → 0) so the token
     # count agrees exactly with TOKEN_STATS and with the oracle's
     # string_split_regex(trim(text)) — regexp_count('\S+') disagrees on

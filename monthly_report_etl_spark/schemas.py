@@ -2,7 +2,12 @@
 
 The reference declares no schemas anywhere (types are inferred by DuckDB /
 pandas — SURVEY.md §1.2); at 100 TB scale inference is both wrong (a sampled
-scan) and slow, so every source here is read with an explicit schema.
+scan) and slow, so the text sources are parsed with an explicit schema: the
+``results`` JSON with ``RESULTS_ARRAY_SCHEMA`` and the competitor CSV with
+``COMPETITOR_LIST_SCHEMA``. ``run_export_job`` reads the deals parquet with
+the file's own schema (parquet stores it in the footer, so nothing is
+inferred); ``EXPORTS_DEALS_SCHEMA`` states that table's columns for the
+tests that build it in memory.
 
 ``RESULT_SCHEMA`` is the element type of the ``results`` JSON array
 (/root/reference/exports_results.sql:36-42,88-91,159-174). Leaves stay
@@ -63,27 +68,6 @@ EXPORTS_DEALS_SCHEMA = T.StructType(
         T.StructField("selfEmployedIncome", T.DoubleType()),
     ]
 )
-
-# Payload columns deduped with MAX_BY(col, time) — exports_results.sql:55-71.
-DEDUP_PAYLOAD_COLUMNS = [
-    "results",
-    "exportedLender",
-    "primaryIncome",
-    "rateType",
-    "loanPurpose",
-    "totalProposedLoanAmount",
-    "applicantCount",
-    "householdCount",
-    "transactionType",
-    "dependantsCount",
-    "lvr",
-    "lvrBucket",
-    "applicantsWithHecs",
-    "paygIncome",
-    "weeklyRentalIncome",
-    "selfEmployedIncome",
-    "exported_lender_result",
-]
 
 # competitor-list.csv — 48-row lender→tier dimension (FIXTURES.md §A3)
 COMPETITOR_LIST_SCHEMA = T.StructType(

@@ -12,8 +12,10 @@ fixture, BASELINE.json north star).
   on user_id with the 30-minute interval as a post-join predicate.
 
 events.parquet has shipped with ``ts`` as TIMESTAMP(NANOS) (rounds 1-4)
-and TIMESTAMP(MICROS) (round 5+); ``_read_events_stream`` probes the
-footer and normalizes both to session-TZ TIMESTAMP (see catalog._events).
+and TIMESTAMP(MICROS) (round 5+). The batch forms read it through
+``sources.parquet.read_table``; ``_read_events_stream`` probes the footers
+for the layout and applies the same ``normalize_events_ts`` rule, so both
+read session-TZ TIMESTAMP.
 """
 
 from __future__ import annotations
@@ -26,6 +28,9 @@ from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 from pyspark.sql import types as T
 
+from monthly_report_etl_spark.sources.parquet import normalize_events_ts, read_table
+
+
 def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
     return T.StructType(
         [
@@ -37,12 +42,6 @@ def _events_stream_schema(ts_type: T.DataType) -> T.StructType:
             T.StructField("props", T.StringType()),
         ]
     )
-
-
-# nanos-as-long layout (rounds 1-4: TIMESTAMP(NANOS) physical type)
-EVENTS_STREAM_SCHEMA = _events_stream_schema(T.LongType())
-# micros layout (round 5+: TIMESTAMP(MICROS) physical type → NTZ)
-EVENTS_STREAM_SCHEMA_MICROS = _events_stream_schema(T.TimestampNTZType())
 
 
 def _ts_is_nanos(src_dir: str) -> bool:
@@ -69,27 +68,21 @@ def _ts_is_nanos(src_dir: str) -> bool:
 
 
 def _read_events_stream(spark: SparkSession, src_dir: str) -> DataFrame:
-    """readStream over the staged events directory, normalizing ``ts`` to
-    session-TZ TIMESTAMP across both physical layouts the fixture has
-    shipped with (see catalog._events). Streaming sources need an explicit
-    schema, so the probe picks which one matches the files on disk."""
-    reader = spark.readStream
-    if _ts_is_nanos(src_dir):
+    """readStream over the staged events directory, with ``ts`` normalized
+    by the same rule as the batch reader (``normalize_events_ts``).
+    Streaming sources need an explicit schema, so the footer probe picks
+    the ``ts`` type that matches the files on disk, with no Spark job."""
+    nanos = _ts_is_nanos(src_dir)
+    if nanos:
         spark.conf.set("spark.sql.legacy.parquet.nanosAsLong", "true")
-        stream = (
-            reader.schema(EVENTS_STREAM_SCHEMA)
-            .format("parquet")
-            .load(src_dir)
-            # integer DIV: epoch-nanos exceed double's 2^53 exact range
-            .withColumn("ts", F.timestamp_micros(F.expr("ts DIV 1000")))
-        )
-        return stream
-    return (
-        reader.schema(EVENTS_STREAM_SCHEMA_MICROS)
+    ts_type = T.LongType() if nanos else T.TimestampNTZType()
+    stream = (
+        spark.readStream.schema(_events_stream_schema(ts_type))
         .format("parquet")
         .load(src_dir)
-        .withColumn("ts", F.col("ts").cast("timestamp"))
     )
+    return normalize_events_ts(stream)
+
 
 SESSION_GAP_MINUTES = 30
 
@@ -207,9 +200,7 @@ def sessionize_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
     sequence corpus (a streaming source would never emit it: no event
     time, no watermark).
     """
-    from monthly_report_etl_spark.catalog import _events
-
-    ev = _events(spark, sf_dir).filter(F.col("ts").isNotNull())
+    ev = read_table(spark, sf_dir, "events").filter(F.col("ts").isNotNull())
     w = Window.partitionBy("user_id").orderBy("ts", "event_id")
     # Full microsecond precision: cast('long') truncates to seconds, which
     # would split a gap in (1800s, 1801s] differently from the INTERVAL
@@ -249,9 +240,7 @@ GROUP BY 1, 2
 def tumbling_window_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Batch form of the streaming aggregation (identical window
     semantics: 1-hour tumbling windows align with hour truncation)."""
-    from monthly_report_etl_spark.catalog import _events
-
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     return (
         ev.groupBy(F.window("ts", "1 hour").alias("w"), "event_type")
         .agg(F.count("*").alias("n_events"), F.round(F.sum("value"), 2).alias("sum_value"))
@@ -293,9 +282,7 @@ def interval_join_batch(spark: SparkSession, sf_dir: str) -> DataFrame:
 
     Equi-join on user_id (ONE shuffle pair) with the time interval as a
     post-join predicate."""
-    from monthly_report_etl_spark.catalog import _events
-
-    ev = _events(spark, sf_dir)
+    ev = read_table(spark, sf_dir, "events")
     c = ev.filter(F.col("event_type") == "click").select(
         "user_id", F.col("event_id").alias("click_id"), F.col("ts").alias("click_ts")
     )

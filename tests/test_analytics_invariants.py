@@ -15,9 +15,9 @@ from monthly_report_etl_spark.operators import analytics, corpus
 def test_sliding_window_assigns_each_event_four_times(spark, sf_dir):
     """1-hour windows hopping every 15 minutes: every event must land in
     exactly 4 windows, so the windowed n_events total is 4x the input."""
-    from monthly_report_etl_spark.catalog import _events
+    from monthly_report_etl_spark.sources.parquet import read_table
 
-    n_events = _events(spark, sf_dir).count()
+    n_events = read_table(spark, sf_dir, "events").count()
     windowed = analytics.events_sliding_window(spark, sf_dir)
     total = windowed.agg(F.sum("n_events")).collect()[0][0]
     assert total == 4 * n_events

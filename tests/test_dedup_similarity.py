@@ -341,7 +341,7 @@ def test_pq_adc_rerank_recall_vs_brute_force(spark, sf_dir):
     """PQ-ADC with the 5x-shortlist exact re-rank against exact brute
     force. Measured recall@10: 0.85 at sf0.001, 0.92 at sf0.01, 0.78 at
     sf0.1 (fixed shortlist fraction shrinks with corpus — at scale the
-    shortlist_mult knob buys recall linearly in re-rank cost). Floor
+    PQ_ADC_SHORTLIST_MULT constant buys recall linearly in re-rank cost). Floor
     0.70 trips on real regressions (raw ADC without re-rank measures
     ~0.5 — the shortlist+re-rank structure is what the test pins)."""
     exact = {

@@ -101,9 +101,9 @@ def test_streaming_windowed_counts_match_batch(spark, sf_dir):
 
 def test_sessionize_properties(spark, sf_dir):
     sessions = events_stream.sessionize_batch(spark, sf_dir)
-    from monthly_report_etl_spark.catalog import _events
+    from monthly_report_etl_spark.sources.parquet import read_table
 
-    n_events = _events(spark, sf_dir).count()
+    n_events = read_table(spark, sf_dir, "events").count()
     # partition: every event in exactly one session
     assert sessions.agg(F.sum("n_events")).collect()[0][0] == n_events
     # no session spans a gap silently: start <= end everywhere
@@ -217,7 +217,7 @@ def test_events_reader_handles_both_ts_layouts(spark, tmp_path):
     import pyarrow as pa
     import pyarrow.parquet as pq
 
-    from monthly_report_etl_spark.catalog import _events
+    from monthly_report_etl_spark.sources.parquet import read_table
 
     ts = pd.to_datetime(
         [
@@ -255,8 +255,8 @@ def test_events_reader_handles_both_ts_layouts(spark, tmp_path):
         == "timestamp[ns]"
     )
 
-    a = {r["event_id"]: r["ts"] for r in _events(spark, str(nanos_dir)).collect()}
-    b = {r["event_id"]: r["ts"] for r in _events(spark, str(micros_dir)).collect()}
+    a = {r["event_id"]: r["ts"] for r in read_table(spark, str(nanos_dir), "events").collect()}
+    b = {r["event_id"]: r["ts"] for r in read_table(spark, str(micros_dir), "events").collect()}
     assert a == b and len(a) == 3
     assert a[0].microsecond == 123456  # nanos truncated, not rounded
 

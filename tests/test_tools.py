@@ -101,3 +101,57 @@ def test_tool_and_bench_package_imports_resolve():
                 if not (hasattr(mod, name) or is_submodule):
                     missing.append(f"{path.name}:{node.lineno} {node.module}.{name}")
     assert not missing, missing
+
+
+def test_test_tables_are_read_only_through_read_table():
+    """``sources.parquet.read_table`` is the one module that knows where a
+    driver-generated test table lives and how ``events.ts`` is normalized:
+    no other package module calls ``*.parquet(...)`` with ``sf_dir`` in
+    its arguments, and no operator or streaming module imports
+    ``monthly_report_etl_spark.catalog``, which imports all of them."""
+    import ast
+
+    pkg = ROOT / "monthly_report_etl_spark"
+    reader = pkg / "sources" / "parquet.py"
+    catalog = "monthly_report_etl_spark.catalog"
+
+    def imports_catalog(node):
+        if isinstance(node, ast.Import):
+            return any(a.name == catalog for a in node.names)
+        if isinstance(node, ast.ImportFrom) and node.level == 0:
+            return node.module == catalog or (
+                node.module == "monthly_report_etl_spark"
+                and any(a.name == "catalog" for a in node.names)
+            )
+        return False
+
+    def reads_sf_dir(node):
+        return (
+            isinstance(node, ast.Call)
+            and isinstance(node.func, ast.Attribute)
+            and node.func.attr == "parquet"
+            and any(
+                isinstance(n, ast.Name) and n.id == "sf_dir"
+                for arg in [*node.args, *(k.value for k in node.keywords)]
+                for n in ast.walk(arg)
+            )
+        )
+
+    def walk(node, where):
+        """Yield every node with the dotted name of its enclosing function."""
+        yield node, where
+        for child in ast.iter_child_nodes(node):
+            if isinstance(child, (ast.FunctionDef, ast.AsyncFunctionDef)):
+                yield from walk(child, f"{where}.{child.name}")
+            else:
+                yield from walk(child, where)
+
+    found = []
+    for path in sorted(pkg.rglob("*.py")):
+        layer = path.relative_to(pkg).parts[0]
+        for node, where in walk(ast.parse(path.read_text(), str(path)), path.stem):
+            if path != reader and reads_sf_dir(node):
+                found.append(f"{where}:{node.lineno} reads a test table's path")
+            if layer in ("operators", "streaming") and imports_catalog(node):
+                found.append(f"{where}:{node.lineno} imports the catalog")
+    assert not found, found

@@ -640,8 +640,13 @@ def gate_once(spark, con, queries, oracles, name, sf_dir):
         if c in o.columns and s[c].dtype != o[c].dtype:
             try:
                 o[c] = o[c].astype(s[c].dtype)
-            except Exception:
-                pass
+            except Exception as exc:
+                # ADVICE r18: a failed coercion is worth a line — the
+                # vhash compare below still decides pass/fail, but a
+                # silent pass here can mask WHY it failed.
+                print(f"  note: {name}.{c} dtype coercion "
+                      f"{o[c].dtype} -> {s[c].dtype} failed: "
+                      f"{type(exc).__name__}", flush=True)
     ok = (len(s) == len(o)
           and list(s.columns) == list(o.columns)
           and vhash(s) == vhash(o))
@@ -652,6 +657,7 @@ def main() -> int:
     n_seeds = int(sys.argv[1]) if len(sys.argv) > 1 else 10
     start = int(sys.argv[2]) if len(sys.argv) > 2 else 20260815
     from monthly_report_etl_spark.session import get_spark
+    from monthly_report_etl_spark.sources.parquet import TESTDATA_TABLES
     import __spark_entry__ as entrymod
 
     spark = get_spark(master="local[8]", shuffle_partitions=8)
@@ -663,8 +669,7 @@ def main() -> int:
         gen_tables(seed, d)
         con = duckdb.connect()
         con.execute("SET TimeZone='UTC'")
-        for t in ("events", "documents", "orders", "lineitem", "part",
-                  "supplier", "customer", "nation", "region", "embeddings"):
+        for t in TESTDATA_TABLES:
             con.execute(
                 f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{d}/{t}.parquet')"
             )

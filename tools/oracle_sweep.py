@@ -7,38 +7,24 @@ depend on scratch files surviving between sessions).
 
 Optional: --sf-dir DIR (default /root/testdata/sf0.01), or explicit
 entry names as positional args. Exits nonzero on any mismatch. The
-compare is byte-faithful to the driver's gate: columns sorted by name,
-rows sorted by every column, %.9g float rendering, and the NULL
-sentinel (plain to_csv renders NULL and '' identically, hiding
-NULL-vs-empty-string divergences — the r16 lesson).
+compare is ``fuzz_differential.gate_once``, the one shared with the fuzz
+and corner-gate tools: byte-faithful to the driver's gate (columns
+sorted by name, rows sorted by every column, %.9g float rendering, and
+a NULL sentinel).
 """
 from __future__ import annotations
 
-import hashlib
 import os
 import sys
 
 import duckdb
 
-ROOT = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-sys.path.insert(0, ROOT)
+sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
+sys.path.insert(0, os.path.dirname(os.path.abspath(__file__)))
 
-TABLES = [
-    "region", "nation", "customer", "supplier", "part", "orders",
-    "lineitem", "events", "documents", "embeddings",
-]
+from fuzz_differential import gate_once  # noqa: E402
 
-
-def canon(df):
-    df = df[sorted(df.columns)]
-    return df.sort_values(list(df.columns)).reset_index(drop=True)
-
-
-def vhash(df) -> str:
-    return hashlib.sha256(
-        df.to_csv(index=False, float_format="%.9g",
-                  na_rep="\x00NULL\x00").encode()
-    ).hexdigest()
+from monthly_report_etl_spark.sources.parquet import TESTDATA_TABLES  # noqa: E402
 
 
 def main() -> int:
@@ -65,7 +51,7 @@ def main() -> int:
     spark = get_spark(master="local[16]", shuffle_partitions=16)
     con = duckdb.connect()
     con.execute("SET TimeZone='UTC'")
-    for t in TABLES:
+    for t in TESTDATA_TABLES:
         con.execute(
             f"CREATE VIEW {t} AS SELECT * FROM read_parquet('{sf}/{t}.parquet')"
         )
@@ -73,21 +59,8 @@ def main() -> int:
     bad = []
     for name in names:
         try:
-            s = canon(queries[name](spark, sf).toPandas())
-            o = canon(con.execute(oracles[name]).fetchdf())
-            for c in s.columns:
-                if c in o.columns and s[c].dtype != o[c].dtype:
-                    try:
-                        o[c] = o[c].astype(s[c].dtype)
-                    except Exception as exc:
-                        # ADVICE r18: a failed coercion is worth a line —
-                        # the vhash compare below still decides pass/fail,
-                        # but a silent pass here can mask WHY it failed.
-                        print(f"  note: {name}.{c} dtype coercion "
-                              f"{o[c].dtype} -> {s[c].dtype} failed: "
-                              f"{type(exc).__name__}", flush=True)
-            if not (len(s) == len(o) and list(s.columns) == list(o.columns)
-                    and vhash(s) == vhash(o)):
+            ok, s, o = gate_once(spark, con, queries, oracles, name, sf)
+            if not ok:
                 bad.append(name)
                 print(f"BAD {name}: spark={len(s)} oracle={len(o)}",
                       flush=True)
